@@ -589,21 +589,15 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # probes stay fuzz-covered in scripts/fuzz_duckdb_diff.py's NOT IN
     # draw.)
     #
-    # --- NEW r15 (r14 verdict item 4): FLOAT <>-dim in the keyed
-    # 1-<> + 2-order correlated NOT IN — drives the round's float
-    # closure end-to-end (order dims stay integral per the staircase
-    # views' dtype contract; the FLOAT dim is the <> one — the callers
-    # embed l_quantity and the probe
-    # via frontier.neq_canon: CAST(CAST(e AS DOUBLE)+0.0 AS STRING),
-    # NaN self-equal / -0.0 normalized, so the U/V class bookkeeping
-    # matches Spark =/<>). DuckDB CANNOT oracle multi-inequality
+    # --- NEW r15 (r14 verdict item 4): FLOAT <>-dim in a keyed
+    # 1-<> + 2-order correlated NOT IN. Keyed multi-comparison shapes
+    # run on the spark.sql fallback (Catalyst decorrelation measured
+    # faster — SCALING.md round-14 A/B), so this pins the routed
+    # result on a float <>-dim. DuckDB CANNOT oracle multi-inequality
     # correlated NOT IN (SURVEY ORACLE WARNING), so the oracle is the
     # JOIN-FORM n/nn/m stats expansion (plain join + groupBy, no
     # decorrelation; DuckDB's double <>/= agrees with Spark's on the
-    # NaN-free testdata). NaN/-0.0/inf coverage: the brute-force
-    # matrix tests/test_cqc_queries.py:test_float_neq_dims. Forced
-    # mode='cqc' (the auto route for keyed multi-comparison shapes is
-    # the measured spark.sql fallback). ---
+    # NaN-free testdata). ---
     "not_in_neq_order2_float": (
         """SELECT s.s_suppkey, s.s_nationkey
            FROM supplier AS s
@@ -640,14 +634,12 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # inner_after_outer_join, and exists_or_join.)
     #
     # --- NEW r13 (late): THREE order-comparison correlations under
-    # OR'd EXISTS — the per-key 2-D Pareto staircase generalized to a
-    # 3-D SKYLINE flag view (api._or_exists_sky_flag +
-    # expressions.SkyWitness; plans/frontier.py:keyed_skyline_view —
-    # pre-reduction, applyInArrow sweep, part-keyed collect, never a
-    # single-partition window). DuckDB CANNOT oracle multi-inequality
-    # correlated EXISTS (SURVEY ORACLE WARNING), so the oracle is the
-    # JOIN-FORM expansion; ANSI bag semantics (OR lift; supplier rows
-    # PK-unique so bag = set). NULL-matrix coverage:
+    # OR'd EXISTS with an equality key — runs on the spark.sql
+    # fallback (keyed multi-comparison shapes: Catalyst decorrelation
+    # measured faster, SCALING.md round-14 A/B). DuckDB CANNOT oracle
+    # multi-inequality correlated EXISTS (SURVEY ORACLE WARNING), so
+    # the oracle is the JOIN-FORM expansion; ANSI bag semantics
+    # (supplier rows PK-unique so bag = set). NULL-matrix coverage:
     # test_or_exists_triple_skyline. ---
     "exists_three_comparisons": (
         """SELECT s.s_suppkey, s.s_acctbal
@@ -668,15 +660,12 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
             AND l.l_orderkey > s.s_suppkey * 200
             AND l.l_linenumber >= s.s_nationkey / 8""",
     ),
-    # --- NEW r14: the same 3-D skyline flag with DOUBLE dims — the
-    # round's dtype widening (plans/frontier.py:_dim_kind 'f64': the
-    # IEEE-754 bit embedding of Spark's double total order into int64
-    # orientation keys; the sweep runs ARROW-native so NaN round-trips
-    # bit-exact). Oracle = the join-form expansion (DuckDB cannot
-    # oracle multi-inequality correlated EXISTS — SURVEY ORACLE
-    # WARNING); supplier rows PK-unique so bag = set under the UNION.
-    # Special-value matrix (NaN/±0.0/±inf/denormals) in
-    # tests/test_cqc_queries.py:test_skyline_dtype_widening. ---
+    # --- NEW r14: the same keyed 3-comparison OR'd EXISTS with
+    # DOUBLE dims (routed to the spark.sql fallback like
+    # exists_three_comparisons). Oracle = the join-form expansion
+    # (DuckDB cannot oracle multi-inequality correlated EXISTS —
+    # SURVEY ORACLE WARNING); supplier rows PK-unique so bag = set
+    # under the UNION. ---
     "skyline_float_triple": (
         """SELECT s.s_suppkey, s.s_acctbal
            FROM supplier AS s
@@ -820,11 +809,12 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # where the r14 measured routing sends it to the spark.sql
     # fallback as RoutedToFallback and Engine.sql applies the
     # reference's SELECT -> SELECT DISTINCT rewrite
-    # (CompileController.java:98-101) so auto == cqc row multisets.
+    # (CompileController.java:98-101), keeping the non-full => DISTINCT
+    # contract.
     # Pre-fix, this entry returns the ~2,000-row ANSI bag and
     # hash-mismatches. Oracle: DISTINCT over the JOIN-FORM n/nn/m
     # expansion (DuckDB cannot decorrelate the multi-inequality form
-    # — SURVEY ORACLE WARNING). Cross-mode multiset pin:
+    # — SURVEY ORACLE WARNING). Oracle-pinned across routed shapes in
     # tests/test_cqc_queries.py:test_routed_fallback_distinct_auto_vs_cqc. ---
     "not_in_pair_routed_distinct": (
         """SELECT s.s_nationkey
@@ -870,9 +860,10 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
         None,
     ),
     # --- NEW r13: <> PAIRED with an order comparison filtering a
-    # correlated NOT IN set, TOP LEVEL — the executor's mixed-pair
-    # branch (compiler/cqc.py:_apply_neq_order_threshold_not_in): each
-    # three-valued fact folds to the argmin/runner-up triple view.
+    # keyed correlated NOT IN set, TOP LEVEL — runs on the spark.sql
+    # fallback (keyed multi-comparison: SCALING.md round-14 A/B; the
+    # keyless form stays native in
+    # compiler/cqc.py:_apply_neq_order_threshold_not_in).
     # DuckDB CANNOT oracle the correlated form (two-inequality NOT IN
     # decorrelation returns empty — SURVEY ORACLE WARNING), so the
     # oracle is the JOIN-FORM stats expansion, like not_in_pair_or.
@@ -902,12 +893,10 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
               OR (st.m = 0 AND st.nn = st.n
                   AND s.s_nationkey IS NOT NULL)""",
     ),
-    # --- NEW r13: TWO <> correlations under OR'd EXISTS — the
-    # round's diagonal-witness flag (api._or_exists_neq_pair_flag):
-    # per supplier group the witness question has a BOUNDED statistic
-    # (single-a/-b folds to distinct counts + unique values; otherwise
-    # a diagonal pair exists and only its two cross points can fail,
-    # each decided by a precomputed bit). DuckDB CANNOT oracle the
+    # --- NEW r13: TWO <> correlations under keyed OR'd EXISTS — runs
+    # on the spark.sql fallback (keyed multi-comparison: SCALING.md
+    # round-14 A/B; the keyless form folds natively,
+    # api._keyless_neq_pair_fold). DuckDB CANNOT oracle the
     # correlated form (its decorrelation of multi-inequality EXISTS is
     # wrong — SURVEY ORACLE WARNING), so the oracle is the JOIN-FORM
     # expansion; ANSI bag semantics (OR lift; supplier PK-unique so
@@ -1003,14 +992,13 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # not_in_pair_routed_distinct, but with ORDER BY s_suppkey (NOT
     # in the output) LIMIT 6: the ANSI SELECT DISTINCT rewrite fails
     # analysis (DISTINCT restricts ORDER BY to output columns), so
-    # Engine.sql must dedup BEFORE the limit by re-planning through
-    # the native mode='cqc' helper-sort collapse (min(s_suppkey) per
-    # distinct nationkey, then sort+limit). Pre-fix this entry
-    # returns a LIMIT-then-dedup row set and mismatches (the r15
-    # judge repro: auto 3 rows vs cqc 4). Deliberately mode='auto' —
-    # it certifies the rescue path. Oracle: the join-form (n, nn, m)
-    # expansion with the same min-collapse + ORDER BY + LIMIT on
-    # top. Cross-mode pin: tests/test_cqc_queries.py::
+    # Engine.sql must dedup BEFORE the limit by emulating finalize's
+    # helper-sort collapse over the verbatim body
+    # (api._emulate_tail_rescue: min(s_suppkey) per distinct
+    # nationkey, then sort+limit). A LIMIT-then-dedup row set
+    # mismatches (the r15 judge repro: 3 rows vs 4). Oracle: the
+    # join-form (n, nn, m) expansion with the same min-collapse +
+    # ORDER BY + LIMIT on top. Oracle pin: tests/test_cqc_queries.py::
     # test_routed_fallback_distinct_auto_vs_cqc (ORDER/LIMIT legs). ---
     "not_in_routed_orderlimit": (
         """SELECT s.s_nationkey
@@ -1050,11 +1038,11 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # extended this round to assert native == mode='spark' across
     # SEMI and ANTI x LEFT/RIGHT/FULL compositions.)
     #
-    # --- NEW r13: pair-threshold correlated NOT IN under OR — the
-    # round's planner surface (api._corr_not_in_pair_threshold_or):
-    # each three-valued fact is a 2-D dominance probe against
-    # per-supplier Pareto-staircase flag views (PairWitness over array
-    # columns, JVM-side). DuckDB CANNOT oracle the correlated form
+    # --- NEW r13: keyed pair-threshold correlated NOT IN under OR —
+    # runs on the spark.sql fallback (keyed multi-comparison shapes:
+    # Catalyst decorrelation measured faster, SCALING.md round-14
+    # A/B; the keyless form stays native,
+    # api._corr_not_in_pair_threshold_or). DuckDB CANNOT oracle the correlated form
     # (its decorrelation returns empty on two-inequality correlated
     # NOT IN — SURVEY ORACLE WARNING), so the oracle is the JOIN-FORM
     # stats expansion: one grouped join computes (n, nn, m) per
@@ -1330,25 +1318,18 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # certified at the driver gate. The keyed pair-threshold NOT IN
     # body rides the spark.sql fallback under mode='auto' (measured
     # r14 routing), but QUALIFY is engine-only syntax Spark cannot
-    # parse — NO verbatim fallback exists, so Engine.sql must re-plan
-    # through mode='cqc' immediately instead of surfacing Spark's
-    # ParseException (the first rung of the r16 rescue ladder,
-    # api.py; DISTINCT ON desugars into this same branch, so one
-    # entry certifies both). ROW_NUMBER over the unique s_suppkey is
+    # parse — NO verbatim fallback exists, so Engine.sql evaluates the
+    # QUALIFY predicate as a select-list helper column over the
+    # verbatim body and filters on it (api._emulate_tail_rescue)
+    # instead of surfacing Spark's ParseException. ROW_NUMBER over the unique s_suppkey is
     # a total order, so the row set is deterministic and — because
     # row_number() <= k over ORDER BY key is exactly ORDER BY key
     # LIMIT k — the oracle is the join-form (n, nn, m) three-valued
     # stats expansion (DuckDB cannot decorrelate two-inequality
     # correlated NOT IN — SURVEY ORACLE WARNING) with an ANSI
-    # ORDER BY + LIMIT tail. Deliberately mode='auto'. Cross-mode
-    # pin: tests/test_cqc_queries.py::
+    # ORDER BY + LIMIT tail. Oracle pin: tests/test_cqc_queries.py::
     # test_routed_fallback_distinct_auto_vs_cqc (QUALIFY stanza) and
-    # ::test_routed_rescue_logging. Scale note: Catalyst's
-    # LimitPushDownThroughWindow rewrites the unpartitioned
-    # row_number filter into a distributed TakeOrderedAndProject(8)
-    # BEFORE the Window (verified .explain r17), so the
-    # single-partition WindowExec only ever sees 8 rows — no global
-    # sort at 100 TB. ---
+    # ::test_routed_rescue_logging. ---
     "qualify_routed_topk": (
         """SELECT s.s_suppkey, s.s_nationkey
            FROM supplier AS s
@@ -3449,45 +3430,17 @@ _TAIL = [
 ]
 
 
-def _sql_query(
-    engine_sql: str, mode: str = "auto"
-) -> Callable[[SparkSession, str], DataFrame]:
+def _sql_query(engine_sql: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _engine(spark, sf_dir).sql(engine_sql, mode=mode)
+        return _engine(spark, sf_dir).sql(engine_sql)
 
     return run
-
-
-# Round 14 (SCALING.md "flag machinery vs Catalyst" A/B): keyed
-# multi-comparison [NOT] IN / OR'd-EXISTS shapes ride the spark.sql
-# fallback under mode='auto' BY MEASUREMENT (Catalyst decorrelation
-# won those cells at sf0.1 AND 10x). These entries exist to certify
-# the NATIVE statistic machinery (SURVEY R9/R12), so they force
-# mode='cqc' — the same mode the pytest brute-force matrices pin.
-# Keyless entries (not_in_pair_keyless) stay on auto: auto keeps them
-# native (measured 33x faster than Catalyst's nested loop at 10x).
-_CQC_FORCED = {
-    "exists_neq_pair",
-    "exists_three_comparisons",
-    "skyline_float_triple",
-    "not_in_pair_or",
-    "not_in_neq_order",
-    # r15: the float <>-dim entry certifies the NATIVE canon-embedded
-    # U/V statistic; not_in_pair_routed_distinct deliberately stays on
-    # auto — it certifies the routed fallback's DISTINCT rewrite.
-    "not_in_neq_order2_float",
-}
 
 
 def _all_cases() -> dict[str, tuple[Callable, str | None]]:
     out: dict[str, tuple[Callable, str | None]] = {}
     for name, (esql, osql) in _SQL_CASES.items():
-        out[name] = (
-            _sql_query(
-                esql, mode="cqc" if name in _CQC_FORCED else "auto"
-            ),
-            osql or esql,
-        )
+        out[name] = (_sql_query(esql), osql or esql)
     for name, (esql, osql) in _GRAPH_CASES.items():
         out[name] = (_sql_query(esql), _ora_graph(osql))
     for name, (fn, osql) in _OP_CASES.items():

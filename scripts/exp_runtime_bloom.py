@@ -57,7 +57,7 @@ def main() -> None:
 
     # the at-scale regime: no broadcast, scan-size gate off (local
     # cached scans report tiny sizes); creationSideThreshold comes from
-    # session.py (64 MB, aligned with the broadcast threshold)
+    # session.py (256 MB)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter."

@@ -39,16 +39,17 @@ from sparksqlplus_spark.plans.gyo import best_join_tree, gyo_join_tree
 
 def _top_level_positions(query: str) -> dict[str, list[int]]:
     """Positions of top-level (outside parens and quoted strings)
-    FROM / ORDER / LIMIT / OFFSET keyword tokens. Used by the
+    FROM / ORDER / LIMIT / OFFSET / QUALIFY keyword tokens. Used by the
     routed-fallback tail rescue (round 16) to strip a statement's
-    trailing ORDER BY/LIMIT/OFFSET and to find the select-list end —
+    trailing QUALIFY/ORDER BY/LIMIT/OFFSET and to find the select-list
+    end —
     text-level, so it works on any statement the engine can't plan
     natively. Comments are not scanned (the dialect does not accept
     them)."""
     depth = 0
     i, n = 0, len(query)
     out: dict[str, list[int]] = {
-        "from": [], "order": [], "limit": [], "offset": [],
+        "from": [], "order": [], "limit": [], "offset": [], "qualify": [],
     }
     while i < n:
         ch = query[i]
@@ -219,6 +220,61 @@ def _split_tail_rescue(query: str, n_order: int):
         if len(exprs) != n_order:
             return None
     return body, insert_at, exprs
+
+
+def _split_qualify(query: str):
+    """Cut the QUALIFY filter out of ``query``: returns (query without
+    it, predicate text), or None when the text does not scan cleanly.
+    A top-level QUALIFY clause runs from its keyword to the first
+    top-level ORDER BY/LIMIT/OFFSET after it (or the end). ``SELECT
+    DISTINCT ON (keys)`` is the parser's QUALIFY desugar spelled
+    differently: it becomes plain SELECT plus ``ROW_NUMBER() OVER
+    (PARTITION BY keys ORDER BY <statement order>) = 1`` (ordinal keys
+    or order items decline — a window would read them as constants)."""
+    pos = _top_level_positions(query)
+    m = re.match(r"(?is)\s*select\s+distinct\s+on\s*\(", query)
+    if m and not pos["qualify"]:
+        depth, i = 1, m.end()
+        while i < len(query) and depth:
+            depth += {"(": 1, ")": -1}.get(query[i], 0)
+            i += 1
+        keys = query[m.end():i - 1].strip()
+        if depth or not pos["order"]:
+            return None
+        o = pos["order"][0]
+        om = re.match(r"(?is)order\s+by\s+", query[o:])
+        end = min(
+            [p for p in pos["limit"] + pos["offset"] if p > o] + [len(query)]
+        )
+        order = query[o + om.end():end].strip() if om else ""
+        items = _split_top_level(keys) + [
+            re.sub(r"(?is)\s+(asc|desc)?\s*(nulls\s+(first|last))?\s*$", "", it)
+            for it in _split_top_level(order)
+        ]
+        if not order or any(re.fullmatch(r"\s*\d+\s*", it) for it in items):
+            return None
+        pred = (
+            f"ROW_NUMBER() OVER (PARTITION BY {keys} ORDER BY {order}) = 1"
+        )
+        return "SELECT " + query[i:], pred
+    if len(pos["qualify"]) != 1:
+        return None
+    q = pos["qualify"][0]
+    end = min(
+        [p for p in pos["order"] + pos["limit"] + pos["offset"] if p > q]
+        + [len(query)]
+    )
+    pred = query[q + len("qualify"):end].strip()
+    if not pred:
+        return None
+    return query[:q].rstrip() + " " + query[end:], pred
+
+
+def _split_top_level(text: str) -> list[str]:
+    """``text`` split at its depth-0 commas."""
+    cuts = _top_level_commas(text)
+    bounds = [0] + [c + 1 for c in cuts] + [len(text) + 1]
+    return [text[a : b - 1].strip() for a, b in zip(bounds, bounds[1:])]
 
 
 def _lit_of(v):
@@ -1348,10 +1404,10 @@ class SparkSQLPlus:
                     # per-group extreme tests, <> to a distinct-count
                     # + unique-value test. Round 13: a PAIR of order
                     # comparisons composes too — each fact becomes a
-                    # 2-D dominance probe against per-group Pareto
-                    # staircases (the OR sibling of
-                    # _apply_pair_threshold_not_in); <> pairs and 3+
-                    # stay on the fallback.
+                    # 2-D dominance probe against a global Pareto
+                    # staircase; 2-5 comparisons plan natively for
+                    # KEYLESS groups only (keyed groups route to the
+                    # spark.sql fallback below).
                     pops = sorted(n[0] for n in noneq)
                     if len(noneq) == 1 and noneq[0][0] in (
                         "<", "<=", ">", ">=", "<>",
@@ -1369,9 +1425,8 @@ class SparkSQLPlus:
                         o in ("<", "<=", ">", ">=") for o in pops
                     ):
                         # round 13 (late): an order-comparison TRIPLE
-                        # — 3-D dominance against per-group Pareto
-                        # SKYLINE flag views (keyless groups fold the
-                        # global skyline)
+                        # — 3-D dominance against the global Pareto
+                        # skyline
                         pair_threshold = noneq
                     elif (
                         len(noneq) == 3
@@ -1409,23 +1464,20 @@ class SparkSQLPlus:
                         "row-value NOT IN with a correlated WHERE "
                         "under OR is not planned natively"
                     )
-                if pair_threshold is not None and n_corr_keys and (
-                    mode == "auto"
-                ):
-                    # round 14 measured gate (SCALING.md r14 A/B):
-                    # keyed multi-comparison NOT IN under OR ->
-                    # spark.sql under auto; keyless groups stay
-                    # native (Catalyst nested-loops them, 33x slower
-                    # at 10x)
-                    # RoutedToFallback with needs_distinct=False
-                    # (round 15): the OR-lifted flag plan is ANSI bag
-                    # either way (ephemeral views force is_full)
+                if pair_threshold is not None and n_corr_keys:
+                    # KEYED multi-comparison NOT IN under OR has no
+                    # native plan in any mode: Catalyst's decorrelation
+                    # measured faster at both sf0.1 and 10x (SCALING.md
+                    # round-14 A/B). Keyless groups stay native
+                    # (Catalyst nested-loops them, 33x slower at 10x).
+                    # needs_distinct=False: the OR-lifted statement is
+                    # ANSI bag either way (ephemeral views force
+                    # is_full), so the verbatim fallback already matches
                     raise RoutedToFallback(
-                        "keyed multi-comparison NOT IN under OR rides "
-                        "the spark.sql fallback under mode='auto' "
-                        "(measured slower than Catalyst decorrelation "
-                        "at both sf0.1 and 10x — SCALING.md round-14 "
-                        "A/B); mode='cqc' forces the native flag plan",
+                        "keyed multi-comparison NOT IN under OR runs on "
+                        "the spark.sql fallback in every mode (Catalyst "
+                        "decorrelation measured faster — SCALING.md "
+                        "round-14 A/B)",
                         needs_distinct=False,
                     )
                 n_probe_keys = len(keys) - n_corr_keys
@@ -1456,145 +1508,65 @@ class SparkSQLPlus:
                         "in the subset (the inner set is probe-"
                         "dependent)"
                     )
+                if len(noneq) in (2, 3, 4, 5) and keys:
+                    # KEYED multi-comparison OR'd-EXISTS has no native
+                    # plan in any mode: Catalyst's own decorrelation
+                    # measured 1.8-4.7x faster at sf0.1 AND 10x, high-
+                    # and low-cardinality dims alike (SCALING.md
+                    # round-14 A/B). needs_distinct=False: a lifted
+                    # statement is ANSI bag (ephemeral flag views force
+                    # is_full), so the verbatim fallback already matches
+                    raise RoutedToFallback(
+                        "keyed multi-comparison EXISTS under OR runs on "
+                        "the spark.sql fallback in every mode (Catalyst "
+                        "decorrelation measured faster — SCALING.md "
+                        "round-14 A/B)",
+                        needs_distinct=False,
+                    )
+                # KEYLESS multi-comparison folds stay native in every
+                # mode (Catalyst nested-loops keyless inequality
+                # correlation — 33x slower at 10x, gap widening)
+                ops = sorted(nq[0] for nq in noneq)
                 if len(noneq) == 2:
-                    # round 12: TWO order comparisons compose via a
-                    # per-key Pareto-STAIRCASE flag (the single-witness
-                    # requirement that per-column min/max loses is
-                    # restored by keeping the frontier, not the
-                    # extremes) — see _or_exists_pair_flag; the keyless
-                    # form inlines a bounded GLOBAL frontier as a
-                    # one-row broadcast view. A <> paired with an
-                    # order comparison composes via the 3-stat
-                    # argmax/runner-up flag (_or_exists_neq_order_flag,
-                    # keyed only); <> with <> stays on the fallback.
-                    ops = sorted(nq[0] for nq in noneq)
-                    # round 14 measured gate (SCALING.md r14 A/B):
-                    # KEYED multi-comparison OR'd-EXISTS flags ride
-                    # the spark.sql fallback under auto — Catalyst's
-                    # own decorrelation measured 1.8-4.7x faster at
-                    # sf0.1 AND 10x, high- and low-cardinality dims
-                    # alike. Keyless folds stay native in every mode
-                    # (Catalyst nested-loops them — 33x slower at
-                    # 10x, gap widening). mode='cqc' (the pytest
-                    # matrices and the driver entries that certify
-                    # this machinery) forces the native plan.
-                    if keys and mode == "auto":
-                        # RoutedToFallback with needs_distinct=False
-                        # (round 15): had the lift run natively, it
-                        # would register ephemeral flag views and
-                        # _plan_spec_inner forces ctx.is_full = True
-                        # for any lifted statement — so mode='cqc'
-                        # returns ANSI bag rows here and the verbatim
-                        # fallback already matches; no DISTINCT rewrite
-                        raise RoutedToFallback(
-                            "keyed multi-comparison EXISTS under OR "
-                            "rides the spark.sql fallback under "
-                            "mode='auto' (measured slower than "
-                            "Catalyst decorrelation at both sf0.1 "
-                            "and 10x — SCALING.md round-14 A/B); "
-                            "mode='cqc' forces the native flag plan",
-                            needs_distinct=False,
-                        )
                     if all(o in ("<", "<=", ">", ">=") for o in ops):
-                        return self._or_exists_pair_flag(
-                            ex, keys, noneq, inner_only, spec, ephemeral
+                        # round 12: TWO order comparisons — the GLOBAL
+                        # Pareto staircase as a one-row view
+                        return self._keyless_pair_flag(
+                            ex, noneq, inner_only, spec, ephemeral
                         )
-                    if ops.count("<>") == 1 and all(
-                        o in ("<", "<=", ">", ">=", "<>") for o in ops
-                    ):
+                    if ops.count("<>") == 1:
+                        # <> + order: the global argmax/runner-up fold
                         neq = next(n for n in noneq if n[0] == "<>")
                         order = next(n for n in noneq if n[0] != "<>")
-                        if keys:
-                            return self._or_exists_neq_order_flag(
-                                ex, keys, neq, order, inner_only, spec,
-                                ephemeral,
-                            )
                         return self._keyless_neq_order_fold(
                             ex, neq, order, inner_only
                         )
-                    if ops == ["<>", "<>"]:
-                        # round 13: <>-with-<> pairs compose via the
-                        # diagonal-witness statistic (see the flag
-                        # method for the exactness argument); the
-                        # keyless form folds the same statistic from
-                        # 1-3 plan-time scalar jobs (metadata-scale
-                        # collects, the _keyless_neq_order_fold class)
-                        if keys:
-                            return self._or_exists_neq_pair_flag(
-                                ex, keys, noneq, inner_only, spec,
-                                ephemeral,
-                            )
-                        return self._keyless_neq_pair_fold(
-                            ex, noneq, inner_only
-                        )
-                if len(noneq) in (3, 4, 5) and keys and mode == "auto":
-                    # round 14 measured gate — same as the pair gate
-                    # above (the 3-D skyline cell measured 4.7x at
-                    # 10x, the worst keyed cell); RoutedToFallback
-                    # with needs_distinct=False (round 15 — the OR
-                    # lift is ANSI bag either way)
-                    raise RoutedToFallback(
-                        "keyed multi-comparison EXISTS under OR rides "
-                        "the spark.sql fallback under mode='auto' "
-                        "(measured slower than Catalyst decorrelation "
-                        "at both sf0.1 and 10x — SCALING.md round-14 "
-                        "A/B); mode='cqc' forces the native flag plan",
-                        needs_distinct=False,
+                    # round 13: <> + <> — the diagonal-witness
+                    # statistic from 1-3 plan-time scalar jobs
+                    return self._keyless_neq_pair_fold(
+                        ex, noneq, inner_only
                     )
                 if len(noneq) in (3, 4, 5) and all(
-                    nq[0] in ("<", "<=", ">", ">=") for nq in noneq
+                    o in ("<", "<=", ">", ">=") for o in ops
                 ):
-                    # round 13: THREE order comparisons compose via a
-                    # per-key 3-D SKYLINE flag (the staircase one
-                    # dimension up — see _or_exists_sky_flag); the
-                    # keyless triple folds the GLOBAL skyline (late
-                    # r13). Latest r13: FOUR order comparisons ride
-                    # the same machinery with a numpy dominance-scan
-                    # sweep; keyless quads fold the global 4-D
-                    # skyline too (merge cap tightened to 4096)
-                    return self._or_exists_sky_flag(
-                        ex, keys, noneq, inner_only, spec, ephemeral
+                    # round 13: THREE to FIVE order comparisons fold the
+                    # GLOBAL k-D skyline (merge cap tightened at 4-D)
+                    return self._keyless_sky_fold(
+                        ex, noneq, inner_only, spec, ephemeral
                     )
-                if (
-                    len(noneq) == 3
-                    and sorted(nq[0] for nq in noneq).count("<>") == 1
-                    and all(
-                        nq[0] in ("<", "<=", ">", ">=", "<>")
-                        for nq in noneq
-                    )
-                ):
-                    # round 13 (latest): ONE <> + TWO order
-                    # comparisons — the U/V two-staircase statistic
-                    # (keyed_neq_order2_view). Round 14: KEYLESS
-                    # triples fold the same statistic globally
-                    # (global_neq_order2_points — capped driver fold,
-                    # same pure sweep, same witness)
-                    if keys:
-                        return self._or_exists_neq_order2_flag(
-                            ex, keys, noneq, inner_only, spec, ephemeral
-                        )
+                if len(noneq) == 3 and ops.count("<>") == 1:
+                    # round 14: ONE <> + TWO order comparisons — the U/V
+                    # two-staircase statistic folded globally
+                    # (global_neq_order2_points)
                     return self._keyless_neq_order2_fold(
                         ex, noneq, inner_only, spec, ephemeral
                     )
-                if (
-                    len(noneq) == 3
-                    and sorted(nq[0] for nq in noneq).count("<>") == 2
-                    and all(
-                        nq[0] in ("<", "<=", ">", ">=", "<>")
-                        for nq in noneq
-                    )
-                ):
-                    # round 13 (latest): TWO <> + ONE order comparison
-                    # — the prefix-diagonal-stats array along the
-                    # order dim (keyed_neq2_order_view). Round 14:
-                    # KEYLESS triples fold the array globally
+                if len(noneq) == 3 and ops.count("<>") == 2:
+                    # round 14: TWO <> + ONE order comparison — the
+                    # prefix-diagonal-stats array folded globally
                     # (global_neq2_order_entries); 3-<> triples stay
                     # on the fallback (no constant-size statistic —
                     # see SURVEY)
-                    if keys:
-                        return self._or_exists_neq2_order_flag(
-                            ex, keys, noneq, inner_only, spec, ephemeral
-                        )
                     return self._keyless_neq2_order_fold(
                         ex, noneq, inner_only, spec, ephemeral
                     )
@@ -1629,13 +1601,7 @@ class SparkSQLPlus:
                             f"correlation op {op!r} under OR is not in "
                             "the subset"
                         )
-                    inner = self.catalog.get(ex.table).load(self.spark)
-                    imap = {("", cn): cn for cn in inner.columns}
-                    imap.update(
-                        {(ex.table_alias, cn): cn for cn in inner.columns}
-                    )
-                    for c in inner_only:
-                        inner = inner.filter(c.to_spark(imap))
+                    inner = self._filtered_inner(ex, inner_only)
                     row = inner.agg(
                         F.min(ne_col).alias("mn"),
                         F.max(ne_col).alias("mx"),
@@ -1715,14 +1681,9 @@ class SparkSQLPlus:
                             "(subquery) under OR is three-valued; not "
                             "planned natively"
                         )
-                    inner = self.catalog.get(ex.table).load(self.spark)
-                    imap = {("", cn): cn for cn in inner.columns}
-                    imap.update(
-                        {(ex.table_alias, cn): cn for cn in inner.columns}
+                    inner = self._filtered_inner(
+                        ex, [c for c in inner_only if c is not probe]
                     )
-                    for c in inner_only:
-                        if c is not probe:
-                            inner = inner.filter(c.to_spark(imap))
                     pl = probe.right.to_spark({})
                     ic = probe.left.name
                     st = inner.agg(
@@ -1743,13 +1704,7 @@ class SparkSQLPlus:
                     if st["nn"] < st["n"] or st["pn"] == 1:
                         return Lit(None, "null")
                     return Lit(True, "boolean")
-                inner = self.catalog.get(ex.table).load(self.spark)
-                imap = {("", cn): cn for cn in inner.columns}
-                imap.update(
-                    {(ex.table_alias, cn): cn for cn in inner.columns}
-                )
-                for c in inner_only:
-                    inner = inner.filter(c.to_spark(imap))
+                inner = self._filtered_inner(ex, inner_only)
                 val = bool(inner.limit(1).count())
                 return Lit(val != ex.negated, "boolean")
 
@@ -1822,13 +1777,7 @@ class SparkSQLPlus:
                     )
                 from sparksqlplus_spark.expressions import CaseWhen
 
-                inner = self.catalog.get(ex.table).load(self.spark)
-                imap = {("", cn): cn for cn in inner.columns}
-                imap.update(
-                    {(ex.table_alias, cn): cn for cn in inner.columns}
-                )
-                for c in inner_only:
-                    inner = inner.filter(c.to_spark(imap))
+                inner = self._filtered_inner(ex, inner_only)
                 stats = inner.agg(
                     F.count(F.lit(1)).alias("n"),
                     F.count(F.col(keys[0][1])).alias("nn"),
@@ -1868,6 +1817,17 @@ class SparkSQLPlus:
             raise
         return ephemeral
 
+    def _filtered_inner(self, ex, conds) -> DataFrame:
+        """The EXISTS/IN subquery's table with its inner-local
+        predicates applied (columns resolve bare or via the subquery
+        alias)."""
+        inner = self.catalog.get(ex.table).load(self.spark)
+        imap = {("", cn): cn for cn in inner.columns}
+        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
+        for c in conds:
+            inner = inner.filter(c.to_spark(imap))
+        return inner
+
     def _or_exists_noneq_flag(
         self, ex, keys, nq, inner_only, spec, ephemeral
     ):
@@ -1900,11 +1860,7 @@ class SparkSQLPlus:
             raise UnsupportedSqlError(
                 f"correlation op {op!r} under OR is not in the subset"
             )
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_only)
         key_sel: dict[str, str] = {}
         for _, icol in keys:
             key_sel.setdefault(icol, f"__f{len(key_sel)}")
@@ -1948,203 +1904,6 @@ class SparkSQLPlus:
         miss = Lit(bool(ex.negated), "boolean")
         return CaseWhen(((raw, hit),), miss)
 
-    def _or_exists_pair_flag(
-        self, ex, keys, noneq, inner_only, spec, ephemeral
-    ):
-        """TWO non-equality correlations under OR'd [NOT] EXISTS
-        (round 12 — closes the first SURVEY remaining-fallback item):
-        ``P OR EXISTS(i: i.k = o.k AND i.a < o.x AND i.b > o.y)``.
-
-        Per-column extremes lose the SINGLE-WITNESS requirement (the
-        row attaining MIN(a) need not attain MAX(b)), so the flag view
-        carries the per-key PARETO STAIRCASE instead: orient each
-        dimension so "smaller is better" per its op, reduce to the
-        best second-dim value per (key, first-dim) point, take the
-        running best along the first dimension, and keep only the
-        change points. A raw witness row exists for (o.x, o.y) iff a
-        staircase point satisfies both comparisons (the change point
-        at-or-before the witness's first-dim value dominates it), so
-        the array probe F.exists(pts, ...) is exact — this is the
-        reference's TreeLikeArray (SURVEY R9/R12) re-expressed as a
-        one-row-per-key ARRAY column on a flag view, probed JVM-side.
-
-        Scale: one (key, u) pre-reduction shuffle, one key-partitioned
-        window sharing the sort with the final collect — and the LEFT
-        flag join never duplicates outer rows (one row per key). The
-        array holds only the frontier's change points; worst case
-        (a sorted anti-chain) equals the reference's own per-key
-        sorted-array bound, typical case is tiny. NULLs in a compared
-        inner column cannot witness an order comparison and are
-        filtered before the frontier; EXISTS stays two-valued through
-        the CaseWhen fold."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            PairWitness,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-
-        (op1, out1, col1), (op2, out2, col2) = noneq
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
-        if not keys:
-            return self._keyless_pair_flag(
-                ex, inner, noneq, spec, ephemeral
-            )
-        key_sel: dict[str, str] = {}
-        for _, icol in keys:
-            key_sel.setdefault(icol, f"__f{len(key_sel)}")
-        kcols = [F.col(icol).alias(out) for icol, out in key_sel.items()]
-        outs = list(key_sel.values())
-        pts = (
-            inner.filter(
-                F.col(col1).isNotNull() & F.col(col2).isNotNull()
-            )
-            .select(*kcols, F.col(col1).alias("u"), F.col(col2).alias("v"))
-            # best v per (key, u): the only candidate the probe can use
-            .groupBy(*outs, "u")
-            .agg(
-                (F.min if op2 in ("<", "<=") else F.max)("v").alias("v")
-            )
-        )
-        w = (
-            Window.partitionBy(*outs)
-            .orderBy(F.col("u").asc() if op1 in ("<", "<=") else F.col("u").desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        run = (F.min if op2 in ("<", "<=") else F.max)("v").over(w)
-        lag_w = Window.partitionBy(*outs).orderBy(
-            F.col("u").asc() if op1 in ("<", "<=") else F.col("u").desc()
-        )
-        pts = pts.select(*outs, "u", run.alias("vbest"))
-        pts = pts.withColumn("__prev", F.lag("vbest").over(lag_w)).filter(
-            F.col("__prev").isNull() | (F.col("vbest") != F.col("__prev"))
-        )
-        view = pts.groupBy(*outs).agg(
-            F.collect_list(
-                F.struct(F.col("u").alias("u"), F.col("vbest").alias("v"))
-            ).alias("__pts")
-        )
-        self._view_counter += 1
-        vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, tuple(key_sel.values()))
-        ephemeral.append(vname)
-        valias = f"{vname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=valias, table=vname),
-                conds=[
-                    Cmp("=", oc, Col(valias, key_sel[icol]))
-                    for oc, icol in keys
-                ],
-                side="left",
-            )
-        )
-        matched = IsNull(Col(valias, key_sel[keys[0][1]]), negated=True)
-        witness = PairWitness(
-            Col(valias, "__pts"), op1, out1, op2, out2
-        )
-        raw = AndCond((matched, witness))
-        hit = Lit(not ex.negated, "boolean")
-        miss = Lit(bool(ex.negated), "boolean")
-        return CaseWhen(((raw, hit),), miss)
-
-    def _or_exists_neq_order2_flag(
-        self, ex, keys, noneq, inner_only, spec, ephemeral
-    ):
-        """ONE ``<>`` + TWO order comparisons under OR'd [NOT] EXISTS
-        (round 13 latest): ``P OR EXISTS(i: i.k = o.k AND i.a <> o.x
-        AND i.b OP2 o.y AND i.c OP3 o.z)``. The witness question
-        splits on the (b, c) REGION the order pair carves: >= 2
-        distinct a-classes inside -> a witness exists for any
-        non-NULL x; exactly one -> it must differ from x. Both facts
-        ride one per-key view (plans/frontier.py:
-        keyed_neq_order2_view — the annotated region staircase U plus
-        the distinct-a pair-combination staircase V, one applyInPandas
-        sweep), probed JVM-side by expressions.NeqTripleWitness. One
-        row per key, the LEFT flag join never duplicates. Keyed only;
-        b/c dims integral/date/timestamp (the builder raises
-        otherwise, riding mode='auto')."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            NeqTripleWitness,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            keyed_neq_order2_view,
-        )
-
-        (_, d1e, a_col) = next(t for t in noneq if t[0] == "<>")
-        (op2, d2e, b_col), (op3, d3e, c_col) = [
-            t for t in noneq if t[0] != "<>"
-        ]
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
-        # round 15: float <>-dims embed via neq_canon on BOTH sides
-        # (inner helper column + AST-level probe wrap)
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-        key_sel: dict[str, str] = {}
-        for _, icol in keys:
-            key_sel.setdefault(icol, f"__f{len(key_sel)}")
-        view = keyed_neq_order2_view(
-            inner,
-            [(icol, out) for icol, out in key_sel.items()],
-            a_col, b_col, c_col, (op2, op3),
-            "__upts", "__vpts",
-        )
-        self._view_counter += 1
-        vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, tuple(key_sel.values()))
-        ephemeral.append(vname)
-        valias = f"{vname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=valias, table=vname),
-                conds=[
-                    Cmp("=", oc, Col(valias, key_sel[icol]))
-                    for oc, icol in keys
-                ],
-                side="left",
-            )
-        )
-        witness = NeqTripleWitness(
-            Col(valias, "__upts"),
-            Col(valias, "__vpts"),
-            d1e, op2, d2e, op3, d3e,
-        )
-        hit = Lit(not ex.negated, "boolean")
-        miss = Lit(bool(ex.negated), "boolean")
-        return CaseWhen(((witness, hit),), miss)
-
     def _keyless_neq_order2_fold(
         self, ex, noneq, inner_only, spec, ephemeral
     ):
@@ -2175,11 +1934,7 @@ class SparkSQLPlus:
         (op2, d2e, b_col), (op3, d3e, c_col) = [
             t for t in noneq if t[0] != "<>"
         ]
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_only)
         # round 15: float <>-dims embed via neq_canon on BOTH sides
         from pyspark.sql import functions as F
 
@@ -2247,11 +2002,7 @@ class SparkSQLPlus:
         neqs = [t for t in noneq if t[0] == "<>"]
         (_, d1e, a_col), (_, d2e, b_col) = neqs
         (op3, d3e, c_col) = next(t for t in noneq if t[0] != "<>")
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_only)
         # round 15: float <>-dims embed via neq_canon on BOTH sides
         from pyspark.sql import functions as F
 
@@ -2296,340 +2047,57 @@ class SparkSQLPlus:
         miss = Lit(bool(ex.negated), "boolean")
         return CaseWhen(((witness, hit),), miss)
 
-    def _or_exists_neq2_order_flag(
-        self, ex, keys, noneq, inner_only, spec, ephemeral
-    ):
-        """TWO ``<>`` + ONE order comparison under OR'd [NOT] EXISTS
-        (round 13 latest): ``P OR EXISTS(i: i.k = o.k AND i.a <> o.x
-        AND i.b <> o.y AND i.c OP3 o.z)``. The region
-        rows-with-c-within is a 1-D NESTED family along OP3's
-        orientation, and within each prefix the a/b facts are the
-        diagonal-witness statistic — whose failing set (at most the
-        diagonal pair's two cross points once both coords have 2+
-        distinct values) only SHRINKS as the region grows, so one
-        per-key ARRAY of prefix stats at region change points decides
-        every (x, y, z) probe
-        (plans/frontier.py:keyed_neq2_order_view +
-        expressions.Neq2OrderWitness). One row per key, LEFT flag
-        join never duplicates. Keyed only; c integral/date/timestamp
-        (the builder raises otherwise, riding mode='auto')."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            Lit,
-            Neq2OrderWitness,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            keyed_neq2_order_view,
-        )
-
-        neqs = [t for t in noneq if t[0] == "<>"]
-        (_, d1e, a_col), (_, d2e, b_col) = neqs
-        (op3, d3e, c_col) = next(t for t in noneq if t[0] != "<>")
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
-        # round 15: float <>-dims embed via neq_canon on BOTH sides
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-        if neq_dim_is_float(inner.schema[b_col].dataType):
-            inner = inner.withColumn("__cn_neq_b", neq_canon(F.col(b_col)))
-            b_col = "__cn_neq_b"
-            d2e = neq_canon_expr(d2e)
-        key_sel: dict[str, str] = {}
-        for _, icol in keys:
-            key_sel.setdefault(icol, f"__f{len(key_sel)}")
-        view = keyed_neq2_order_view(
-            inner,
-            [(icol, out) for icol, out in key_sel.items()],
-            a_col, b_col, c_col, op3,
-            "__npts",
-        )
-        self._view_counter += 1
-        vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, tuple(key_sel.values()))
-        ephemeral.append(vname)
-        valias = f"{vname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=valias, table=vname),
-                conds=[
-                    Cmp("=", oc, Col(valias, key_sel[icol]))
-                    for oc, icol in keys
-                ],
-                side="left",
-            )
-        )
-        witness = Neq2OrderWitness(
-            Col(valias, "__npts"), d1e, d2e, op3, d3e
-        )
-        hit = Lit(not ex.negated, "boolean")
-        miss = Lit(bool(ex.negated), "boolean")
-        return CaseWhen(((witness, hit),), miss)
-
-    def _or_exists_sky_flag(
-        self, ex, keys, noneq, inner_only, spec, ephemeral
-    ):
-        """THREE order-comparison correlations under OR'd [NOT] EXISTS
-        (round 13 — the k=3 generalization of _or_exists_pair_flag):
-        ``P OR EXISTS(i: i.k = o.k AND i.a < o.x AND i.b > o.y AND
-        i.c <= o.z)``. The 2-D staircase becomes a per-key 3-D Pareto
-        SKYLINE (plans/frontier.py:keyed_skyline_view — pre-reduction,
-        applyInPandas sweep, part-keyed collect; never a
-        single-partition window); a raw witness row exists iff a
-        skyline point satisfies all three comparisons, probed JVM-side
-        by expressions.SkyWitness. One row per key, so the LEFT flag
-        join never duplicates. The KEYLESS triple (round 13 late)
-        folds the GLOBAL skyline instead
+    def _keyless_sky_fold(self, ex, noneq, inner_only, spec, ephemeral):
+        """KEYLESS three-to-five order-comparison correlations under
+        OR'd [NOT] EXISTS (round 13 late; the k-D generalization of
+        _keyless_pair_flag): ``P OR EXISTS(i: i.a < o.x AND i.b > o.y
+        AND i.c <= o.z)``. A raw witness row exists iff a point of the
+        GLOBAL Pareto skyline satisfies all comparisons
         (plans/frontier.py:global_skyline_points — per-Arrow-batch
         skylines + a capped driver-side merge re-running the same
-        sweep, the metadata-scale-collect class) and inlines it as a
-        one-row view joined unconditionally. Dtypes beyond
-        integral/date/timestamp raise inside the builder and ride
-        mode='auto'."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            SkyWitness,
-        )
+        sweep, the metadata-scale-collect class), inlined as a one-row
+        view joined unconditionally and probed JVM-side by
+        expressions.SkyWitness. Dtypes beyond integral/date/timestamp
+        raise inside the builder and ride mode='auto'."""
+        from sparksqlplus_spark.expressions import CaseWhen, Col, Lit, SkyWitness
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
         from sparksqlplus_spark.plans.frontier import (
             global_skyline_points,
-            keyed_skyline_view,
             skyline_one_row_df,
         )
 
         sky_ops = tuple(t[0] for t in noneq)
         sky_outs = tuple(t[1] for t in noneq)
         sky_cols = tuple(t[2] for t in noneq)
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
-        if not keys:
-            pts, types = global_skyline_points(
-                inner, sky_cols, sky_ops,
-                self._KEYLESS_FRONTIER_CAP,
-            )
-            view = skyline_one_row_df(self.spark, pts, types)
-            self._view_counter += 1
-            vname = f"__orx{self._view_counter}"
-            self.catalog.register_df(vname, view, ())
-            ephemeral.append(vname)
-            valias = f"{vname}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=valias, table=vname),
-                    conds=[],
-                    side="left",
-                    allow_uncorrelated=True,
-                )
-            )
-            # the one-row view always attaches; an EMPTY skyline makes
-            # F.exists false -> the miss value, exactly the fold
-            witness = SkyWitness(
-                Col(valias, "__pts"), sky_ops, sky_outs
-            )
-            hit = Lit(not ex.negated, "boolean")
-            miss = Lit(bool(ex.negated), "boolean")
-            return CaseWhen(((witness, hit),), miss)
-        key_sel: dict[str, str] = {}
-        for _, icol in keys:
-            key_sel.setdefault(icol, f"__f{len(key_sel)}")
-        view = keyed_skyline_view(
-            inner,
-            [(icol, out) for icol, out in key_sel.items()],
-            sky_cols,
-            sky_ops,
-            "__pts",
+        inner = self._filtered_inner(ex, inner_only)
+        pts, types = global_skyline_points(
+            inner, sky_cols, sky_ops, self._KEYLESS_FRONTIER_CAP,
         )
+        view = skyline_one_row_df(self.spark, pts, types)
         self._view_counter += 1
         vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, tuple(key_sel.values()))
+        self.catalog.register_df(vname, view, ())
         ephemeral.append(vname)
         valias = f"{vname}_i"
         spec.outer_joins.append(
             OuterJoin(
                 item=FromItem(alias=valias, table=vname),
-                conds=[
-                    Cmp("=", oc, Col(valias, key_sel[icol]))
-                    for oc, icol in keys
-                ],
+                conds=[],
                 side="left",
+                allow_uncorrelated=True,
             )
         )
-        matched = IsNull(Col(valias, key_sel[keys[0][1]]), negated=True)
-        witness = SkyWitness(
-            Col(valias, "__pts"), sky_ops, sky_outs
-        )
-        raw = AndCond((matched, witness))
+        # the one-row view always attaches; an EMPTY skyline makes
+        # F.exists false -> the miss value, exactly the fold
+        witness = SkyWitness(Col(valias, "__pts"), sky_ops, sky_outs)
         hit = Lit(not ex.negated, "boolean")
         miss = Lit(bool(ex.negated), "boolean")
-        return CaseWhen(((raw, hit),), miss)
-
-    def _or_exists_neq_order_flag(
-        self, ex, keys, neq, order, inner_only, spec, ephemeral
-    ):
-        """``<>`` paired with an ORDER comparison under OR'd [NOT]
-        EXISTS (round 12): ``P OR EXISTS(i: i.k = o.k AND i.a <> o.x
-        AND i.b > o.y)``. The sufficient per-key statistic is THREE
-        values — b1 = the best b, a1 = its argmax a (NULL sentinel
-        when the best b is attained by 2+ DISTINCT a values), b2 =
-        the best b among rows with a <> a1:
-
-          witness(x, y) = (b1 OP y AND (a1 IS NULL OR a1 <> x))
-                          OR (a1 = x AND b2 OP y)
-
-        Exactness: if a witness row (a, b) exists (a <> x, b OP y):
-        when the argmax is non-unique some argmax has a <> x, so
-        b1 >= b gives the first term; when it is unique and a1 <> x
-        the first term again; when a1 = x the witness has a <> a1, so
-        b2 >= b gives the second. Conversely each term names a real
-        row satisfying both conjuncts. A NULL outer operand makes both
-        terms UNKNOWN — the CaseWhen folds to the EXISTS miss value;
-        NULL inner a/b rows cannot witness and are filtered.
-
-        Scale: one (key, a) pre-reduction shuffle (map-side combine
-        bounds skew), one key window that keeps only the top-2 rows,
-        one-row-per-key view — the LEFT flag join never duplicates
-        and broadcasts when small."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-
-        _, x_out, a_col = neq
-        op_b, y_out, b_col = order
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
-        key_sel: dict[str, str] = {}
-        for _, icol in keys:
-            key_sel.setdefault(icol, f"__f{len(key_sel)}")
-        outs = list(key_sel.values())
-        best = F.max if op_b in (">", ">=") else F.min
-        pre = (
-            inner.filter(
-                F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
-            )
-            .select(
-                *[F.col(icol).alias(out) for icol, out in key_sel.items()],
-                F.col(a_col).alias("__a"),
-                F.col(b_col).alias("__b"),
-            )
-            .groupBy(*outs, "__a")
-            .agg(best("__b").alias("__ab"))
-        )
-        order_col = (
-            F.col("__ab").desc() if op_b in (">", ">=")
-            else F.col("__ab").asc()
-        )
-        w = Window.partitionBy(*outs).orderBy(order_col, F.col("__a"))
-        top2 = pre.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= 2
-        )
-        view = top2.groupBy(*outs).agg(
-            F.max(F.when(F.col("__rn") == 1, F.col("__ab"))).alias("__b1"),
-            F.max(F.when(F.col("__rn") == 1, F.col("__a"))).alias("__a1r"),
-            F.max(F.when(F.col("__rn") == 2, F.col("__ab"))).alias("__b2"),
-        )
-        # non-unique argmax (the runner-up DISTINCT a ties on b) ->
-        # NULL sentinel: the first witness term then fires on b1 alone
-        view = view.select(
-            *outs,
-            "__b1",
-            "__b2",
-            F.when(F.col("__b2") == F.col("__b1"), F.lit(None))
-            .otherwise(F.col("__a1r"))
-            .alias("__a1"),
-        )
-        self._view_counter += 1
-        vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, tuple(outs))
-        ephemeral.append(vname)
-        valias = f"{vname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=valias, table=vname),
-                conds=[
-                    Cmp("=", oc, Col(valias, key_sel[icol]))
-                    for oc, icol in keys
-                ],
-                side="left",
-            )
-        )
-        matched = IsNull(Col(valias, key_sel[keys[0][1]]), negated=True)
-        witness = OrCond(
-            (
-                AndCond(
-                    (
-                        Cmp(op_b, Col(valias, "__b1"), y_out),
-                        OrCond(
-                            (
-                                # multi-argmax: some argmax differs
-                                # from any NON-NULL x (NULL x makes
-                                # a <> x UNKNOWN for every row)
-                                AndCond(
-                                    (
-                                        IsNull(Col(valias, "__a1")),
-                                        IsNull(x_out, negated=True),
-                                    )
-                                ),
-                                Cmp("<>", Col(valias, "__a1"), x_out),
-                            )
-                        ),
-                    )
-                ),
-                AndCond(
-                    (
-                        Cmp("=", Col(valias, "__a1"), x_out),
-                        Cmp(op_b, Col(valias, "__b2"), y_out),
-                    )
-                ),
-            )
-        )
-        raw = AndCond((matched, witness))
-        hit = Lit(not ex.negated, "boolean")
-        miss = Lit(bool(ex.negated), "boolean")
-        return CaseWhen(((raw, hit),), miss)
+        return CaseWhen(((witness, hit),), miss)
 
     def _keyless_neq_order_fold(self, ex, neq, order, inner_only):
         """KEYLESS ``<>`` + order comparison under OR'd [NOT] EXISTS
-        (round 12): the global 3-stat fold — the keyless sibling of
-        _or_exists_neq_order_flag and the 2-D analogue of the keyless
-        single-comparison global-MIN/MAX fold. One plan-time
+        (round 12): the global 3-stat fold — the 2-D analogue of the
+        keyless single-comparison global-MIN/MAX fold. One plan-time
         TakeOrderedAndProject job (top-2 distinct-a groups by best b)
         gives b1/a1/multi/b2; the witness folds to a literal
         comparison tree evaluated per outer row:
@@ -2660,11 +2128,7 @@ class SparkSQLPlus:
 
         _, x_out, a_col = neq
         op_b, y_out, b_col = order
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_only)
         # round 15: a float <>-dim embeds via neq_canon on BOTH sides
         # (only the ORDER dim keeps the exact gate — the argmax
         # uniqueness check compares collected b values in Python)
@@ -2708,215 +2172,11 @@ class SparkSQLPlus:
 
     _KEYLESS_FRONTIER_CAP = 65536
 
-    def _or_exists_neq_pair_flag(
-        self, ex, keys, noneq, inner_only, spec, ephemeral
-    ):
-        """TWO ``<>`` correlations under OR'd [NOT] EXISTS (round 13 —
-        closes the SURVEY '<>-with-<> pairs' fallback cell, keyed
-        groups): ``P OR EXISTS(i: i.k = o.k AND i.a <> o.x AND
-        i.b <> o.y)``.
-
-        Per key group (rows with NULL a or b filtered — a <> NULL is
-        UNKNOWN, such a row can never witness), the witness question
-        "∃ row: a ≠ x ∧ b ≠ y" has a BOUNDED sufficient statistic:
-
-        * if all rows share one a value (da = 1): witness ⟺ ua ≠ x and
-          some b differs from y (db ≥ 2 or ub ≠ y); symmetric for
-          db = 1;
-        * otherwise a DIAGONAL pair (two rows differing in BOTH
-          coordinates) exists — lemma: da ≥ 2 ∧ db ≥ 2 forces one
-          among r1 = lexmin(a,b), s = lexmin among a ≠ r1.a,
-          t = lexmin among b ≠ r1.b (if s is not diagonal to r1 then
-          s.b = r1.b, if t is not diagonal then t.a = r1.a, and then
-          (t, s) differ in both coordinates). For a diagonal pair
-          (P, Q), any probe (x, y) fails BOTH rows only at the two
-          CROSS POINTS (P.a, Q.b) and (Q.a, P.b) — everywhere else
-          one of P/Q is itself a witness. Each cross point needs one
-          precomputed bit: w1 = ∃ row a ≠ P.a ∧ b ≠ Q.b,
-          w2 = ∃ row a ≠ Q.a ∧ b ≠ P.b.
-
-        Build: three grouped passes (stats + lexmin; s/t under the
-        joined r1; w1/w2 under the chosen pair), each one key exchange
-        with the join reusing it; the flag view stays ONE row per key
-        (scalars only), so the LEFT join never duplicates, and the
-        probe is pure row-side expression logic. EXISTS is two-valued
-        through the CaseWhen fold (a NULL x or y can never witness).
-        Keyless groups ride the fallback. NOT IN with a <> pair keeps
-        its fallback too (the three-valued gate adds the probe-column
-        dimension this statistic does not carry)."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-
-        (_, out1, col_a), (_, out2, col_b) = noneq
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
-        inner_t = inner.filter(
-            F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
-        )
-        key_sel: dict[str, str] = {}
-        for _, icol in keys:
-            key_sel.setdefault(icol, f"__f{len(key_sel)}")
-        kcols = [F.col(icol).alias(out) for icol, out in key_sel.items()]
-        outs = list(key_sel.values())
-        rows = inner_t.select(
-            *kcols, F.col(col_a).alias("a"), F.col(col_b).alias("b")
-        )
-        g1 = rows.groupBy(*outs).agg(
-            F.count_distinct("a").alias("da"),
-            F.count_distinct("b").alias("db"),
-            F.min("a").alias("ua"),
-            F.min("b").alias("ub"),
-            F.min(F.struct("a", "b")).alias("r1"),
-        )
-        j2 = rows.join(g1.select(*outs, "r1"), outs)
-        g2 = j2.groupBy(*outs).agg(
-            F.min(
-                F.when(F.col("a") != F.col("r1.a"), F.struct("a", "b"))
-            ).alias("s"),
-            F.min(
-                F.when(F.col("b") != F.col("r1.b"), F.struct("a", "b"))
-            ).alias("t"),
-        )
-        v2 = g1.join(g2, outs)
-        diag_s = F.col("s").isNotNull() & (
-            F.col("s.b") != F.col("r1.b")
-        )
-        diag_t = F.col("t").isNotNull() & (
-            F.col("t.a") != F.col("r1.a")
-        )
-        p = (
-            F.when(diag_s | diag_t, F.col("r1")).otherwise(F.col("t"))
-        )
-        q = F.when(diag_s, F.col("s")).otherwise(
-            F.when(diag_t, F.col("t")).otherwise(F.col("s"))
-        )
-        v2 = v2.select(
-            *outs, "da", "db", "ua", "ub",
-            p["a"].alias("pa"), p["b"].alias("pb"),
-            q["a"].alias("qa"), q["b"].alias("qb"),
-        )
-        j3 = rows.join(
-            v2.select(*outs, "pa", "pb", "qa", "qb"), outs
-        )
-        g3 = j3.groupBy(*outs).agg(
-            F.max(
-                F.when(
-                    (F.col("a") != F.col("pa"))
-                    & (F.col("b") != F.col("qb")),
-                    1,
-                ).otherwise(0)
-            ).alias("w1"),
-            F.max(
-                F.when(
-                    (F.col("a") != F.col("qa"))
-                    & (F.col("b") != F.col("pb")),
-                    1,
-                ).otherwise(0)
-            ).alias("w2"),
-        )
-        view = v2.join(g3, outs)
-        self._view_counter += 1
-        vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, tuple(outs))
-        ephemeral.append(vname)
-        valias = f"{vname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=valias, table=vname),
-                conds=[
-                    Cmp("=", oc, Col(valias, key_sel[icol]))
-                    for oc, icol in keys
-                ],
-                side="left",
-            )
-        )
-        hit = Lit(not ex.negated, "boolean")
-        miss = Lit(bool(ex.negated), "boolean")
-
-        def vc(name):
-            return Col(valias, name)
-
-        one = Lit(1, "int")
-        zero = Lit(0, "int")
-        return CaseWhen(
-            (
-                # group miss (incl. all rows NULL-a/b): no witness
-                (IsNull(vc("da")), miss),
-                # a NULL probe operand can never witness (<> UNKNOWN)
-                (OrCond((IsNull(out1), IsNull(out2))), miss),
-                # single-a group: witness iff ua differs AND some b
-                # differs (db >= 2 or the unique b differs)
-                (
-                    AndCond(
-                        (
-                            Cmp("=", vc("da"), one),
-                            Cmp("<>", vc("ua"), out1),
-                            OrCond(
-                                (
-                                    Cmp(">=", vc("db"), Lit(2, "int")),
-                                    Cmp("<>", vc("ub"), out2),
-                                )
-                            ),
-                        )
-                    ),
-                    hit,
-                ),
-                (Cmp("=", vc("da"), one), miss),
-                # single-b group (da >= 2 here, so some a differs)
-                (
-                    AndCond(
-                        (
-                            Cmp("=", vc("db"), one),
-                            Cmp("<>", vc("ub"), out2),
-                        )
-                    ),
-                    hit,
-                ),
-                (Cmp("=", vc("db"), one), miss),
-                # diagonal case: only the two cross points can fail,
-                # each decided by its precomputed witness bit
-                (
-                    OrCond(
-                        (
-                            AndCond(
-                                (
-                                    Cmp("=", out1, vc("pa")),
-                                    Cmp("=", out2, vc("qb")),
-                                    Cmp("=", vc("w1"), zero),
-                                )
-                            ),
-                            AndCond(
-                                (
-                                    Cmp("=", out1, vc("qa")),
-                                    Cmp("=", out2, vc("pb")),
-                                    Cmp("=", vc("w2"), zero),
-                                )
-                            ),
-                        )
-                    ),
-                    miss,
-                ),
-            ),
-            hit,
-        )
-
     def _keyless_neq_pair_fold(self, ex, noneq, inner_only):
         """KEYLESS ``<>``-with-``<>`` under OR'd [NOT] EXISTS (round
-        13): the global fold of _or_exists_neq_pair_flag's
-        diagonal-witness statistic. 1-3 plan-time scalar aggregate
+        13): the global fold of the diagonal-witness statistic
+        (exactness lemma: plans/frontier.py:keyless_diag_stats). 1-3
+        plan-time scalar aggregate
         jobs (metadata-scale collects — the _keyless_neq_order_fold
         class) compute (da, db, ua, ub) and, in the diagonal case, the
         chosen pair's cross points and witness bits; the Exists then
@@ -2937,11 +2197,7 @@ class SparkSQLPlus:
         from sparksqlplus_spark.plans.frontier import keyless_diag_stats
 
         (_, x_out, a_col), (_, y_out, b_col) = noneq
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_only)
         # round 15: float <>-dims embed via neq_canon on BOTH sides
         # (both dims here are equality-only <>-dims)
         from pyspark.sql import functions as F
@@ -3005,17 +2261,19 @@ class SparkSQLPlus:
             )
         return CaseWhen(tuple(branches), hit)
 
-    def _keyless_pair_flag(self, ex, inner, noneq, spec, ephemeral):
+    def _keyless_pair_flag(self, ex, noneq, inner_only, spec, ephemeral):
         """Keyless 2-comparison OR'd [NOT] EXISTS (round 12): the
         GLOBAL Pareto staircase, inlined as a ONE-ROW broadcast view
-        joined on a literal key (the keyless sibling of
-        _or_exists_pair_flag, and the 2-D generalization of the
-        keyless single-comparison global-MIN/MAX fold above).
+        joined on a literal key (the 2-D generalization of the keyless
+        single-comparison global-MIN/MAX fold). A raw witness row
+        exists for (o.x, o.y) iff a staircase point satisfies both
+        comparisons — the reference's TreeLikeArray (SURVEY R9/R12) as
+        a one-row ARRAY column, probed JVM-side.
 
-        Built WITHOUT the single-group window the keyed path would
-        degenerate to here (one window partition = the whole inner
-        table — a scale-killer): (1) groupBy(u) pre-reduction with
-        map-side combine, (2) per-Arrow-batch frontier via mapInPandas
+        Built WITHOUT a single-group window (one window partition =
+        the whole inner table — a scale-killer): (1) groupBy(u)
+        pre-reduction with map-side combine, (2) per-Arrow-batch
+        frontier via mapInPandas
         (each batch's staircase is a superset-reduction, vectorized
         cummin), (3) bounded plan-time merge of the batch frontiers on
         the driver — the same metadata-scale-collect class as the
@@ -3031,11 +2289,9 @@ class SparkSQLPlus:
         and ride the fallback instead of risking a semantic skew.
         Round 13: the fold itself lives in plans/frontier.py, shared
         with the keyless pair-filtered NOT IN executor."""
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         from sparksqlplus_spark.expressions import (
-            Cmp,
             CaseWhen,
             Col,
             Lit,
@@ -3045,6 +2301,7 @@ class SparkSQLPlus:
         from sparksqlplus_spark.plans.frontier import global_frontier_points
 
         (op1, out1, col1), (op2, out2, col2) = noneq
+        inner = self._filtered_inner(ex, inner_only)
         asc1 = op1 in ("<", "<=")
         take_min2 = op2 in ("<", "<=")
         merged, u_type, v_type = global_frontier_points(
@@ -3145,11 +2402,7 @@ class SparkSQLPlus:
             inner_rest = inner_rest[1:]
         else:
             probe_outer, probe_icol = probe_pair
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_rest:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_rest)
         gsel: dict[str, str] = {}
         for _, icol in corr:
             gsel.setdefault(icol, f"__cg{len(gsel)}")
@@ -3159,58 +2412,35 @@ class SparkSQLPlus:
                 spec, ephemeral,
             )
         if pair is not None:
-            if len(pair) in (4, 5):
-                # latest r13: 4-D skyline flag views (all-order keyed
-                # per the dispatch); round 15: k=5 rides the same
-                # tail-width-agnostic dominance scans
-                return self._corr_not_in_sky_threshold_or(
-                    inner, gsel, corr, probe_outer, probe_icol, pair,
-                    spec, ephemeral,
-                )
-            if len(pair) == 3:
-                n_neq3 = sum(1 for t in pair if t[0] == "<>")
-                if n_neq3 in (1, 2) and not gsel:
-                    # round 14: KEYLESS <>-containing triples — global
-                    # stat folds + a per-y match view (see the method)
+            # multi-comparison filters reach here KEYLESS only (the
+            # lift routes keyed groups to the spark.sql fallback)
+            n_neq = sum(1 for t in pair if t[0] == "<>")
+            if len(pair) >= 3:
+                if n_neq:
+                    # round 14: <>-containing triples — global stat
+                    # folds + a per-y match view (see the method)
                     return self._corr_not_in_neq_triple_keyless_or(
                         inner, probe_outer, probe_icol, pair, spec,
                         ephemeral,
                     )
-                if n_neq3 == 1:
-                    # round 13 (latest): ONE <> + two order
-                    # comparisons — U/V two-staircase flag views
-                    # (keyed only, per the dispatch)
-                    return self._corr_not_in_neq_order2_threshold_or(
-                        inner, gsel, corr, probe_outer, probe_icol,
-                        pair, spec, ephemeral,
-                    )
-                if n_neq3 == 2:
-                    # round 13 (latest): TWO <> + one order —
-                    # prefix-diagonal-stats flag views (keyed only)
-                    return self._corr_not_in_neq2_order_threshold_or(
-                        inner, gsel, corr, probe_outer, probe_icol,
-                        pair, spec, ephemeral,
-                    )
-                # round 13 (late): order-comparison triple — skyline
-                # flag views (keyed or keyless)
+                # round 13 (late): order-comparison triples, quads and
+                # quints — global skyline folds (k = 5 since round 15)
                 return self._corr_not_in_sky_threshold_or(
-                    inner, gsel, corr, probe_outer, probe_icol, pair,
-                    spec, ephemeral,
+                    inner, probe_outer, probe_icol, pair, spec,
+                    ephemeral,
                 )
-            n_neq = sum(1 for t in pair if t[0] == "<>")
             if n_neq == 2:
                 return self._corr_not_in_neq_pair_threshold_or(
-                    inner, gsel, corr, probe_outer, probe_icol, pair,
-                    spec, ephemeral,
+                    inner, probe_outer, probe_icol, pair, spec,
+                    ephemeral,
                 )
             if n_neq == 1:
                 return self._corr_not_in_neq_order_threshold_or(
-                    inner, gsel, corr, probe_outer, probe_icol, pair,
-                    spec, ephemeral,
+                    inner, probe_outer, probe_icol, pair, spec,
+                    ephemeral,
                 )
             return self._corr_not_in_pair_threshold_or(
-                inner, gsel, corr, probe_outer, probe_icol, pair,
-                spec, ephemeral,
+                inner, probe_outer, probe_icol, pair, spec, ephemeral,
             )
         stats = inner.groupBy(
             *[F.col(icol).alias(out) for icol, out in gsel.items()]
@@ -3630,36 +2860,35 @@ class SparkSQLPlus:
         )
 
     def _corr_not_in_pair_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, pair,
-        spec, ephemeral,
+        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
     ):
-        """Correlated NOT IN under OR whose inner set is filtered by
-        TWO order comparisons against the outer row (round 13 — the OR
-        sibling of compiler/cqc.py:_apply_pair_threshold_not_in):
-        ``P OR o.x NOT IN (SELECT y FROM t WHERE t.k = o.k AND
-        t.c1 OP1 o.d1 AND t.c2 OP2 o.d2)``. One extreme per fact no
-        longer decides (the row attaining best c1 need not satisfy the
-        c2 bound), but each three-valued fact is a 2-D DOMINANCE query,
-        so per-group Pareto STAIRCASES do — the same frontier argument
-        as _or_exists_pair_flag, carried on flag views:
+        """KEYLESS correlated NOT IN under OR whose inner set is
+        filtered by TWO order comparisons against the outer row (round
+        13 — the OR sibling of
+        compiler/cqc.py:_apply_pair_threshold_not_in_keyless): ``P OR
+        o.x NOT IN (SELECT y FROM t WHERE t.c1 OP1 o.d1 AND t.c2 OP2
+        o.d2)``. Each three-valued fact is a 2-D DOMINANCE query, so
+        Pareto STAIRCASES decide it (the _keyless_pair_flag frontier
+        argument, carried on flag views):
 
-          set empty(o)  <=> group miss, NO staircase point of the whole
-                            subset within (OP1 o.d1, OP2 o.d2), or a
-                            NULL d1/d2 (c OP NULL is UNKNOWN rowwise)
+          set empty(o)  <=> NO point of the whole-set staircase within
+                            (OP1 o.d1, OP2 o.d2), or a NULL d1/d2 (c OP
+                            NULL is UNKNOWN rowwise)
           has NULL y(o) <=> a point of the NULL-y staircase within
           matched(o)    <=> a point of the (y = x)-staircase within
 
-        Flag order: miss/empty -> TRUE; matched -> FALSE; in-threshold
-        NULL y or NULL probe -> UNKNOWN; else TRUE. Every view is one
-        row per group (or per (group, y) for the column-probe match
-        view, pinned by the join condition) — the LEFT joins never
-        duplicate; arrays hold only the frontier's change points (the
-        reference's TreeLikeArray bound, SURVEY R9/R12), probed
-        JVM-side via F.exists. Rows with a NULL compared column can
-        never qualify and are filtered before the frontier. DuckDB
-        CANNOT oracle this shape (its decorrelation returns empty on
-        two-inequality correlated NOT IN — SURVEY ORACLE WARNING), so
-        coverage is the brute-force NULL-matrix pytest."""
+        Flag order: empty -> TRUE; matched -> FALSE; in-threshold NULL
+        y or NULL probe -> UNKNOWN; else TRUE. The set and NULL-y
+        staircases fold GLOBALLY via the bounded frontier helper
+        (plans/frontier.py; never a single-partition window) into
+        one-row views attached unconditionally; the match view is one
+        row per y (column probe, pinned by the join condition) or
+        another global fold (constant probe) — the LEFT joins never
+        duplicate. Rows with a NULL compared column can never qualify
+        and are filtered. DuckDB CANNOT oracle this shape (its
+        decorrelation returns empty on two-inequality correlated NOT
+        IN — SURVEY ORACLE WARNING), so coverage is the brute-force
+        NULL-matrix pytest."""
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
@@ -3673,6 +2902,10 @@ class SparkSQLPlus:
             PairWitness,
         )
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
+        from sparksqlplus_spark.plans.frontier import (
+            frontier_one_row_df,
+            global_frontier_points,
+        )
 
         (op1, d1, c1), (op2, d2, c2) = pair
         best2 = F.min if op2 in ("<", "<=") else F.max
@@ -3683,97 +2916,70 @@ class SparkSQLPlus:
             F.col(c1).isNotNull() & F.col(c2).isNotNull()
         )
 
-        def staircase_view(src, extra_part=None, extra_conds=()):
-            """Register a per-part staircase view and LEFT-join it;
-            parts are the group columns (+ the probe column for the
-            column-probe match view). Returns the join alias. With NO
-            parts (keyless groups, round 13) the staircase is GLOBAL
-            — folded via the bounded frontier helper
-            (plans/frontier.py; never a single-partition window) and
-            registered as a one-row view attached unconditionally."""
-            from sparksqlplus_spark.plans.frontier import (
-                frontier_one_row_df,
-                global_frontier_points,
-            )
-
-            part = [F.col(icol).alias(out) for icol, out in gsel.items()]
-            outs = list(gsel.values())
-            if extra_part is not None:
-                part.append(F.col(extra_part).alias("__cmp"))
-                outs = outs + ["__cmp"]
-            if not outs:
-                merged, ut, vt = global_frontier_points(
-                    src, c1, c2, op1 in ("<", "<="), op2 in ("<", "<="),
-                    self._KEYLESS_FRONTIER_CAP,
-                )
-                view = frontier_one_row_df(self.spark, merged, ut, vt)
-                self._view_counter += 1
-                name = f"__corrp{self._view_counter}"
-                self.catalog.register_df(name, view, ())
-                ephemeral.append(name)
-                alias = f"{name}_i"
-                spec.outer_joins.append(
-                    OuterJoin(
-                        item=FromItem(alias=alias, table=name),
-                        conds=list(
-                            extra_conds(alias) if extra_conds else []
-                        ),
-                        side="left",
-                        allow_uncorrelated=True,
-                    )
-                )
-                return alias
-            pts = (
-                src.select(*part, F.col(c1).alias("u"), F.col(c2).alias("v"))
-                .groupBy(*outs, "u")
-                .agg(best2("v").alias("v"))
-            )
-            w = (
-                Window.partitionBy(*outs)
-                .orderBy(u_order)
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            lw = Window.partitionBy(*outs).orderBy(u_order)
-            pts = pts.select(*outs, "u", best2("v").over(w).alias("vb"))
-            pts = pts.withColumn("__pv", F.lag("vb").over(lw)).filter(
-                F.col("__pv").isNull() | (F.col("vb") != F.col("__pv"))
-            )
-            view = pts.groupBy(*outs).agg(
-                F.collect_list(
-                    F.struct(F.col("u").alias("u"), F.col("vb").alias("v"))
-                ).alias("__pts")
-            )
+        def attach(view, conds, part=()):
             self._view_counter += 1
             name = f"__corrp{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(outs))
+            self.catalog.register_df(name, view, tuple(part))
             ephemeral.append(name)
             alias = f"{name}_i"
             spec.outer_joins.append(
                 OuterJoin(
                     item=FromItem(alias=alias, table=name),
-                    conds=[
-                        Cmp("=", oc, Col(alias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + list(extra_conds(alias) if extra_conds else []),
+                    conds=conds(alias),
                     side="left",
+                    allow_uncorrelated=not part,
                 )
             )
             return alias
 
-        a_alias = staircase_view(inner_t)
-        n_alias = staircase_view(inner_t.filter(F.col(probe_icol).isNull()))
+        def global_view(src):
+            merged, ut, vt = global_frontier_points(
+                src, c1, c2, op1 in ("<", "<="), op2 in ("<", "<="),
+                self._KEYLESS_FRONTIER_CAP,
+            )
+            return attach(
+                frontier_one_row_df(self.spark, merged, ut, vt),
+                lambda alias: [],
+            )
+
+        a_alias = global_view(inner_t)
+        n_alias = global_view(inner_t.filter(F.col(probe_icol).isNull()))
         if not probe_outer.refs():
-            # constant probe: fold y = probe into a group-keyed view
+            # constant probe: fold y = probe into a third global view
             pl = probe_outer.to_spark({})
-            m_alias = staircase_view(inner_t.filter(F.col(probe_icol) == pl))
+            m_alias = global_view(inner_t.filter(F.col(probe_icol) == pl))
         else:
-            m_alias = staircase_view(
-                inner_t.filter(F.col(probe_icol).isNotNull()),
-                extra_part=probe_icol,
-                extra_conds=lambda alias: [
-                    Cmp("=", probe_outer, Col(alias, "__cmp"))
-                ],
+            # per-y staircase — partitioned by y, so the window is
+            # distributed; one array row per y
+            pts = (
+                inner_t.filter(F.col(probe_icol).isNotNull())
+                .select(
+                    F.col(probe_icol).alias("__cmp"),
+                    F.col(c1).alias("u"),
+                    F.col(c2).alias("v"),
+                )
+                .groupBy("__cmp", "u")
+                .agg(best2("v").alias("v"))
+            )
+            w = (
+                Window.partitionBy("__cmp")
+                .orderBy(u_order)
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            lw = Window.partitionBy("__cmp").orderBy(u_order)
+            pts = pts.select("__cmp", "u", best2("v").over(w).alias("vb"))
+            pts = pts.withColumn("__pv", F.lag("vb").over(lw)).filter(
+                F.col("__pv").isNull() | (F.col("vb") != F.col("__pv"))
+            )
+            view = pts.groupBy("__cmp").agg(
+                F.collect_list(
+                    F.struct(F.col("u").alias("u"), F.col("vb").alias("v"))
+                ).alias("__pts")
+            )
+            m_alias = attach(
+                view,
+                lambda alias: [Cmp("=", probe_outer, Col(alias, "__cmp"))],
+                part=("__cmp",),
             )
 
         def wit(alias, negated=False):
@@ -3783,7 +2989,7 @@ class SparkSQLPlus:
 
         return CaseWhen(
             (
-                # group miss (or every group row NULL-c): set empty
+                # empty / all-NULL-c inner: set empty
                 (IsNull(Col(a_alias, "__pts")), Lit(True, "boolean")),
                 # NULL threshold: c OP NULL is UNKNOWN for every row
                 (OrCond((IsNull(d1), IsNull(d2))), Lit(True, "boolean")),
@@ -3798,260 +3004,26 @@ class SparkSQLPlus:
             Lit(True, "boolean"),
         )
 
-    def _corr_not_in_neq2_order_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, triple,
-        spec, ephemeral,
-    ):
-        """Correlated NOT IN under OR whose inner set is filtered by
-        TWO ``<>`` plus ONE order comparison (round 13 latest — the OR
-        sibling of compiler/cqc.py:_apply_neq2_order_threshold_not_in):
-        each three-valued fact carries a keyed_neq2_order_view (the
-        prefix diagonal statistics at every region change point)
-        probed by expressions.Neq2OrderWitness. Flag order mirrors the
-        sibling flags: miss/NULL-threshold/no-witness -> TRUE (set
-        empty); match witness -> FALSE; NULL-y witness or NULL probe
-        -> UNKNOWN; else TRUE. One row per group (per (group, y) for
-        a column probe) — the LEFT joins never duplicate. DuckDB
-        cannot oracle the shape (SURVEY ORACLE WARNING), so coverage
-        is the brute-force NULL-matrix pytest."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            Neq2OrderWitness,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            keyed_neq2_order_view,
-        )
-
-        neqs = [t for t in triple if t[0] == "<>"]
-        (_, d1e, a_col), (_, d2e, b_col) = neqs
-        (op3, d3e, c_col) = next(t for t in triple if t[0] != "<>")
-        # round 15: float <>-dims embed via neq_canon (both sides);
-        # IsNull(canon(e)) == IsNull(e) so the flag ladder is unchanged
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-        if neq_dim_is_float(inner.schema[b_col].dataType):
-            inner = inner.withColumn("__cn_neq_b", neq_canon(F.col(b_col)))
-            b_col = "__cn_neq_b"
-            d2e = neq_canon_expr(d2e)
-
-        def nview(src, extra_part=None, extra_conds=()):
-            part = [(icol, out) for icol, out in gsel.items()]
-            if extra_part is not None:
-                part.append((extra_part, "__cmp"))
-            view = keyed_neq2_order_view(
-                src, part, a_col, b_col, c_col, op3, "__npts"
-            )
-            outs = [out for _, out in part]
-            self._view_counter += 1
-            name = f"__corrz{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(outs))
-            ephemeral.append(name)
-            alias = f"{name}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=alias, table=name),
-                    conds=[
-                        Cmp("=", oc, Col(alias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + list(extra_conds(alias) if extra_conds else []),
-                    side="left",
-                )
-            )
-            return alias
-
-        a_alias = nview(inner)
-        n_alias = nview(inner.filter(F.col(probe_icol).isNull()))
-        if not probe_outer.refs():
-            pl = probe_outer.to_spark({})
-            m_alias = nview(inner.filter(F.col(probe_icol) == pl))
-        else:
-            m_alias = nview(
-                inner.filter(F.col(probe_icol).isNotNull()),
-                extra_part=probe_icol,
-                extra_conds=lambda alias: [
-                    Cmp("=", probe_outer, Col(alias, "__cmp"))
-                ],
-            )
-
-        def wit(alias, negated=False):
-            return Neq2OrderWitness(
-                Col(alias, "__npts"), d1e, d2e, op3, d3e,
-                negated=negated,
-            )
-
-        return CaseWhen(
-            (
-                # group miss (or every group row NULL-a/b/c): empty
-                (IsNull(Col(a_alias, "__npts")), Lit(True, "boolean")),
-                # NULL threshold: the filter is UNKNOWN rowwise
-                (
-                    OrCond((IsNull(d1e), IsNull(d2e), IsNull(d3e))),
-                    Lit(True, "boolean"),
-                ),
-                # no witness in the whole subset: set empty (array
-                # and outers non-NULL here -> two-valued negation)
-                (wit(a_alias, negated=True), Lit(True, "boolean")),
-                (wit(m_alias), Lit(False, "boolean")),
-                (wit(n_alias), Lit(None, "null")),
-                (IsNull(probe_outer), Lit(None, "null")),
-            ),
-            Lit(True, "boolean"),
-        )
-
-    def _corr_not_in_neq_order2_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, triple,
-        spec, ephemeral,
-    ):
-        """Correlated NOT IN under OR whose inner set is filtered by
-        ONE ``<>`` plus TWO order comparisons (round 13 latest — the
-        OR sibling of compiler/cqc.py:
-        _apply_neq_order2_threshold_not_in): each three-valued fact
-        carries a keyed_neq_order2_view (annotated region staircase U
-        + distinct-a pair staircase V) probed by
-        expressions.NeqTripleWitness. Flag order mirrors the skyline
-        version: miss/NULL-threshold/no-witness -> TRUE (set empty);
-        match witness -> FALSE; NULL-y witness or NULL probe ->
-        UNKNOWN; else TRUE. One row per group (per (group, y) for a
-        column probe) — the LEFT joins never duplicate. DuckDB cannot
-        oracle the shape (SURVEY ORACLE WARNING), so coverage is the
-        brute-force NULL-matrix pytest."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            NeqTripleWitness,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            keyed_neq_order2_view,
-        )
-
-        (_, d1e, a_col) = next(t for t in triple if t[0] == "<>")
-        (op2, d2e, b_col), (op3, d3e, c_col) = [
-            t for t in triple if t[0] != "<>"
-        ]
-        # round 15: float <>-dims embed via neq_canon (both sides);
-        # IsNull(canon(e)) == IsNull(e) so the flag ladder is unchanged
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-
-        def uv_view(src, extra_part=None, extra_conds=()):
-            part = [(icol, out) for icol, out in gsel.items()]
-            if extra_part is not None:
-                part.append((extra_part, "__cmp"))
-            view = keyed_neq_order2_view(
-                src, part, a_col, b_col, c_col, (op2, op3),
-                "__upts", "__vpts",
-            )
-            outs = [out for _, out in part]
-            self._view_counter += 1
-            name = f"__corrn{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(outs))
-            ephemeral.append(name)
-            alias = f"{name}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=alias, table=name),
-                    conds=[
-                        Cmp("=", oc, Col(alias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + list(extra_conds(alias) if extra_conds else []),
-                    side="left",
-                )
-            )
-            return alias
-
-        a_alias = uv_view(inner)
-        n_alias = uv_view(inner.filter(F.col(probe_icol).isNull()))
-        if not probe_outer.refs():
-            pl = probe_outer.to_spark({})
-            m_alias = uv_view(inner.filter(F.col(probe_icol) == pl))
-        else:
-            m_alias = uv_view(
-                inner.filter(F.col(probe_icol).isNotNull()),
-                extra_part=probe_icol,
-                extra_conds=lambda alias: [
-                    Cmp("=", probe_outer, Col(alias, "__cmp"))
-                ],
-            )
-
-        def wit(alias, negated=False):
-            return NeqTripleWitness(
-                Col(alias, "__upts"),
-                Col(alias, "__vpts"),
-                d1e, op2, d2e, op3, d3e,
-                negated=negated,
-            )
-
-        return CaseWhen(
-            (
-                # group miss (or every group row NULL-a/b/c): empty
-                (IsNull(Col(a_alias, "__upts")), Lit(True, "boolean")),
-                # NULL threshold: the filter is UNKNOWN rowwise
-                (
-                    OrCond((IsNull(d1e), IsNull(d2e), IsNull(d3e))),
-                    Lit(True, "boolean"),
-                ),
-                # no witness in the whole subset: set empty (arrays
-                # and outers non-NULL here -> two-valued negation)
-                (wit(a_alias, negated=True), Lit(True, "boolean")),
-                (wit(m_alias), Lit(False, "boolean")),
-                (wit(n_alias), Lit(None, "null")),
-                (IsNull(probe_outer), Lit(None, "null")),
-            ),
-            Lit(True, "boolean"),
-        )
-
     def _corr_not_in_sky_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, triple,
-        spec, ephemeral,
+        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
     ):
-        """Correlated NOT IN under OR whose inner set is filtered by
-        THREE order comparisons (round 13 — the OR sibling of
-        compiler/cqc.py:_apply_sky_threshold_not_in and the k=3
-        generalization of _corr_not_in_pair_threshold_or): each
-        three-valued fact is a 3-D dominance probe against per-group
-        Pareto SKYLINE flag views
-        (plans/frontier.py:keyed_skyline_view), probed JVM-side by
-        expressions.SkyWitness. Flag order mirrors the pair version:
-        miss/NULL-threshold/no-point-within -> TRUE (set empty);
-        match-view witness -> FALSE; NULL-y-view witness or NULL probe
-        -> UNKNOWN; else TRUE. Every view one row per group (per
-        (group, y) for a column probe) — the LEFT joins never
-        duplicate. DuckDB cannot oracle the shape (SURVEY ORACLE
+        """KEYLESS correlated NOT IN under OR whose inner set is
+        filtered by THREE to FIVE order comparisons (round 13 — the OR
+        sibling of compiler/cqc.py:_apply_sky_threshold_not_in and the
+        k-D generalization of _corr_not_in_pair_threshold_or): each
+        three-valued fact is a k-D dominance probe against a Pareto
+        SKYLINE, probed JVM-side by expressions.SkyWitness. The set and
+        NULL-y skylines fold GLOBALLY (bounded plan-time merge, one-row
+        views attached unconditionally); the match fact is a per-y
+        keyed skyline (plans/frontier.py:keyed_skyline_view, one row
+        per y) for a column probe, or a third global fold for a
+        constant probe. Flag order mirrors the pair version:
+        NULL-threshold/no-point-within -> TRUE (set empty); match-view
+        witness -> FALSE; NULL-y-view witness or NULL probe -> UNKNOWN;
+        else TRUE. DuckDB cannot oracle the shape (SURVEY ORACLE
         WARNING), so coverage is the brute-force NULL-matrix pytest."""
+        import functools as _ft
+
         from pyspark.sql import functions as F
 
         from sparksqlplus_spark.expressions import (
@@ -4070,11 +3042,9 @@ class SparkSQLPlus:
             skyline_one_row_df,
         )
 
-        t_ops = tuple(t[0] for t in triple)
-        t_outs = tuple(t[1] for t in triple)
-        t_cols = tuple(t[2] for t in triple)
-        import functools as _ft
-
+        t_ops = tuple(t[0] for t in pair)
+        t_outs = tuple(t[1] for t in pair)
+        t_cols = tuple(t[2] for t in pair)
         inner_t = inner.filter(
             _ft.reduce(
                 lambda a, b: a & b,
@@ -4082,67 +3052,45 @@ class SparkSQLPlus:
             )
         )
 
-        def sky_view(src, extra_part=None, extra_conds=()):
-            part = [(icol, out) for icol, out in gsel.items()]
-            if extra_part is not None:
-                part.append((extra_part, "__cmp"))
-            if not part:
-                # keyless global fact (round 13 late): bounded fold,
-                # one-row view attached unconditionally
-                pts, types = global_skyline_points(
-                    src, t_cols, t_ops,
-                    self._KEYLESS_FRONTIER_CAP,
-                )
-                view = skyline_one_row_df(self.spark, pts, types)
-                self._view_counter += 1
-                name = f"__corrk{self._view_counter}"
-                self.catalog.register_df(name, view, ())
-                ephemeral.append(name)
-                alias = f"{name}_i"
-                spec.outer_joins.append(
-                    OuterJoin(
-                        item=FromItem(alias=alias, table=name),
-                        conds=[],
-                        side="left",
-                        allow_uncorrelated=True,
-                    )
-                )
-                return alias
-            view = keyed_skyline_view(
-                src, part, t_cols, t_ops, "__pts"
-            )
-            outs = [out for _, out in part]
+        def attach(view, conds, part=()):
             self._view_counter += 1
             name = f"__corrk{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(outs))
+            self.catalog.register_df(name, view, tuple(part))
             ephemeral.append(name)
             alias = f"{name}_i"
             spec.outer_joins.append(
                 OuterJoin(
                     item=FromItem(alias=alias, table=name),
-                    conds=[
-                        Cmp("=", oc, Col(alias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + list(extra_conds(alias) if extra_conds else []),
+                    conds=conds(alias),
                     side="left",
+                    allow_uncorrelated=not part,
                 )
             )
             return alias
 
-        a_alias = sky_view(inner_t)
-        n_alias = sky_view(inner_t.filter(F.col(probe_icol).isNull()))
+        def global_view(src):
+            pts, types = global_skyline_points(
+                src, t_cols, t_ops, self._KEYLESS_FRONTIER_CAP,
+            )
+            return attach(
+                skyline_one_row_df(self.spark, pts, types),
+                lambda alias: [],
+            )
+
+        a_alias = global_view(inner_t)
+        n_alias = global_view(inner_t.filter(F.col(probe_icol).isNull()))
         if not probe_outer.refs():
-            # constant probe: fold y = probe into a group-keyed view
+            # constant probe: fold y = probe into a third global view
             pl = probe_outer.to_spark({})
-            m_alias = sky_view(inner_t.filter(F.col(probe_icol) == pl))
+            m_alias = global_view(inner_t.filter(F.col(probe_icol) == pl))
         else:
-            m_alias = sky_view(
-                inner_t.filter(F.col(probe_icol).isNotNull()),
-                extra_part=probe_icol,
-                extra_conds=lambda alias: [
-                    Cmp("=", probe_outer, Col(alias, "__cmp"))
-                ],
+            m_alias = attach(
+                keyed_skyline_view(
+                    inner_t.filter(F.col(probe_icol).isNotNull()),
+                    [(probe_icol, "__cmp")], t_cols, t_ops, "__pts",
+                ),
+                lambda alias: [Cmp("=", probe_outer, Col(alias, "__cmp"))],
+                part=("__cmp",),
             )
 
         def wit(alias, negated=False):
@@ -4155,7 +3103,7 @@ class SparkSQLPlus:
 
         return CaseWhen(
             (
-                # group miss (or every group row NULL-c): set empty
+                # empty / all-NULL-c inner: set empty
                 (IsNull(Col(a_alias, "__pts")), Lit(True, "boolean")),
                 # NULL threshold: c OP NULL is UNKNOWN for every row
                 (
@@ -4173,29 +3121,26 @@ class SparkSQLPlus:
         )
 
     def _corr_not_in_neq_order_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, pair,
-        spec, ephemeral,
+        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
     ):
-        """Correlated NOT IN under OR whose inner set is filtered by a
-        ``<>`` PAIRED with an order comparison (round 13 — the OR
-        sibling of compiler/cqc.py:_apply_neq_order_threshold_not_in):
-        ``P OR o.x NOT IN (SELECT y FROM t WHERE t.k = o.k AND
-        t.a <> o.d1 AND t.b OP o.d2)``. Each three-valued fact carries
-        the argmin/runner-up TRIPLE view (b1 / sentinel-NULLed a1 /
-        b2 — the _or_exists_neq_order_flag statistic per fact
-        population); with the b1-non-null and NULL-threshold guards
-        folded in, the within() test is two-valued, so the flag
-        CaseWhen needs no negation node:
+        """KEYLESS correlated NOT IN under OR whose inner set is
+        filtered by a ``<>`` PAIRED with an order comparison (round 13
+        — the OR sibling of
+        compiler/cqc.py:_apply_neq_order_threshold_not_in): ``P OR o.x
+        NOT IN (SELECT y FROM t WHERE t.a <> o.d1 AND t.b OP o.d2)``.
+        Each three-valued fact folds the argmin/runner-up TRIPLE (b1 /
+        sentinel-NULLed a1 / b2 — the _keyless_neq_order_fold
+        statistic per fact population): the set and NULL-y triples at
+        plan time (frontier.keyless_neq_order_stats) into literal
+        predicates, the match fact as a per-y triple view (column
+        probe — one row per y, pinned by the join condition, so the
+        LEFT join never duplicates) or a third fold (constant probe):
 
-          miss / NULL d1 / NULL d2 -> TRUE (set empty)
-          within(match view)       -> FALSE
-          within(NULL-y view)      -> UNKNOWN
+          NULL d1 / NULL d2          -> TRUE (set empty)
+          within(match)              -> FALSE
+          within(NULL-y)             -> UNKNOWN
           NULL probe AND within(all) -> UNKNOWN
-          else                     -> TRUE (unmatched or empty)
-
-        Views one row per group (per (group, y) for a column probe,
-        pinned by the join condition) — the LEFT joins never
-        duplicate."""
+          else                       -> TRUE (unmatched or empty)"""
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
@@ -4209,12 +3154,14 @@ class SparkSQLPlus:
             OrCond,
         )
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
+        from sparksqlplus_spark.plans.frontier import (
+            keyless_neq_order_stats,
+        )
 
         (_, d1e, a_col) = next(t for t in pair if t[0] == "<>")
         (op_b, d2e, b_col) = next(t for t in pair if t[0] != "<>")
         # round 15: a float <>-dim embeds via neq_canon on BOTH sides
-        # (the keyless fold compares collected a values; the keyed
-        # triple view is float-safe either way — uniform at the top)
+        # (the fold compares collected a values in Python)
         from sparksqlplus_spark.expressions import neq_canon_expr
         from sparksqlplus_spark.plans.frontier import (
             neq_canon,
@@ -4230,32 +3177,27 @@ class SparkSQLPlus:
             F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
         )
 
-        def triple_view(src, extra_part=None, extra_conds=None):
-            part = [F.col(icol).alias(out) for icol, out in gsel.items()]
-            outs = list(gsel.values())
-            if extra_part is not None:
-                part.append(F.col(extra_part).alias("__cmp"))
-                outs = outs + ["__cmp"]
+        def per_y_triple_view(src):
             pre = (
                 src.select(
-                    *part,
+                    F.col(probe_icol).alias("__cmp"),
                     F.col(a_col).alias("__a"),
                     F.col(b_col).alias("__b"),
                 )
-                .groupBy(*outs, "__a")
+                .groupBy("__cmp", "__a")
                 .agg(best("__b").alias("__ab"))
             )
             order_col = (
                 F.col("__ab").desc() if op_b in (">", ">=")
                 else F.col("__ab").asc()
             )
-            w = Window.partitionBy(*outs).orderBy(
+            w = Window.partitionBy("__cmp").orderBy(
                 order_col, F.col("__a")
             )
             top2 = pre.withColumn(
                 "__rn", F.row_number().over(w)
             ).filter(F.col("__rn") <= 2)
-            view = top2.groupBy(*outs).agg(
+            view = top2.groupBy("__cmp").agg(
                 F.max(F.when(F.col("__rn") == 1, F.col("__ab"))).alias(
                     "__b1"
                 ),
@@ -4267,7 +3209,7 @@ class SparkSQLPlus:
                 ),
             )
             view = view.select(
-                *outs,
+                "__cmp",
                 "__b1",
                 "__b2",
                 F.when(F.col("__b2") == F.col("__b1"), F.lit(None))
@@ -4276,170 +3218,97 @@ class SparkSQLPlus:
             )
             self._view_counter += 1
             name = f"__corrq{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(outs))
+            self.catalog.register_df(name, view, ("__cmp",))
             ephemeral.append(name)
             alias = f"{name}_i"
             spec.outer_joins.append(
                 OuterJoin(
                     item=FromItem(alias=alias, table=name),
-                    conds=[
-                        Cmp("=", oc, Col(alias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + (extra_conds(alias) if extra_conds else []),
+                    conds=[Cmp("=", probe_outer, Col(alias, "__cmp"))],
                     side="left",
                 )
             )
             return alias
 
-        if not corr:
-            # keyless groups (round 13 late): fold the set/NULL-y
-            # triples at plan time (frontier.keyless_neq_order_stats)
-            # into literal predicates; the match fact stays a per-y
-            # triple view (column probe) or folds too (const probe)
-            from sparksqlplus_spark.plans.frontier import (
-                keyless_neq_order_stats,
-            )
-
-            def fold_wit(stats):
-                if stats is None:
-                    return Lit(False, "boolean")
-                b1, a1, multi, b2 = stats
-                first = AndCond(
-                    (
-                        Cmp(op_b, _lit_of(b1), d2e),
-                        IsNull(d1e, negated=True)
-                        if multi
-                        else Cmp("<>", _lit_of(a1), d1e),
-                    )
+        def fold_wit(stats):
+            if stats is None:
+                return Lit(False, "boolean")
+            b1, a1, multi, b2 = stats
+            first = AndCond(
+                (
+                    Cmp(op_b, _lit_of(b1), d2e),
+                    IsNull(d1e, negated=True)
+                    if multi
+                    else Cmp("<>", _lit_of(a1), d1e),
                 )
-                terms = [first]
-                if not multi and b2 is not None:
-                    terms.append(
-                        AndCond(
-                            (
-                                Cmp("=", _lit_of(a1), d1e),
-                                Cmp(op_b, _lit_of(b2), d2e),
-                            )
+            )
+            terms = [first]
+            if not multi and b2 is not None:
+                terms.append(
+                    AndCond(
+                        (
+                            Cmp("=", _lit_of(a1), d1e),
+                            Cmp(op_b, _lit_of(b2), d2e),
                         )
                     )
-                return terms[0] if len(terms) == 1 else OrCond(
-                    tuple(terms)
                 )
+            return terms[0] if len(terms) == 1 else OrCond(tuple(terms))
 
-            stats_a = keyless_neq_order_stats(
-                inner_t, a_col, b_col, op_b
+        stats_a = keyless_neq_order_stats(inner_t, a_col, b_col, op_b)
+        if stats_a is None:
+            # empty population: the set is empty for every outer row
+            # -> NOT IN is TRUE
+            return Lit(True, "boolean")
+        wit_a = fold_wit(stats_a)
+        wit_n = fold_wit(
+            keyless_neq_order_stats(
+                inner_t.filter(F.col(probe_icol).isNull()),
+                a_col, b_col, op_b,
             )
-            if stats_a is None:
-                # empty population: the set is empty for every outer
-                # row -> NOT IN is TRUE
-                return Lit(True, "boolean")
-            wit_a = fold_wit(stats_a)
-            wit_n = fold_wit(
+        )
+        if not probe_outer.refs():
+            pl = probe_outer.to_spark({})
+            wit_m = fold_wit(
                 keyless_neq_order_stats(
-                    inner_t.filter(F.col(probe_icol).isNull()),
+                    inner_t.filter(F.col(probe_icol) == pl),
                     a_col, b_col, op_b,
                 )
             )
-            if not probe_outer.refs():
-                pl = probe_outer.to_spark({})
-                wit_m = fold_wit(
-                    keyless_neq_order_stats(
-                        inner_t.filter(F.col(probe_icol) == pl),
-                        a_col, b_col, op_b,
-                    )
-                )
-            else:
-                m_alias = triple_view(
-                    inner_t.filter(F.col(probe_icol).isNotNull()),
-                    extra_part=probe_icol,
-                    extra_conds=lambda alias: [
-                        Cmp("=", probe_outer, Col(alias, "__cmp"))
-                    ],
-                )
-                b1 = Col(m_alias, "__b1")
-                b2 = Col(m_alias, "__b2")
-                a1 = Col(m_alias, "__a1")
-                wit_m = OrCond(
-                    (
-                        AndCond(
-                            (
-                                IsNull(b1, negated=True),
-                                Cmp(op_b, b1, d2e),
-                                OrCond(
-                                    (IsNull(a1), Cmp("<>", a1, d1e))
-                                ),
-                            )
-                        ),
-                        AndCond(
-                            (
-                                IsNull(b2, negated=True),
-                                Cmp("=", a1, d1e),
-                                Cmp(op_b, b2, d2e),
-                            )
-                        ),
-                    )
-                )
-            return CaseWhen(
-                (
-                    (
-                        OrCond((IsNull(d1e), IsNull(d2e))),
-                        Lit(True, "boolean"),
-                    ),
-                    (wit_m, Lit(False, "boolean")),
-                    (wit_n, Lit(None, "null")),
-                    (
-                        AndCond((IsNull(probe_outer), wit_a)),
-                        Lit(None, "null"),
-                    ),
-                ),
-                Lit(True, "boolean"),
-            )
-
-        a_alias = triple_view(inner_t)
-        n_alias = triple_view(inner_t.filter(F.col(probe_icol).isNull()))
-        if not probe_outer.refs():
-            pl = probe_outer.to_spark({})
-            m_alias = triple_view(inner_t.filter(F.col(probe_icol) == pl))
         else:
-            m_alias = triple_view(
-                inner_t.filter(F.col(probe_icol).isNotNull()),
-                extra_part=probe_icol,
-                extra_conds=lambda alias: [
-                    Cmp("=", probe_outer, Col(alias, "__cmp"))
-                ],
+            m_alias = per_y_triple_view(
+                inner_t.filter(F.col(probe_icol).isNotNull())
             )
-
-        def within(alias):
-            b1 = Col(alias, "__b1")
-            b2 = Col(alias, "__b2")
-            a1 = Col(alias, "__a1")
-            first = AndCond(
+            b1 = Col(m_alias, "__b1")
+            b2 = Col(m_alias, "__b2")
+            a1 = Col(m_alias, "__a1")
+            wit_m = OrCond(
                 (
-                    IsNull(b1, negated=True),
-                    Cmp(op_b, b1, d2e),
-                    OrCond((IsNull(a1), Cmp("<>", a1, d1e))),
+                    AndCond(
+                        (
+                            IsNull(b1, negated=True),
+                            Cmp(op_b, b1, d2e),
+                            OrCond((IsNull(a1), Cmp("<>", a1, d1e))),
+                        )
+                    ),
+                    AndCond(
+                        (
+                            IsNull(b2, negated=True),
+                            Cmp("=", a1, d1e),
+                            Cmp(op_b, b2, d2e),
+                        )
+                    ),
                 )
             )
-            second = AndCond(
-                (
-                    IsNull(b2, negated=True),
-                    Cmp("=", a1, d1e),
-                    Cmp(op_b, b2, d2e),
-                )
-            )
-            return OrCond((first, second))
-
         return CaseWhen(
             (
-                # group miss (or all rows NULL-a/b): set empty
-                (IsNull(Col(a_alias, "__b1")), Lit(True, "boolean")),
-                # NULL threshold: the filter is UNKNOWN rowwise
-                (OrCond((IsNull(d1e), IsNull(d2e))), Lit(True, "boolean")),
-                (within(m_alias), Lit(False, "boolean")),
-                (within(n_alias), Lit(None, "null")),
                 (
-                    AndCond((IsNull(probe_outer), within(a_alias))),
+                    OrCond((IsNull(d1e), IsNull(d2e))),
+                    Lit(True, "boolean"),
+                ),
+                (wit_m, Lit(False, "boolean")),
+                (wit_n, Lit(None, "null")),
+                (
+                    AndCond((IsNull(probe_outer), wit_a)),
                     Lit(None, "null"),
                 ),
             ),
@@ -4447,21 +3316,20 @@ class SparkSQLPlus:
         )
 
     def _corr_not_in_neq_pair_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, pair,
-        spec, ephemeral,
+        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
     ):
-        """Correlated NOT IN under OR whose inner set is filtered by
-        TWO ``<>`` comparisons (round 13 — the OR sibling of
-        compiler/cqc.py:_apply_neq_pair_threshold_not_in): each
+        """KEYLESS correlated NOT IN under OR whose inner set is
+        filtered by TWO ``<>`` comparisons (round 13 — the OR sibling
+        of compiler/cqc.py:_apply_neq_pair_threshold_not_in): each
         three-valued fact asks the diagonal-witness question over its
-        population, carried on _diagonal_stats_view flag views
-        (da/db/ua/ub + the chosen diagonal pair's coordinates + its
-        two cross-point witness bits; the _or_exists_neq_pair_flag
-        statistic per fact population). The within() Cond is
-        two-valued given the NULL-threshold guard branch, and a
-        view-miss leaves it UNKNOWN — which every CaseWhen branch
-        skips, exactly the miss semantics each fact needs. Views one
-        row per group (per (group, y) for a column probe)."""
+        population (the _keyless_neq_pair_fold statistic). The set and
+        NULL-y statistics fold at plan time (frontier.keyless_diag_stats,
+        1-3 scalar jobs each) into literal predicates; the match fact
+        is a per-y _diagonal_stats_view (column probe — da/db/ua/ub +
+        the chosen diagonal pair's coordinates + its two cross-point
+        witness bits, one row per y) or a third fold (constant probe).
+        A view-miss leaves the match test UNKNOWN, which every CaseWhen
+        branch skips — exactly the miss semantics the fact needs."""
         from pyspark.sql import functions as F
 
         from sparksqlplus_spark.compiler.cqc import _diagonal_stats_view
@@ -4475,11 +3343,11 @@ class SparkSQLPlus:
             OrCond,
         )
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
+        from sparksqlplus_spark.plans.frontier import keyless_diag_stats
 
         (_, d1e, a_col), (_, d2e, b_col) = pair
         # round 15: float <>-dims embed via neq_canon on BOTH sides
-        # (the keyless keyless_diag_stats fold branches on collected
-        # values in Python; the keyed view is float-safe either way)
+        # (keyless_diag_stats branches on collected values in Python)
         from sparksqlplus_spark.expressions import neq_canon_expr
         from sparksqlplus_spark.plans.frontier import (
             neq_canon,
@@ -4498,200 +3366,87 @@ class SparkSQLPlus:
             F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
         )
 
-        def stats_view(src, extra_part=None, extra_conds=None):
-            part = [(icol, out) for icol, out in gsel.items()]
-            if extra_part is not None:
-                part.append((extra_part, "__cmp"))
-            view = _diagonal_stats_view(src, part, a_col, b_col)
+        def fold_wit(stats):
+            if stats is None:
+                return Lit(False, "boolean")
+            if stats[0] == "single":
+                _, da, db, ua, ub = stats
+                conds = []
+                if da == 1:
+                    conds.append(Cmp("<>", _lit_of(ua), d1e))
+                if db == 1:
+                    conds.append(Cmp("<>", _lit_of(ub), d2e))
+                # the NULL-threshold guard branch precedes every use,
+                # so an unconstrained side needs nothing
+                if not conds:
+                    return Lit(True, "boolean")
+                return conds[0] if len(conds) == 1 else AndCond(tuple(conds))
+            _, pa, pb, qa, qb, w1, w2 = stats
+            terms = []
+            if w1 == 0:
+                terms.append(
+                    OrCond(
+                        (
+                            Cmp("<>", d1e, _lit_of(pa)),
+                            Cmp("<>", d2e, _lit_of(qb)),
+                        )
+                    )
+                )
+            if w2 == 0:
+                terms.append(
+                    OrCond(
+                        (
+                            Cmp("<>", d1e, _lit_of(qa)),
+                            Cmp("<>", d2e, _lit_of(pb)),
+                        )
+                    )
+                )
+            if not terms:
+                return Lit(True, "boolean")
+            return terms[0] if len(terms) == 1 else AndCond(tuple(terms))
+
+        stats_a = keyless_diag_stats(inner_t, a_col, b_col)
+        if stats_a is None:
+            # empty population: set empty for every outer row
+            return Lit(True, "boolean")
+        wit_a = fold_wit(stats_a)
+        wit_n = fold_wit(
+            keyless_diag_stats(
+                inner_t.filter(F.col(probe_icol).isNull()), a_col, b_col,
+            )
+        )
+        if not probe_outer.refs():
+            pl = probe_outer.to_spark({})
+            wit_m = fold_wit(
+                keyless_diag_stats(
+                    inner_t.filter(F.col(probe_icol) == pl), a_col, b_col,
+                )
+            )
+        else:
+            view = _diagonal_stats_view(
+                inner_t.filter(F.col(probe_icol).isNotNull()),
+                [(probe_icol, "__cmp")],
+                a_col,
+                b_col,
+            )
             self._view_counter += 1
             name = f"__corrd{self._view_counter}"
-            self.catalog.register_df(
-                name, view, tuple(n for _, n in part)
-            )
+            self.catalog.register_df(name, view, ("__cmp",))
             ephemeral.append(name)
-            alias = f"{name}_i"
+            m_alias = f"{name}_i"
             spec.outer_joins.append(
                 OuterJoin(
-                    item=FromItem(alias=alias, table=name),
-                    conds=[
-                        Cmp("=", oc, Col(alias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + (extra_conds(alias) if extra_conds else []),
+                    item=FromItem(alias=m_alias, table=name),
+                    conds=[Cmp("=", probe_outer, Col(m_alias, "__cmp"))],
                     side="left",
                 )
             )
-            return alias
 
-        if not corr:
-            # keyless groups (round 13 late): fold the set/NULL-y
-            # diagonal statistics at plan time
-            # (frontier.keyless_diag_stats, 1-3 scalar jobs each);
-            # the match fact stays a per-y stats view (column probe)
-            # or folds too (const probe)
-            from sparksqlplus_spark.plans.frontier import (
-                keyless_diag_stats,
-            )
-
-            def fold_wit(stats):
-                if stats is None:
-                    return Lit(False, "boolean")
-                if stats[0] == "single":
-                    _, da, db, ua, ub = stats
-                    conds = []
-                    if da == 1:
-                        conds.append(Cmp("<>", _lit_of(ua), d1e))
-                    if db == 1:
-                        conds.append(Cmp("<>", _lit_of(ub), d2e))
-                    # the NULL-threshold guard branch precedes every
-                    # use, so an unconstrained side needs nothing
-                    if not conds:
-                        return Lit(True, "boolean")
-                    return (
-                        conds[0]
-                        if len(conds) == 1
-                        else AndCond(tuple(conds))
-                    )
-                _, pa, pb, qa, qb, w1, w2 = stats
-                terms = []
-                if w1 == 0:
-                    terms.append(
-                        OrCond(
-                            (
-                                Cmp("<>", d1e, _lit_of(pa)),
-                                Cmp("<>", d2e, _lit_of(qb)),
-                            )
-                        )
-                    )
-                if w2 == 0:
-                    terms.append(
-                        OrCond(
-                            (
-                                Cmp("<>", d1e, _lit_of(qa)),
-                                Cmp("<>", d2e, _lit_of(pb)),
-                            )
-                        )
-                    )
-                if not terms:
-                    return Lit(True, "boolean")
-                return (
-                    terms[0]
-                    if len(terms) == 1
-                    else AndCond(tuple(terms))
-                )
-
-            stats_a = keyless_diag_stats(inner_t, a_col, b_col)
-            if stats_a is None:
-                # empty population: set empty for every outer row
-                return Lit(True, "boolean")
-            wit_a = fold_wit(stats_a)
-            wit_n = fold_wit(
-                keyless_diag_stats(
-                    inner_t.filter(F.col(probe_icol).isNull()),
-                    a_col, b_col,
-                )
-            )
-            if not probe_outer.refs():
-                pl = probe_outer.to_spark({})
-                wit_m = fold_wit(
-                    keyless_diag_stats(
-                        inner_t.filter(F.col(probe_icol) == pl),
-                        a_col, b_col,
-                    )
-                )
-                m_alias = None
-            else:
-                m_alias = stats_view(
-                    inner_t.filter(F.col(probe_icol).isNotNull()),
-                    extra_part=probe_icol,
-                    extra_conds=lambda alias: [
-                        Cmp("=", probe_outer, Col(alias, "__cmp"))
-                    ],
-                )
-            one_l = Lit(1, "int")
-            two_l = Lit(2, "int")
-            if m_alias is not None:
-
-                def vc(name):
-                    return Col(m_alias, name)
-
-                single_a = AndCond(
-                    (
-                        Cmp("=", vc("da"), one_l),
-                        Cmp("<>", vc("ua"), d1e),
-                        OrCond(
-                            (
-                                Cmp(">=", vc("db"), two_l),
-                                Cmp("<>", vc("ub"), d2e),
-                            )
-                        ),
-                    )
-                )
-                single_b = AndCond(
-                    (
-                        Cmp(">=", vc("da"), two_l),
-                        Cmp("=", vc("db"), one_l),
-                        Cmp("<>", vc("ub"), d2e),
-                    )
-                )
-                diag = AndCond(
-                    (
-                        Cmp(">=", vc("da"), two_l),
-                        Cmp(">=", vc("db"), two_l),
-                        OrCond(
-                            (
-                                Cmp("<>", d1e, vc("pa")),
-                                Cmp("<>", d2e, vc("qb")),
-                                Cmp("=", vc("w1"), one_l),
-                            )
-                        ),
-                        OrCond(
-                            (
-                                Cmp("<>", d1e, vc("qa")),
-                                Cmp("<>", d2e, vc("pb")),
-                                Cmp("=", vc("w2"), one_l),
-                            )
-                        ),
-                    )
-                )
-                wit_m = OrCond((single_a, single_b, diag))
-            return CaseWhen(
-                (
-                    (
-                        OrCond((IsNull(d1e), IsNull(d2e))),
-                        Lit(True, "boolean"),
-                    ),
-                    (wit_m, Lit(False, "boolean")),
-                    (wit_n, Lit(None, "null")),
-                    (
-                        AndCond((IsNull(probe_outer), wit_a)),
-                        Lit(None, "null"),
-                    ),
-                ),
-                Lit(True, "boolean"),
-            )
-
-        a_alias = stats_view(inner_t)
-        n_alias = stats_view(inner_t.filter(F.col(probe_icol).isNull()))
-        if not probe_outer.refs():
-            pl = probe_outer.to_spark({})
-            m_alias = stats_view(inner_t.filter(F.col(probe_icol) == pl))
-        else:
-            m_alias = stats_view(
-                inner_t.filter(F.col(probe_icol).isNotNull()),
-                extra_part=probe_icol,
-                extra_conds=lambda alias: [
-                    Cmp("=", probe_outer, Col(alias, "__cmp"))
-                ],
-            )
-
-        one = Lit(1, "int")
-        two = Lit(2, "int")
-
-        def within(alias):
             def vc(name):
-                return Col(alias, name)
+                return Col(m_alias, name)
 
+            one = Lit(1, "int")
+            two = Lit(2, "int")
             single_a = AndCond(
                 (
                     Cmp("=", vc("da"), one),
@@ -4728,18 +3483,17 @@ class SparkSQLPlus:
                     ),
                 )
             )
-            return OrCond((single_a, single_b, diag))
-
+            wit_m = OrCond((single_a, single_b, diag))
         return CaseWhen(
             (
-                # group miss (or all rows NULL-a/b): set empty
-                (IsNull(Col(a_alias, "da")), Lit(True, "boolean")),
-                # NULL threshold: the filter is UNKNOWN rowwise
-                (OrCond((IsNull(d1e), IsNull(d2e))), Lit(True, "boolean")),
-                (within(m_alias), Lit(False, "boolean")),
-                (within(n_alias), Lit(None, "null")),
                 (
-                    AndCond((IsNull(probe_outer), within(a_alias))),
+                    OrCond((IsNull(d1e), IsNull(d2e))),
+                    Lit(True, "boolean"),
+                ),
+                (wit_m, Lit(False, "boolean")),
+                (wit_n, Lit(None, "null")),
+                (
+                    AndCond((IsNull(probe_outer), wit_a)),
                     Lit(None, "null"),
                 ),
             ),
@@ -4799,11 +3553,7 @@ class SparkSQLPlus:
         k = len(keys)
         ovs = [ov for ov, _ in keys]
         ics = [ic for _, ic in keys]
-        inner = self.catalog.get(ex.table).load(self.spark)
-        imap = {("", cn): cn for cn in inner.columns}
-        imap.update({(ex.table_alias, cn): cn for cn in inner.columns})
-        for c in inner_only:
-            inner = inner.filter(c.to_spark(imap))
+        inner = self._filtered_inner(ex, inner_only)
         pats = {
             tuple(r[f"n{i}"] for i in range(k))
             for r in inner.groupBy(
@@ -6335,7 +5085,12 @@ class SparkSQLPlus:
 
         mode: 'auto' (CQC, cyclic handler, then spark.sql fallback),
         'cqc' (fail if outside subset), 'naive' (greedy joins — the
-        baseline comparator), 'spark' (verbatim spark.sql).
+        baseline comparator), 'spark' (verbatim spark.sql). KEYED
+        multi-comparison correlated [NOT] IN and OR'd [NOT] EXISTS
+        (an equality correlation key plus 2-5 comparisons) are
+        Catalyst-only: 'auto' runs them through spark.sql, and
+        'cqc'/'naive' raise RoutedToFallback, as they do on over-cap
+        keyless folds (SCALING.md round-14 A/B).
         root_hint: alias to use as the enumeration root (reference C24
         join-order hint; overrides the planner's root choice).
         cyclic_strategy: router for cyclic queries — 'auto' (break,
@@ -6356,14 +5111,6 @@ class SparkSQLPlus:
         if mode == "spark":
             self._ensure_views()
             return self.spark.sql(query)
-        # round 14: publish the plan mode to the executor module — the
-        # keyed multi-comparison NOT IN gate in compiler/cqc.py (and
-        # the OR'd-EXISTS flag gates below) route those shapes to the
-        # spark.sql fallback under 'auto' BY MEASUREMENT (SCALING.md
-        # r14 A/B); 'cqc'/'naive' force the native statistic plans
-        from sparksqlplus_spark.compiler import cqc as _cqc_mod
-
-        _cqc_mod.plan_mode = mode
         stmt = None
         try:
             stmt = parse_statement(query)
@@ -6385,14 +5132,15 @@ class SparkSQLPlus:
                 join_tree_hint=join_tree_hint,
             )
         except RoutedToFallback as exc:
-            # Routed-by-measurement, NOT unsupported (round 15, VERDICT
-            # r14 #1): the statement is in the dialect, so the non-full
-            # => DISTINCT contract (SURVEY C23) must hold on the
-            # fallback run too — auto == cqc row multisets. Apply the
-            # reference's own rewrite (CompileController.java:98-101:
-            # SELECT -> SELECT DISTINCT before ORDER BY/LIMIT) when the
-            # native plan would have deduped; needs_distinct=None means
-            # the raise crossed only ANSI-bag surfaces — run verbatim.
+            # No native plan in ANY mode (keyed multi-comparison [NOT]
+            # IN / OR'd EXISTS — Catalyst measured faster, SCALING.md
+            # r14 A/B), but the statement is in the dialect, so the
+            # non-full => DISTINCT contract (SURVEY C23) must hold on
+            # the fallback run too. Apply the reference's own rewrite
+            # (CompileController.java:98-101: SELECT -> SELECT DISTINCT
+            # before ORDER BY/LIMIT) when the native plan would have
+            # deduped; needs_distinct=None means the raise crossed only
+            # ANSI-bag surfaces — run verbatim.
             if mode != "auto" or join_tree_hint is not None:
                 raise
             self._ensure_views()
@@ -6400,23 +5148,21 @@ class SparkSQLPlus:
                 stmt, "qualify", None
             ):
                 # QUALIFY is engine-only syntax (Spark SQL cannot
-                # parse it — _plan_qualify docstring), so NO verbatim
-                # fallback exists for this statement; the only exact
-                # route is the native plan the routing would have
-                # skipped (round 16 — pre-fix, auto surfaced Spark's
-                # ParseException while mode='cqc' returned rows).
+                # parse it — _plan_qualify docstring), so no verbatim
+                # run exists: evaluate the predicate as a select-list
+                # helper column over the verbatim body and filter on it
                 _log.info(
                     "routed fallback: statement carries QUALIFY "
-                    "(Spark-unparseable); re-planning via mode='cqc'"
+                    "(Spark-unparseable); evaluating it as a helper "
+                    "column over the verbatim body"
                 )
-                _cqc_mod.plan_mode = "cqc"
-                return self._plan_spec(
-                    parse_statement(query),
-                    mode="cqc",
-                    cyclic_strategy=cyclic_strategy,
-                    count_mode=count_mode,
-                    root_hint=root_hint,
+                emu = self._emulate_tail_rescue(
+                    query, stmt,
+                    dedup=bool(exc.needs_distinct or stmt.distinct),
                 )
+                if emu is not None:
+                    return emu
+                raise
             if not exc.needs_distinct:
                 try:
                     res = self.spark.sql(query)
@@ -6427,10 +5173,7 @@ class SparkSQLPlus:
                     # column is an ENGINE dialect extension
                     # (finalize's helper-sort collapse) that ANSI
                     # Spark rejects at analysis — a perf routing must
-                    # not become a completion failure (round 16; the
-                    # explicit-DISTINCT sibling of the non-full
-                    # corner). Ladder like the needs_distinct path:
-                    # native re-plan, then the DataFrame emulation.
+                    # not become a completion failure (round 16)
                     if (
                         isinstance(stmt, CompoundSpec)
                         or not getattr(stmt, "distinct", False)
@@ -6440,22 +5183,13 @@ class SparkSQLPlus:
                     _log.info(
                         "routed fallback: verbatim run failed analysis "
                         "on an explicit-DISTINCT ORDER BY tail; "
-                        "re-planning natively via mode='cqc'"
+                        "emulating the helper-sort collapse over the "
+                        "verbatim body"
                     )
-                    _cqc_mod.plan_mode = "cqc"
-                    try:
-                        return self._plan_spec(
-                            parse_statement(query),
-                            mode="cqc",
-                            cyclic_strategy=cyclic_strategy,
-                            count_mode=count_mode,
-                            root_hint=root_hint,
-                        )
-                    except UnsupportedSqlError:
-                        emu = self._emulate_tail_rescue(query, stmt)
-                        if emu is not None:
-                            return emu
-                        raise
+                    emu = self._emulate_tail_rescue(query, stmt)
+                    if emu is not None:
+                        return emu
+                    raise
             rewritten = re.sub(
                 r"^(\s*)select\b", r"\1SELECT DISTINCT", query,
                 count=1, flags=re.IGNORECASE,
@@ -6477,11 +5211,8 @@ class SparkSQLPlus:
                     # is exact (ordering is advisory on a DataFrame);
                     # WITH one, LIMIT-then-dedup diverges from the
                     # native dedup-then-limit (round 16, VERDICT r15
-                    # #1: judge repro auto 3 vs cqc 4 rows) — re-plan
-                    # the statement through the native machinery
-                    # instead: exactness is always available under
-                    # mode='cqc' (routing is a perf choice) and the
-                    # shape is rare enough that perf is moot.
+                    # #1) — emulate finalize's collapse DataFrame-side
+                    # instead (dedup, then sort/offset/limit).
                     has_tail = not isinstance(stmt, CompoundSpec) and (
                         getattr(stmt, "limit", None) is not None
                         or getattr(stmt, "offset", None) is not None
@@ -6491,40 +5222,16 @@ class SparkSQLPlus:
                         "analysis (%s: %s); %s",
                         rewrite_err.__class__.__name__,
                         str(rewrite_err).splitlines()[0][:200],
-                        "re-planning natively via mode='cqc' (LIMIT/"
-                        "OFFSET tail present)" if has_tail
+                        "emulating the helper-sort collapse over the "
+                        "verbatim body (LIMIT/OFFSET tail present)"
+                        if has_tail
                         else "deduping the verbatim result",
                     )
                     if has_tail:
-                        _cqc_mod.plan_mode = "cqc"
-                        try:
-                            return self._plan_spec(
-                                parse_statement(query),
-                                mode="cqc",
-                                cyclic_strategy=cyclic_strategy,
-                                count_mode=count_mode,
-                                root_hint=root_hint,
-                            )
-                        except UnsupportedSqlError as replan_err:
-                            # even the native re-plan declined — e.g.
-                            # the statement's own keyless fold is
-                            # over-cap, so BOTH routes into this
-                            # rescue raise. Emulate finalize's
-                            # helper-sort collapse DataFrame-side
-                            # over the verbatim body (round 16); a
-                            # statement the emulation can't scan
-                            # surfaces the re-plan error cleanly.
-                            _log.info(
-                                "routed fallback: mode='cqc' re-plan "
-                                "also declined (%s); emulating the "
-                                "helper-sort collapse over the "
-                                "verbatim body",
-                                str(replan_err).splitlines()[0][:200],
-                            )
-                            emu = self._emulate_tail_rescue(query, stmt)
-                            if emu is not None:
-                                return emu
-                            raise
+                        emu = self._emulate_tail_rescue(query, stmt)
+                        if emu is not None:
+                            return emu
+                        raise
             self._plan_cacheable = False
             return self.spark.sql(query).dropDuplicates()
         except UnsupportedSqlError as u_exc:
@@ -6550,54 +5257,78 @@ class SparkSQLPlus:
                     raise
             raise
 
-    def _emulate_tail_rescue(self, query: str, stmt) -> DataFrame | None:
-        """Last-resort exact rescue for a routed non-full statement
-        with an ORDER BY/LIMIT tail when BOTH the ANSI DISTINCT
-        rewrite (ORDER BY on a non-output column) and the mode='cqc'
-        re-plan (e.g. an over-cap keyless fold) declined (round 16).
-        Reproduces finalize's semantics (compiler/cqc.py) over the
-        verbatim spark.sql body: append each ORDER BY expression to
-        the select list as a helper column (text-level, top-level
-        scan — _split_tail_rescue), dedup over the ORIGINAL output
-        columns collapsing each helper to its best rank (min for asc,
-        max for desc), then sort/offset/limit and drop the helpers.
-        Returns None when the text does not scan cleanly or the
-        emulated frame fails analysis — the caller then surfaces the
-        re-plan error instead of guessing."""
+    def _emulate_tail_rescue(
+        self, query: str, stmt, dedup: bool = True
+    ) -> DataFrame | None:
+        """Exact rescue for a routed statement that spark.sql cannot
+        run verbatim (round 16): a non-full or explicit-DISTINCT
+        statement with an ORDER BY on a non-output column (ANSI
+        DISTINCT rejects it) and a LIMIT/OFFSET tail, or a statement
+        carrying QUALIFY (Spark cannot parse it). Reproduces
+        finalize's semantics (compiler/cqc.py) over the verbatim
+        spark.sql body: the QUALIFY predicate and each ORDER BY
+        expression become select-list helper columns (text-level,
+        top-level scan — _split_qualify / _split_tail_rescue); rows
+        failing QUALIFY are filtered and its helper dropped; with
+        ``dedup`` the rows collapse over the ORIGINAL output columns,
+        each sort helper to its best rank (min for asc, max for desc);
+        then sort/offset/limit and drop the helpers. Returns None when
+        the text does not scan cleanly or the emulated frame fails
+        analysis — the caller then surfaces the routing error instead
+        of guessing."""
         from pyspark.sql import functions as F
 
         from sparksqlplus_spark.compiler.cqc import _sort_col
 
-        parts = _split_tail_rescue(query, len(stmt.order_by))
+        qualify = None
+        if getattr(stmt, "qualify", None):
+            split = _split_qualify(query)
+            if split is None:
+                return None
+            query, qualify = split
+        has_tail = bool(stmt.order_by) or stmt.limit is not None or bool(
+            getattr(stmt, "offset", None)
+        )
+        if has_tail:
+            parts = _split_tail_rescue(query, len(stmt.order_by))
+        else:
+            froms = _top_level_positions(query)["from"]
+            parts = (query.rstrip(), froms[0], []) if froms else None
         if parts is None:
             return None
         body, insert_at, order_sqls = parts
-        helpers = ", ".join(
+        helpers = [
             f"{sql} AS __sort_{i}" for i, sql in enumerate(order_sqls)
-        )
+        ]
+        if qualify is not None:
+            helpers.append(f"({qualify}) AS __qualify")
         modified = (
             body[:insert_at].rstrip()
-            + (f", {helpers} " if helpers else " ")
+            + (f", {', '.join(helpers)} " if helpers else " ")
             + body[insert_at:]
         )
         self._plan_cacheable = False
         try:
             df = self.spark.sql(modified)
+            if qualify is not None:
+                df = df.filter(F.col("__qualify")).drop("__qualify")
             out_cols = [
                 c for c in df.columns if not c.startswith("__sort_")
             ]
             if not out_cols or len(set(out_cols)) != len(out_cols):
                 return None
+            res = df
             if stmt.order_by:
-                aggs = [
-                    (F.max if it.desc else F.min)(
-                        F.col(f"__sort_{i}")
-                    ).alias(f"__sort_{i}")
-                    for i, it in enumerate(stmt.order_by)
-                ]
-                res = df.groupBy(
-                    *[F.col(c) for c in out_cols]
-                ).agg(*aggs)
+                if dedup:
+                    aggs = [
+                        (F.max if it.desc else F.min)(
+                            F.col(f"__sort_{i}")
+                        ).alias(f"__sort_{i}")
+                        for i, it in enumerate(stmt.order_by)
+                    ]
+                    res = res.groupBy(
+                        *[F.col(c) for c in out_cols]
+                    ).agg(*aggs)
                 res = res.orderBy(
                     *[
                         _sort_col(
@@ -6606,8 +5337,8 @@ class SparkSQLPlus:
                         for i, it in enumerate(stmt.order_by)
                     ]
                 )
-            else:
-                res = df.dropDuplicates()
+            elif dedup:
+                res = res.dropDuplicates()
             if getattr(stmt, "offset", None):
                 res = res.offset(stmt.offset)
             if stmt.limit is not None:
@@ -6618,7 +5349,7 @@ class SparkSQLPlus:
             # an AnalysisException here (helper dtype that min/max
             # cannot aggregate, dotted output names F.col mis-resolves)
             # must decline the rescue so the caller surfaces the
-            # re-plan error, not a raw Spark error (ADVICE r16 #2).
+            # routing error, not a raw Spark error (ADVICE r16 #2).
             _log.info(
                 "tail-rescue emulation declined (%s: %s)",
                 emu_exc.__class__.__name__,

@@ -96,7 +96,7 @@ _CMPF = {
 
 def _diagonal_stats_view(src, part_pairs, a_col, b_col):
     """Per-part DIAGONAL-WITNESS statistic for "∃ row: a <> d1 AND
-    b <> d2" probes (round 13 — the api._or_exists_neq_pair_flag
+    b <> d2" probes (round 13 — the api._keyless_neq_pair_fold
     statistic, shared with the NOT IN threshold executor): columns
     (part..., da, db, ua, ub, pa, pb, qa, qb, w1, w2) — distinct
     counts + unique values for the single-a/-b folds, the chosen
@@ -167,12 +167,11 @@ def _diagonal_stats_view(src, part_pairs, a_col, b_col):
 
 
 def _apply_neq_pair_threshold_not_in(df, inner, sf, prefix: str):
-    """Correlated NOT IN whose inner set is filtered by TWO ``<>``
-    comparisons against the outer row (round 13): ``o.x NOT IN (SELECT
-    y FROM t WHERE t.k = o.k AND t.a <> o.d1 AND t.b <> o.d2)``. Each
+    """KEYLESS correlated NOT IN whose inner set is filtered by TWO
+    ``<>`` comparisons against the outer row (round 13): ``o.x NOT IN
+    (SELECT y FROM t WHERE t.a <> o.d1 AND t.b <> o.d2)``. Each
     three-valued fact asks the diagonal-witness question over its
-    population, so each fact carries a _diagonal_stats_view and the
-    within test is pure row-side logic:
+    population:
 
       within(d1, d2) = d1/d2 non-NULL AND (
         da = 1: ua <> d1 AND (db >= 2 OR ub <> d2)
@@ -180,38 +179,31 @@ def _apply_neq_pair_threshold_not_in(df, inner, sf, prefix: str):
         else: (d1 <> pa OR d2 <> qb OR w1 = 1)
           AND (d1 <> qa OR d2 <> pb OR w2 = 1))
 
-    Views one row per group (per (group, y) for the column-probe match
-    view, pinned by the join condition) — no duplication. Keyed groups
-    only (build_context guarantees corr_keys non-empty here)."""
-    from sparksqlplus_spark.plans.frontier import canon_float_neq_dims
+    The set and NULL-y statistics fold at plan time (1-3 scalar jobs
+    each, frontier.keyless_diag_stats) into literal predicates; the
+    match fact stays a per-y _diagonal_stats_view (column probe — one
+    row per y, the LEFT join never duplicates) or folds too (constant
+    probe). Keyed groups never reach here (_apply_semi_filter routes
+    them to the spark.sql fallback)."""
+    from sparksqlplus_spark.plans.frontier import (
+        canon_float_neq_dims,
+        keyless_diag_stats,
+    )
 
     thrs = sf.corr_threshold
     (_, d1e, a_col), (_, d2e, b_col) = thrs
     d1 = d1e.to_spark({r: r[1] for r in d1e.refs()})
     d2 = d2e.to_spark({r: r[1] for r in d2e.refs()})
     # round 15: float <>-dims embed via neq_canon (inner AND probe) —
-    # needed by the keyless keyless_diag_stats fold's Python-side
-    # branch selection; the keyed diagonal view is float-safe either
-    # way, so the embedding is applied uniformly at the top
+    # keyless_diag_stats selects its branch on collected values in
+    # Python, so the class bookkeeping must match Spark =/<>
     inner, [(a_col, d1), (b_col, d2)] = canon_float_neq_dims(
         inner, [(a_col, d1), (b_col, d2)], prefix
     )
-    corr = sf.corr_keys
     inner_t = inner.filter(
         F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
     )
     stat_cols = ["da", "db", "ua", "ub", "pa", "pb", "qa", "qb", "w1", "w2"]
-
-    def attach(view, names, tagp, extra_cond=None):
-        view = view.select(
-            *names, *[F.col(c).alias(f"{tagp}{c}") for c in stat_cols]
-        )
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(ov) == F.col(n) for (ov, _), n in zip(corr, names)]
-            + ([extra_cond] if extra_cond is not None else []),
-        )
-        return df.join(view, on, "left")
 
     def within(tagp):
         def c(name):
@@ -238,174 +230,107 @@ def _apply_neq_pair_threshold_not_in(df, inner, sf, prefix: str):
             )
         )
 
-    if not corr:
-        # keyless groups (round 13 late): fold the set/NULL-y
-        # diagonal statistics at plan time (1-3 scalar jobs each,
-        # frontier.keyless_diag_stats); the match fact stays a per-y
-        # _diagonal_stats_view (column probe) or folds too (const)
-        from sparksqlplus_spark.plans.frontier import keyless_diag_stats
+    def fold_within(stats):
+        if stats is None:
+            return F.lit(False)
+        if stats[0] == "single":
+            _, da, db, ua, ub = stats
+            ca = (
+                F.coalesce(F.lit(ua) != d1, F.lit(False))
+                if da == 1
+                else d1.isNotNull()
+            )
+            cb = (
+                F.coalesce(F.lit(ub) != d2, F.lit(False))
+                if db == 1
+                else d2.isNotNull()
+            )
+            return ca & cb
+        _, pa, pb, qa, qb, w1, w2 = stats
+        bad1 = (
+            (d1 == F.lit(pa)) & (d2 == F.lit(qb))
+            if w1 == 0
+            else F.lit(False)
+        )
+        bad2 = (
+            (d1 == F.lit(qa)) & (d2 == F.lit(pb))
+            if w2 == 0
+            else F.lit(False)
+        )
+        return (
+            d1.isNotNull()
+            & d2.isNotNull()
+            & ~F.coalesce(bad1 | bad2, F.lit(False))
+        )
 
-        def fold_within(stats):
-            if stats is None:
-                return F.lit(False)
-            if stats[0] == "single":
-                _, da, db, ua, ub = stats
-                ca = (
-                    F.coalesce(F.lit(ua) != d1, F.lit(False))
-                    if da == 1
-                    else d1.isNotNull()
-                )
-                cb = (
-                    F.coalesce(F.lit(ub) != d2, F.lit(False))
-                    if db == 1
-                    else d2.isNotNull()
-                )
-                return ca & cb
-            _, pa, pb, qa, qb, w1, w2 = stats
-            bad1 = (
-                (d1 == F.lit(pa)) & (d2 == F.lit(qb))
-                if w1 == 0
-                else F.lit(False)
-            )
-            bad2 = (
-                (d1 == F.lit(qa)) & (d2 == F.lit(pb))
-                if w2 == 0
-                else F.lit(False)
-            )
-            return (
-                d1.isNotNull()
-                & d2.isNotNull()
-                & ~F.coalesce(bad1 | bad2, F.lit(False))
-            )
-
-        w_a = fold_within(keyless_diag_stats(inner_t, a_col, b_col))
-        khelper: list[str] = []
-        if sf.const_probe is not None:
-            probe_lit, ic = sf.const_probe
-            pl = probe_lit.to_spark({})
-            probe_ok = pl.isNotNull()
-            w_n = fold_within(
-                keyless_diag_stats(
-                    inner_t.filter(F.col(ic).isNull()), a_col, b_col
-                )
-            )
-            w_m = fold_within(
-                keyless_diag_stats(
-                    inner_t.filter(F.col(ic) == pl), a_col, b_col
-                )
-            )
-        else:
-            (ov_p, ic), = sf.keys  # single-column probe (validated)
-            probe_ok = F.col(ov_p).isNotNull()
-            w_n = fold_within(
-                keyless_diag_stats(
-                    inner_t.filter(F.col(ic).isNull()), a_col, b_col
-                )
-            )
-            mp = f"{prefix}_mp"
-            tagp = f"{prefix}_M"
-            view = _diagonal_stats_view(
-                inner_t.filter(F.col(ic).isNotNull()),
-                [(ic, mp)],
-                a_col,
-                b_col,
-            ).select(
-                mp, *[F.col(c).alias(f"{tagp}{c}") for c in stat_cols]
-            )
-            df = df.join(view, F.col(ov_p) == F.col(mp), "left")
-            w_m = within(tagp)
-            khelper += [f"{tagp}{c}" for c in stat_cols] + [mp]
-        keep = ~w_a | (~w_m & ~w_n & probe_ok)
-        return df.filter(keep).drop(*khelper)
-
-    ga = [(ic, f"{prefix}_ga{i}") for i, (_, ic) in enumerate(corr)]
-    gn = [(ic, f"{prefix}_gn{i}") for i, (_, ic) in enumerate(corr)]
-    gm = [(ic, f"{prefix}_gm{i}") for i, (_, ic) in enumerate(corr)]
+    w_a = fold_within(keyless_diag_stats(inner_t, a_col, b_col))
     helper: list[str] = []
-    for tagp, names in (
-        (f"{prefix}_A", ga), (f"{prefix}_N", gn), (f"{prefix}_M", gm),
-    ):
-        helper += [f"{tagp}{c}" for c in stat_cols]
-        helper += [n for _, n in names]
-    df = attach(
-        _diagonal_stats_view(inner_t, ga, a_col, b_col),
-        [n for _, n in ga],
-        f"{prefix}_A",
-    )
     if sf.const_probe is not None:
         probe_lit, ic = sf.const_probe
         pl = probe_lit.to_spark({})
         probe_ok = pl.isNotNull()
-        df = attach(
-            _diagonal_stats_view(
-                inner_t.filter(F.col(ic).isNull()), gn, a_col, b_col
-            ),
-            [n for _, n in gn],
-            f"{prefix}_N",
+        w_n = fold_within(
+            keyless_diag_stats(
+                inner_t.filter(F.col(ic).isNull()), a_col, b_col
+            )
         )
-        df = attach(
-            _diagonal_stats_view(
-                inner_t.filter(F.col(ic) == pl), gm, a_col, b_col
-            ),
-            [n for _, n in gm],
-            f"{prefix}_M",
+        w_m = fold_within(
+            keyless_diag_stats(
+                inner_t.filter(F.col(ic) == pl), a_col, b_col
+            )
         )
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
         probe_ok = F.col(ov_p).isNotNull()
-        df = attach(
-            _diagonal_stats_view(
-                inner_t.filter(F.col(ic).isNull()), gn, a_col, b_col
-            ),
-            [n for _, n in gn],
-            f"{prefix}_N",
+        w_n = fold_within(
+            keyless_diag_stats(
+                inner_t.filter(F.col(ic).isNull()), a_col, b_col
+            )
         )
         mp = f"{prefix}_mp"
-        df = attach(
-            _diagonal_stats_view(
-                inner_t.filter(F.col(ic).isNotNull()),
-                gm + [(ic, mp)],
-                a_col,
-                b_col,
-            ),
-            [n for _, n in gm] + [mp],
-            f"{prefix}_M",
-            extra_cond=(F.col(ov_p) == F.col(mp)),
+        tagp = f"{prefix}_M"
+        view = _diagonal_stats_view(
+            inner_t.filter(F.col(ic).isNotNull()),
+            [(ic, mp)],
+            a_col,
+            b_col,
+        ).select(
+            mp, *[F.col(c).alias(f"{tagp}{c}") for c in stat_cols]
         )
-        helper.append(mp)
-    keep = ~within(f"{prefix}_A") | (
-        ~within(f"{prefix}_M") & ~within(f"{prefix}_N") & probe_ok
-    )
+        df = df.join(view, F.col(ov_p) == F.col(mp), "left")
+        w_m = within(tagp)
+        helper += [f"{tagp}{c}" for c in stat_cols] + [mp]
+    keep = ~w_a | (~w_m & ~w_n & probe_ok)
     return df.filter(keep).drop(*helper)
 
 
 def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
-    """Correlated NOT IN whose inner set is filtered by a ``<>`` PAIRED
-    with an order comparison against the outer row (round 13):
-    ``o.x NOT IN (SELECT y FROM t WHERE t.k = o.k AND t.a <> o.d1 AND
+    """KEYLESS correlated NOT IN whose inner set is filtered by a
+    ``<>`` PAIRED with an order comparison against the outer row
+    (round 13): ``o.x NOT IN (SELECT y FROM t WHERE t.a <> o.d1 AND
     t.b OP o.d2)``. Each three-valued fact (set nonempty / has NULL y /
     probe matched) asks "∃ row in the fact population with a <> d1 AND
-    b OP d2" — exactly the OR'd-EXISTS neq-order witness
-    (api._or_exists_neq_order_flag), so each fact carries the same
-    THREE-stat view per group: b1 = best b, a1 = its arg a (NULL
-    sentinel when 2+ distinct a attain b1), b2 = best b among a <> a1:
+    b OP d2", decided by a THREE-stat summary: b1 = best b, a1 = its
+    arg a (NULL sentinel when 2+ distinct a attain b1), b2 = best b
+    among a <> a1:
 
       within(d1, d2) = d1 NOT NULL AND (
           (b1 OP d2 AND (a1 sentinel-NULL OR a1 <> d1))
           OR (a1 = d1 AND b2 OP d2))
 
     NULL b1/b2 (view miss / no runner-up) and NULL d2 coalesce the
-    comparisons to FALSE. Views: per group (set / NULL-y) and per
-    (group, y) for a column probe (the constant form folds y = probe
-    into a group-keyed view). Build per view = one (part, a)
-    pre-reduction + one top-2 window sharing the part key — one row
-    per part, so the LEFT joins never duplicate. KEYLESS groups
-    (round 13 late) fold the set/NULL-y triples at plan time
+    comparisons to FALSE. The set/NULL-y triples fold at plan time
     (frontier.keyless_neq_order_stats — one TakeOrderedAndProject job
     each, the metadata-collect class) into literal predicates; the
-    match fact stays distributed as a per-y triple view (column
-    probe) or a third plan-time fold (constant probe)."""
-    from sparksqlplus_spark.plans.frontier import canon_float_neq_dims
+    match fact stays distributed as a per-y triple view (column probe:
+    one (y, a) pre-reduction + one top-2 window sharing the y key, one
+    row per y) or a third plan-time fold (constant probe). Keyed
+    groups never reach here (_apply_semi_filter routes them to the
+    spark.sql fallback)."""
+    from sparksqlplus_spark.plans.frontier import (
+        canon_float_neq_dims,
+        keyless_neq_order_stats,
+    )
 
     thrs = sf.corr_threshold
     (_, d1e, a_col) = next(t for t in thrs if t[0] == "<>")
@@ -413,14 +338,12 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
     d1 = d1e.to_spark({r: r[1] for r in d1e.refs()})
     d2 = d2e.to_spark({r: r[1] for r in d2e.refs()})
     # round 15: a float <>-dim embeds via neq_canon (inner AND probe)
-    # — needed by the keyless keyless_neq_order_stats fold; the keyed
-    # triple view is float-safe either way (uniform at the top)
+    # — keyless_neq_order_stats compares collected a values in Python
     inner, [(a_col, d1)] = canon_float_neq_dims(
         inner, [(a_col, d1)], prefix
     )
     best = F.max if op_b in (">", ">=") else F.min
     cmpb = _CMPF[op_b]
-    corr = sf.corr_keys
     inner_t = inner.filter(
         F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
     )
@@ -466,17 +389,6 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
             .alias(f"{tagp}a1"),
         )
 
-    def attach(view, names, extra_cond=None):
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [
-                F.col(ov) == F.col(n)
-                for (ov, _), n in zip(corr, names)
-            ]
-            + ([extra_cond] if extra_cond is not None else []),
-        )
-        return df.join(view, on, "left")
-
     def within(tagp):
         b1, b2 = F.col(f"{tagp}b1"), F.col(f"{tagp}b2")
         a1 = F.col(f"{tagp}a1")
@@ -486,363 +398,82 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
         second = F.coalesce((a1 == d1) & cmpb(b2, d2), F.lit(False))
         return d1.isNotNull() & (first | second)
 
-    if not corr:
-        # keyless groups (round 13 late): the set/NULL-y facts fold
-        # at plan time into literal predicates; the match fact stays
-        # distributed (per-y triple view) or folds too (const probe)
-        from sparksqlplus_spark.plans.frontier import (
-            keyless_neq_order_stats,
+    def fold_within(stats):
+        if stats is None:
+            return F.lit(False)
+        b1, a1, multi, b2 = stats
+        first = F.coalesce(cmpb(F.lit(b1), d2), F.lit(False)) & (
+            F.lit(True)
+            if multi
+            else F.coalesce(F.lit(a1) != d1, F.lit(False))
         )
-
-        def fold_within(stats):
-            if stats is None:
-                return F.lit(False)
-            b1, a1, multi, b2 = stats
-            first = F.coalesce(cmpb(F.lit(b1), d2), F.lit(False)) & (
-                F.lit(True)
-                if multi
-                else F.coalesce(F.lit(a1) != d1, F.lit(False))
+        second = (
+            F.lit(False)
+            if multi or b2 is None
+            else F.coalesce(
+                (F.lit(a1) == d1) & cmpb(F.lit(b2), d2),
+                F.lit(False),
             )
-            second = (
-                F.lit(False)
-                if multi or b2 is None
-                else F.coalesce(
-                    (F.lit(a1) == d1) & cmpb(F.lit(b2), d2),
-                    F.lit(False),
-                )
-            )
-            return d1.isNotNull() & (first | second)
-
-        w_a = fold_within(
-            keyless_neq_order_stats(inner_t, a_col, b_col, op_b)
         )
-        helper = []
-        if sf.const_probe is not None:
-            probe_lit, ic = sf.const_probe
-            pl = probe_lit.to_spark({})
-            probe_ok = pl.isNotNull()
-            w_n = fold_within(
-                keyless_neq_order_stats(
-                    inner_t.filter(F.col(ic).isNull()), a_col, b_col,
-                    op_b,
-                )
-            )
-            w_m = fold_within(
-                keyless_neq_order_stats(
-                    inner_t.filter(F.col(ic) == pl), a_col, b_col, op_b
-                )
-            )
-        else:
-            (ov_p, ic), = sf.keys  # single-column probe (validated)
-            probe_ok = F.col(ov_p).isNotNull()
-            w_n = fold_within(
-                keyless_neq_order_stats(
-                    inner_t.filter(F.col(ic).isNull()), a_col, b_col,
-                    op_b,
-                )
-            )
-            mp = f"{prefix}_mp"
-            view = triple_view(
-                inner_t.filter(F.col(ic).isNotNull()),
-                [(ic, mp)],
-                f"{prefix}_M",
-            )
-            df = df.join(view, F.col(ov_p) == F.col(mp), "left")
-            w_m = within(f"{prefix}_M")
-            helper += [
-                f"{prefix}_Mb1", f"{prefix}_Mb2", f"{prefix}_Ma1", mp,
-            ]
-        keep = ~w_a | (~w_m & ~w_n & probe_ok)
-        return df.filter(keep).drop(*helper)
+        return d1.isNotNull() & (first | second)
 
-    ga = [(ic, f"{prefix}_ga{i}") for i, (_, ic) in enumerate(corr)]
-    gn = [(ic, f"{prefix}_gn{i}") for i, (_, ic) in enumerate(corr)]
-    gm = [(ic, f"{prefix}_gm{i}") for i, (_, ic) in enumerate(corr)]
-    helper: list[str] = []
-    for tagp, names in (
-        (f"{prefix}_A", ga), (f"{prefix}_N", gn), (f"{prefix}_M", gm),
-    ):
-        helper += [f"{tagp}b1", f"{tagp}b2", f"{tagp}a1"]
-        helper += [n for _, n in names]
-    df = attach(triple_view(inner_t, ga, f"{prefix}_A"), [n for _, n in ga])
+    w_a = fold_within(
+        keyless_neq_order_stats(inner_t, a_col, b_col, op_b)
+    )
+    helper = []
     if sf.const_probe is not None:
         probe_lit, ic = sf.const_probe
         pl = probe_lit.to_spark({})
         probe_ok = pl.isNotNull()
-        df = attach(
-            triple_view(
-                inner_t.filter(F.col(ic).isNull()), gn, f"{prefix}_N"
-            ),
-            [n for _, n in gn],
+        w_n = fold_within(
+            keyless_neq_order_stats(
+                inner_t.filter(F.col(ic).isNull()), a_col, b_col, op_b,
+            )
         )
-        df = attach(
-            triple_view(
-                inner_t.filter(F.col(ic) == pl), gm, f"{prefix}_M"
-            ),
-            [n for _, n in gm],
+        w_m = fold_within(
+            keyless_neq_order_stats(
+                inner_t.filter(F.col(ic) == pl), a_col, b_col, op_b
+            )
         )
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
         probe_ok = F.col(ov_p).isNotNull()
-        df = attach(
-            triple_view(
-                inner_t.filter(F.col(ic).isNull()), gn, f"{prefix}_N"
-            ),
-            [n for _, n in gn],
+        w_n = fold_within(
+            keyless_neq_order_stats(
+                inner_t.filter(F.col(ic).isNull()), a_col, b_col, op_b,
+            )
         )
         mp = f"{prefix}_mp"
-        df = attach(
-            triple_view(
-                inner_t.filter(F.col(ic).isNotNull()),
-                gm + [(ic, mp)],
-                f"{prefix}_M",
-            ),
-            [n for _, n in gm],
-            extra_cond=(F.col(ov_p) == F.col(mp)),
+        view = triple_view(
+            inner_t.filter(F.col(ic).isNotNull()),
+            [(ic, mp)],
+            f"{prefix}_M",
         )
-        helper.append(mp)
-    keep = ~within(f"{prefix}_A") | (
-        ~within(f"{prefix}_M") & ~within(f"{prefix}_N") & probe_ok
-    )
-    return df.filter(keep).drop(*helper)
-
-
-def _apply_neq_order2_threshold_not_in(df, inner, sf, prefix: str):
-    """Correlated NOT IN whose inner set is filtered by ONE ``<>``
-    plus TWO order comparisons (round 13 latest): ``o.x NOT IN (SELECT
-    y FROM t WHERE t.k = o.k AND t.a <> o.d1 AND t.b OP2 o.d2 AND
-    t.c OP3 o.d3)``. Each three-valued fact asks the <>+order+order
-    witness question over its population, carried on ONE
-    keyed_neq_order2_view per fact (the annotated region staircase U
-    plus the distinct-a pair staircase V — see plans/frontier.py) and
-    probed JVM-side by frontier.neq_triple_witness_col. Views one row
-    per group (per (group, y) for a column probe, pinned by the join
-    condition) — the LEFT joins never duplicate. Keyed groups only;
-    b/c dims integral/date/timestamp (the builder raises otherwise,
-    riding mode='auto')."""
-    from sparksqlplus_spark.plans.frontier import (
-        canon_float_neq_dims,
-        keyed_neq_order2_view,
-        neq_triple_witness_col,
-    )
-
-    thrs = sf.corr_threshold
-    (_, d1e, a_col) = next(t for t in thrs if t[0] == "<>")
-    (op2, d2e, b_col), (op3, d3e, c_col) = [
-        t for t in thrs if t[0] != "<>"
-    ]
-    d1 = d1e.to_spark({r: r[1] for r in d1e.refs()})
-    d2 = d2e.to_spark({r: r[1] for r in d2e.refs()})
-    d3 = d3e.to_spark({r: r[1] for r in d3e.refs()})
-    # round 15: float/double <>-dims embed via neq_canon (inner AND
-    # probe) so the class bookkeeping matches Spark =/<> on NaN/-0.0
-    inner, [(a_col, d1)] = canon_float_neq_dims(
-        inner, [(a_col, d1)], prefix
-    )
-    corr = sf.corr_keys
-
-    def fact_view(src, part_pairs, tagu, tagv):
-        return keyed_neq_order2_view(
-            src, part_pairs, a_col, b_col, c_col, (op2, op3),
-            tagu, tagv,
-        )
-
-    def attach(view, names, extra_cond=None):
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(ov) == F.col(n) for (ov, _), n in zip(corr, names)]
-            + ([extra_cond] if extra_cond is not None else []),
-        )
-        return df.join(view, on, "left"), list(names)
-
-    def within(tagu, tagv):
-        return neq_triple_witness_col(
-            F.col(tagu), F.col(tagv), d1, d2, d3, op2, op3
-        )
-
-    ga = [(ic, f"{prefix}_ga{i}") for i, (_, ic) in enumerate(corr)]
-    gn = [(ic, f"{prefix}_gn{i}") for i, (_, ic) in enumerate(corr)]
-    gm = [(ic, f"{prefix}_gm{i}") for i, (_, ic) in enumerate(corr)]
-    helper: list[str] = [
-        f"{prefix}_ua", f"{prefix}_va",
-        f"{prefix}_un", f"{prefix}_vn",
-        f"{prefix}_um", f"{prefix}_vm",
-    ]
-    df, used = attach(
-        fact_view(inner, ga, f"{prefix}_ua", f"{prefix}_va"),
-        [n for _, n in ga],
-    )
-    helper += used
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic).isNull()), gn,
-                f"{prefix}_un", f"{prefix}_vn",
-            ),
-            [n for _, n in gn],
-        )
-        helper += used
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic) == pl), gm,
-                f"{prefix}_um", f"{prefix}_vm",
-            ),
-            [n for _, n in gm],
-        )
-        helper += used
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic).isNull()), gn,
-                f"{prefix}_un", f"{prefix}_vn",
-            ),
-            [n for _, n in gn],
-        )
-        helper += used
-        mp = f"{prefix}_mp"
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic).isNotNull()),
-                gm + [(ic, mp)],
-                f"{prefix}_um", f"{prefix}_vm",
-            ),
-            [n for _, n in gm],
-            extra_cond=(F.col(ov_p) == F.col(mp)),
-        )
-        helper += used + [mp]
-    keep = ~within(f"{prefix}_ua", f"{prefix}_va") | (
-        ~within(f"{prefix}_um", f"{prefix}_vm")
-        & ~within(f"{prefix}_un", f"{prefix}_vn")
-        & probe_ok
-    )
-    return df.filter(keep).drop(*helper)
-
-
-def _apply_neq2_order_threshold_not_in(df, inner, sf, prefix: str):
-    """Correlated NOT IN whose inner set is filtered by TWO ``<>``
-    plus ONE order comparison (round 13 latest): ``o.x NOT IN (SELECT
-    y FROM t WHERE t.k = o.k AND t.a <> o.d1 AND t.b <> o.d2 AND
-    t.c OP3 o.d3)``. Each three-valued fact asks the <>+<>+order
-    witness question over its population, carried on ONE
-    keyed_neq2_order_view per fact (the prefix diagonal statistics at
-    every region change point along OP3's orientation) and probed
-    JVM-side by frontier.neq2_order_witness_col. Views one row per
-    group (per (group, y) for a column probe) — the LEFT joins never
-    duplicate. Keyed groups only; c integral/date/timestamp."""
-    from sparksqlplus_spark.plans.frontier import (
-        canon_float_neq_dims,
-        keyed_neq2_order_view,
-        neq2_order_witness_col,
-    )
-
-    thrs = sf.corr_threshold
-    neqs = [t for t in thrs if t[0] == "<>"]
-    (_, d1e, a_col), (_, d2e, b_col) = neqs
-    (op3, d3e, c_col) = next(t for t in thrs if t[0] != "<>")
-    d1 = d1e.to_spark({r: r[1] for r in d1e.refs()})
-    d2 = d2e.to_spark({r: r[1] for r in d2e.refs()})
-    d3 = d3e.to_spark({r: r[1] for r in d3e.refs()})
-    # round 15: float/double <>-dims embed via neq_canon (inner AND
-    # probe) so the class bookkeeping matches Spark =/<> on NaN/-0.0
-    inner, [(a_col, d1), (b_col, d2)] = canon_float_neq_dims(
-        inner, [(a_col, d1), (b_col, d2)], prefix
-    )
-    corr = sf.corr_keys
-
-    def fact_view(src, part_pairs, tag):
-        return keyed_neq2_order_view(
-            src, part_pairs, a_col, b_col, c_col, op3, tag
-        )
-
-    def attach(view, names, extra_cond=None):
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(ov) == F.col(n) for (ov, _), n in zip(corr, names)]
-            + ([extra_cond] if extra_cond is not None else []),
-        )
-        return df.join(view, on, "left"), list(names)
-
-    def within(tag):
-        return neq2_order_witness_col(F.col(tag), d1, d2, d3, op3)
-
-    ga = [(ic, f"{prefix}_ga{i}") for i, (_, ic) in enumerate(corr)]
-    gn = [(ic, f"{prefix}_gn{i}") for i, (_, ic) in enumerate(corr)]
-    gm = [(ic, f"{prefix}_gm{i}") for i, (_, ic) in enumerate(corr)]
-    helper: list[str] = [f"{prefix}_na", f"{prefix}_nn", f"{prefix}_nm"]
-    df, used = attach(
-        fact_view(inner, ga, f"{prefix}_na"), [n for _, n in ga]
-    )
-    helper += used
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic).isNull()), gn, f"{prefix}_nn"
-            ),
-            [n for _, n in gn],
-        )
-        helper += used
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic) == pl), gm, f"{prefix}_nm"
-            ),
-            [n for _, n in gm],
-        )
-        helper += used
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic).isNull()), gn, f"{prefix}_nn"
-            ),
-            [n for _, n in gn],
-        )
-        helper += used
-        mp = f"{prefix}_mp"
-        df, used = attach(
-            fact_view(
-                inner.filter(F.col(ic).isNotNull()),
-                gm + [(ic, mp)],
-                f"{prefix}_nm",
-            ),
-            [n for _, n in gm],
-            extra_cond=(F.col(ov_p) == F.col(mp)),
-        )
-        helper += used + [mp]
-    keep = ~within(f"{prefix}_na") | (
-        ~within(f"{prefix}_nm") & ~within(f"{prefix}_nn") & probe_ok
-    )
+        df = df.join(view, F.col(ov_p) == F.col(mp), "left")
+        w_m = within(f"{prefix}_M")
+        helper += [
+            f"{prefix}_Mb1", f"{prefix}_Mb2", f"{prefix}_Ma1", mp,
+        ]
+    keep = ~w_a | (~w_m & ~w_n & probe_ok)
     return df.filter(keep).drop(*helper)
 
 
 def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
-    """Correlated NOT IN whose inner set is filtered by THREE order
-    comparisons against the outer row (round 13): ``o.x NOT IN (SELECT
-    y FROM t WHERE t.k = o.k AND t.c0 OP0 o.d0 AND t.c1 OP1 o.d1 AND
-    t.c2 OP2 o.d2)``. Each three-valued fact is a 3-D DOMINANCE query,
-    so the 2-D staircase of _apply_pair_threshold_not_in becomes a
-    per-subset Pareto SKYLINE (plans/frontier.py:keyed_skyline_view —
-    pre-reduction + applyInPandas sweep + part-keyed collect, never a
-    single-partition window; the OR'd-EXISTS sibling is
-    api._or_exists_sky_flag). Views one row per group (per (group, y)
-    for a column probe, pinned by the join condition) — the LEFT
-    joins never duplicate. A NULL d0/d1/d2 makes F.exists non-TRUE ->
+    """KEYLESS correlated NOT IN whose inner set is filtered by THREE
+    to FIVE order comparisons against the outer row (round 13): ``o.x
+    NOT IN (SELECT y FROM t WHERE t.c0 OP0 o.d0 AND t.c1 OP1 o.d1 AND
+    t.c2 OP2 o.d2)``. Each three-valued fact is a k-D DOMINANCE query
+    against a Pareto SKYLINE: the set and NULL-y facts fold as GLOBAL
+    skylines (frontier.global_skyline_points — capped driver merge,
+    one-row broadcast crossJoins); the match fact is a per-y keyed
+    skyline (plans/frontier.py:keyed_skyline_view — pre-reduction +
+    applyInPandas sweep + y-keyed collect, one row per y, so the LEFT
+    join never duplicates) for a column probe, or a third global fold
+    for a constant probe. A NULL d0/d1/d2 makes F.exists non-TRUE ->
     coalesce FALSE -> the set folds empty (c OP NULL is UNKNOWN for
-    every row). KEYLESS groups (round 13 late) fold the set/NULL-y
-    facts as GLOBAL skylines (frontier.global_skyline_points — capped
-    driver merge, one-row broadcast crossJoins) with the match fact a
-    per-y keyed skyline (column probe) or a third global fold
-    (constant probe) — the pair executor's keyless pattern one
-    dimension up. Dtypes beyond integral/date/timestamp raise inside
-    the builder and ride mode='auto'."""
+    every row). Dtypes beyond integral/date/timestamp raise inside the
+    builder and ride mode='auto'. Keyed groups never reach here
+    (_apply_semi_filter routes them to the spark.sql fallback)."""
     from sparksqlplus_spark.plans.frontier import (
         global_skyline_points,
         keyed_skyline_view,
@@ -856,28 +487,13 @@ def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
         for t in sf.corr_threshold
     ]
     cmps = [_CMPF[op] for op in ops]
-    corr = sf.corr_keys
 
-    def sky(src, part_pairs, out):
-        if not part_pairs:
-            # keyless global fact — bounded plan-time fold, inlined
-            # as a one-row frame the caller broadcasts (3-D or 4-D;
-            # the 4-D merge cap is tightened inside the fold)
-            pts, types = global_skyline_points(src, dims, ops, 65536)
-            return skyline_one_row_df(
-                df.sparkSession, pts, types
-            ).withColumnRenamed("__pts", out)
-        return keyed_skyline_view(src, part_pairs, dims, ops, out)
-
-    def attach(view, names, extra_cond=None):
-        conds = [
-            F.col(ov) == F.col(n) for (ov, _), n in zip(corr, names)
-        ] + ([extra_cond] if extra_cond is not None else [])
-        if not conds:
-            # keyless global one-row frame — broadcast crossJoin
-            return df.crossJoin(F.broadcast(view)), list(names)
-        on = functools.reduce(lambda a, b: a & b, conds)
-        return df.join(view, on, "left"), list(names)
+    def fold(src, out):
+        # bounded plan-time fold, inlined as a one-row frame (the 4-D
+        # merge cap is tightened inside the fold)
+        pts, types = global_skyline_points(src, dims, ops, 65536)
+        one = skyline_one_row_df(df.sparkSession, pts, types)
+        return F.broadcast(one.withColumnRenamed("__pts", out))
 
     def within(arr):
         return F.coalesce(
@@ -894,45 +510,34 @@ def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
             F.lit(False),
         )
 
-    ga = [(ic, f"{prefix}_ga{i}") for i, (_, ic) in enumerate(corr)]
-    gn = [(ic, f"{prefix}_gn{i}") for i, (_, ic) in enumerate(corr)]
-    gm = [(ic, f"{prefix}_gm{i}") for i, (_, ic) in enumerate(corr)]
     helper: list[str] = [f"{prefix}_pa", f"{prefix}_pn", f"{prefix}_pm"]
-    df, used = attach(sky(inner, ga, f"{prefix}_pa"), [n for _, n in ga])
-    helper += used
+    df = df.crossJoin(fold(inner, f"{prefix}_pa"))
     if sf.const_probe is not None:
         probe_lit, ic = sf.const_probe
         pl = probe_lit.to_spark({})
         probe_ok = pl.isNotNull()
-        df, used = attach(
-            sky(inner.filter(F.col(ic).isNull()), gn, f"{prefix}_pn"),
-            [n for _, n in gn],
+        df = df.crossJoin(
+            fold(inner.filter(F.col(ic).isNull()), f"{prefix}_pn")
         )
-        helper += used
-        df, used = attach(
-            sky(inner.filter(F.col(ic) == pl), gm, f"{prefix}_pm"),
-            [n for _, n in gm],
+        df = df.crossJoin(
+            fold(inner.filter(F.col(ic) == pl), f"{prefix}_pm")
         )
-        helper += used
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
         probe_ok = F.col(ov_p).isNotNull()
-        df, used = attach(
-            sky(inner.filter(F.col(ic).isNull()), gn, f"{prefix}_pn"),
-            [n for _, n in gn],
+        df = df.crossJoin(
+            fold(inner.filter(F.col(ic).isNull()), f"{prefix}_pn")
         )
-        helper += used
         mp = f"{prefix}_mp"
-        df, used = attach(
-            sky(
-                inner.filter(F.col(ic).isNotNull()),
-                gm + [(ic, mp)],
-                f"{prefix}_pm",
-            ),
-            [n for _, n in gm],
-            extra_cond=(F.col(ov_p) == F.col(mp)),
+        v_match = keyed_skyline_view(
+            inner.filter(F.col(ic).isNotNull()),
+            [(ic, mp)],
+            dims,
+            ops,
+            f"{prefix}_pm",
         )
-        helper += used + [mp]
+        df = df.join(v_match, F.col(ov_p) == F.col(mp), "left")
+        helper.append(mp)
     keep = ~within(f"{prefix}_pa") | (
         ~within(f"{prefix}_pm") & ~within(f"{prefix}_pn") & probe_ok
     )
@@ -1190,167 +795,6 @@ def _apply_neq_triple_not_in_keyless(df, inner, sf, prefix: str):
     return df.filter(keep).drop(*drop)
 
 
-def _apply_pair_threshold_not_in(df, inner, sf, prefix: str):
-    """Correlated NOT IN whose inner set is filtered by TWO order
-    comparisons against the outer row (round 12): ``o.x NOT IN
-    (SELECT y FROM t WHERE t.k = o.k AND t.c1 OP1 o.d1 AND
-    t.c2 OP2 o.d2)``. One extreme per fact no longer decides (the row
-    attaining best c1 need not satisfy the c2 bound), but each fact is
-    a 2-D DOMINANCE query, so the per-subset Pareto STAIRCASE does —
-    the same frontier argument as the OR'd-EXISTS pair flag
-    (api._or_exists_pair_flag): a qualifying row exists for (d1, d2)
-    iff some staircase point satisfies both comparisons.
-
-    Views: per-group staircase of the whole subset (set nonempty), of
-    the NULL-y rows (has NULL element), and per (group, y) (probe
-    matched; the probe-constant form folds the y = probe filter into
-    a group-keyed staircase instead). Build = one (part, u)
-    pre-reduction + one part-keyed window + one collect per view —
-    one ROW per part either way, so the LEFT joins never duplicate;
-    array size is the frontier's change points (the reference's
-    TreeLikeArray bound, SURVEY R9/R12). Rows with a NULL compared
-    column can never qualify and are filtered; a NULL d1/d2 makes
-    F.exists non-TRUE -> coalesce FALSE -> the set folds empty
-    (c OP NULL is UNKNOWN for every row). Keyed groups only — the
-    keyless pair routes to _apply_pair_threshold_not_in_keyless
-    (round 13), which folds the global staircases via the bounded
-    frontier helper instead of a single-partition window."""
-    (op1, e1, c1), (op2, e2, c2) = sf.corr_threshold
-    thr1 = e1.to_spark({r: r[1] for r in e1.refs()})
-    thr2 = e2.to_spark({r: r[1] for r in e2.refs()})
-    cmp1, cmp2 = _CMPF[op1], _CMPF[op2]
-    asc1 = op1 in ("<", "<=")
-    bestv = F.min if op2 in ("<", "<=") else F.max
-    corr = sf.corr_keys
-    inner_t = inner.filter(F.col(c1).isNotNull() & F.col(c2).isNotNull())
-
-    def staircase(src, part_pairs, out):
-        """part_pairs: [(source col, view col name)] — one array row
-        per distinct part tuple."""
-        names = [n for _, n in part_pairs]
-        pre = (
-            src.select(
-                *[F.col(c).alias(n) for c, n in part_pairs],
-                F.col(c1).alias("u"),
-                F.col(c2).alias("v"),
-            )
-            .groupBy(*names, "u")
-            .agg(bestv("v").alias("v"))
-        )
-        order = F.col("u").asc() if asc1 else F.col("u").desc()
-        w = (
-            Window.partitionBy(*names)
-            .orderBy(order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        lw = Window.partitionBy(*names).orderBy(order)
-        pre = pre.select(*names, "u", bestv("v").over(w).alias("vb"))
-        pre = pre.withColumn("__pv", F.lag("vb").over(lw)).filter(
-            F.col("__pv").isNull() | (F.col("vb") != F.col("__pv"))
-        )
-        return pre.groupBy(*names).agg(
-            F.collect_list(
-                F.struct(F.col("u").alias("u"), F.col("vb").alias("v"))
-            ).alias(out)
-        )
-
-    def attach(view, names, extra_cond=None):
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [
-                F.col(ov) == F.col(n)
-                for (ov, _), n in zip(corr, names)
-            ]
-            + ([extra_cond] if extra_cond is not None else []),
-        )
-        return df.join(view, on, "left"), list(names)
-
-    def within(arr):
-        return F.coalesce(
-            F.exists(
-                F.col(arr),
-                lambda e: cmp1(e["u"], thr1) & cmp2(e["v"], thr2),
-            ),
-            F.lit(False),
-        )
-
-    ga = [(ic, f"{prefix}_ga{i}") for i, (_, ic) in enumerate(corr)]
-    gn = [(ic, f"{prefix}_gn{i}") for i, (_, ic) in enumerate(corr)]
-    gm = [(ic, f"{prefix}_gm{i}") for i, (_, ic) in enumerate(corr)]
-    helper: list[str] = [f"{prefix}_pa", f"{prefix}_pn", f"{prefix}_pm"]
-    v_all = staircase(inner_t, ga, f"{prefix}_pa")
-    df, used = attach(v_all, [n for _, n in ga])
-    helper += used
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        v_null = staircase(
-            inner_t.filter(F.col(ic).isNull()), gn, f"{prefix}_pn"
-        )
-        v_match = staircase(
-            inner_t.filter(F.col(ic) == pl), gm, f"{prefix}_pm"
-        )
-        df, used = attach(v_null, [n for _, n in gn])
-        helper += used
-        df, used = attach(v_match, [n for _, n in gm])
-        helper += used
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
-        v_null = staircase(
-            inner_t.filter(F.col(ic).isNull()), gn, f"{prefix}_pn"
-        )
-        mp = f"{prefix}_mp"
-        v_match = staircase(
-            inner_t.filter(F.col(ic).isNotNull()),
-            gm + [(ic, mp)],
-            f"{prefix}_pm",
-        )
-        df, used = attach(v_null, [n for _, n in gn])
-        helper += used
-        df, used = attach(
-            v_match,
-            [n for _, n in gm],
-            extra_cond=(F.col(ov_p) == F.col(mp)),
-        )
-        helper += used + [mp]
-    keep = ~within(f"{prefix}_pa") | (
-        ~within(f"{prefix}_pm") & ~within(f"{prefix}_pn") & probe_ok
-    )
-    return df.filter(keep).drop(*helper)
-
-
-# Round 14 (SCALING.md "flag machinery vs Catalyst" A/B): the plan
-# mode of the CURRENT api.sql() call, set by Engine.sql before
-# planning (module-global like last_enumerate_mode — one driver, one
-# planner at a time). Under 'auto', KEYED multi-comparison NOT IN
-# shapes raise into the spark.sql fallback BY MEASUREMENT (Catalyst's
-# own decorrelation ran 1.8-4.7x faster at sf0.1 AND 10x, high- and
-# low-cardinality dims alike); 'cqc'/'naive' force the native
-# statistic views (reference parity, pytest brute-force matrices).
-# KEYLESS shapes stay native in every mode — Catalyst plans a nested
-# loop there (measured 0.03x of spark.sql at 10x, gap widening).
-plan_mode: str = "cqc"
-
-
-def _gate_keyed_multicmp_auto(what: str) -> None:
-    # RoutedToFallback (round 15, VERDICT r14 What's-wrong #1), NOT a
-    # plain UnsupportedSqlError: the statement is dialect-supported, so
-    # the non-full => DISTINCT contract (SURVEY C23) must survive the
-    # routing — api._plan_spec_inner fills needs_distinct from the
-    # already-built Context and Engine.sql applies the reference's
-    # SELECT DISTINCT rewrite (CompileController.java:98-101) to the
-    # fallback run, keeping auto == cqc row multisets.
-    if plan_mode == "auto":
-        raise RoutedToFallback(
-            f"{what} rides the spark.sql fallback under mode='auto' "
-            "(measured slower than Catalyst decorrelation at both "
-            "sf0.1 and 10x — SCALING.md round-14 A/B); mode='cqc' "
-            "forces the native statistic plan"
-        )
-
-
 def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
     """Apply one planned [NOT] EXISTS (plans/context.py:SemiFilter):
     left_semi/left_anti of ``df`` against the filtered inner table.
@@ -1407,46 +851,32 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         # column pinned) — no join duplicates; with no group keys the
         # stats view is ONE global row, broadcast.
         if len(sf.corr_threshold) >= 2 and sf.corr_keys:
-            # round 14 measured gate (see plan_mode above): keyed
-            # multi-comparison NOT IN -> spark.sql under auto
-            _gate_keyed_multicmp_auto(
-                "keyed multi-comparison correlated NOT IN"
+            # KEYED multi-comparison NOT IN has no native plan: Catalyst's
+            # own decorrelation measured 1.8-4.7x faster at sf0.1 AND 10x
+            # (SCALING.md round-14 A/B). RoutedToFallback, not a plain
+            # UnsupportedSqlError: the statement is in the dialect, so
+            # api._plan_spec_inner fills needs_distinct from the built
+            # Context and the fallback keeps the non-full => DISTINCT
+            # contract (SURVEY C23). Keyless shapes stay native below —
+            # Catalyst nested-loops them.
+            raise RoutedToFallback(
+                "keyed multi-comparison correlated NOT IN runs on the "
+                "spark.sql fallback in every mode (Catalyst "
+                "decorrelation measured faster — SCALING.md round-14 A/B)"
             )
-        if len(sf.corr_threshold) >= 4:
-            # round 13 (latest): FOUR order comparisons — the skyline
-            # executor generalizes (numpy dominance-scan sweep;
-            # all-order per the build_context gate, which admits k
-            # up to 5 as of round 15 — the sweeps are tail-width
-            # agnostic)
-            return _apply_sky_threshold_not_in(df, inner, sf, prefix)
-        if len(sf.corr_threshold) == 3:
+        if len(sf.corr_threshold) >= 3:
             n_neq3 = sum(
                 1 for t in sf.corr_threshold if t[0] == "<>"
             )
-            if n_neq3 in (1, 2) and not sf.corr_keys:
+            if n_neq3:
                 # round 14: KEYLESS <>-containing triples — global
                 # stat folds + a per-y match view (see the executor)
                 return _apply_neq_triple_not_in_keyless(
                     df, inner, sf, prefix
                 )
-            if n_neq3 == 1:
-                # round 13 (latest): ONE <> + TWO order comparisons —
-                # each fact rides the U/V two-staircase statistic
-                # (keyed only; build_context admits it keyed)
-                return _apply_neq_order2_threshold_not_in(
-                    df, inner, sf, prefix
-                )
-            if n_neq3 == 2:
-                # round 13 (latest): TWO <> + ONE order comparison —
-                # each fact rides the prefix-diagonal-stats array
-                # (keyed only)
-                return _apply_neq2_order_threshold_not_in(
-                    df, inner, sf, prefix
-                )
-            # round 13: THREE order comparisons — each fact is a 3-D
-            # dominance query against a per-subset Pareto skyline
-            # (keyed branches to per-group views, keyless folds the
-            # global skyline)
+            # all-order triples, quads and quints (build_context admits
+            # k up to 5): each fact is a k-D dominance query against the
+            # global Pareto skyline
             return _apply_sky_threshold_not_in(df, inner, sf, prefix)
         if len(sf.corr_threshold) == 2:
             n_neq = sum(1 for t in sf.corr_threshold if t[0] == "<>")
@@ -1462,14 +892,11 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
                 return _apply_neq_order_threshold_not_in(
                     df, inner, sf, prefix
                 )
-            if not sf.corr_keys:
-                # round 13: keyless pair — global staircases fold via
-                # the bounded frontier helper (build_context admits
-                # only the order+order keyless mix)
-                return _apply_pair_threshold_not_in_keyless(
-                    df, inner, sf, prefix
-                )
-            return _apply_pair_threshold_not_in(df, inner, sf, prefix)
+            # round 13: keyless pair — global staircases fold via the
+            # bounded frontier helper
+            return _apply_pair_threshold_not_in_keyless(
+                df, inner, sf, prefix
+            )
         (t_op, t_outer, t_col), = sf.corr_threshold
         # the outer threshold is an outer-only EXPRESSION whose
         # ("@o", variable) refs resolve against the outer frame

@@ -49,16 +49,26 @@ def context_epoch() -> int:
 def expr_cache(fn):
     """``functools.lru_cache`` for Column-fragment builders, keyed
     additionally on :func:`context_epoch` so a restarted SparkContext
-    never serves stale py4j handles. Arguments must be hashable (the
-    builders take strings/ints by design)."""
+    never serves stale py4j handles. The first call under a new epoch
+    clears the cache, so the Columns (and their py4j handles) built
+    under a dead context are released rather than kept forever.
+    Arguments must be hashable (the builders take strings/ints by
+    design)."""
 
     @functools.lru_cache(maxsize=None)
     def cached(_epoch: int, *args, **kwargs):
         return fn(*args, **kwargs)
 
+    seen_epoch = None
+
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        return cached(context_epoch(), *args, **kwargs)
+        nonlocal seen_epoch
+        epoch = context_epoch()
+        if epoch != seen_epoch:
+            cached.cache_clear()
+            seen_epoch = epoch
+        return cached(epoch, *args, **kwargs)
 
     wrapper.cache_clear = cached.cache_clear
     wrapper.cache_info = cached.cache_info

@@ -483,7 +483,7 @@ class PairWitness(Cond):
     struct element ``e`` of ``arr`` satisfies ``e.u OP1 outer1 AND
     e.v OP2 outer2``. The staircase is built so this holds exactly
     when some raw inner row satisfies both comparisons (see
-    api._or_exists_pair_flag). Ops are order comparisons only; a NULL
+    api._keyless_pair_flag). Ops are order comparisons only; a NULL
     outer operand or NULL array never yields TRUE — callers wrap in
     CaseWhen so UNKNOWN folds to the EXISTS miss value."""
 

@@ -47,10 +47,12 @@ class UnsupportedSqlError(Exception):
 
 
 class RoutedToFallback(UnsupportedSqlError):
-    """Statement IS in the planner subset, but a measured routing
-    decision (SCALING.md round-14 A/B: Catalyst decorrelation beats the
-    native statistic plans on every KEYED multi-comparison cell) sends
-    it to the spark.sql fallback under mode='auto'.
+    """Statement IS in the dialect, but has no native plan: KEYED
+    multi-comparison correlated [NOT] IN and OR'd [NOT] EXISTS (an
+    equality correlation key plus 2-5 comparisons) are Catalyst-only in
+    every mode — SCALING.md round-14 A/B measured Catalyst's
+    decorrelation faster on every keyed cell. mode='auto' runs the
+    statement through spark.sql; 'cqc' and 'naive' raise this error.
 
     Distinct from a genuine UnsupportedSqlError because the engine's
     semantics contract still applies: a routed NON-FULL statement must

@@ -658,7 +658,7 @@ def build_context(spec: QuerySpec, catalog: Catalog) -> Context:
                     # Pareto staircases in the executor. Round 13: a
                     # <> PAIRED with an order comparison — each fact
                     # folds to the argmin/runner-up triple (the
-                    # _or_exists_neq_order_flag statistic, per fact
+                    # _keyless_neq_order_fold statistic, per fact
                     # population); <> + <> via diagonal-witness
                     # stats — any pair mix plans.
                     len(thrs) == 2

@@ -763,8 +763,9 @@ def _neq2_order_sweep(rows):
     the count is 1), and the current FAILING (d1, d2) points (None
     padded). Exactness: once da >= 2 and db >= 2, the no-witness set
     is at most the diagonal pair's two cross points (the
-    _or_exists_neq_pair_flag lemma), computed once over that prefix
-    (O(prefix)) and from then on only FILTERED by each new row (a
+    diagonal-witness lemma, api._keyless_neq_pair_fold), computed
+    once over that prefix (O(prefix)) and from then on only FILTERED
+    by each new row (a
     point keeps failing iff the row matches its a or its b) — O(1)
     amortized, never recomputed."""
     entries: list = []
@@ -1572,20 +1573,6 @@ _EXACT_SCALAR_TYPES_MSG = (
 )
 
 
-def _gate_exact_scalars(df, cols):
-    from pyspark.sql import types as T
-
-    ok_types = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.DateType, T.TimestampType,
-    )
-    for f in df.schema.fields:
-        if f.name in cols and not isinstance(f.dataType, ok_types):
-            raise RoutedToFallback(
-                _EXACT_SCALAR_TYPES_MSG.format(dt=f.dataType)
-            )
-
-
 def _gate_order_scalars(df, cols):
     """Order-dim gate for the collected-literal folds (round 15):
     exact scalars PLUS float/double — safe wherever the ordering and
@@ -1684,7 +1671,7 @@ def keyless_diag_stats(src, a_col, b_col):
     distinct value, or ``("diag", pa, pb, qa, qb, w1, w2)`` — the
     chosen diagonal pair's coordinates and its two cross-point
     witness bits. The witness for (d1, d2) folds per the
-    api._or_exists_neq_pair_flag lemma:
+    diagonal-witness lemma (api._keyless_neq_pair_fold):
 
       single: (da = 1 ? ua <> d1 : d1 NOT NULL)
               AND (db = 1 ? ub <> d2 : d2 NOT NULL)

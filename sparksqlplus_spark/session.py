@@ -12,6 +12,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+# share of physical memory given to the driver heap by default, and its cap
+HEAP_SHARE = 4
+HEAP_MAX_GIB = 16
+
+
+def default_cpus() -> int:
+    """Cores this process may run on (honours cgroup/taskset pinning)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_mem() -> str:
+    """Driver heap default: a share of MemTotal, at least 1 GiB and at
+    most 16 GiB. The heap is committed and pre-touched at JVM start, so a
+    fixed size larger than the machine kills the gateway before it
+    answers."""
+    with open("/proc/meminfo") as f:
+        total_kib = next(
+            int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+        )
+    gib = total_kib // (1024 * 1024) // HEAP_SHARE
+    return f"{max(1, min(HEAP_MAX_GIB, gib))}g"
+
 
 def get_spark(
     app_name: str = "sparksqlplus",
@@ -25,12 +47,12 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` and let
     ``spark.sql.adaptive.coalescePartitions`` shrink it at runtime.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else default_cpus()
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     # Commit and pre-touch the full heap at JVM start (-Xms = -Xmx +
     # AlwaysPreTouch). Without it the heap grows lazily and G1 touches
     # freshly-committed pages MID-QUERY, a first-touch page-fault storm
@@ -45,8 +67,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         # local mode runs every executor thread inside the driver JVM —
-        # the 1g default heap OOMs 32 concurrent shuffle writers long
-        # before the machine (128 GiB here) is anywhere near full
+        # the 1g default heap OOMs concurrent shuffle writers long
+        # before the machine is anywhere near full
         .config("spark.driver.memory", driver_mem)
         # --- Adaptive Query Execution: the scale safety-net -------------
         .config("spark.sql.adaptive.enabled", "true")

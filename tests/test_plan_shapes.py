@@ -51,20 +51,19 @@ BOUNDS = {
     "pack_sequences": 3,
     "text_tfidf_topk": 5,
     "events_sessionize": 1,
-    # r16 (exists_two_comparisons retired with its 2-exchange bound —
-    # the staircase flag family stays pinned via exists_neq_pair and
-    # not_in_pair_or below): the keyless all-order QUINT NOT IN plans
+    # r16 (exists_two_comparisons retired with its 2-exchange bound):
+    # the keyless all-order QUINT NOT IN plans
     # three 5-D skyline collections (all / NULL-y / match facts) —
     # each a bounded-size reduction exchange, + the final dedup — and
     # the probe joins are one-row broadcast crossJoins (never counted
     # here: broadcasts are the cheap path). Measured 4 at pin time.
     "not_in_quint_keyless": 4,
-    # r16: the routed ORDER-BY-non-output x LIMIT entry re-plans
-    # through mode='cqc' (rescue path) — the same three keyed
-    # threshold-fact views as not_in_pair_routed_distinct (~2
-    # exchanges each) + the helper-sort dedup collapse. Measured 7 at
-    # pin time.
-    "not_in_routed_orderlimit": 7,
+    # r16: the routed ORDER-BY-non-output x LIMIT entry — the
+    # helper-sort collapse emulated DataFrame-side over the verbatim
+    # spark.sql body (api._emulate_tail_rescue): Catalyst's
+    # decorrelated anti join + the dedup collapse in ONE live
+    # exchange. Measured 1 (sf0.001).
+    "not_in_routed_orderlimit": 1,
     # r13 (r12 verdict item 6): the GHD/WCOJ hypercube plan. Counting
     # caveat: the persisted graph sources sit above a cache boundary
     # (shuffle_count already skips below InMemoryRelation), so this
@@ -76,29 +75,15 @@ BOUNDS = {
     # r13: the WCOJ triangle kernel — ONE live exchange: the cell
     # repartition feeding applyInPandas (same caveat as the pentagon).
     "graph_triangle_wcoj": 1,
-    # r13: the round's new NOT-IN/EXISTS planner surfaces. All their
-    # exchanges hash on the correlation key (or the md5 digest), so
-    # the counts are per-key agg/join rounds, not data explosions:
-    # exists_neq_pair = the diagonal-witness flag's three grouped
-    # passes (stats, s/t under joined r1, w-bits under the chosen
-    # pair) + the flag LEFT join; not_in_pair_or = three staircase
-    # views (all / NULL-y / match) at ~2 exchanges each;
-    # exists_neq_pair = the diagonal-witness flag's grouped passes +
-    # the flag LEFT join (the r15 not_in_cte / not_in_expr_probe
-    # retirements took their rows with them — the swapped-in entries
-    # are pinned below).
-    "exists_neq_pair": 7,
-    # not_in_neq_order = three argmin/runner-up triple views (all /
-    # NULL-y / match), each a (part, a) pre-reduction + top-2 window
-    # sharing the part key, + the one-row-per-part LEFT joins
-    "not_in_neq_order": 7,
-    "not_in_pair_or": 6,
-    # r15: keyed 1-<> + 2-order NOT IN with a FLOAT <>-dim — three
-    # keyed U/V views (all / NULL-y / match), each an applyInPandas
-    # part exchange + a part-keyed collect; the neq_canon embedding is
-    # a pure projection (no extra exchange — that is exactly what this
-    # bound guards). Measured 7 at pin time (sf0.001).
-    "not_in_neq_order2_float": 7,
+    # KEYED multi-comparison [NOT] IN / OR'd-EXISTS entries: no
+    # native plan (Catalyst-only, SCALING.md round 14), so each is
+    # Catalyst's own decorrelated plan — a broadcast or a single
+    # shuffled semi/anti join. Measured 0-1 (sf0.001); the bound is 1
+    # so a legitimate broadcast-threshold flip still passes.
+    "exists_neq_pair": 1,
+    "not_in_neq_order": 1,
+    "not_in_pair_or": 1,
+    "not_in_neq_order2_float": 1,
     # r15: the routed-fallback DISTINCT entry runs VERBATIM spark.sql
     # + the rewrite under auto — Catalyst's decorrelated left-anti
     # aggregate + the distinct collapse into ONE live exchange.
@@ -111,11 +96,9 @@ BOUNDS = {
     # y-keyed window/collect; the one-row frontier views crossJoin as
     # broadcasts. Measured 3 at pin time (sf0.001).
     "not_in_pair_keyless": 3,
-    # r13 (late): the 3-D skyline EXISTS flag — (key, u0, u1)
-    # pre-reduction, the applyInArrow sweep's part-key exchange, and
-    # the part-keyed collect_list; the flag LEFT join broadcasts.
-    # Measured 3 at pin time (sf0.001).
-    "exists_three_comparisons": 3,
+    # r13 (late): keyed 3-comparison OR'd EXISTS — Catalyst-only like
+    # the keyed entries above. Measured 0 (sf0.001).
+    "exists_three_comparisons": 1,
     # r14: widened to a 4-column probe (k=4, the last row-value cell)
     # — the NULL-pattern decomposition: the census prunes the
     # supplier side (no NULLs) to the fully-non-NULL pattern's 14
@@ -133,12 +116,9 @@ BOUNDS = {
     # exchange, and the y-keyed collect; the one-row fact views
     # crossJoin as broadcasts. Measured 3 at pin time (sf0.001).
     "not_in_neq_triple_keyless": 3,
-    # r14: the 3-D skyline flag with DOUBLE dims (the dtype widening)
-    # — same plan family as exists_three_comparisons: (key, u0, u1)
-    # pre-reduction, the applyInArrow sweep's part-key exchange, the
-    # part-keyed collect_list; the flag LEFT join broadcasts.
-    # Measured 3 at pin time (sf0.001).
-    "skyline_float_triple": 3,
+    # r14: the same keyed 3-comparison OR'd EXISTS with DOUBLE dims —
+    # Catalyst-only. Measured 0 (sf0.001).
+    "skyline_float_triple": 1,
     # r13: the interval join's BATCH plan (the driver entry's form;
     # stream==batch is pytest-proven). Counting caveat: at sf0.001 AQE
     # broadcasts the purchase side, so the measured live count is 0;
@@ -246,3 +226,6 @@ def test_runtime_bloom_filter_fires(spark, engine):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+        # the plan above was memoized under the forced-shuffle confs —
+        # drop it so later tests re-plan under the restored session
+        engine.clear_plan_cache()

@@ -552,8 +552,11 @@ def test_plan_cache_memoizes_and_invalidates(engine):
     finally:
         engine.catalog.unregister("plan_cache_tmp")
     assert engine.sql(q) is d1
-    # the routed-rescue path caches too (the wrapper sits above the
-    # whole ladder)
+    # the routed rescue (keyed multi-comparison NOT IN with an
+    # explicit-DISTINCT ORDER BY non-output tail) emulates the
+    # helper-sort collapse over a verbatim spark.sql body, so like
+    # every verbatim fallback below it is NOT memoized — and repeats
+    # return the same rows
     q2 = (
         "SELECT DISTINCT c.c_mktsegment FROM customer AS c "
         "WHERE c.c_custkey NOT IN (SELECT o.o_custkey FROM orders "
@@ -561,7 +564,9 @@ def test_plan_cache_memoizes_and_invalidates(engine):
         "c.c_acctbal AND o.o_orderkey >= c.c_nationkey) "
         "ORDER BY c.c_custkey LIMIT 3"
     )
-    assert engine.sql(q2) is engine.sql(q2)
+    r2 = engine.sql(q2)
+    assert engine.sql(q2) is not r2
+    assert engine.sql(q2).collect() == r2.collect()
     # verbatim-fallback statements are NOT memoized: they may bind
     # session temp views the catalog fingerprint cannot see — the
     # exact staleness hazard (replacing the view must not serve a

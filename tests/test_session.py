@@ -18,10 +18,28 @@ def test_driver_heap_pretouch_conf(spark):
         import pytest
 
         pytest.skip("pre-touch disabled via SPARK_GRAFT_PRETOUCH=0")
+    from sparksqlplus_spark.session import default_driver_mem
+
     opts = spark.conf.get("spark.driver.extraJavaOptions")
     assert "-XX:+AlwaysPreTouch" in opts
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     assert f"-Xms{mem}" in opts
+
+
+def test_default_heap_fits_machine():
+    """The default driver heap is committed and pre-touched at JVM
+    start, so it must fit in physical memory: a share of MemTotal,
+    never more than MemTotal and never more than 16 GiB."""
+    from sparksqlplus_spark.session import default_cpus, default_driver_mem
+
+    with open("/proc/meminfo") as f:
+        total_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    mem = default_driver_mem()
+    assert mem.endswith("g")
+    heap_kib = int(mem[:-1]) * 1024 * 1024
+    assert heap_kib <= total_kib or mem == "1g"
+    assert int(mem[:-1]) <= 16
+    assert 1 <= default_cpus() <= (os.cpu_count() or 1)
 
 
 def test_pretouch_merges_caller_java_options():
@@ -104,6 +122,32 @@ def test_expr_memo_epoch_rebuilds_on_context_change(spark):
     c3 = tokens_col("text")
     assert c3 is not c1
     assert tokens_col("text") is c3
+
+
+def test_expr_memo_drops_dead_epoch_entries(spark):
+    """A context restart must RELEASE the memoized Columns built under
+    the dead context (each holds a py4j handle), not just stop serving
+    them: the first call under the new epoch clears the cache, so only
+    entries of the live epoch remain."""
+    from pyspark import SparkContext
+
+    from sparksqlplus_spark import expr_memo
+    from sparksqlplus_spark.operators.dedup import tokens_col
+
+    c1 = tokens_col("text")
+    tokens_col("body")
+    assert tokens_col.cache_info().currsize >= 2
+    real = SparkContext._active_spark_context
+    try:
+        SparkContext._active_spark_context = object()  # fake new context
+        expr_memo.context_epoch()
+    finally:
+        SparkContext._active_spark_context = real
+    c2 = tokens_col("text")
+    assert c2 is not c1
+    # only the entry built under the live epoch survives
+    assert tokens_col.cache_info().currsize == 1
+    assert tokens_col("text") is c2
 
 
 def test_memos_and_engine_survive_session_restart():
