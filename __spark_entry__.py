@@ -749,13 +749,14 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # the CASE-bodied set, and <> ANY.)
     #
     # --- NEW r13: KEYLESS pair-filtered correlated NOT IN — no
-    # equality correlation, so the set/NULL-y facts fold to GLOBAL
-    # Pareto staircases via the bounded frontier helper
-    # (plans/frontier.py: groupBy(u) pre-reduction -> per-Arrow-batch
-    # frontier -> capped plan-time merge, never a single-partition
-    # window), inlined as one-row broadcast crossJoins; the match fact
-    # is a per-y staircase (compiler/cqc.py:
-    # _apply_pair_threshold_not_in_keyless). DuckDB CANNOT oracle the
+    # equality correlation, so the set/NULL-y facts fold to GLOBAL 2-D
+    # Pareto skylines via the bounded skyline fold
+    # (plans/frontier.py:global_skyline_points: groupBy(u0)
+    # pre-reduction -> per-Arrow-batch skyline -> capped plan-time
+    # merge, never a single-partition window), inlined as one-row
+    # broadcast crossJoins; the match fact is a per-y window staircase
+    # (plans/frontier.py:keyed_skyline_view at k = 2, driven by
+    # compiler/cqc.py:_apply_sky_threshold_not_in). DuckDB CANNOT oracle the
     # correlated form (two-inequality NOT IN decorrelation returns
     # empty — SURVEY ORACLE WARNING), so the oracle is the JOIN-FORM
     # stats expansion. NULL-matrix pytest:
@@ -1042,7 +1043,7 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # runs on the spark.sql fallback (keyed multi-comparison shapes:
     # Catalyst decorrelation measured faster, SCALING.md round-14
     # A/B; the keyless form stays native,
-    # api._corr_not_in_pair_threshold_or). DuckDB CANNOT oracle the correlated form
+    # api._corr_not_in_sky_threshold_or). DuckDB CANNOT oracle the correlated form
     # (its decorrelation returns empty on two-inequality correlated
     # NOT IN — SURVEY ORACLE WARNING), so the oracle is the JOIN-FORM
     # stats expansion: one grouped join computes (n, nn, m) per

@@ -23,11 +23,7 @@ import os
 import re
 import sys
 
-TREE = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else "/root/repo"
-OUT = sys.argv[2] if len(sys.argv) > 2 else None
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-sys.path.insert(0, TREE)
 
 
 def normalize(plan: str) -> list[str]:
@@ -40,16 +36,22 @@ def normalize(plan: str) -> list[str]:
     # encounter order) instead of collapsing all to one sentinel — the
     # sentinel erased binding distinctions in nested lambdas, so two
     # structurally different plans could fingerprint equal (r17 ADVICE).
+    # A lambda variable is a (name, expr id) pair: only tokens carrying
+    # a seen pair's expr-id marker are renamed, so a real column that
+    # shares the name (say x_0, with its own id or none) stays as is.
     seen: dict[str, str] = {}
-    for m in re.finditer(r"\blambda ([a-z]+_\d+)\b", plan):
+    for m in re.finditer(r"\blambda ([a-z]+_\d+#\d+)", plan):
         var = m.group(1)
         if var not in seen:
             # fresh namespace (lv<N>) so a rename can never collide
-            # with a not-yet-renamed original like x_0
-            seen[var] = f"lv{len(seen)}"
+            # with a not-yet-renamed original like x_0; the id strip
+            # below turns its #0 into #x like every other id
+            seen[var] = f"lv{len(seen)}#0"
     if seen:
         plan = re.sub(
-            r"\b[a-z]+_\d+\b", lambda m: seen.get(m.group(0), m.group(0)), plan
+            r"\b[a-z]+_\d+#\d+",
+            lambda m: seen.get(m.group(0), m.group(0)),
+            plan,
         )
     out = []
     for ln in plan.split("\n"):
@@ -64,6 +66,9 @@ def normalize(plan: str) -> list[str]:
 
 
 def main() -> None:
+    tree = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else "."
+    out = sys.argv[2] if len(sys.argv) > 2 else None
+    sys.path.insert(0, tree)
     from sparksqlplus_spark.session import get_spark
 
     import __spark_entry__ as em
@@ -86,8 +91,8 @@ def main() -> None:
         except Exception as exc:
             res[name] = {"err": f"{type(exc).__name__}: {exc}"[:200]}
         print(name, res[name], flush=True)
-    if OUT:
-        with open(OUT, "w") as f:
+    if out:
+        with open(out, "w") as f:
             json.dump(res, f, indent=1, sort_keys=True)
 
 

@@ -36,6 +36,18 @@ from sparksqlplus_spark.parser.sql import (
 from sparksqlplus_spark.plans.context import Context, build_context
 from sparksqlplus_spark.plans.gyo import best_join_tree, gyo_join_tree
 
+# SQL confs that change a compiled plan's shape or semantics (join
+# strategy, adaptive execution, runtime filters, overflow/cast rules,
+# timestamp literals): the plan cache keys on their values, so a plan
+# built under one setting is never served under another.
+_PLAN_CONFS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled",
+    "spark.sql.ansi.enabled",
+    "spark.sql.session.timeZone",
+)
+
 
 def _top_level_positions(query: str) -> dict[str, list[int]]:
     """Positions of top-level (outside parens and quoted strings)
@@ -1392,9 +1404,8 @@ class SparkSQLPlus:
                 # grouped-stats flag; wider shapes ride the fallback.
                 # Round 13: KEYLESS groups (no equality correlation,
                 # only thresholds) plan too — single thresholds fold
-                # to one GLOBAL stats row, order-pair staircases to
-                # bounded global frontiers (plans/frontier.py);
-                # <>-containing keyless pairs stay on the fallback.
+                # to one GLOBAL stats row, 2-5 order comparisons to
+                # bounded global skylines (plans/frontier.py).
                 threshold = None
                 pair_threshold = None
                 if noneq:
@@ -1417,7 +1428,7 @@ class SparkSQLPlus:
                         o in ("<", "<=", ">", ">=", "<>") for o in pops
                     ):
                         # round 13: any pair mix — both order ops
-                        # (staircase flag views), <> + order
+                        # (2-D skyline flag views), <> + order
                         # (argmin/runner-up triples), <> + <>
                         # (diagonal-witness stats)
                         pair_threshold = noneq
@@ -1527,13 +1538,16 @@ class SparkSQLPlus:
                 # mode (Catalyst nested-loops keyless inequality
                 # correlation — 33x slower at 10x, gap widening)
                 ops = sorted(nq[0] for nq in noneq)
+                if len(noneq) in (2, 3, 4, 5) and all(
+                    o in ("<", "<=", ">", ">=") for o in ops
+                ):
+                    # TWO to FIVE order comparisons fold the GLOBAL k-D
+                    # skyline (the 2-D staircase at k = 2; merge cap
+                    # tightened at 4-D)
+                    return self._keyless_sky_fold(
+                        ex, noneq, inner_only, spec, ephemeral
+                    )
                 if len(noneq) == 2:
-                    if all(o in ("<", "<=", ">", ">=") for o in ops):
-                        # round 12: TWO order comparisons — the GLOBAL
-                        # Pareto staircase as a one-row view
-                        return self._keyless_pair_flag(
-                            ex, noneq, inner_only, spec, ephemeral
-                        )
                     if ops.count("<>") == 1:
                         # <> + order: the global argmax/runner-up fold
                         neq = next(n for n in noneq if n[0] == "<>")
@@ -1545,14 +1559,6 @@ class SparkSQLPlus:
                     # statistic from 1-3 plan-time scalar jobs
                     return self._keyless_neq_pair_fold(
                         ex, noneq, inner_only
-                    )
-                if len(noneq) in (3, 4, 5) and all(
-                    o in ("<", "<=", ">", ">=") for o in ops
-                ):
-                    # round 13: THREE to FIVE order comparisons fold the
-                    # GLOBAL k-D skyline (merge cap tightened at 4-D)
-                    return self._keyless_sky_fold(
-                        ex, noneq, inner_only, spec, ephemeral
                     )
                 if len(noneq) == 3 and ops.count("<>") == 1:
                     # round 14: ONE <> + TWO order comparisons — the U/V
@@ -1572,11 +1578,10 @@ class SparkSQLPlus:
                     )
                 if len(noneq) > 1:
                     raise UnsupportedSqlError(
-                        "at most one non-equality correlation under OR "
-                        "(two compose via the staircase flag when "
-                        "keyed or both ops are order comparisons; "
-                        "three via the keyed 3-D skyline flag when "
-                        "all ops are order comparisons)"
+                        "keyless multi-comparison EXISTS under OR plans "
+                        "natively for 2-5 order comparisons (global "
+                        "skyline), a <> pair or <> + order pair, and "
+                        "triples with one or two <> only"
                     )
                 if not keys:
                     # keyless non-equality correlation (late round 10):
@@ -2048,17 +2053,19 @@ class SparkSQLPlus:
         return CaseWhen(((witness, hit),), miss)
 
     def _keyless_sky_fold(self, ex, noneq, inner_only, spec, ephemeral):
-        """KEYLESS three-to-five order-comparison correlations under
-        OR'd [NOT] EXISTS (round 13 late; the k-D generalization of
-        _keyless_pair_flag): ``P OR EXISTS(i: i.a < o.x AND i.b > o.y
-        AND i.c <= o.z)``. A raw witness row exists iff a point of the
-        GLOBAL Pareto skyline satisfies all comparisons
-        (plans/frontier.py:global_skyline_points — per-Arrow-batch
-        skylines + a capped driver-side merge re-running the same
-        sweep, the metadata-scale-collect class), inlined as a one-row
-        view joined unconditionally and probed JVM-side by
-        expressions.SkyWitness. Dtypes beyond integral/date/timestamp
-        raise inside the builder and ride mode='auto'."""
+        """KEYLESS two-to-five order-comparison correlations under
+        OR'd [NOT] EXISTS: ``P OR EXISTS(i: i.a < o.x AND i.b > o.y
+        ...)``. A raw witness row exists iff a point of the GLOBAL
+        Pareto skyline (the 2-D staircase at k = 2) satisfies all
+        comparisons (plans/frontier.py:global_skyline_points —
+        per-Arrow-batch skylines + a capped driver-side merge
+        re-running the same sweep, the metadata-scale-collect class;
+        never a single-partition window), inlined as a one-row view
+        joined unconditionally and probed JVM-side by
+        expressions.SkyWitness — the reference's TreeLikeArray (SURVEY
+        R9/R12) as a one-row ARRAY column. Non-default string
+        collations and over-cap skylines raise RoutedToFallback inside
+        the fold and ride mode='auto'."""
         from sparksqlplus_spark.expressions import CaseWhen, Col, Lit, SkyWitness
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
         from sparksqlplus_spark.plans.frontier import (
@@ -2261,95 +2268,6 @@ class SparkSQLPlus:
             )
         return CaseWhen(tuple(branches), hit)
 
-    def _keyless_pair_flag(self, ex, noneq, inner_only, spec, ephemeral):
-        """Keyless 2-comparison OR'd [NOT] EXISTS (round 12): the
-        GLOBAL Pareto staircase, inlined as a ONE-ROW broadcast view
-        joined on a literal key (the 2-D generalization of the keyless
-        single-comparison global-MIN/MAX fold). A raw witness row
-        exists for (o.x, o.y) iff a staircase point satisfies both
-        comparisons — the reference's TreeLikeArray (SURVEY R9/R12) as
-        a one-row ARRAY column, probed JVM-side.
-
-        Built WITHOUT a single-group window (one window partition =
-        the whole inner table — a scale-killer): (1) groupBy(u)
-        pre-reduction with map-side combine, (2) per-Arrow-batch
-        frontier via mapInPandas
-        (each batch's staircase is a superset-reduction, vectorized
-        cummin), (3) bounded plan-time merge of the batch frontiers on
-        the driver — the same metadata-scale-collect class as the
-        const-probe stats gates, capped at _KEYLESS_FRONTIER_CAP
-        points (a frontier is tiny unless the data is a deliberate
-        anti-chain; above the cap we raise and mode='auto' rides the
-        spark.sql fallback).
-
-        Supported dtypes: integral, date, timestamp — totally ordered
-        with identical semantics in Spark, pandas, and Python, so the
-        driver-side merge is exact. Float (NaN's order-last rule has
-        no pandas cummin analogue), decimal, and string columns raise
-        and ride the fallback instead of risking a semantic skew.
-        Round 13: the fold itself lives in plans/frontier.py, shared
-        with the keyless pair-filtered NOT IN executor."""
-        from pyspark.sql import types as T
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Col,
-            Lit,
-            PairWitness,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import global_frontier_points
-
-        (op1, out1, col1), (op2, out2, col2) = noneq
-        inner = self._filtered_inner(ex, inner_only)
-        asc1 = op1 in ("<", "<=")
-        take_min2 = op2 in ("<", "<=")
-        merged, u_type, v_type = global_frontier_points(
-            inner, col1, col2, asc1, take_min2,
-            self._KEYLESS_FRONTIER_CAP,
-        )
-        view = self.spark.createDataFrame(
-            [(1, merged)],
-            T.StructType(
-                [
-                    T.StructField("__k0", T.IntegerType(), False),
-                    T.StructField(
-                        "__pts",
-                        T.ArrayType(
-                            T.StructType(
-                                [
-                                    T.StructField("u", u_type),
-                                    T.StructField("v", v_type),
-                                ]
-                            )
-                        ),
-                        False,
-                    ),
-                ]
-            ),
-        )
-        self._view_counter += 1
-        vname = f"__orx{self._view_counter}"
-        self.catalog.register_df(vname, view, ("__k0",))
-        ephemeral.append(vname)
-        valias = f"{vname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=valias, table=vname),
-                conds=[],
-                side="left",
-                allow_uncorrelated=True,
-            )
-        )
-        # the one-row view always attaches, so raw
-        # reduces to the witness probe; an EMPTY frontier (empty /
-        # all-NULL inner) makes F.exists false -> the miss value,
-        # exactly the EXISTS fold
-        witness = PairWitness(Col(valias, "__pts"), op1, out1, op2, out2)
-        hit = Lit(not ex.negated, "boolean")
-        miss = Lit(bool(ex.negated), "boolean")
-        return CaseWhen(((witness, hit),), miss)
-
     def _correlated_not_in_or_flag(
         self, ex, probe_pair, corr, inner_only, spec, ephemeral,
         threshold=None, pair=None,
@@ -2415,17 +2333,17 @@ class SparkSQLPlus:
             # multi-comparison filters reach here KEYLESS only (the
             # lift routes keyed groups to the spark.sql fallback)
             n_neq = sum(1 for t in pair if t[0] == "<>")
-            if len(pair) >= 3:
-                if n_neq:
-                    # round 14: <>-containing triples — global stat
-                    # folds + a per-y match view (see the method)
-                    return self._corr_not_in_neq_triple_keyless_or(
-                        inner, probe_outer, probe_icol, pair, spec,
-                        ephemeral,
-                    )
-                # round 13 (late): order-comparison triples, quads and
-                # quints — global skyline folds (k = 5 since round 15)
+            if not n_neq:
+                # order-comparison pairs, triples, quads and quints —
+                # global skyline folds + a per-y match skyline
                 return self._corr_not_in_sky_threshold_or(
+                    inner, probe_outer, probe_icol, pair, spec,
+                    ephemeral,
+                )
+            if len(pair) >= 3:
+                # round 14: <>-containing triples — global stat
+                # folds + a per-y match view (see the method)
+                return self._corr_not_in_neq_triple_keyless_or(
                     inner, probe_outer, probe_icol, pair, spec,
                     ephemeral,
                 )
@@ -2434,13 +2352,9 @@ class SparkSQLPlus:
                     inner, probe_outer, probe_icol, pair, spec,
                     ephemeral,
                 )
-            if n_neq == 1:
-                return self._corr_not_in_neq_order_threshold_or(
-                    inner, probe_outer, probe_icol, pair, spec,
-                    ephemeral,
-                )
-            return self._corr_not_in_pair_threshold_or(
-                inner, probe_outer, probe_icol, pair, spec, ephemeral,
+            return self._corr_not_in_neq_order_threshold_or(
+                inner, probe_outer, probe_icol, pair, spec,
+                ephemeral,
             )
         stats = inner.groupBy(
             *[F.col(icol).alias(out) for icol, out in gsel.items()]
@@ -2859,169 +2773,33 @@ class SparkSQLPlus:
             Lit(True, "boolean"),
         )
 
-    def _corr_not_in_pair_threshold_or(
-        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
-    ):
-        """KEYLESS correlated NOT IN under OR whose inner set is
-        filtered by TWO order comparisons against the outer row (round
-        13 — the OR sibling of
-        compiler/cqc.py:_apply_pair_threshold_not_in_keyless): ``P OR
-        o.x NOT IN (SELECT y FROM t WHERE t.c1 OP1 o.d1 AND t.c2 OP2
-        o.d2)``. Each three-valued fact is a 2-D DOMINANCE query, so
-        Pareto STAIRCASES decide it (the _keyless_pair_flag frontier
-        argument, carried on flag views):
-
-          set empty(o)  <=> NO point of the whole-set staircase within
-                            (OP1 o.d1, OP2 o.d2), or a NULL d1/d2 (c OP
-                            NULL is UNKNOWN rowwise)
-          has NULL y(o) <=> a point of the NULL-y staircase within
-          matched(o)    <=> a point of the (y = x)-staircase within
-
-        Flag order: empty -> TRUE; matched -> FALSE; in-threshold NULL
-        y or NULL probe -> UNKNOWN; else TRUE. The set and NULL-y
-        staircases fold GLOBALLY via the bounded frontier helper
-        (plans/frontier.py; never a single-partition window) into
-        one-row views attached unconditionally; the match view is one
-        row per y (column probe, pinned by the join condition) or
-        another global fold (constant probe) — the LEFT joins never
-        duplicate. Rows with a NULL compared column can never qualify
-        and are filtered. DuckDB CANNOT oracle this shape (its
-        decorrelation returns empty on two-inequality correlated NOT
-        IN — SURVEY ORACLE WARNING), so coverage is the brute-force
-        NULL-matrix pytest."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-            PairWitness,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            frontier_one_row_df,
-            global_frontier_points,
-        )
-
-        (op1, d1, c1), (op2, d2, c2) = pair
-        best2 = F.min if op2 in ("<", "<=") else F.max
-        u_order = (
-            F.col("u").asc() if op1 in ("<", "<=") else F.col("u").desc()
-        )
-        inner_t = inner.filter(
-            F.col(c1).isNotNull() & F.col(c2).isNotNull()
-        )
-
-        def attach(view, conds, part=()):
-            self._view_counter += 1
-            name = f"__corrp{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(part))
-            ephemeral.append(name)
-            alias = f"{name}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=alias, table=name),
-                    conds=conds(alias),
-                    side="left",
-                    allow_uncorrelated=not part,
-                )
-            )
-            return alias
-
-        def global_view(src):
-            merged, ut, vt = global_frontier_points(
-                src, c1, c2, op1 in ("<", "<="), op2 in ("<", "<="),
-                self._KEYLESS_FRONTIER_CAP,
-            )
-            return attach(
-                frontier_one_row_df(self.spark, merged, ut, vt),
-                lambda alias: [],
-            )
-
-        a_alias = global_view(inner_t)
-        n_alias = global_view(inner_t.filter(F.col(probe_icol).isNull()))
-        if not probe_outer.refs():
-            # constant probe: fold y = probe into a third global view
-            pl = probe_outer.to_spark({})
-            m_alias = global_view(inner_t.filter(F.col(probe_icol) == pl))
-        else:
-            # per-y staircase — partitioned by y, so the window is
-            # distributed; one array row per y
-            pts = (
-                inner_t.filter(F.col(probe_icol).isNotNull())
-                .select(
-                    F.col(probe_icol).alias("__cmp"),
-                    F.col(c1).alias("u"),
-                    F.col(c2).alias("v"),
-                )
-                .groupBy("__cmp", "u")
-                .agg(best2("v").alias("v"))
-            )
-            w = (
-                Window.partitionBy("__cmp")
-                .orderBy(u_order)
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            lw = Window.partitionBy("__cmp").orderBy(u_order)
-            pts = pts.select("__cmp", "u", best2("v").over(w).alias("vb"))
-            pts = pts.withColumn("__pv", F.lag("vb").over(lw)).filter(
-                F.col("__pv").isNull() | (F.col("vb") != F.col("__pv"))
-            )
-            view = pts.groupBy("__cmp").agg(
-                F.collect_list(
-                    F.struct(F.col("u").alias("u"), F.col("vb").alias("v"))
-                ).alias("__pts")
-            )
-            m_alias = attach(
-                view,
-                lambda alias: [Cmp("=", probe_outer, Col(alias, "__cmp"))],
-                part=("__cmp",),
-            )
-
-        def wit(alias, negated=False):
-            return PairWitness(
-                Col(alias, "__pts"), op1, d1, op2, d2, negated=negated
-            )
-
-        return CaseWhen(
-            (
-                # empty / all-NULL-c inner: set empty
-                (IsNull(Col(a_alias, "__pts")), Lit(True, "boolean")),
-                # NULL threshold: c OP NULL is UNKNOWN for every row
-                (OrCond((IsNull(d1), IsNull(d2))), Lit(True, "boolean")),
-                # no staircase point within: set empty. The array and
-                # both outer operands are non-NULL here (branches
-                # above), so the negated witness is two-valued.
-                (wit(a_alias, negated=True), Lit(True, "boolean")),
-                (wit(m_alias), Lit(False, "boolean")),
-                (wit(n_alias), Lit(None, "null")),
-                (IsNull(probe_outer), Lit(None, "null")),
-            ),
-            Lit(True, "boolean"),
-        )
-
     def _corr_not_in_sky_threshold_or(
         self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
     ):
         """KEYLESS correlated NOT IN under OR whose inner set is
-        filtered by THREE to FIVE order comparisons (round 13 — the OR
-        sibling of compiler/cqc.py:_apply_sky_threshold_not_in and the
-        k-D generalization of _corr_not_in_pair_threshold_or): each
-        three-valued fact is a k-D dominance probe against a Pareto
-        SKYLINE, probed JVM-side by expressions.SkyWitness. The set and
-        NULL-y skylines fold GLOBALLY (bounded plan-time merge, one-row
-        views attached unconditionally); the match fact is a per-y
-        keyed skyline (plans/frontier.py:keyed_skyline_view, one row
-        per y) for a column probe, or a third global fold for a
-        constant probe. Flag order mirrors the pair version:
-        NULL-threshold/no-point-within -> TRUE (set empty); match-view
-        witness -> FALSE; NULL-y-view witness or NULL probe -> UNKNOWN;
-        else TRUE. DuckDB cannot oracle the shape (SURVEY ORACLE
-        WARNING), so coverage is the brute-force NULL-matrix pytest."""
+        filtered by TWO to FIVE order comparisons (the OR sibling of
+        compiler/cqc.py:_apply_sky_threshold_not_in): ``P OR o.x NOT
+        IN (SELECT y FROM t WHERE t.c0 OP0 o.d0 AND ... AND t.c{k-1}
+        OP o.d{k-1})``. Each three-valued fact is a k-D dominance
+        probe against a Pareto SKYLINE (the 2-D staircase at k = 2),
+        probed JVM-side by expressions.SkyWitness:
+
+          set empty(o)  <=> NO point of the whole-set skyline within
+                            the thresholds, or a NULL threshold (c OP
+                            NULL is UNKNOWN rowwise)
+          has NULL y(o) <=> a point of the NULL-y skyline within
+          matched(o)    <=> a point of the (y = x)-skyline within
+
+        The set and NULL-y skylines fold GLOBALLY (bounded plan-time
+        merge, one-row views attached unconditionally); the match
+        fact is a per-y keyed skyline (plans/frontier.py:
+        keyed_skyline_view, one row per y) for a column probe, or a
+        third global fold for a constant probe — the LEFT joins never
+        duplicate. Flag order: NULL-threshold/no-point-within -> TRUE
+        (set empty); match-view witness -> FALSE; NULL-y-view witness
+        or NULL probe -> UNKNOWN; else TRUE. DuckDB cannot oracle the
+        shape (SURVEY ORACLE WARNING), so coverage is the brute-force
+        NULL-matrix pytest."""
         import functools as _ft
 
         from pyspark.sql import functions as F
@@ -4846,7 +4624,7 @@ class SparkSQLPlus:
                             "OUTER JOIN needs a correlated ON condition"
                         )
                     # planner-built one-row flag view (keyless
-                    # staircase): unconditioned broadcast attach
+                    # fold): unconditioned broadcast attach
                     join_cond = F.lit(True)
                 joined = joined.join(right, join_cond, oj.side)
                 known.update({(a, c): ren[c] for c in ren})
@@ -5022,7 +4800,9 @@ class SparkSQLPlus:
         returns the same lazy DataFrame without re-planning.
 
         Staleness contract: the cache key is the catalog's
-        registration epochs, so any register/unregister/DDL re-plans —
+        registration epochs and the values of the plan-shaping SQL
+        confs (``_PLAN_CONFS``), so any register/unregister/DDL or a
+        change of one of those confs re-plans —
         but OVERWRITING the files behind a still-registered table does
         not (the returned plan's folded statistics and broadcast
         decisions reflect the old data, the same hazard as Spark's own
@@ -5040,9 +4820,11 @@ class SparkSQLPlus:
             # verbatim spark.sql resolves against SESSION temp views
             # the catalog fingerprint cannot see — never memoize
             return self._sql_uncached(query, mode=mode)
+        conf = self.spark.conf
         key = (
             query, mode, root_hint, cyclic_strategy, count_mode,
             self._catalog_fingerprint(),
+            tuple(conf.get(c) for c in _PLAN_CONFS),
         )
         hit = self._plan_cache.get(key)
         if hit is not None:

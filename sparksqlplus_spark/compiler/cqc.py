@@ -459,21 +459,23 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
 
 
 def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
-    """KEYLESS correlated NOT IN whose inner set is filtered by THREE
-    to FIVE order comparisons against the outer row (round 13): ``o.x
-    NOT IN (SELECT y FROM t WHERE t.c0 OP0 o.d0 AND t.c1 OP1 o.d1 AND
-    t.c2 OP2 o.d2)``. Each three-valued fact is a k-D DOMINANCE query
-    against a Pareto SKYLINE: the set and NULL-y facts fold as GLOBAL
-    skylines (frontier.global_skyline_points — capped driver merge,
-    one-row broadcast crossJoins); the match fact is a per-y keyed
-    skyline (plans/frontier.py:keyed_skyline_view — pre-reduction +
-    applyInPandas sweep + y-keyed collect, one row per y, so the LEFT
-    join never duplicates) for a column probe, or a third global fold
-    for a constant probe. A NULL d0/d1/d2 makes F.exists non-TRUE ->
-    coalesce FALSE -> the set folds empty (c OP NULL is UNKNOWN for
-    every row). Dtypes beyond integral/date/timestamp raise inside the
-    builder and ride mode='auto'. Keyed groups never reach here
-    (_apply_semi_filter routes them to the spark.sql fallback)."""
+    """KEYLESS correlated NOT IN whose inner set is filtered by TWO
+    to FIVE order comparisons against the outer row: ``o.x NOT IN
+    (SELECT y FROM t WHERE t.c0 OP0 o.d0 AND ... AND t.c{k-1} OP
+    o.d{k-1})``. Each three-valued fact is a k-D DOMINANCE query
+    against a Pareto SKYLINE (the 2-D staircase at k = 2): the set and
+    NULL-y facts fold as GLOBAL skylines (frontier.global_skyline_points
+    — capped driver merge, one-row broadcast crossJoins; never a
+    single-partition window); the match fact is a per-y keyed skyline
+    (plans/frontier.py:keyed_skyline_view — pre-reduction + per-y
+    window staircase or applyInArrow sweep + y-keyed collect, one row
+    per y, so the LEFT join never duplicates) for a column probe, or a
+    third global fold for a constant probe. A NULL d_i makes F.exists
+    non-TRUE -> coalesce FALSE -> the set folds empty (c OP NULL is
+    UNKNOWN for every row). Non-default string collations and
+    over-cap skylines raise RoutedToFallback inside the folds and
+    ride mode='auto'. Keyed groups never reach here (_apply_semi_filter
+    routes them to the spark.sql fallback)."""
     from sparksqlplus_spark.plans.frontier import (
         global_skyline_points,
         keyed_skyline_view,
@@ -535,117 +537,6 @@ def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
             dims,
             ops,
             f"{prefix}_pm",
-        )
-        df = df.join(v_match, F.col(ov_p) == F.col(mp), "left")
-        helper.append(mp)
-    keep = ~within(f"{prefix}_pa") | (
-        ~within(f"{prefix}_pm") & ~within(f"{prefix}_pn") & probe_ok
-    )
-    return df.filter(keep).drop(*helper)
-
-
-def _apply_pair_threshold_not_in_keyless(df, inner, sf, prefix: str):
-    """KEYLESS pair-filtered correlated NOT IN (round 13): ``o.x NOT
-    IN (SELECT y FROM t WHERE t.c1 OP1 o.d1 AND t.c2 OP2 o.d2)`` — no
-    equality correlation, so the set/NULL-y fact populations are
-    GLOBAL and their 2-D dominance staircases fold via the bounded
-    global-frontier helper (plans/frontier.py — groupBy(u)
-    pre-reduction, per-Arrow-batch frontier, capped plan-time merge;
-    NEVER a single-partition window), inlined as one-row broadcast
-    crossJoins. The match fact is keyed: per-y staircase for a column
-    probe (partitioned by y — distributed), another global fold over
-    the ``y = const`` slice for a constant probe. Dtypes beyond
-    integral/date/timestamp/decimal/binary-collation string raise
-    inside the fold and ride the mode='auto' fallback (same contract
-    as the keyless OR'd-EXISTS pair flag)."""
-    from sparksqlplus_spark.plans.frontier import (
-        frontier_one_row_df,
-        global_frontier_points,
-    )
-
-    cap = 65536  # mirrors api.Engine._KEYLESS_FRONTIER_CAP
-    (op1, e1, c1), (op2, e2, c2) = sf.corr_threshold
-    thr1 = e1.to_spark({r: r[1] for r in e1.refs()})
-    thr2 = e2.to_spark({r: r[1] for r in e2.refs()})
-    cmp1, cmp2 = _CMPF[op1], _CMPF[op2]
-    asc1 = op1 in ("<", "<=")
-    take_min2 = op2 in ("<", "<=")
-    bestv = F.min if take_min2 else F.max
-    spark = df.sparkSession
-
-    def fold(src, out):
-        merged, ut, vt = global_frontier_points(
-            src, c1, c2, asc1, take_min2, cap
-        )
-        one = frontier_one_row_df(spark, merged, ut, vt)
-        return one.withColumnRenamed("__pts", out)
-
-    def within(arr):
-        return F.coalesce(
-            F.exists(
-                F.col(arr),
-                lambda e: cmp1(e["u"], thr1) & cmp2(e["v"], thr2),
-            ),
-            F.lit(False),
-        )
-
-    helper = [f"{prefix}_pa", f"{prefix}_pn", f"{prefix}_pm"]
-    df = df.crossJoin(F.broadcast(fold(inner, f"{prefix}_pa")))
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        df = df.crossJoin(
-            F.broadcast(
-                fold(inner.filter(F.col(ic).isNull()), f"{prefix}_pn")
-            )
-        )
-        df = df.crossJoin(
-            F.broadcast(
-                fold(inner.filter(F.col(ic) == pl), f"{prefix}_pm")
-            )
-        )
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
-        df = df.crossJoin(
-            F.broadcast(
-                fold(inner.filter(F.col(ic).isNull()), f"{prefix}_pn")
-            )
-        )
-        # match view: per-y staircase — partitioned by y, so the
-        # window is distributed; one array row per y, the LEFT join
-        # on o.x = y never duplicates
-        mp = f"{prefix}_mp"
-        pre = (
-            inner.filter(
-                F.col(ic).isNotNull()
-                & F.col(c1).isNotNull()
-                & F.col(c2).isNotNull()
-            )
-            .select(
-                F.col(ic).alias(mp),
-                F.col(c1).alias("u"),
-                F.col(c2).alias("v"),
-            )
-            .groupBy(mp, "u")
-            .agg(bestv("v").alias("v"))
-        )
-        order = F.col("u").asc() if asc1 else F.col("u").desc()
-        w = (
-            Window.partitionBy(mp)
-            .orderBy(order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        lw = Window.partitionBy(mp).orderBy(order)
-        pre = pre.select(mp, "u", bestv("v").over(w).alias("vb"))
-        pre = pre.withColumn("__pv", F.lag("vb").over(lw)).filter(
-            F.col("__pv").isNull() | (F.col("vb") != F.col("__pv"))
-        )
-        v_match = pre.groupBy(mp).agg(
-            F.collect_list(
-                F.struct(F.col("u").alias("u"), F.col("vb").alias("v"))
-            ).alias(f"{prefix}_pm")
         )
         df = df.join(v_match, F.col(ov_p) == F.col(mp), "left")
         helper.append(mp)
@@ -864,37 +755,28 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
                 "spark.sql fallback in every mode (Catalyst "
                 "decorrelation measured faster — SCALING.md round-14 A/B)"
             )
-        if len(sf.corr_threshold) >= 3:
-            n_neq3 = sum(
-                1 for t in sf.corr_threshold if t[0] == "<>"
-            )
-            if n_neq3:
+        if len(sf.corr_threshold) >= 2:
+            n_neq = sum(1 for t in sf.corr_threshold if t[0] == "<>")
+            if not n_neq:
+                # all-order pairs, triples, quads and quints
+                # (build_context admits k up to 5): each fact is a k-D
+                # dominance query against the global Pareto skyline
+                return _apply_sky_threshold_not_in(df, inner, sf, prefix)
+            if len(sf.corr_threshold) >= 3:
                 # round 14: KEYLESS <>-containing triples — global
                 # stat folds + a per-y match view (see the executor)
                 return _apply_neq_triple_not_in_keyless(
                     df, inner, sf, prefix
                 )
-            # all-order triples, quads and quints (build_context admits
-            # k up to 5): each fact is a k-D dominance query against the
-            # global Pareto skyline
-            return _apply_sky_threshold_not_in(df, inner, sf, prefix)
-        if len(sf.corr_threshold) == 2:
-            n_neq = sum(1 for t in sf.corr_threshold if t[0] == "<>")
             if n_neq == 2:
                 # round 13: a <>-with-<> pair — each fact asks the
                 # diagonal-witness question over its population
                 return _apply_neq_pair_threshold_not_in(
                     df, inner, sf, prefix
                 )
-            if n_neq == 1:
-                # round 13: <> paired with an order comparison — each
-                # fact folds to the argmin/runner-up triple
-                return _apply_neq_order_threshold_not_in(
-                    df, inner, sf, prefix
-                )
-            # round 13: keyless pair — global staircases fold via the
-            # bounded frontier helper
-            return _apply_pair_threshold_not_in_keyless(
+            # round 13: <> paired with an order comparison — each
+            # fact folds to the argmin/runner-up triple
+            return _apply_neq_order_threshold_not_in(
                 df, inner, sf, prefix
             )
         (t_op, t_outer, t_col), = sf.corr_threshold

@@ -477,69 +477,22 @@ class IsNull(Cond):
 
 
 @dataclass(frozen=True)
-class PairWitness(Cond):
-    """Witness probe over a per-key Pareto-staircase ARRAY column
-    (round 12 — the 2-comparison OR'd-EXISTS flag): TRUE iff some
-    struct element ``e`` of ``arr`` satisfies ``e.u OP1 outer1 AND
-    e.v OP2 outer2``. The staircase is built so this holds exactly
-    when some raw inner row satisfies both comparisons (see
-    api._keyless_pair_flag). Ops are order comparisons only; a NULL
-    outer operand or NULL array never yields TRUE — callers wrap in
-    CaseWhen so UNKNOWN folds to the EXISTS miss value."""
-
-    arr: Expr  # array<struct<u, v>> column on the flag view
-    op1: str
-    outer1: Expr
-    op2: str
-    outer2: Expr
-    # round 13: negated form for the OR'd pair-threshold NOT IN flag
-    # ("set empty" = NO staircase point within). Callers must have
-    # already branched on a NULL array / NULL outer operand — with
-    # both non-NULL the F.exists is two-valued and ~ is exact.
-    negated: bool = False
-
-    _OPS = {
-        "<": lambda a, b: a < b,
-        "<=": lambda a, b: a <= b,
-        ">": lambda a, b: a > b,
-        ">=": lambda a, b: a >= b,
-    }
-
-    def refs(self):
-        return self.arr.refs() | self.outer1.refs() | self.outer2.refs()
-
-    def to_spark(self, colmap):
-        a = self.arr.to_spark(colmap)
-        o1 = self.outer1.to_spark(colmap)
-        o2 = self.outer2.to_spark(colmap)
-        c1, c2 = self._OPS[self.op1], self._OPS[self.op2]
-        e = F.exists(a, lambda e: c1(e["u"], o1) & c2(e["v"], o2))
-        return ~e if self.negated else e
-
-    def key(self):
-        n = "not " if self.negated else ""
-        return (
-            f"({n}witness {self.arr.key()} {self.op1} {self.outer1.key()} "
-            f"{self.op2} {self.outer2.key()})"
-        )
-
-
-@dataclass(frozen=True)
 class SkyWitness(Cond):
-    """Witness probe over a per-key 3-D SKYLINE array column
-    (round 13 — the k=3 sibling of PairWitness): TRUE iff some struct
-    element ``e`` of ``arr`` satisfies ``e.u0 OP0 outer0 AND e.u1 OP1
-    outer1 AND e.u2 OP2 outer2``. The skyline is built so this holds
-    exactly when some raw inner row satisfies all three comparisons
-    (plans/frontier.py:keyed_skyline_view). Ops are order comparisons
-    only; a NULL outer operand or NULL array never yields TRUE —
-    callers wrap in CaseWhen so UNKNOWN folds to the miss value. The
-    negated form mirrors PairWitness.negated (callers must have
-    branched on NULL array / NULL outers first)."""
+    """Witness probe over a Pareto SKYLINE array column (k = 2..5
+    dims; the 2-D staircase at k = 2): TRUE iff some struct element
+    ``e`` of ``arr`` satisfies ``e.u0 OP0 outer0 AND ... AND
+    e.u{k-1} OP outer{k-1}``. The skyline is built so this holds
+    exactly when some raw inner row satisfies every comparison
+    (plans/frontier.py). Ops are order comparisons only; a NULL outer
+    operand or NULL array never yields TRUE — callers wrap in
+    CaseWhen so UNKNOWN folds to the miss value. The negated form
+    ("set empty" = NO skyline point within) is for the OR'd NOT IN
+    flag: callers must have branched on a NULL array / NULL outers
+    first, so the F.exists is two-valued and ~ is exact."""
 
-    arr: Expr  # array<struct<u0, u1, u2>> column on the flag view
-    ops: tuple  # three of < <= > >=
-    outers: tuple  # three outer-only Exprs
+    arr: Expr  # array<struct<u0..u{k-1}>> column on the flag view
+    ops: tuple  # k of < <= > >=
+    outers: tuple  # k outer-only Exprs
     negated: bool = False
 
     _OPS = {
@@ -879,15 +832,6 @@ def map_expr(node, fn):
             node.n_probe,
             node.cte_body,
         )
-    if isinstance(node, PairWitness):
-        return PairWitness(
-            map_expr(node.arr, fn),
-            node.op1,
-            map_expr(node.outer1, fn),
-            node.op2,
-            map_expr(node.outer2, fn),
-            node.negated,
-        )
     if isinstance(node, SkyWitness):
         return SkyWitness(
             map_expr(node.arr, fn),
@@ -995,15 +939,6 @@ def rewrite_refs(node, mapping: dict[tuple[str, str], tuple[str, str]]):
             node.body,
             node.n_probe,
             node.cte_body,
-        )
-    if isinstance(node, PairWitness):
-        return PairWitness(
-            rewrite_refs(node.arr, mapping),
-            node.op1,
-            rewrite_refs(node.outer1, mapping),
-            node.op2,
-            rewrite_refs(node.outer2, mapping),
-            node.negated,
         )
     if isinstance(node, SkyWitness):
         return SkyWitness(

@@ -44,12 +44,22 @@ def _asof_fragments(
     on the (schema shape, parameters) tuple — the join is called with
     the same shapes repeatedly and rebuilding ~50 py4j-backed
     expressions per call was 0.14 s of the bench entry (round 18,
-    guide §1.2/§4 driver-side). Types travel as ``simpleString`` names
-    (hashable; ``cast`` accepts them), so the fragments are exactly the
-    ones the unmemoized code built."""
+    guide §1.2/§4 driver-side). Types travel as ``DataType.json()``
+    strings — hashable, unlike some user-defined types — and the NULL
+    padding casts to the DataType rebuilt from them, so UDT columns
+    (e.g. ML vectors, whose ``simpleString`` ``cast`` cannot parse)
+    pad with their real type."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
     out_payload = {c: f"{c}{suffix}" for c in payload}
-    ptype = dict(zip(payload, payload_types))
-    ltype = dict(zip(left_cols, left_types))
+    ptype = {
+        c: _parse_datatype_json_string(t)
+        for c, t in zip(payload, payload_types)
+    }
+    ltype = {
+        c: _parse_datatype_json_string(t)
+        for c, t in zip(left_cols, left_types)
+    }
     l_sel = (
         *[F.col(c) for c in left_cols],
         *[F.lit(None).cast(ptype[c]).alias(out_payload[c]) for c in payload],
@@ -138,8 +148,8 @@ def asof_join(
     #   non-null for a right row even when individual payload fields
     #   are NULL, so `last(..., ignorenulls=True)` skips left rows but
     #   never mixes fields across different right rows.
-    ltype = {f.name: f.dataType.simpleString() for f in left.schema.fields}
-    rtype = {f.name: f.dataType.simpleString() for f in right.schema.fields}
+    ltype = {f.name: f.dataType.json() for f in left.schema.fields}
+    rtype = {f.name: f.dataType.json() for f in right.schema.fields}
     l_sel, r_sel, w, row_struct, out_sel = _asof_fragments(
         tuple(left.columns),
         tuple(ltype[c] for c in left.columns),

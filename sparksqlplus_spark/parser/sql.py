@@ -164,7 +164,7 @@ class OuterJoin:
     natural: bool = False
     # INTERNAL (never set by the parser): the right side is a
     # planner-built ONE-ROW flag view joined unconditionally (the
-    # keyless staircase flag, api._keyless_pair_flag) — the "needs a
+    # keyless skyline flag, api._keyless_sky_fold) — the "needs a
     # correlated ON condition" validation does not apply, the join is
     # a broadcast against a single row.
     allow_uncorrelated: bool = False

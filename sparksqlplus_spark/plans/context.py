@@ -846,8 +846,8 @@ def build_context(spec: QuerySpec, catalog: Catalog) -> Context:
             thrs = [_threshold_of(rw) for rw in extra_raw]
             ok = (len(thrs) == 1 and thrs[0] is not None) or (
                 # round 13: a keyless PAIR plans too — order+order
-                # folds global staircases via the bounded frontier
-                # helper (plans/frontier.py; never a single-partition
+                # folds the global 2-D skyline like the triples below
+                # (plans/frontier.py; never a single-partition
                 # window); <>-containing mixes (late r13) fold their
                 # set/NULL-y facts at plan time through the keyless
                 # triple/diagonal stat helpers, with per-y match

@@ -1,31 +1,42 @@
-"""Bounded GLOBAL Pareto-frontier fold for keyless 2-comparison
-shapes (round 13 — extracted from api.Engine._keyless_pair_flag so the
-NOT IN threshold executor shares one implementation).
+"""Bounded order-dominance folds for keyless multi-comparison
+correlated subqueries.
 
-A keyless pair of order comparisons (``EXISTS(i: i.c1 OP1 o.d1 AND
-i.c2 OP2 o.d2)`` over the whole inner table, or the three-valued facts
-of a keyless pair-filtered NOT IN) reduces to a 2-D dominance query
-against the GLOBAL Pareto staircase. Building that staircase with the
-keyed path's window would degenerate to a single window partition over
-the whole inner table — a scale-killer — so it is built as:
+A keyless conjunction of k = 2..5 order comparisons
+(``EXISTS(i: i.c0 OP0 o.d0 AND ... AND i.c{k-1} OP o.d{k-1})`` over the
+whole inner table, or the three-valued facts of a keyless
+comparison-filtered NOT IN) reduces to a k-D dominance query against
+the Pareto SKYLINE of the compared columns: a raw row satisfies every
+comparison iff some skyline point does (weak dominance preserves
+satisfaction for strict and non-strict ops alike). At k = 2 the
+skyline is the 2-D staircase. ONE family serves every k:
 
-  (1) a ``groupBy(u)`` pre-reduction with map-side combine,
-  (2) a per-Arrow-batch frontier via ``mapInPandas`` (each batch's
-      staircase is a superset reduction, vectorized cummin/cummax),
-  (3) a bounded plan-time merge of the batch frontiers on the driver —
-      the same metadata-scale-collect class as the const-probe stats
-      gates, capped at ``cap`` points (a real frontier is tiny unless
-      the data is a deliberate anti-chain; above the cap we raise and
-      ``mode='auto'`` rides the spark.sql fallback).
+  * ``global_skyline_points`` folds the GLOBAL skyline without a
+    single-partition window: (1) a leading-dims pre-reduction with
+    map-side combine, (2) a per-Arrow-batch skyline via
+    ``mapInArrow`` (each batch's skyline is a superset reduction),
+    (3) a bounded plan-time merge of the batch skylines on the
+    driver — the same metadata-scale-collect class as the
+    const-probe stats gates, capped at ``cap`` points (a real
+    skyline is tiny unless the data is a deliberate anti-chain;
+    above the cap the fold raises and ``mode='auto'`` rides the
+    spark.sql fallback).
+  * ``keyed_skyline_view`` builds one skyline per partition key (the
+    per-y match view of NOT IN): a JVM window staircase at k = 2, an
+    ``applyInArrow`` sweep at k = 3..5.
+  * ``skyline_one_row_df`` inlines a folded skyline as a one-row
+    ``array<struct<u0..u{k-1}>>`` column, probed JVM-side by
+    ``expressions.SkyWitness``.
 
-Supported dtypes for the 2-D fold AND (round 14) the k-D skyline
-folds: integral, date, timestamp, timestamp_ntz, decimal,
+Supported dtypes: integral, date, timestamp, timestamp_ntz, decimal,
 default-collation string, and float/double — float orders on a key
 replicating Spark's double total order (NaN largest and self-equal,
 -0.0 = 0.0) while storing original values for the JVM-side probe.
 Non-default string collations raise and ride the fallback. All batch
 stages are ARROW-native (round 14): pandas return paths mask NaN to
 NULL, so mapInArrow/applyInArrow carry the values bit-exact.
+
+The ``<>``-containing shapes (argmax, diagonal stats, U/V, prefix-
+diagonal) have their own folds further down.
 
 Reference parity note: the reference's TreeLikeArray (SURVEY R9/R12,
 sqlplus-core TreeLikeArray) bounds its sorted dictionary by the
@@ -53,9 +64,9 @@ from sparksqlplus_spark.parser.sql import (
     UnsupportedSqlError,
 )
 
-_FRONTIER_DTYPE_MSG = (
-    "keyless 2-comparison shapes support integral/date/timestamp/"
-    "decimal/binary-collation-string columns only (got {dt})"
+_NEQ_ORDER_DTYPE_MSG = (
+    "the order dims of <>-containing views support integral/date/"
+    "timestamp/float/double columns only (got {dt})"
 )
 
 
@@ -330,7 +341,9 @@ def _sky_sweep_table(tbl, ucols, kinds, asc, k, obj_path):
     on the fast path, generic-comparable keys via _okey_py + the
     shared staircase/dominance scans when a decimal/string dim is
     present. Kept rows are selected positionally with ``take`` — the
-    output carries the ORIGINAL arrow values, bit-exact."""
+    output carries the ORIGINAL arrow values, bit-exact. At k = 2 the
+    fast path is a vectorized running minimum (the 2-D staircase) and
+    the object path runs _sweep4_tails on 1-wide tails."""
     import numpy as np
     import pyarrow as pa
 
@@ -360,7 +373,15 @@ def _sky_sweep_table(tbl, ucols, kinds, asc, k, obj_path):
             for u, a in zip(ucols, asc)
         ]
         pos = np.argsort(ks[0], kind="stable")
-        if k == 3:
+        if k == 2:
+            # the 2-D staircase: keep the rows that strictly improve
+            # the running minimum of the oriented trailing key
+            run = np.minimum.accumulate(ks[1][pos])
+            mask = np.empty(len(run), dtype=bool)
+            mask[0] = True
+            mask[1:] = run[1:] < run[:-1]
+            keep = pos[mask]
+        elif k == 3:
             keep = _sweep_indexed(
                 (int(i), None, ks[1][i], ks[2][i]) for i in pos
             )
@@ -377,208 +398,45 @@ def _sky_sweep_table(tbl, ucols, kinds, asc, k, obj_path):
     return tbl.take(pa.array(keep, type=pa.int64()))
 
 
-def global_frontier_points(inner, c1: str, c2: str, asc1: bool,
-                           take_min2: bool, cap: int):
-    """Fold the global Pareto staircase of ``(c1, c2)`` over ``inner``
-    (rows with a NULL compared column are filtered — they can never
-    satisfy an order comparison). Returns ``(points, u_type, v_type)``
-    where ``points`` is the merged staircase as a list of ``(u, v)``
-    tuples sorted in probe order (ascending u for ``asc1``, else
-    descending) with strictly improving v. Raises UnsupportedSqlError
-    on non-exact dtypes or when the frontier exceeds ``cap`` points
-    (one bounded Spark job has run by then; mode='auto' replans on the
-    spark.sql fallback — the documented aborted-frontier cost).
-
-    Round 14: the batch stage is ARROW-native (mapInArrow) — the
-    pandas return path masked NaN to NULL, corrupting float
-    frontiers (a latent r13 bug: a NaN point crashed the driver
-    merge); arrow round-trips every value bit-exact."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    best2 = F.min if take_min2 else F.max
-    reduced = (
-        inner.filter(F.col(c1).isNotNull() & F.col(c2).isNotNull())
-        .select(F.col(c1).alias("u"), F.col(c2).alias("v"))
-        .groupBy("u")
-        .agg(best2("v").alias("v"))
-    )
-    schema = reduced.schema
-    ok_types = (
-        T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-        T.DateType, T.TimestampType, T.TimestampNTZType,
-        # round 13 (late): decimal and default-collation string are
-        # exact too — Arrow hands them over as Python Decimal/str
-        # objects whose comparisons match Spark's (decimal: exact
-        # numeric order; str: code-point order = UTF8_BINARY).
-        T.DecimalType,
-        # round 13 (latest): float/double too — Spark's total order
-        # (NaN largest, NaN = NaN, -0.0 = 0.0) is replicated exactly
-        # by the _float_key wrapper below, so the fold sorts,
-        # accumulates, and driver-merges on wrapped keys while
-        # storing the ORIGINAL values the JVM-side probe compares.
-        T.FloatType, T.DoubleType,
-    )
-    float_dims = {
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-    }
-    for f in schema.fields:
-        dt = f.dataType
-        string_ok = isinstance(dt, T.StringType) and repr(dt) in (
-            "StringType()",  # default (UTF8_BINARY) collation only
-            "StringType('UTF8_BINARY')",
-        )
-        if not (isinstance(dt, ok_types) or string_ok):
-            raise RoutedToFallback(
-                _FRONTIER_DTYPE_MSG.format(dt=dt)
-            )
-
-    import math
-
-    def _float_key(v):
-        # Spark's double total order: NaN sorts LAST and equals
-        # itself; -0.0 == 0.0 (Python agrees on the latter)
-        return (1, 0.0) if math.isnan(v) else (0, v)
-
-    def _ku(v):
-        return _float_key(v) if "u" in float_dims else v
-
-    def _kv(v):
-        return _float_key(v) if "v" in float_dims else v
-
-    obj_dims = {
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, (T.DecimalType, T.StringType))
-    }
-    kinds = {
-        f.name: (
-            "f64"
-            if f.name in float_dims
-            else ("obj" if f.name in obj_dims else "i64")
-        )
-        for f in schema.fields
-    }
-
-    def batch_frontier(it):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in it:
-            tbl = pa.Table.from_batches([b])
-            if tbl.num_rows == 0:
-                continue
-            if obj_dims or float_dims:
-                # object (Decimal/str) or float dims: explicit Python
-                # accumulate on (wrapped) keys; float keys replicate
-                # Spark's total order (NaN last, -0.0 = 0.0) via
-                # _float_key so descending order puts NaN FIRST
-                us = tbl.column("u").to_pylist()
-                vs = tbl.column("v").to_pylist()
-                pos = sorted(
-                    range(tbl.num_rows),
-                    key=lambda i: _ku(us[i]),
-                    reverse=not asc1,
-                )
-                keep: list = []
-                best = None
-                for i in pos:
-                    kv = _kv(vs[i])
-                    if best is None or (
-                        kv < best if take_min2 else kv > best
-                    ):
-                        best = kv
-                        keep.append(i)
-            else:
-                ku = _arrow_key_i64(tbl.column("u"), "i64", asc1)
-                kv = _arrow_key_i64(
-                    tbl.column("v"), "i64", take_min2
-                )
-                order = np.argsort(ku, kind="stable")
-                run = np.minimum.accumulate(kv[order])
-                mask = np.empty(len(run), dtype=bool)
-                mask[0] = True
-                mask[1:] = run[1:] < run[:-1]
-                keep = order[mask]
-            out = tbl.take(pa.array(keep, type=pa.int64()))
-            yield from out.to_batches()
-
-    rows = reduced.mapInArrow(batch_frontier, schema).take(cap + 1)
-    if len(rows) > cap:
-        raise RoutedToFallback(
-            "keyless 2-comparison frontier exceeds the "
-            f"{cap}-point inline cap"
-        )
-    pts = sorted(
-        ((r["u"], r["v"]) for r in rows),
-        key=lambda t: _ku(t[0]),
-        reverse=not asc1,
-    )
-    merged: list[tuple] = []
-    best = None
-    for u, v in pts:
-        kv = _kv(v)
-        if best is None or (kv < best if take_min2 else kv > best):
-            best = kv
-            merged.append((u, v))
-    return merged, schema["u"].dataType, schema["v"].dataType
-
-
 def keyed_skyline_view(src, part_pairs, dims, ops, out):
-    """Per-key 3-D Pareto SKYLINE view (round 13 — the k=3
-    generalization of the 2-D staircase flag views): one row per part
-    tuple with ``out = array<struct<u0,u1,u2>>`` holding the weakly
-    minimal points of ``dims`` under the orientation induced by
+    """Per-key Pareto SKYLINE view over k = 2..5 ``dims``: one row per
+    part tuple with ``out = array<struct<u0..u{k-1}>>`` holding the
+    weakly minimal points of ``dims`` under the orientation induced by
     ``ops`` (each op in < <= > >=; </<= orient "smaller is better").
-    A raw row satisfying ``u0 OP0 d0 AND u1 OP1 d1 AND u2 OP2 d2``
-    exists iff some skyline point does (weak dominance preserves
-    satisfaction for strict and non-strict ops alike), so an F.exists
-    probe over the array is exact — the 2-D staircase's TreeLikeArray
-    argument, one dimension up.
+    A raw row satisfying every ``u_i OP_i d_i`` exists iff some
+    skyline point does (weak dominance preserves satisfaction for
+    strict and non-strict ops alike), so an F.exists probe over the
+    array is exact — the reference's TreeLikeArray argument.
 
-    Build: (1) a (part, u0, u1) pre-reduction with map-side combine
-    (best u2 per point — the only candidate a probe can use), (2) an
-    applyInPandas sweep per part — sort by u0, maintain the (u1, u2)
-    Pareto staircase of kept points with bisect (O(n log n) per
-    part, Arrow-batched), (3) a part-keyed collect_list. Two part-key
-    exchanges + the pre-reduction; never a single-partition window.
-    The array holds the skyline, the minimal sufficient statistic —
-    worst case (a 3-D anti-chain) equals the input's distinct
-    (u0, u1) count, typical case is small. Rows with a NULL compared
-    column are filtered (they cannot witness an order comparison).
+    Build: (1) a (part, u0..u{k-2}) pre-reduction with map-side
+    combine (best last dim per point — the only candidate a probe can
+    use), (2) the per-part skyline, (3) a part-keyed collect_list. At
+    k = 2 step (2) is a JVM window staircase partitioned by the part
+    key (running best u1 in u0 order, keeping the rows where it
+    changes) — measured as fast as the Arrow sweep on few groups and
+    faster on many. At k = 3..5 it is an applyInArrow sweep per part
+    (_sky_sweep_table: a bisect staircase at k = 3, a dominance scan
+    over the kept trailing coords at k = 4..5, whose output is never
+    re-filtered — see _sweep4_indexed). Never a single-partition
+    window. The array holds the skyline, the minimal sufficient
+    statistic — worst case (an anti-chain) equals the input's
+    distinct leading-dims count, typical case is small. Rows with a
+    NULL compared column are filtered (they cannot witness an order
+    comparison).
 
-    Supported dtypes (round 14 widening): integral/date/timestamp/
-    timestamp_ntz (exact int64 orientation keys), float/double (the
-    IEEE-754 bit embedding of Spark's double total order — see
-    _arrow_key_i64), and decimal/default-collation string (generic-
-    comparable sweep on the Python objects Arrow hands to pandas) —
-    non-default string collations raise into the mode='auto'
-    fallback.
-
-    Round 13 latest: generalized to k=4 dims. The 4-D sweep swaps the
-    bisect staircase for a vectorized numpy dominance scan over the
-    kept points' trailing coords — O(n·s) per part with s the running
-    dominance-frontier size. Like sweep3, the OUTPUT keeps every
-    insertion-time non-dominated row and is never re-filtered: a
-    later point is weakly WORSE on u0 (ascending processing order),
-    so it cannot dominate an earlier kept point in all four coords —
-    pruning the output on the trailing three coords alone would drop
-    genuine witnesses (round 14 fix). Only the internal dominance
-    structure prunes (a tail >= the new point's is covered by it for
-    every future test). The output is thus a superset of the exact
-    skyline — possibly retaining an equal-u0 row a later point
-    dominates — which is exact for the F.exists witness probes this
-    view feeds."""
-    import numpy as np
+    Supported dtypes: integral/date/timestamp/timestamp_ntz (exact
+    int64 orientation keys), float/double (the IEEE-754 bit embedding
+    of Spark's double total order — see _arrow_key_i64), and
+    decimal/default-collation string (generic-comparable sweep on the
+    Python objects Arrow hands over) — non-default string collations
+    raise into the mode='auto' fallback."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     k = len(dims)
-    # round 15: k widened to 5 — the dominance scans are tail-width
-    # agnostic; 6+ stays out (high-D skylines degenerate toward the
-    # whole group, no effective reduction)
-    assert 3 <= k <= 5 and len(ops) == k
+    # 6+ stays out: high-D skylines degenerate toward the whole
+    # group, no effective reduction
+    assert 2 <= k <= 5 and len(ops) == k
     ucols = [f"u{i}" for i in range(k)]
     asc = [op in ("<", "<=") for op in ops]
     bestl = F.min if asc[-1] else F.max
@@ -596,12 +454,20 @@ def keyed_skyline_view(src, part_pairs, dims, ops, out):
         .groupBy(*names, *ucols[:-1])
         .agg(bestl(ucols[-1]).alias(ucols[-1]))
     )
-    kinds, obj_path = _sky_kinds(pre.schema, ucols)
+    kinds, obj_path = _sky_kinds(pre.schema, ucols)  # the dtype gate
+    if k == 2:
+        order = F.col("u0").asc() if asc[0] else F.col("u0").desc()
+        lw = Window.partitionBy(*names).orderBy(order)
+        w = lw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        sky = pre.select(*names, "u0", bestl("u1").over(w).alias("u1"))
+        sky = sky.withColumn("__pv", F.lag("u1").over(lw)).filter(
+            F.col("__pv").isNull() | (F.col("u1") != F.col("__pv"))
+        )
+    else:
+        def sweep(tbl):
+            return _sky_sweep_table(tbl, ucols, kinds, asc, k, obj_path)
 
-    def sweep(tbl):
-        return _sky_sweep_table(tbl, ucols, kinds, asc, k, obj_path)
-
-    sky = pre.groupBy(*names).applyInArrow(sweep, pre.schema)
+        sky = pre.groupBy(*names).applyInArrow(sweep, pre.schema)
     return sky.groupBy(*names).agg(
         F.collect_list(
             F.struct(
@@ -612,28 +478,23 @@ def keyed_skyline_view(src, part_pairs, dims, ops, out):
 
 
 def global_skyline_points(inner, dims, ops, cap):
-    """Fold the GLOBAL Pareto skyline of ``dims`` (3 or 4) over
-    ``inner`` (round 13 late — the keyless sibling of
-    keyed_skyline_view, and the k-D generalization of
-    global_frontier_points): a leading-dims pre-reduction with
-    map-side combine, a per-Arrow-batch skyline via ``mapInPandas``
-    (each batch's skyline is a superset reduction — unlike the
+    """Fold the GLOBAL Pareto skyline of k = 2..5 ``dims`` over
+    ``inner`` (the keyless sibling of keyed_skyline_view; at k = 2 the
+    2-D staircase): a leading-dims pre-reduction with map-side
+    combine, a per-Arrow-batch skyline via ``mapInArrow`` (each
+    batch's skyline is a superset reduction — unlike the
     pair-combination staircases, skylines merge), and a bounded
     driver-side merge re-running the sweep over the unioned batch
     skylines — the metadata-scale-collect class, capped at ``cap``
-    points (the 4-D merge is a Python dominance scan, so its cap is
+    points (the 4-D+ merge is a Python dominance scan, so its cap is
     tightened to 4096 to bound the worst-case driver work). Returns
-    ``(points, types)`` tuples. Dtypes (round 14 widening, mirroring
-    keyed_skyline_view): integral/date/timestamp/timestamp_ntz,
-    float/double (IEEE-754 total-order bit embedding), and decimal/
-    default-collation string (generic-comparable sweep); non-default
-    collations raise into the mode='auto' fallback, as does a skyline
-    above the cap."""
-    import numpy as np
+    ``(points, types)`` tuples. Dtypes mirror keyed_skyline_view;
+    non-default collations raise into the mode='auto' fallback, as
+    does a skyline above the cap."""
     from pyspark.sql import functions as F
 
     k = len(dims)
-    assert 3 <= k <= 5 and len(ops) == k  # round 15: k=5 joins
+    assert 2 <= k <= 5 and len(ops) == k
     if k >= 4:
         cap = min(cap, 4096)
     ucols = [f"u{i}" for i in range(k)]
@@ -684,8 +545,8 @@ def global_skyline_points(inner, dims, ops, cap):
             (t[-1], t[0], t[1], t[2]) for t in tagged
         )
     else:
-        # bounded generic dominance scan (cap <= 4096 for k = 4;
-        # _sweep4_tails — round 14 fix: output never re-filtered)
+        # bounded generic dominance scan (1-wide tails at k = 2; cap
+        # <= 4096 at k >= 4; output never re-filtered)
         keep = _sweep4_tails((t[-1], t[1:-1]) for t in tagged)
     pts = [tuple(rows[i][u] for u in ucols) for i in keep]
     return pts, tuple(f.dataType for f in pre.schema.fields)
@@ -875,7 +736,7 @@ def keyed_neq_order2_view(src, part_pairs, a_col, b_col, c_col, ops,
     for n, kk in (("__u", kind_u), ("__v", kind_v)):
         if kk not in ("i64", "f64"):
             raise RoutedToFallback(
-                _FRONTIER_DTYPE_MSG.format(dt=pre.schema[n].dataType)
+                _NEQ_ORDER_DTYPE_MSG.format(dt=pre.schema[n].dataType)
             )
     _gate_neq_class_dtype(pre.schema["__a"].dataType)
     out_schema = T.StructType(
@@ -994,7 +855,7 @@ def keyed_neq2_order_view(src, part_pairs, a_col, b_col, c_col, op3,
     kind_c = _dim_kind(pre.schema["__c"].dataType)
     if kind_c not in ("i64", "f64"):
         raise RoutedToFallback(
-            _FRONTIER_DTYPE_MSG.format(dt=pre.schema["__c"].dataType)
+            _NEQ_ORDER_DTYPE_MSG.format(dt=pre.schema["__c"].dataType)
         )
     _gate_neq_class_dtype(pre.schema["__a"].dataType)
     _gate_neq_class_dtype(pre.schema["__b"].dataType)
@@ -1758,29 +1619,3 @@ def skyline_one_row_df(spark, pts, types):
     )
     return spark.createDataFrame([(pts,)], schema)
 
-
-def frontier_one_row_df(spark, merged, u_type, v_type):
-    """Materialize a folded frontier as a ONE-ROW DataFrame with a
-    single ``__pts: array<struct<u,v>>`` column, suitable for a
-    broadcast crossJoin (executor path) or a registered one-row view
-    (OR-flag path). An empty frontier yields an empty array — F.exists
-    over it is FALSE, exactly the empty-set fold."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField(
-                "__pts",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("u", u_type),
-                            T.StructField("v", v_type),
-                        ]
-                    )
-                ),
-                False,
-            )
-        ]
-    )
-    return spark.createDataFrame([(merged,)], schema)

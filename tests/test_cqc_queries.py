@@ -1660,8 +1660,8 @@ def test_keyless_neq_order_brute_force(engine):
 
 def test_keyless_pair_under_or(engine, oracle):
     """Round 12: the KEYLESS 2-comparison form — a bounded GLOBAL
-    Pareto frontier inlined as a one-row broadcast view (no
-    single-partition window; api._keyless_pair_flag). Covers EXISTS /
+    Pareto skyline (the 2-D staircase) inlined as a one-row broadcast
+    view (no single-partition window; api._keyless_sky_fold). Covers EXISTS /
     NOT EXISTS, an inner filter, the empty-inner fold in both
     polarities, and the typed-column fallback contract (double
     columns must still answer through spark.sql in auto mode)."""
@@ -2138,9 +2138,9 @@ def test_correlated_not_in_two_thresholds(engine):
 def test_correlated_not_in_pair_keyless(engine):
     """Round 13: KEYLESS pair-filtered correlated NOT IN — ``o.x NOT
     IN (SELECT y FROM t WHERE t.c1 OP1 o.d1 AND t.c2 OP2 o.d2)`` with
-    no equality correlation. The set/NULL-y facts fold to global
-    Pareto staircases via the bounded frontier helper
-    (compiler/cqc.py:_apply_pair_threshold_not_in_keyless); the match
+    no equality correlation. The set/NULL-y facts fold to global 2-D
+    Pareto skylines via the bounded skyline fold
+    (compiler/cqc.py:_apply_sky_threshold_not_in); the match
     fact is a per-y staircase (column probe) or a third global fold
     (constant probe). Randomized NULL-heavy brute force over all 16
     op pairs x column/constant probes; plus the fallback contract for
@@ -2457,8 +2457,8 @@ def test_correlated_not_in_keyless_under_or(engine):
     t.c2 OP2 o.d2])`` with no equality correlation. Single thresholds
     fold to ONE global stats row (api._corr_not_in_threshold_or with
     an unconditionally-attached one-row view); order pairs to bounded
-    global frontiers (api._corr_not_in_pair_threshold_or keyless
-    branch). Brute-force NULL matrix: all 4 single ops + <> and all 16
+    global 2-D skylines (api._corr_not_in_sky_threshold_or).
+    Brute-force NULL matrix: all 4 single ops + <> and all 16
     op pairs, column and constant probes; <>-containing keyless pairs
     pin the fallback raise."""
     import operator
@@ -4076,6 +4076,148 @@ def test_sweep4_brute():
         )
 
 
+def test_sky_sweep_k2_brute(spark):
+    """The k = 2 skyline (the 2-D staircase) against brute force:
+    some input point lies within a threshold region iff some KEPT
+    point does, for every threshold in the value grid, every op pair
+    and all four orientations. Drives frontier._sky_sweep_table at
+    k = 2 directly — the vectorized running minimum on int64 and
+    float keys (NaN largest and self-equal, -0.0 = 0.0), and
+    _sweep4_tails on 1-wide tails when a decimal dim takes the object
+    path — then the Spark-side k = 2 folds: global_skyline_points
+    (per-batch sweep + driver merge) and keyed_skyline_view (the per-y
+    window staircase)."""
+    import decimal
+    import itertools
+    import math
+    import random
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from sparksqlplus_spark.plans.frontier import (
+        _sky_kinds,
+        _sky_sweep_table,
+        global_skyline_points,
+        keyed_skyline_view,
+    )
+
+    D = decimal.Decimal
+    nan = float("nan")
+    pools = {
+        "int": (pa.int64(), T.LongType(), [-3, -1, 0, 2, 5]),
+        "float": (
+            pa.float64(), T.DoubleType(),
+            [-1.5, -0.0, 0.0, 1.0, nan, -math.inf],
+        ),
+        "dec": (
+            pa.decimal128(6, 2), T.DecimalType(6, 2),
+            [D("-1.25"), D("0.00"), D("0.50"), D("3.10")],
+        ),
+    }
+    cmp = {
+        "<": lambda a, b: a < b,
+        "<=": lambda a, b: a <= b,
+        ">": lambda a, b: a > b,
+        ">=": lambda a, b: a >= b,
+    }
+
+    def skey(v):
+        # Spark's total order for doubles; other kinds compare natively
+        if isinstance(v, float):
+            return (1, 0.0) if math.isnan(v) else (0, v + 0.0)
+        return v
+
+    def within(p, ops, thr):
+        return all(
+            cmp[op](skey(a), skey(t)) for op, a, t in zip(ops, p, thr)
+        )
+
+    def exact(pts, kept, ops, grid):
+        for thr in itertools.product(*grid):
+            truth = any(within(p, ops, thr) for p in pts)
+            mine = any(within(p, ops, thr) for p in kept)
+            assert truth == mine, (pts, kept, ops, thr)
+
+    def op_pairs(asc):
+        return itertools.product(
+            *[("<", "<=") if a else (">", ">=") for a in asc]
+        )
+
+    rng = random.Random(22)
+    for kinds2 in [
+        ("int", "int"), ("float", "float"), ("int", "float"),
+        ("dec", "int"), ("float", "dec"),
+    ]:
+        types = [pools[kd][0] for kd in kinds2]
+        vals = [pools[kd][2] for kd in kinds2]
+        kinds, obj_path = _sky_kinds(
+            T.StructType(
+                [T.StructField(f"u{i}", pools[kd][1])
+                 for i, kd in enumerate(kinds2)]
+            ),
+            ["u0", "u1"],
+        )
+        assert obj_path == ("dec" in kinds2)
+        for _ in range(25):
+            n = rng.randint(1, 9)
+            pts = [tuple(rng.choice(v) for v in vals) for _ in range(n)]
+            tbl = pa.table(
+                {
+                    f"u{i}": pa.array([p[i] for p in pts], type=types[i])
+                    for i in range(2)
+                }
+            )
+            for asc in itertools.product((True, False), repeat=2):
+                out = _sky_sweep_table(
+                    tbl, ["u0", "u1"], kinds, list(asc), 2, obj_path
+                )
+                kept = list(zip(*(out.column(u).to_pylist()
+                                  for u in ("u0", "u1"))))
+                for ops in op_pairs(asc):
+                    exact(pts, kept, ops, vals)
+
+    # the Spark-side k = 2 folds, NULLs included (never witnesses)
+    frames = {
+        "num": (
+            "y int, c0 bigint, c1 double",
+            [(rng.choice([1, 2, None]), rng.choice([-3, 0, 2, 5, None]),
+              rng.choice([-1.5, -0.0, 0.0, 1.0, nan, None]))
+             for _ in range(40)],
+        ),
+        "dec": (
+            "y int, c0 decimal(6,2), c1 bigint",
+            [(rng.choice([1, 2]),
+              rng.choice([D("-1.25"), D("0.00"), D("3.10"), None]),
+              rng.choice([-3, 0, 2, 5]))
+             for _ in range(40)],
+        ),
+    }
+    for ddl, rows in frames.values():
+        df = spark.createDataFrame(rows, ddl)
+        live = [r for r in rows if r[1] is not None and r[2] is not None]
+        grid = [
+            sorted({r[i] for r in live}, key=skey) for i in (1, 2)
+        ]
+        # the two mixed orientations (the pure sweep above covers all
+        # four) keep the Spark leg short
+        for asc in ((True, False), (False, True)):
+            ops = tuple("<=" if a else ">" for a in asc)
+            pts, _ = global_skyline_points(df, ["c0", "c1"], ops, 1000)
+            exact([r[1:] for r in live], pts, ops, grid)
+            view = keyed_skyline_view(
+                df.filter("y IS NOT NULL"), [("y", "__y")],
+                ["c0", "c1"], ops, "pts",
+            )
+            got = {
+                r["__y"]: [(e["u0"], e["u1"]) for e in r["pts"]]
+                for r in view.collect()
+            }
+            for y in {r[0] for r in live if r[0] is not None}:
+                group = [r[1:] for r in live if r[0] == y]
+                exact(group, got[y], ops, grid)
+
+
 def test_neq2_order_sweep_brute():
     """The pure prefix-diagonal sweep (frontier._neq2_order_sweep)
     against brute force: for every region prefix and every (d1, d2)
@@ -4694,7 +4836,7 @@ def test_correlated_not_in_two_thresholds_under_or(engine):
     matrix: all 16 op pairs x column/constant probes, with the OR
     guard exercising TRUE/FALSE/UNKNOWN flag propagation. Also pins
     the regression that motivated it: map_expr/rewrite_refs must
-    preserve PairWitness.negated (the set-empty branch silently
+    preserve the witness node's ``negated`` flag (the set-empty branch silently
     became set-NONEMPTY -> every row kept)."""
     import operator
     import random

@@ -758,6 +758,20 @@ def test_asof_join_directions(spark):
     assert plan.count("Exchange") - plan.count("ReusedExchange") <= 3
     assert "BroadcastNestedLoop" not in plan
 
+    # a user-defined-type payload (ML vectors): the NULL padding casts
+    # to the real type — its simpleString 'vector' is not castable
+    from pyspark.ml.linalg import Vectors
+
+    rv = spark.createDataFrame(
+        [(1, 3, Vectors.dense([3.0])), (1, 7, Vectors.sparse(2, [1], [7.0]))],
+        ["k", "ts", "vec"],
+    )
+    vec = {(x["k"], x["ts"]): (x["ts_r"], x["vec_r"])
+           for x in asof_join(l, rv, "ts", "ts", by=["k"]).collect()}
+    assert vec[(1, 5)] == (3, Vectors.dense([3.0]))
+    assert vec[(1, 9)] == (7, Vectors.sparse(2, [1], [7.0]))
+    assert vec[(3, 1)] == (None, None)
+
 
 def test_asof_join_null_payload_row_atomic(spark):
     """A NULL field in the matched right row must come through as NULL —

@@ -2787,8 +2787,8 @@ def test_not_in_over_cte_null_matrix(engine):
 
 def test_expr_rebuild_preserves_all_fields():
     """map_expr/rewrite_refs reconstruct nodes POSITIONALLY — round 12
-    shipped a silent correctness bug when they dropped
-    PairWitness.negated (the set-empty branch became set-NONEMPTY).
+    shipped a silent correctness bug when they dropped a witness
+    node's ``negated`` flag (the set-empty branch became set-NONEMPTY).
     Identity-rebuild nodes with every non-default flag set and assert
     full dataclass equality, so a future field added to a node without
     updating both rebuilds fails here instead of in production."""
@@ -2800,17 +2800,12 @@ def test_expr_rebuild_preserves_all_fields():
         Lit,
         Neq2OrderWitness,
         NeqTripleWitness,
-        PairWitness,
         SkyWitness,
         map_expr,
         rewrite_refs,
     )
 
     samples = [
-        PairWitness(
-            Col("a", "pts"), "<", Col("o", "x"), ">", Col("o", "y"),
-            negated=True,
-        ),
         SkyWitness(
             Col("a", "pts"),
             ("<", ">", "<="),

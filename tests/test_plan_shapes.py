@@ -89,12 +89,13 @@ BOUNDS = {
     # aggregate + the distinct collapse into ONE live exchange.
     # Measured 1 at pin time (sf0.001).
     "not_in_pair_routed_distinct": 1,
-    # r13 (late): keyless pair-filtered NOT IN — the set/NULL-y
-    # staircases fold PLAN-TIME via the bounded global frontier
-    # (their jobs never appear in this plan), so the live exchanges
-    # are only the per-y match staircase's (y, u) pre-reduction +
-    # y-keyed window/collect; the one-row frontier views crossJoin as
-    # broadcasts. Measured 3 at pin time (sf0.001).
+    # r13 (late): keyless pair-filtered NOT IN — the set/NULL-y 2-D
+    # skylines fold PLAN-TIME via global_skyline_points (their jobs
+    # never appear in this plan), so the live exchanges are only the
+    # per-y match staircase's (y, u0) pre-reduction + y-keyed
+    # window/collect (keyed_skyline_view at k = 2); the one-row
+    # skyline views crossJoin as broadcasts. Measured 3 at pin time
+    # (sf0.001).
     "not_in_pair_keyless": 3,
     # r13 (late): keyed 3-comparison OR'd EXISTS — Catalyst-only like
     # the keyed entries above. Measured 0 (sf0.001).

@@ -585,3 +585,31 @@ def test_plan_cache_memoizes_and_invalidates(engine):
         assert engine.sql(q3).count() == 7
     finally:
         spark.catalog.dropTempView("pc_sess_view")
+
+
+def test_plan_cache_keys_on_plan_confs(engine):
+    """A plan built under one value of a plan-shaping SQL conf is
+    never served under another: the statement planned while
+    autoBroadcastJoinThreshold=-1 (every join a shuffle join) must
+    not come back once the conf is restored, and planning again under
+    the restored value hits the entry built under it."""
+    spark = engine.spark
+    q = (
+        "SELECT l.l_orderkey, s.s_name FROM lineitem AS l, "
+        "supplier AS s WHERE l.l_suppkey = s.s_suppkey "
+        "AND l.l_quantity > 44"
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    restored = engine.sql(q)
+    spark.conf.set(key, "-1")
+    try:
+        no_bcast = engine.sql(q)
+        assert no_bcast is not restored
+        assert engine.sql(q) is no_bcast
+    finally:
+        spark.conf.set(key, old)
+    again = engine.sql(q)
+    assert again is not no_bcast
+    assert again is restored
+    assert sorted(again.collect()) == sorted(no_bcast.collect())
