@@ -5485,7 +5485,7 @@ class SparkSQLPlus:
         if tree is not None:
             return render(tree, ctx)
         # cyclic: explain the router's decision (mirrors execute_cyclic,
-        # including the density rule — runs the same small stat jobs)
+        # including the density rule and its catalog-kept moments)
         from sparksqlplus_spark.plans.cyclic import (
             GHD_BLOWUP,
             _break_blowup,

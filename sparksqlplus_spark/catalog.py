@@ -116,11 +116,34 @@ class Catalog:
     def __init__(self) -> None:
         self._tables: dict[str, TableMeta] = {}
         self._next_epoch = 0
+        # (table epoch, stat key) -> value; see table_stat
+        self._stats: dict[tuple[int, object], object] = {}
 
     def register(self, meta: TableMeta) -> None:
+        self._drop(meta.name)
         self._next_epoch += 1
         meta.epoch = self._next_epoch
         self._tables[meta.name.lower()] = meta
+
+    def _drop(self, name: str) -> None:
+        """Remove a table entry and the statistics of its registration."""
+        old = self._tables.pop(name.lower(), None)
+        if old is not None:
+            for k in [k for k in self._stats if k[0] == old.epoch]:
+                del self._stats[k]
+
+    def table_stat(self, name: str, key, compute):
+        """A statistic of the table registered as ``name``, computed once
+        per registration by ``compute()`` (the planner's degree
+        moments). Entries are keyed on the table's epoch and dropped when
+        the name is registered again or unregistered, so they never
+        outlive the data they describe and are bounded by the live
+        tables' keys."""
+        meta = self.get(name)
+        k = (meta.epoch, key)
+        if k not in self._stats:
+            self._stats[k] = compute()
+        return self._stats[k]
 
     def register_df(
         self,
@@ -144,7 +167,7 @@ class Catalog:
         """Drop a table entry (no-op if absent) — used for the
         ephemeral composite-view registrations api._plan_subqueries
         makes while planning a single statement."""
-        self._tables.pop(name.lower(), None)
+        self._drop(name)
 
     def get(self, name: str) -> TableMeta:
         key = name.lower()

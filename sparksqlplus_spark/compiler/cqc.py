@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparksqlplus_spark.catalog import Catalog
+from sparksqlplus_spark.expr_memo import col as _col
+from sparksqlplus_spark.expr_memo import col_as
 from sparksqlplus_spark.expressions import AggCall, Col, Cond, Expr, Star
 from sparksqlplus_spark.parser.sql import RoutedToFallback, UnsupportedSqlError
 from sparksqlplus_spark.plans.context import Comparison, Context, Relation
@@ -55,7 +57,7 @@ class _Side:
 
     def column(self, var_map) -> Column:
         if self.phys is not None:
-            return F.col(self.phys)
+            return _col(self.phys)
         return self.orig_expr.to_spark(var_map)
 
 
@@ -106,16 +108,16 @@ def _diagonal_stats_view(src, part_pairs, a_col, b_col):
     it; ONE row per part."""
     names = [n for _, n in part_pairs]
     rows = src.select(
-        *[F.col(c).alias(n) for c, n in part_pairs],
-        F.col(a_col).alias("__a"),
-        F.col(b_col).alias("__b"),
+        *[_col(c).alias(n) for c, n in part_pairs],
+        _col(a_col).alias("__a"),
+        _col(b_col).alias("__b"),
     )
     g1 = rows.groupBy(*names).agg(
         F.count_distinct("__a").alias("da"),
         F.count_distinct("__b").alias("db"),
         F.min("__a").alias("ua"),
         F.min("__b").alias("ub"),
-        F.min(F.struct(F.col("__a").alias("a"), F.col("__b").alias("b"))).alias(
+        F.min(F.struct(_col("__a").alias("a"), _col("__b").alias("b"))).alias(
             "r1"
         ),
     )
@@ -123,23 +125,23 @@ def _diagonal_stats_view(src, part_pairs, a_col, b_col):
     g2 = j2.groupBy(*names).agg(
         F.min(
             F.when(
-                F.col("__a") != F.col("r1.a"),
-                F.struct(F.col("__a").alias("a"), F.col("__b").alias("b")),
+                _col("__a") != _col("r1.a"),
+                F.struct(_col("__a").alias("a"), _col("__b").alias("b")),
             )
         ).alias("s"),
         F.min(
             F.when(
-                F.col("__b") != F.col("r1.b"),
-                F.struct(F.col("__a").alias("a"), F.col("__b").alias("b")),
+                _col("__b") != _col("r1.b"),
+                F.struct(_col("__a").alias("a"), _col("__b").alias("b")),
             )
         ).alias("t"),
     )
     v2 = g1.join(g2, names)
-    diag_s = F.col("s").isNotNull() & (F.col("s.b") != F.col("r1.b"))
-    diag_t = F.col("t").isNotNull() & (F.col("t.a") != F.col("r1.a"))
-    p = F.when(diag_s | diag_t, F.col("r1")).otherwise(F.col("t"))
-    q = F.when(diag_s, F.col("s")).otherwise(
-        F.when(diag_t, F.col("t")).otherwise(F.col("s"))
+    diag_s = _col("s").isNotNull() & (_col("s.b") != _col("r1.b"))
+    diag_t = _col("t").isNotNull() & (_col("t.a") != _col("r1.a"))
+    p = F.when(diag_s | diag_t, _col("r1")).otherwise(_col("t"))
+    q = F.when(diag_s, _col("s")).otherwise(
+        F.when(diag_t, _col("t")).otherwise(_col("s"))
     )
     v2 = v2.select(
         *names, "da", "db", "ua", "ub",
@@ -150,15 +152,15 @@ def _diagonal_stats_view(src, part_pairs, a_col, b_col):
     g3 = j3.groupBy(*names).agg(
         F.max(
             F.when(
-                (F.col("__a") != F.col("pa"))
-                & (F.col("__b") != F.col("qb")),
+                (_col("__a") != _col("pa"))
+                & (_col("__b") != _col("qb")),
                 1,
             ).otherwise(0)
         ).alias("w1"),
         F.max(
             F.when(
-                (F.col("__a") != F.col("qa"))
-                & (F.col("__b") != F.col("pb")),
+                (_col("__a") != _col("qa"))
+                & (_col("__b") != _col("pb")),
                 1,
             ).otherwise(0)
         ).alias("w2"),
@@ -201,13 +203,13 @@ def _apply_neq_pair_threshold_not_in(df, inner, sf, prefix: str):
         inner, [(a_col, d1), (b_col, d2)], prefix
     )
     inner_t = inner.filter(
-        F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
+        _col(a_col).isNotNull() & _col(b_col).isNotNull()
     )
     stat_cols = ["da", "db", "ua", "ub", "pa", "pb", "qa", "qb", "w1", "w2"]
 
     def within(tagp):
         def c(name):
-            return F.col(f"{tagp}{name}")
+            return _col(f"{tagp}{name}")
 
         # da=1: witness needs ua <> d1 plus SOME b <> d2 (db >= 2
         # guarantees one; db = 1 needs the unique b to differ).
@@ -271,33 +273,33 @@ def _apply_neq_pair_threshold_not_in(df, inner, sf, prefix: str):
         probe_ok = pl.isNotNull()
         w_n = fold_within(
             keyless_diag_stats(
-                inner_t.filter(F.col(ic).isNull()), a_col, b_col
+                inner_t.filter(_col(ic).isNull()), a_col, b_col
             )
         )
         w_m = fold_within(
             keyless_diag_stats(
-                inner_t.filter(F.col(ic) == pl), a_col, b_col
+                inner_t.filter(_col(ic) == pl), a_col, b_col
             )
         )
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
+        probe_ok = _col(ov_p).isNotNull()
         w_n = fold_within(
             keyless_diag_stats(
-                inner_t.filter(F.col(ic).isNull()), a_col, b_col
+                inner_t.filter(_col(ic).isNull()), a_col, b_col
             )
         )
         mp = f"{prefix}_mp"
         tagp = f"{prefix}_M"
         view = _diagonal_stats_view(
-            inner_t.filter(F.col(ic).isNotNull()),
+            inner_t.filter(_col(ic).isNotNull()),
             [(ic, mp)],
             a_col,
             b_col,
         ).select(
-            mp, *[F.col(c).alias(f"{tagp}{c}") for c in stat_cols]
+            mp, *[_col(c).alias(f"{tagp}{c}") for c in stat_cols]
         )
-        df = df.join(view, F.col(ov_p) == F.col(mp), "left")
+        df = df.join(view, _col(ov_p) == _col(mp), "left")
         w_m = within(tagp)
         helper += [f"{tagp}{c}" for c in stat_cols] + [mp]
     keep = ~w_a | (~w_m & ~w_n & probe_ok)
@@ -345,36 +347,36 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
     best = F.max if op_b in (">", ">=") else F.min
     cmpb = _CMPF[op_b]
     inner_t = inner.filter(
-        F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
+        _col(a_col).isNotNull() & _col(b_col).isNotNull()
     )
 
     def triple_view(src, part_pairs, tagp):
         names = [n for _, n in part_pairs]
         pre = (
             src.select(
-                *[F.col(c).alias(n) for c, n in part_pairs],
-                F.col(a_col).alias("__a"),
-                F.col(b_col).alias("__b"),
+                *[_col(c).alias(n) for c, n in part_pairs],
+                _col(a_col).alias("__a"),
+                _col(b_col).alias("__b"),
             )
             .groupBy(*names, "__a")
             .agg(best("__b").alias("__ab"))
         )
         order_col = (
-            F.col("__ab").desc() if op_b in (">", ">=")
-            else F.col("__ab").asc()
+            _col("__ab").desc() if op_b in (">", ">=")
+            else _col("__ab").asc()
         )
-        w = Window.partitionBy(*names).orderBy(order_col, F.col("__a"))
+        w = Window.partitionBy(*names).orderBy(order_col, _col("__a"))
         top2 = pre.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= 2
+            _col("__rn") <= 2
         )
         view = top2.groupBy(*names).agg(
-            F.max(F.when(F.col("__rn") == 1, F.col("__ab"))).alias(
+            F.max(F.when(_col("__rn") == 1, _col("__ab"))).alias(
                 f"{tagp}b1"
             ),
-            F.max(F.when(F.col("__rn") == 1, F.col("__a"))).alias(
+            F.max(F.when(_col("__rn") == 1, _col("__a"))).alias(
                 f"{tagp}a1r"
             ),
-            F.max(F.when(F.col("__rn") == 2, F.col("__ab"))).alias(
+            F.max(F.when(_col("__rn") == 2, _col("__ab"))).alias(
                 f"{tagp}b2"
             ),
         )
@@ -383,15 +385,15 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
             f"{tagp}b1",
             f"{tagp}b2",
             F.when(
-                F.col(f"{tagp}b2") == F.col(f"{tagp}b1"), F.lit(None)
+                _col(f"{tagp}b2") == _col(f"{tagp}b1"), F.lit(None)
             )
-            .otherwise(F.col(f"{tagp}a1r"))
+            .otherwise(_col(f"{tagp}a1r"))
             .alias(f"{tagp}a1"),
         )
 
     def within(tagp):
-        b1, b2 = F.col(f"{tagp}b1"), F.col(f"{tagp}b2")
-        a1 = F.col(f"{tagp}a1")
+        b1, b2 = _col(f"{tagp}b1"), _col(f"{tagp}b2")
+        a1 = _col(f"{tagp}a1")
         first = F.coalesce(cmpb(b1, d2), F.lit(False)) & (
             a1.isNull() | F.coalesce(a1 != d1, F.lit(False))
         )
@@ -427,29 +429,29 @@ def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
         probe_ok = pl.isNotNull()
         w_n = fold_within(
             keyless_neq_order_stats(
-                inner_t.filter(F.col(ic).isNull()), a_col, b_col, op_b,
+                inner_t.filter(_col(ic).isNull()), a_col, b_col, op_b,
             )
         )
         w_m = fold_within(
             keyless_neq_order_stats(
-                inner_t.filter(F.col(ic) == pl), a_col, b_col, op_b
+                inner_t.filter(_col(ic) == pl), a_col, b_col, op_b
             )
         )
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
+        probe_ok = _col(ov_p).isNotNull()
         w_n = fold_within(
             keyless_neq_order_stats(
-                inner_t.filter(F.col(ic).isNull()), a_col, b_col, op_b,
+                inner_t.filter(_col(ic).isNull()), a_col, b_col, op_b,
             )
         )
         mp = f"{prefix}_mp"
         view = triple_view(
-            inner_t.filter(F.col(ic).isNotNull()),
+            inner_t.filter(_col(ic).isNotNull()),
             [(ic, mp)],
             f"{prefix}_M",
         )
-        df = df.join(view, F.col(ov_p) == F.col(mp), "left")
+        df = df.join(view, _col(ov_p) == _col(mp), "left")
         w_m = within(f"{prefix}_M")
         helper += [
             f"{prefix}_Mb1", f"{prefix}_Mb2", f"{prefix}_Ma1", mp,
@@ -500,7 +502,7 @@ def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
     def within(arr):
         return F.coalesce(
             F.exists(
-                F.col(arr),
+                _col(arr),
                 lambda e: functools.reduce(
                     lambda x, y: x & y,
                     [
@@ -519,26 +521,26 @@ def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
         pl = probe_lit.to_spark({})
         probe_ok = pl.isNotNull()
         df = df.crossJoin(
-            fold(inner.filter(F.col(ic).isNull()), f"{prefix}_pn")
+            fold(inner.filter(_col(ic).isNull()), f"{prefix}_pn")
         )
         df = df.crossJoin(
-            fold(inner.filter(F.col(ic) == pl), f"{prefix}_pm")
+            fold(inner.filter(_col(ic) == pl), f"{prefix}_pm")
         )
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
+        probe_ok = _col(ov_p).isNotNull()
         df = df.crossJoin(
-            fold(inner.filter(F.col(ic).isNull()), f"{prefix}_pn")
+            fold(inner.filter(_col(ic).isNull()), f"{prefix}_pn")
         )
         mp = f"{prefix}_mp"
         v_match = keyed_skyline_view(
-            inner.filter(F.col(ic).isNotNull()),
+            inner.filter(_col(ic).isNotNull()),
             [(ic, mp)],
             dims,
             ops,
             f"{prefix}_pm",
         )
-        df = df.join(v_match, F.col(ov_p) == F.col(mp), "left")
+        df = df.join(v_match, _col(ov_p) == _col(mp), "left")
         helper.append(mp)
     keep = ~within(f"{prefix}_pa") | (
         ~within(f"{prefix}_pm") & ~within(f"{prefix}_pn") & probe_ok
@@ -614,7 +616,7 @@ def _apply_neq_triple_not_in_keyless(df, inner, sf, prefix: str):
         def W(tag):
             return F.coalesce(
                 neq_triple_witness_col(
-                    F.col(f"{tag}_u"), F.col(f"{tag}_v"),
+                    _col(f"{tag}_u"), _col(f"{tag}_v"),
                     d1, d2, d3, op2, op3,
                 ),
                 F.lit(False),
@@ -639,7 +641,7 @@ def _apply_neq_triple_not_in_keyless(df, inner, sf, prefix: str):
         def W(tag):
             return F.coalesce(
                 neq2_order_witness_col(
-                    F.col(f"{tag}_n"), d1, d2, d3, op3
+                    _col(f"{tag}_n"), d1, d2, d3, op3
                 ),
                 F.lit(False),
             )
@@ -651,21 +653,21 @@ def _apply_neq_triple_not_in_keyless(df, inner, sf, prefix: str):
         pl = probe_lit.to_spark({})
         probe_ok = pl.isNotNull()
         df = df.crossJoin(
-            F.broadcast(fold(inner.filter(F.col(ic).isNull()), tn))
+            F.broadcast(fold(inner.filter(_col(ic).isNull()), tn))
         )
         df = df.crossJoin(
-            F.broadcast(fold(inner.filter(F.col(ic) == pl), tm))
+            F.broadcast(fold(inner.filter(_col(ic) == pl), tm))
         )
     else:
         (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = F.col(ov_p).isNotNull()
+        probe_ok = _col(ov_p).isNotNull()
         df = df.crossJoin(
-            F.broadcast(fold(inner.filter(F.col(ic).isNull()), tn))
+            F.broadcast(fold(inner.filter(_col(ic).isNull()), tn))
         )
         # match view: the per-y keyed statistic — partitioned by y,
         # distributed; one row per y so the LEFT join never duplicates
         mp = f"{prefix}_mp"
-        msrc = inner.filter(F.col(ic).isNotNull())
+        msrc = inner.filter(_col(ic).isNotNull())
         if n_neq == 1:
             mview = keyed_neq_order2_view(
                 msrc, [(ic, mp)], a_col, b_col, c_col, (op2, op3),
@@ -675,7 +677,7 @@ def _apply_neq_triple_not_in_keyless(df, inner, sf, prefix: str):
             mview = keyed_neq2_order_view(
                 msrc, [(ic, mp)], a_col, b_col, c_col, op3, f"{tm}_n",
             )
-        df = df.join(mview, F.col(ov_p) == F.col(mp), "left")
+        df = df.join(mview, _col(ov_p) == _col(mp), "left")
         helper.append(mp)
     keep = ~W(ta) | (~W(tm) & ~W(tn) & probe_ok)
     drop = helper + [
@@ -790,8 +792,8 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             # its unique c differs; a NULL d qualifies nothing
             def aggs_of(pred, tag):
                 cval = (
-                    F.when(pred, F.col(t_col)) if pred is not None
-                    else F.col(t_col)
+                    F.when(pred, _col(t_col)) if pred is not None
+                    else _col(t_col)
                 )
                 return [
                     F.count_distinct(cval).alias(f"{tag}c"),
@@ -802,14 +804,14 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
                 return F.coalesce(
                     thr.isNotNull()
                     & (
-                        (F.col(f"{tag}c") >= 2)
-                        | (F.col(f"{tag}v") != thr)
+                        (_col(f"{tag}c") >= 2)
+                        | (_col(f"{tag}v") != thr)
                     ),
                     F.lit(False),
                 )
 
             def miss(tag):
-                return F.col(f"{tag}c").isNull() | ~within(tag)
+                return _col(f"{tag}c").isNull() | ~within(tag)
 
             def cols_of(tag):
                 return [f"{tag}c", f"{tag}v"]
@@ -824,29 +826,29 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
 
             def aggs_of(pred, tag):
                 cval = (
-                    F.when(pred, F.col(t_col)) if pred is not None
-                    else F.col(t_col)
+                    F.when(pred, _col(t_col)) if pred is not None
+                    else _col(t_col)
                 )
                 return [best(cval).alias(f"{tag}v")]
 
             def within(tag):
                 return F.coalesce(
-                    cmpfn(F.col(f"{tag}v"), thr), F.lit(False)
+                    cmpfn(_col(f"{tag}v"), thr), F.lit(False)
                 )
 
             def miss(tag):
-                return F.col(f"{tag}v").isNull() | ~within(tag)
+                return _col(f"{tag}v").isNull() | ~within(tag)
 
             def cols_of(tag):
                 return [f"{tag}v"]
 
         corr = sf.corr_keys
         gref = [
-            F.col(ic).alias(f"{prefix}_g{i}")
+            _col(ic).alias(f"{prefix}_g{i}")
             for i, (_, ic) in enumerate(corr)
         ]
         gcols = [f"{prefix}_g{i}" for i in range(len(corr))]
-        inner_t = inner.filter(F.col(t_col).isNotNull())
+        inner_t = inner.filter(_col(t_col).isNotNull())
         ta, tn, tm = f"{prefix}_a", f"{prefix}_nl", f"{prefix}_mt"
         helper = cols_of(ta) + cols_of(tn) + gcols
         if sf.const_probe is not None:
@@ -854,8 +856,8 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             pl = probe_lit.to_spark({})
             stats = inner_t.groupBy(*gref).agg(
                 *aggs_of(None, ta),
-                *aggs_of(F.col(ic).isNull(), tn),
-                *aggs_of(F.col(ic) == pl, tm),
+                *aggs_of(_col(ic).isNull(), tn),
+                *aggs_of(_col(ic) == pl, tm),
             )
             out = (
                 df.join(
@@ -863,7 +865,7 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
                     functools.reduce(
                         lambda a, b: a & b,
                         [
-                            F.col(ov) == F.col(g)
+                            _col(ov) == _col(g)
                             for (ov, _), g in zip(corr, gcols)
                         ],
                     ),
@@ -878,7 +880,7 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             (ov_p, ic), = sf.keys  # single-column probe (validated)
             stats = inner_t.groupBy(*gref).agg(
                 *aggs_of(None, ta),
-                *aggs_of(F.col(ic).isNull(), tn),
+                *aggs_of(_col(ic).isNull(), tn),
             )
             out = (
                 df.join(
@@ -886,7 +888,7 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
                     functools.reduce(
                         lambda a, b: a & b,
                         [
-                            F.col(ov) == F.col(g)
+                            _col(ov) == _col(g)
                             for (ov, _), g in zip(corr, gcols)
                         ],
                     ),
@@ -897,26 +899,26 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             )
             mcols = [f"{prefix}_m{i}" for i in range(len(corr))]
             match = (
-                inner_t.filter(F.col(ic).isNotNull())
+                inner_t.filter(_col(ic).isNotNull())
                 .groupBy(
                     *[
-                        F.col(icg).alias(m)
+                        _col(icg).alias(m)
                         for (_, icg), m in zip(corr, mcols)
                     ],
-                    F.col(ic).alias(f"{prefix}_mp"),
+                    _col(ic).alias(f"{prefix}_mp"),
                 )
                 .agg(*aggs_of(None, tm))
             )
             mon = functools.reduce(
                 lambda a, b: a & b,
                 [
-                    F.col(ov) == F.col(m)
+                    _col(ov) == _col(m)
                     for (ov, _), m in zip(corr, mcols)
                 ]
-                + [F.col(ov_p) == F.col(f"{prefix}_mp")],
+                + [_col(ov_p) == _col(f"{prefix}_mp")],
             )
             out = out.join(match, mon, "left")
-            probe_ok = F.col(ov_p).isNotNull()
+            probe_ok = _col(ov_p).isNotNull()
             helper += cols_of(tm) + [f"{prefix}_mp", *mcols]
         set_empty = miss(ta)
         no_null = miss(tn)
@@ -941,13 +943,13 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         # reused); no collect, no broadcast assumption — scale-safe.
         corr = sf.corr_keys
         gref = [
-            F.col(ic).alias(f"{prefix}_g{i}")
+            _col(ic).alias(f"{prefix}_g{i}")
             for i, (_, ic) in enumerate(corr)
         ]
         gcols = [f"{prefix}_g{i}" for i in range(len(corr))]
         on = functools.reduce(
             lambda a, b: a & b,
-            [F.col(ov) == F.col(g) for (ov, _), g in zip(corr, gcols)],
+            [_col(ov) == _col(g) for (ov, _), g in zip(corr, gcols)],
         )
         helper = [f"{prefix}_n", f"{prefix}_nn", *gcols]
         if sf.const_probe is not None:
@@ -955,12 +957,12 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             pl = probe_lit.to_spark({})
             stats = inner.groupBy(*gref).agg(
                 F.count(F.lit(1)).alias(f"{prefix}_n"),
-                F.count(F.col(ic)).alias(f"{prefix}_nn"),
-                F.count(F.when(F.col(ic) == pl, 1)).alias(f"{prefix}_m"),
+                F.count(_col(ic)).alias(f"{prefix}_nn"),
+                F.count(F.when(_col(ic) == pl, 1)).alias(f"{prefix}_m"),
             )
             out = df.join(stats, on, "left")
-            no_match = F.col(f"{prefix}_m").isNull() | (
-                F.col(f"{prefix}_m") == 0
+            no_match = _col(f"{prefix}_m").isNull() | (
+                _col(f"{prefix}_m") == 0
             )
             probe_ok = pl.isNotNull()
             helper.append(f"{prefix}_m")
@@ -968,35 +970,35 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             (ov_p, ic), = sf.keys  # single-column probe (validated)
             stats = inner.groupBy(*gref).agg(
                 F.count(F.lit(1)).alias(f"{prefix}_n"),
-                F.count(F.col(ic)).alias(f"{prefix}_nn"),
+                F.count(_col(ic)).alias(f"{prefix}_nn"),
             )
             out = df.join(stats, on, "left")
             mcols = [f"{prefix}_m{i}" for i in range(len(corr))]
             match = (
                 inner.select(
                     *[
-                        F.col(icg).alias(m)
+                        _col(icg).alias(m)
                         for (_, icg), m in zip(corr, mcols)
                     ],
-                    F.col(ic).alias(f"{prefix}_mp"),
+                    _col(ic).alias(f"{prefix}_mp"),
                 )
-                .filter(F.col(ic).isNotNull())
+                .filter(_col(ic).isNotNull())
                 .distinct()
             )
             mon = functools.reduce(
                 lambda a, b: a & b,
                 [
-                    F.col(ov) == F.col(m)
+                    _col(ov) == _col(m)
                     for (ov, _), m in zip(corr, mcols)
                 ],
-            ) & (F.col(ov_p) == F.col(f"{prefix}_mp"))
+            ) & (_col(ov_p) == _col(f"{prefix}_mp"))
             out = out.join(match, mon, "left")
-            no_match = F.col(f"{prefix}_mp").isNull()
-            probe_ok = F.col(ov_p).isNotNull()
+            no_match = _col(f"{prefix}_mp").isNull()
+            probe_ok = _col(ov_p).isNotNull()
             helper += [f"{prefix}_mp", *mcols]
-        keep = F.col(f"{prefix}_n").isNull() | (
+        keep = _col(f"{prefix}_n").isNull() | (
             no_match
-            & (F.col(f"{prefix}_n") == F.col(f"{prefix}_nn"))
+            & (_col(f"{prefix}_n") == _col(f"{prefix}_nn"))
             & probe_ok
         )
         return out.filter(keep).drop(*helper)
@@ -1014,13 +1016,13 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         pl = probe_lit.to_spark({})
         stats = inner.agg(
             F.count(F.lit(1)).alias(f"{prefix}_n"),
-            F.count(F.col(ic)).alias(f"{prefix}_nn"),
-            F.count(F.when(F.col(ic) == pl, 1)).alias(f"{prefix}_m"),
+            F.count(_col(ic)).alias(f"{prefix}_nn"),
+            F.count(F.when(_col(ic) == pl, 1)).alias(f"{prefix}_m"),
         )
         out = df.join(F.broadcast(stats), how="cross")
-        keep = (F.col(f"{prefix}_n") == 0) | (
-            (F.col(f"{prefix}_m") == 0)
-            & (F.col(f"{prefix}_n") == F.col(f"{prefix}_nn"))
+        keep = (_col(f"{prefix}_n") == 0) | (
+            (_col(f"{prefix}_m") == 0)
+            & (_col(f"{prefix}_n") == _col(f"{prefix}_nn"))
             & pl.isNotNull()
         )
         return out.filter(keep).drop(
@@ -1057,16 +1059,16 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         # keeps the bulk of the work on the hash path.)
         kc = [f"{prefix}_k{i}" for i in range(len(sf.keys))]
         ikeys = inner.select(
-            *[F.col(ic).alias(k) for k, (_, ic) in zip(kc, sf.keys)]
+            *[_col(ic).alias(k) for k, (_, ic) in zip(kc, sf.keys)]
         ).distinct()
         s_null = ikeys.filter(
             functools.reduce(
-                lambda a, b: a | b, [F.col(k).isNull() for k in kc]
+                lambda a, b: a | b, [_col(k).isNull() for k in kc]
             )
         )
         ovs = [ov for ov, _ in sf.keys]
         probe_nonnull = functools.reduce(
-            lambda a, b: a & b, [F.col(ov).isNotNull() for ov in ovs]
+            lambda a, b: a & b, [_col(ov).isNotNull() for ov in ovs]
         )
         part_a = df.filter(probe_nonnull)
         part_b = df.filter(~probe_nonnull)
@@ -1074,14 +1076,14 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
             ikeys,
             functools.reduce(
                 lambda a, b: a & b,
-                [F.col(ov) == F.col(k) for ov, k in zip(ovs, kc)],
+                [_col(ov) == _col(k) for ov, k in zip(ovs, kc)],
             ),
             "left_anti",
         )
         cond_a = functools.reduce(
             lambda a, b: a & b,
             [
-                F.col(k).isNull() | (F.col(ov) == F.col(k))
+                _col(k).isNull() | (_col(ov) == _col(k))
                 for ov, k in zip(ovs, kc)
             ],
         )
@@ -1089,9 +1091,9 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         cond_b = functools.reduce(
             lambda a, b: a & b,
             [
-                F.col(ov).isNull()
-                | F.col(k).isNull()
-                | (F.col(ov) == F.col(k))
+                _col(ov).isNull()
+                | _col(k).isNull()
+                | (_col(ov) == _col(k))
                 for ov, k in zip(ovs, kc)
             ],
         )
@@ -1108,14 +1110,14 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         (ov, ic), = sf.keys  # validated single-key in build_context
         stats = inner.agg(
             F.count(F.lit(1)).alias(f"{prefix}_n"),
-            F.count(F.col(ic)).alias(f"{prefix}_nn"),
+            F.count(_col(ic)).alias(f"{prefix}_nn"),
         )
-        keys = inner.select(F.col(ic).alias(f"{prefix}_k")).distinct()
-        out = df.join(keys, F.col(ov) == F.col(f"{prefix}_k"), "left_anti")
+        keys = inner.select(_col(ic).alias(f"{prefix}_k")).distinct()
+        out = df.join(keys, _col(ov) == _col(f"{prefix}_k"), "left_anti")
         out = out.join(F.broadcast(stats), how="cross")
-        keep = (F.col(f"{prefix}_n") == 0) | (
-            (F.col(f"{prefix}_n") == F.col(f"{prefix}_nn"))
-            & F.col(ov).isNotNull()
+        keep = (_col(f"{prefix}_n") == 0) | (
+            (_col(f"{prefix}_n") == _col(f"{prefix}_nn"))
+            & _col(ov).isNotNull()
         )
         return out.filter(keep).drop(f"{prefix}_n", f"{prefix}_nn")
     need = [ic for _, ic in sf.keys]
@@ -1125,11 +1127,11 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
     sel = []
     for c in dict.fromkeys(need):
         ren[c] = f"{prefix}_{len(ren)}"
-        sel.append(F.col(c).alias(ren[c]))
+        sel.append(_col(c).alias(ren[c]))
     inner = inner.select(*sel)
     on = None
     for ov, ic in sf.keys:
-        cond_col = F.col(ov) == F.col(ren[ic])
+        cond_col = _col(ov) == _col(ren[ic])
         on = cond_col if on is None else (on & cond_col)
     for cond in sf.extra:
         jmap = {("", c): ren[c] for c in ren}
@@ -1181,7 +1183,7 @@ def build_relation_df(
             df = agg_cache[sig]
         else:
             base = catalog.get(rel.table).load(spark)
-            gcols = [F.col(b).alias(out) for b, out in rel.agg_group_cols]
+            gcols = [_col(b).alias(out) for b, out in rel.agg_group_cols]
             if rel.agg_arg_expr is not None:
                 # expression argument (e.g. SUM(price * (1 - discount)));
                 # refs may be unqualified or carry the subquery's FROM alias
@@ -1191,7 +1193,7 @@ def build_relation_df(
             elif rel.agg_func == "count" and rel.agg_arg_col is None:
                 agg = F.count(F.lit(1))
             else:
-                arg = F.col(rel.agg_arg_col) if rel.agg_arg_col else F.lit(1)
+                arg = _col(rel.agg_arg_col) if rel.agg_arg_col else F.lit(1)
                 agg = getattr(F, rel.agg_func)(arg)
             df = base.groupBy(*gcols).agg(agg.alias(rel.agg_out_col))
             if agg_cache is not None:
@@ -1200,23 +1202,30 @@ def build_relation_df(
         raise UnsupportedSqlError(f"cannot materialize relation kind {rel.kind}")
 
     # rename columns -> variables; duplicate variables within one relation
-    # become an equality filter + single column
+    # become an equality filter + single column. One select and one
+    # AND-ed filter per side of it: every DataFrame step is a py4j round
+    # trip plus an analysis, and Catalyst combines a filter chain into
+    # the same conjunction anyway.
     seen: dict[str, str] = {}
     cols: list[Column] = []
     extra_filters: list[Column] = []
     for c, v in rel.col_to_var.items():
         if v in seen:
-            extra_filters.append(F.col(c) == F.col(seen[v]))
+            extra_filters.append(_col(c) == _col(seen[v]))
         else:
             seen[v] = c
-            cols.append(F.col(c).alias(v))
-    for flt in extra_filters:
-        df = df.filter(flt)
+            cols.append(col_as(c, v))
+    if extra_filters:
+        df = df.filter(functools.reduce(Column.__and__, extra_filters))
     df = df.select(*cols)
     # local predicate pushdown (reference applySelfComparison R11 /
     # selection pushdown SURVEY §4.1)
-    for cond in local_filters:
-        df = df.filter(cond.to_spark(var_map))
+    if local_filters:
+        df = df.filter(
+            functools.reduce(
+                Column.__and__, [cond.to_spark(var_map) for cond in local_filters]
+            )
+        )
     # planned [NOT] EXISTS (engine extension, plans/context.py:SemiFilter):
     # left_semi/left_anti against the filtered inner table — applied at
     # the source like any other pushed predicate, so the join tree,
@@ -1801,7 +1810,7 @@ class CqcExecutor:
             else:
                 result = result.crossJoin(child_agg)
             result = result.withColumn(
-                "__cnt", F.col("__cnt") * F.col("__c")
+                "__cnt", _col("__cnt") * _col("__c")
             ).drop("__c")
             result = regroup(apply_ready(result))
 
@@ -1810,7 +1819,7 @@ class CqcExecutor:
                 result = result.filter(build())
         # final grouping + output shaping
         result = result.groupBy(*sorted(gv)).agg(F.sum("__cnt").alias("__cnt"))
-        out_cols = [F.col(src).alias(name) for name, src in out_plan]
+        out_cols = [_col(src).alias(name) for name, src in out_plan]
         result = result.select(*out_cols)
         return _order_limit(result, ctx, post_agg=False)
 
@@ -1990,7 +1999,7 @@ def finalize(result: DataFrame, ctx: Context) -> DataFrame:
                     raise UnsupportedSqlError(
                         "GROUPING() argument must be a GROUP BY expression"
                     )
-                return F.grouping(F.col(phys[sub.arg.key()]))
+                return F.grouping(_col(phys[sub.arg.key()]))
             return sub.to_spark(var_map)
 
         agg_cols: list[Column] = []
@@ -2080,7 +2089,7 @@ def finalize(result: DataFrame, ctx: Context) -> DataFrame:
             keep_sorts.append(sp.alias(f"__sort_{i}"))
         result = result.select(*out_cols, *keep_sorts)
         result = _order_limit(result, ctx, post_agg=True)
-        result = result.select(*[F.col(n) for n, _ in ctx.output])
+        result = result.select(*[_col(n) for n, _ in ctx.output])
     else:
         sort_cols: list[Column] = []
         helper_sorts: list[tuple[int, bool]] = []  # (order_by idx, desc)
@@ -2101,14 +2110,14 @@ def finalize(result: DataFrame, ctx: Context) -> DataFrame:
             # row (min for asc, max for desc — deterministic).
             if helper_sorts:
                 aggs = [
-                    (F.max if desc else F.min)(F.col(f"__sort_{i}")).alias(f"__sort_{i}")
+                    (F.max if desc else F.min)(_col(f"__sort_{i}")).alias(f"__sort_{i}")
                     for i, desc in helper_sorts
                 ]
-                result = result.groupBy(*[F.col(n) for n, _ in ctx.output]).agg(*aggs)
+                result = result.groupBy(*[_col(n) for n, _ in ctx.output]).agg(*aggs)
             else:
                 result = result.dropDuplicates()
         result = _order_limit(result, ctx, post_agg=False)
-        result = result.select(*[F.col(n) for n, _ in ctx.output])
+        result = result.select(*[_col(n) for n, _ in ctx.output])
     return result
 
 
@@ -2130,15 +2139,15 @@ def _order_limit(result: DataFrame, ctx: Context, post_agg: bool) -> DataFrame:
             col = None
             if isinstance(e, Col) and e.alias == "":
                 if e.name in result.columns:
-                    col = F.col(e.name)
+                    col = _col(e.name)
             if col is None:
                 # match by expression key against outputs
                 for n, oe in ctx.output:
                     if oe.key() == e.key() and n in result.columns:
-                        col = F.col(n)
+                        col = _col(n)
                         break
             if col is None and f"__sort_{i}" in result.columns:
-                col = F.col(f"__sort_{i}")
+                col = _col(f"__sort_{i}")
             if col is None:
                 if post_agg:
                     col = e.to_spark(ctx.var_map)

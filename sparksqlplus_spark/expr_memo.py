@@ -15,12 +15,22 @@ next use fails with an opaque py4j error far from the cause. The
 :func:`expr_cache` decorator therefore keys every entry additionally on
 a **context epoch** — a counter that bumps whenever the active
 ``SparkContext`` object changes — so a fresh JVM transparently rebuilds
-its fragments while same-context reuse stays a dict hit.
+its fragments while same-context reuse stays a dict hit. Each cache is
+an LRU of at most :data:`EXPR_CACHE_MAXSIZE` entries: the compiler
+memoizes per column name and literal, so an unbounded cache would grow
+with every distinct name a long-lived session ever compiles.
 """
 
 from __future__ import annotations
 
 import functools
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+# entries per memoized builder; far above one workload's distinct
+# column names and literals, small next to the driver heap
+EXPR_CACHE_MAXSIZE = 4096
 
 _last_ctx = None  # strong ref on purpose: prevents id-reuse aliasing
 _epoch = 0
@@ -47,7 +57,7 @@ def context_epoch() -> int:
 
 
 def expr_cache(fn):
-    """``functools.lru_cache`` for Column-fragment builders, keyed
+    """Bounded ``functools.lru_cache`` for Column-fragment builders, keyed
     additionally on :func:`context_epoch` so a restarted SparkContext
     never serves stale py4j handles. The first call under a new epoch
     clears the cache, so the Columns (and their py4j handles) built
@@ -55,7 +65,7 @@ def expr_cache(fn):
     Arguments must be hashable (the builders take strings/ints by
     design)."""
 
-    @functools.lru_cache(maxsize=None)
+    @functools.lru_cache(maxsize=EXPR_CACHE_MAXSIZE)
     def cached(_epoch: int, *args, **kwargs):
         return fn(*args, **kwargs)
 
@@ -73,3 +83,18 @@ def expr_cache(fn):
     wrapper.cache_clear = cached.cache_clear
     wrapper.cache_info = cached.cache_info
     return wrapper
+
+
+@expr_cache
+def col(name: str) -> Column:
+    """``F.col(name)``, built once per name: each ``F.col`` is three py4j
+    round trips (resolve ``functions``, look up the method, call it),
+    and one compiled statement names the same columns many times."""
+    return F.col(name)
+
+
+@expr_cache
+def col_as(name: str, alias: str) -> Column:
+    """``col(name).alias(alias)``, built once per pair (the compiler's
+    column-to-variable renames)."""
+    return col(name).alias(alias)

@@ -21,6 +21,8 @@ from typing import Union
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sparksqlplus_spark.expr_memo import col, expr_cache
+
 ColMap = dict[tuple[str, str], str]
 
 # ---------------------------------------------------------------------------
@@ -50,7 +52,7 @@ class Col(Expr):
         return {(self.alias, self.name)}
 
     def to_spark(self, colmap):
-        return F.col(colmap[(self.alias, self.name)])
+        return col(colmap[(self.alias, self.name)])
 
     def key(self):
         return f"{self.alias}.{self.name}"
@@ -65,17 +67,26 @@ class Lit(Expr):
         return set()
 
     def to_spark(self, colmap):
-        if self.kind == "date":
-            return F.to_date(F.lit(self.value))
-        if self.kind == "timestamp":
-            return F.to_timestamp(F.lit(self.value))
-        if self.kind == "interval_day":
-            # value = number of days; used in date arithmetic
-            return F.expr(f"INTERVAL {int(self.value)} DAY")
-        return F.lit(self.value)
+        # repr tells apart values that compare equal (1, 1.0, True;
+        # 0.0, -0.0), which would otherwise share one memo entry
+        return _lit_column(self, repr(self.value))
 
     def key(self):
         return f"{self.kind}:{self.value!r}"
+
+
+@expr_cache
+def _lit_column(lit: Lit, _repr: str) -> Column:
+    """A literal's Column, built once: literal pools repeat across
+    statements, and a DATE literal alone is two function calls."""
+    if lit.kind == "date":
+        return F.to_date(F.lit(lit.value))
+    if lit.kind == "timestamp":
+        return F.to_timestamp(F.lit(lit.value))
+    if lit.kind == "interval_day":
+        # value = number of days; used in date arithmetic
+        return F.expr(f"INTERVAL {int(lit.value)} DAY")
+    return F.lit(lit.value)
 
 
 @dataclass(frozen=True)

@@ -649,12 +649,12 @@ def embedding_neardup_pairs(
     Scale: bucket-local candidates keep the probe cost ~B·N·E[bucket]
     instead of N²; B and p trade recall against candidate volume.
     """
-    from sparksqlplus_spark.operators.similarity import cosine_similarity, lsh_bucket
+    from sparksqlplus_spark.operators.similarity import cosine_similarity, lsh_bucket_of
 
     buckets = [
         F.struct(
             F.lit(band).alias("band"),
-            lsh_bucket(F.col(vec_col), dim, n_planes, band * n_planes).alias("bucket"),
+            lsh_bucket_of(vec_col, dim, n_planes, band * n_planes).alias("bucket"),
         )
         for band in range(n_bands)
     ]

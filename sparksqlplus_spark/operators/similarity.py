@@ -160,6 +160,21 @@ def lsh_bucket(
 
 
 @expr_cache
+def lsh_bucket_of(
+    col_name: str,
+    dim: int,
+    n_planes: int = 8,
+    plane_offset: int = 0,
+    quantize: int | None = LSH_QUANT,
+) -> Column:
+    """:func:`lsh_bucket` of a named column, memoized per argument tuple:
+    the plane fold is ``n_planes`` higher-order-function lambdas built
+    through py4j (~0.1 s per bucket Column at dim 64), and the ANN and
+    cosine-dedup operators build the same buckets on every call."""
+    return lsh_bucket(F.col(col_name), dim, n_planes, plane_offset, quantize)
+
+
+@expr_cache
 def _plane_lit(dim: int, plane_idx: int, quantized: bool) -> Column:
     """One hyperplane as a literal array Column (memoized — the dim
     ``F.lit`` py4j round-trips per plane dominated lsh_bucket's
@@ -253,8 +268,8 @@ def lsh_cosine_topk(
     at 100 TB this is the difference between a bucket-local probe and an
     N×Q cross product.
     """
-    e = emb_df.withColumn("__bucket", lsh_bucket(F.col(vec_col), dim, n_planes))
-    q = query_df.withColumn("__bucket", lsh_bucket(F.col(query_vec_col), dim, n_planes))
+    e = emb_df.withColumn("__bucket", lsh_bucket_of(vec_col, dim, n_planes))
+    q = query_df.withColumn("__bucket", lsh_bucket_of(query_vec_col, dim, n_planes))
     joined = e.join(F.broadcast(q), "__bucket").filter(
         F.col(id_col) != F.col(query_id_col)
     )

@@ -25,7 +25,6 @@ greedy connected-join fallback below stays the correct baseline.
 from __future__ import annotations
 
 import copy
-import weakref
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -354,16 +353,6 @@ def ghd_multiplicity_safe(ctx: Context) -> bool:
     return all(r.primary_key_vars or r.kind == "agg" for r in ctx.relations)
 
 
-# Degree statistics for the auto router's density rule: a per-catalog
-# dict keyed by (table, local-filter signature, source column), held in
-# a WeakKeyDictionary so a garbage-collected catalog (web.py builds a
-# fresh engine per request) drops its stats instead of letting a reused
-# id() serve stale moments for a same-named table with different data.
-# Cached for the catalog's lifetime: repeated cyclic queries over the
-# same source (the bench's best-of-2 second run, the graph family) pay
-# zero extra planning jobs after the first.
-_degree_stats: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
 # Route auto->GHD when the break path's *smallest possible* first-join
 # intermediate exceeds this multiple of the total input rows. Measured
 # on the derived edge tables (scripts/exp_ghd_router.py): the sparse
@@ -382,10 +371,17 @@ def _break_blowup(spark, catalog, ctx: Context) -> float | None:
     the self-join/graph pattern where break's path-materialization
     pathology lives); anything else returns None and the router keeps
     the break path. Per (relation, var) we take exact degree moments
-    (rows, F2 = sum of per-key count^2) in one small aggregate job
-    each; a pair's equi-join size is bounded by Cauchy-Schwarz as
-    sqrt(F2_left * F2_right), exact for self-joins on the same key
-    distribution — 2-path count = F2 on the shared node column.
+    (rows, F2 = sum of per-key count^2) of the relation WITHOUT the
+    statement's local filters; a pair's equi-join size is bounded by
+    Cauchy-Schwarz as sqrt(F2_left * F2_right), exact for self-joins
+    on the same key distribution — 2-path count = F2 on the shared
+    node column. Filters only shrink rows and F2, so the estimate is
+    the density of the unfiltered core: a property of the data, not of
+    the literals. The moments are measured once per table column (one
+    small aggregate job each) and kept in the catalog for that
+    registration (``Catalog.table_stat``, keyed on the table's epoch),
+    so a new literal plans with no Spark job and a re-registered table
+    is measured afresh.
     """
     from pyspark.sql import functions as F
 
@@ -398,17 +394,14 @@ def _break_blowup(spark, catalog, ctx: Context) -> float | None:
         return None
     stats: dict[tuple[int, str], tuple[int, int]] = {}  # (rid, var) -> (rows, f2)
     for r in rels:
-        filters = ctx.local_filters.get(r.rid, [])
-        fsig = tuple(sorted(str(f) for f in filters))
-        df = None
-        cat_stats = _degree_stats.setdefault(catalog, {})
+        # a derived table's own projection and filters shape its rows
+        derived = str((r.sub_proj, r.pre_filters, r.pre_semi)) if r.sub_proj else ""
         for col, var in r.col_to_var.items():
-            key = (r.table, fsig, col)
-            if key not in cat_stats:
-                if df is None:
-                    df = build_relation_df(spark, catalog, r, filters, ctx.var_map)
+
+            def moments(r=r, var=var):
                 row = (
-                    df.groupBy(var)
+                    build_relation_df(spark, catalog, r, [], ctx.var_map)
+                    .groupBy(var)
                     .agg(F.count(F.lit(1)).alias("c"))
                     .agg(
                         F.coalesce(F.sum("c"), F.lit(0)).alias("rows"),
@@ -416,8 +409,11 @@ def _break_blowup(spark, catalog, ctx: Context) -> float | None:
                     )
                     .first()
                 )
-                cat_stats[key] = (int(row["rows"]), int(row["f2"]))
-            stats[(r.rid, var)] = cat_stats[key]
+                return int(row["rows"]), int(row["f2"])
+
+            stats[(r.rid, var)] = catalog.table_stat(
+                r.table, ("degree_moments", derived, col), moments
+            )
     total = sum(next(stats[(r.rid, v)] for v in r.variables)[0] for r in rels)
     if total == 0:
         return 0.0

@@ -113,6 +113,29 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # quieter driver logs
         .config("spark.ui.enabled", "false")
+        # --- no Python call-site capture per Column call -----------------
+        # PySpark wraps every functions.* / Column method in
+        # _with_origin, which (with this conf on, its default) records
+        # the calling Python frame in the JVM for error messages: an
+        # active-session lookup, a conf read, a set and a clear of
+        # PySparkCurrentOrigin — about 10 py4j round trips per call.
+        # Compiling one CQC statement makes hundreds of such calls, so
+        # capture was 3-4x the round trips of the plan itself and about
+        # half its compile time. The frame it records is always inside
+        # the compiler, never the user's SQL. With it off, analysis
+        # errors keep their class and message and lose only the
+        # Python-frame hint. PySpark reads the conf once per process,
+        # at the first Column call made under an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # --- generated-code cache ----------------------------------------
+        # Generated code inlines numeric and date literals, so a new
+        # literal in an ad-hoc statement is new Java source to compile,
+        # and a mix of a dozen statement shapes uses more classes than
+        # the default cache of 100 holds. Measured on perfbench
+        # cqc_adhoc (sf0.1, 4-core guest, 73 statements after warm-up):
+        # 577 Janino compilations (4.6 s) with 100 entries, 126 (1.4 s)
+        # with 1,000, and the same JVM RSS. Static: read at JVM start.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     extra = dict(extra_conf or {})
     if pretouch:

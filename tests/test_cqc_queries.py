@@ -475,6 +475,47 @@ def test_auto_density_routes_dense_to_ghd(graph_engine, oracle):
     assert sparse_plan["strategy"] == "break"
 
 
+def test_degree_stats_follow_table_registration(spark):
+    """The density rule's degree moments belong to one registration of a
+    table: re-registering ``graph`` with denser data under the same name
+    must re-measure them (a stale entry would keep the sparse blowup and
+    route the dense core to break), while a new filter literal on the
+    same registration adds no entry."""
+    import sparksqlplus_spark.plans.cyclic as cyc
+    from sparksqlplus_spark.api import SparkSQLPlus
+
+    eng = SparkSQLPlus(spark)
+    tri = """SELECT g1.src AS a, COUNT(*) AS n
+             FROM graph AS g1, graph AS g2, graph AS g3
+             WHERE g1.dst = g2.src AND g2.dst = g3.src AND g3.dst = g1.src
+               AND g1.src <= {k}
+             GROUP BY g1.src"""
+    ring = [(i, (i + 1) % 30) for i in range(30)]  # out-degree 1
+    clique = [(u, v) for u in range(30) for v in range(30) if u != v]
+
+    def blowup(k):
+        return cyc._break_blowup(spark, eng.catalog, eng.context(tri.format(k=k)))
+
+    eng.register(
+        "graph", spark.createDataFrame(ring, "src long, dst long"),
+        primary_key=("src", "dst"),
+    )
+    sparse = blowup(10)
+    eng.register(
+        "graph", spark.createDataFrame(clique, "src long, dst long"),
+        primary_key=("src", "dst"),
+    )
+    dense = blowup(10)
+    assert sparse < 1 <= cyc.GHD_BLOWUP <= dense
+
+    # only the live registration's moments are kept, one per column
+    n_stats = len(eng.catalog._stats)
+    assert blowup(20) == dense
+    assert len(eng.catalog._stats) == n_stats == 2
+    epoch = eng.catalog.get("graph").epoch
+    assert {k[0] for k in eng.catalog._stats} == {epoch}
+
+
 def test_cycle_bag_wcoj_c4_and_c5(graph_engine, oracle):
     """Round-4 verdict item 6: a k-cycle (k >= 4) evaluates as ONE
     k-ary WCOJ bag (operators/wcoj.py:cycle_join) instead of bags of

@@ -230,3 +230,140 @@ def test_runtime_bloom_filter_fires(spark, engine):
         # the plan above was memoized under the forced-shuffle confs —
         # drop it so later tests re-plan under the restored session
         engine.clear_plan_cache()
+
+
+# --- compile cost: JVM round trips and Spark jobs inside eng.sql -----------
+# A fresh statement (new literals, plan-cache miss) on a warm engine
+# compiles in about a hundred py4j round trips: Column fragments are
+# memoized (expr_memo.col / col_as, expressions._lit_column), each
+# relation is one select plus one AND-ed filter, and get_spark turns
+# PySpark's per-call call-site capture off. Bounds are the measured
+# counts at pin time (sf0.001) plus headroom; before these changes the
+# same statements took 800-1400 round trips.
+COMPILE_STATEMENTS = {
+    # name -> (SQL template, warm-up literals, measured literals)
+    "theta_chain": (
+        """SELECT l.l_orderkey, l.l_suppkey, s.s_nationkey, n.n_name
+           FROM lineitem AS l, supplier AS s, nation AS n
+           WHERE l.l_suppkey = s.s_suppkey AND s.s_nationkey = n.n_nationkey
+             AND l.l_extendedprice < s.s_acctbal * {f} AND n.n_regionkey = {r}""",
+        {"f": 10, "r": 1},
+        {"f": 20, "r": 2},
+    ),
+    "tpch_q3": (
+        """SELECT l.l_orderkey,
+                  SUM(l.l_extendedprice * (1 - l.l_discount)) AS revenue,
+                  o.o_orderdate, o.o_orderstatus
+           FROM customer AS c, orders AS o, lineitem AS l
+           WHERE c.c_mktsegment = '{seg}' AND c.c_custkey = o.o_custkey
+             AND l.l_orderkey = o.o_orderkey AND o.o_orderdate < DATE '{d}'
+             AND l.l_shipdate > DATE '{d}'
+           GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderstatus
+           ORDER BY revenue DESC, l_orderkey LIMIT 10""",
+        {"seg": "BUILDING", "d": "1996-03-15"},
+        {"seg": "MACHINERY", "d": "1997-06-01"},
+    ),
+    "tpch_q10": (
+        """SELECT c.c_custkey, c.c_name,
+                  SUM(l.l_extendedprice * (1 - l.l_discount)) AS revenue,
+                  c.c_acctbal, n.n_name
+           FROM customer AS c, orders AS o, lineitem AS l, nation AS n
+           WHERE c.c_custkey = o.o_custkey AND l.l_orderkey = o.o_orderkey
+             AND o.o_orderdate >= DATE '{d0}' AND o.o_orderdate < DATE '{d1}'
+             AND l.l_returnflag = '{flag}' AND c.c_nationkey = n.n_nationkey
+           GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
+           ORDER BY revenue DESC, c_custkey LIMIT 20""",
+        {"d0": "1994-01-01", "d1": "1994-04-01", "flag": "R"},
+        {"d0": "1995-01-01", "d1": "1995-04-01", "flag": "A"},
+    ),
+}
+
+# name -> max py4j round trips inside eng.sql for the measured statement
+# (measured 92 / 142 / 167 at pin time)
+PY4J_BOUNDS = {
+    "theta_chain": 120,
+    "tpch_q3": 180,
+    "tpch_q10": 200,
+}
+
+
+def count_py4j(monkeypatch, fn):
+    """(result, py4j round trips) of ``fn()``, counted by wrapping
+    ``GatewayClient.send_command``. Object-release commands are left
+    out: the py4j finalizer sends them whenever Python collects a
+    JavaObject, at times that do not depend on the code measured."""
+    from py4j.java_gateway import GatewayClient
+
+    n = [0]
+    orig = GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            n[0] += 1
+        return orig(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    try:
+        out = fn()
+    finally:
+        monkeypatch.setattr(GatewayClient, "send_command", orig)
+    return out, n[0]
+
+
+@pytest.mark.parametrize("name", sorted(PY4J_BOUNDS))
+def test_compile_py4j_bound(engine, monkeypatch, name):
+    sql, warm, fresh = COMPILE_STATEMENTS[name]
+    engine.sql(sql.format(**warm))  # memoized fragments, as on a warm engine
+    df, n = count_py4j(monkeypatch, lambda: engine.sql(sql.format(**fresh)))
+    assert n <= PY4J_BOUNDS[name], (
+        f"{name} now compiles in {n} py4j round trips (pinned max "
+        f"{PY4J_BOUNDS[name]})"
+    )
+    assert df.count() >= 0
+
+
+def test_fresh_literal_triangle_runs_no_spark_job(spark):
+    """The cyclic router's density estimate reads degree moments kept in
+    the catalog per table registration, not per filter literal: once a
+    triangle over a table has been planned, the same shape with a new
+    literal compiles without running a single Spark job."""
+    from sparksqlplus_spark.api import SparkSQLPlus
+    import sparksqlplus_spark.plans.cyclic as cyc
+
+    eng = SparkSQLPlus(spark)
+    edges = [(i, (i * 7 + 3) % 40) for i in range(40)] + [
+        (i, (i * 11 + 5) % 40) for i in range(40)
+    ]
+    eng.register(
+        "tri_graph",
+        spark.createDataFrame(sorted(set(edges)), "src long, dst long"),
+        primary_key=("src", "dst"),
+    )
+    tri = """SELECT g1.src AS a, COUNT(*) AS n
+             FROM tri_graph AS g1, tri_graph AS g2, tri_graph AS g3
+             WHERE g1.dst = g2.src AND g2.dst = g3.src AND g3.dst = g1.src
+               AND g1.src <= {k}
+             GROUP BY g1.src"""
+    eng.sql(tri.format(k=20)).collect()  # warm: measures the moments
+    sc = spark.sparkContext
+    group = "fresh_literal_triangle"
+    sc.setJobGroup(group, group)
+    try:
+        df = eng.sql(tri.format(k=31))
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert cyc.last_strategy == "break"
+    assert list(jobs) == []
+    assert df.count() >= 0
+
+
+def test_session_compile_confs(spark):
+    """get_spark turns off PySpark's per-Column-call Python call-site
+    capture (about ten py4j round trips per functions.* call) and sizes
+    the generated-code cache for an ad-hoc statement stream."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == 1000

@@ -150,6 +150,25 @@ def test_expr_memo_drops_dead_epoch_entries(spark):
     assert tokens_col("text") is c2
 
 
+def test_expr_cache_is_bounded():
+    """Every memoized builder is an LRU of at most EXPR_CACHE_MAXSIZE
+    entries: the compiler memoizes per column name and literal, so a
+    long-lived session compiling ever new names must not grow it."""
+    from sparksqlplus_spark import expr_memo
+
+    @expr_memo.expr_cache
+    def frag(i: int) -> int:
+        return i * 2
+
+    cap = expr_memo.EXPR_CACHE_MAXSIZE
+    for i in range(cap + 100):
+        assert frag(i) == i * 2
+        assert frag.cache_info().currsize <= cap
+    assert frag.cache_info().currsize == cap
+    assert frag.cache_info().maxsize == cap
+    assert expr_memo.col.cache_info().maxsize == cap
+
+
 def test_memos_and_engine_survive_session_restart():
     """End-to-end restart pin (r17 VERDICT item 4): in a FRESH python
     process, build a session, run a memoized operator and a plan-cached
