@@ -37,7 +37,8 @@ GRAPH_SQL_DUCK = (
 # small node domain (max_orderkey/20) => avg out-degree ~50-80 at EVERY
 # SF. On this shape the break rewrite's first join materializes
 # sum(deg^2) ~ 15-30x the input rows, so the auto router's density rule
-# sends it to GHD + per-bag WCOJ instead (plans/cyclic.py GHD_BLOWUP).
+# sends it to GHD + a per-bag triangle join instead (plans/cyclic.py
+# GHD_BLOWUP).
 _DENSE_N = "(SELECT GREATEST(CAST(FLOOR(MAX(l_orderkey)/20.0) AS BIGINT), 16) FROM lineitem)"
 DENSE_GRAPH_SQL = (
     f"SELECT DISTINCT 1 + (l_orderkey % {_DENSE_N}) AS src, "
@@ -2806,7 +2807,7 @@ WHERE g1.dst = g2.src AND g2.dst = g3.src AND g3.dst = g1.src
 
 # --- reference q2 (examples/query/q2/query.sql): dumbbell + the
 # cross-triangle sum comparison, executed through the GHD path — bags
-# {g1,g2,g3} and {g4,g5,g6} run the WCOJ kernel, the bridge joins them,
+# {g1,g2,g3} and {g4,g5,g6} run the triangle join, the bridge joins them,
 # and the 3-relation-per-side comparison becomes a single bag-level CQC
 # comparison (min/max migration between the two triangle bags). In the
 # reference this query is unbreakable (no usable PKs) and is the
@@ -2832,7 +2833,7 @@ def _q2_ghd_q(spark, sf_dir):
 # per node on the DENSE derived graph, submitted with strategy AUTO.
 # The density rule (plans/cyclic.py:_break_blowup) measures the break
 # path's first-join blowup (sum deg^2 / inputs ~ 15-30x here) and
-# routes to GHD + per-bag WCOJ; tests/test_planner.py asserts
+# routes to GHD + a per-bag triangle join; tests/test_planner.py asserts
 # last_strategy == "ghd" through this exact path. Reference intent:
 # CyclicHandler.scala:13-24 (strategy chosen per query).
 _DENSE_TRI_SQL = """

@@ -9,10 +9,13 @@ sequence. Byte-identical fingerprints between two trees prove the
 round's code changes did not alter any benched plan.
 
 Usage:
-  PYTHONPATH=<tree> python3 scripts/plan_fingerprints.py <tree> [out.json]
+  PYTHONPATH=<tree> python3 scripts/plan_fingerprints.py <tree> [out.json] [entry ...]
 
-Run once per tree (fresh process each — module-level engine caches),
-then diff the JSON files.
+The entries default to the bench headline set (bench.HEADLINE); name
+``__spark_entry__`` queries after the output file to fingerprint those
+instead (say, the GHD entries the headline leaves out). Run once per
+tree (fresh process each — module-level engine caches), then diff the
+JSON files.
 """
 
 from __future__ import annotations
@@ -68,6 +71,7 @@ def normalize(plan: str) -> list[str]:
 def main() -> None:
     tree = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 else "."
     out = sys.argv[2] if len(sys.argv) > 2 else None
+    names = sys.argv[3:]
     sys.path.insert(0, tree)
     from sparksqlplus_spark.session import get_spark
 
@@ -77,7 +81,7 @@ def main() -> None:
     spark = get_spark(app_name="plan_fp", master="local[8]")
     qs = em.queries()
     res = {}
-    for name in bench.HEADLINE:
+    for name in names or bench.HEADLINE:
         try:
             df = qs[name](spark, SF_DIR)
             plan = df._jdf.queryExecution().sparkPlan().toString()

@@ -5554,7 +5554,7 @@ class SparkSQLPlus:
             elif tri is not None and all(
                 _integral_types(dfs[rel.rid], [a, b]) for rel, (a, b) in tri
             ):
-                kind = "wcoj-triangle"
+                kind = "triangle"
             else:
                 kind = "binary-joins"
             aliases = ", ".join(m.alias for m in members)

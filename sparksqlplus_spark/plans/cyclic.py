@@ -206,19 +206,21 @@ def _eval_bag(
 ) -> DataFrame:
     """Evaluate one GHD bag to a DataFrame over its variables.
 
-    Triangle-shaped bags with integral keys run the worst-case-optimal
-    hypercube kernel (reference: per-bag lftj,
-    SqlPlusCompiler.scala:155-168); anything else joins members
-    pairwise in connected order. Set semantics over the bag variables
-    (the GHD path assumes duplicate-free inputs — see execute_ghd).
+    Triangle-shaped bags with integral keys run wcoj.triangle_join —
+    two Catalyst hash joins and one DISTINCT (the reference runs its
+    per-bag lftj here, SqlPlusCompiler.scala:155-168); k-cycle and
+    other cyclic binary bags run the worst-case-optimal hypercube
+    kernels; anything else joins members pairwise in connected order.
+    Set semantics over the bag variables (the GHD path assumes
+    duplicate-free inputs — see execute_ghd).
 
     ``filtered_rids``: bag members carrying pushed local/semi filters.
     When a cycle/triangle bag contains one, the edge frames run a
-    GLOBAL neighbor-consistency sweep (wcoj.cycle_semi_reduce) before
-    the hypercube shuffle — the filter's selectivity then shrinks the
-    replicated shuffle instead of being discovered per-cell after
-    cube_side^(k-2)x replication has been paid (round 11: the filtered
-    pentagon went superlinear at 10x sf0.1 without this).
+    GLOBAL neighbor-consistency sweep (wcoj.cycle_semi_reduce) first —
+    the filter's selectivity then shrinks every side before the joins
+    or the replicated hypercube shuffle instead of being discovered
+    after them (round 11: the filtered pentagon went superlinear at
+    10x sf0.1 without this).
     """
     from pyspark.sql import functions as F
 
@@ -241,7 +243,7 @@ def _eval_bag(
         (R, (a, b)), (S, (_, c)), (T, _) = tri
         sides = [dfs[R.rid].select(a, b), dfs[S.rid].select(b, c), dfs[T.rid].select(c, a)]
         if all(_integral_types(s, s.columns) for s in sides):
-            last_bag_kinds.append("wcoj-triangle")
+            last_bag_kinds.append("triangle")
             if any(r.rid in filtered_rids for r in (R, S, T)):
                 # T is stored (c, a) but participates as the 3-cycle
                 # edge (a-side = c): the orientation above already

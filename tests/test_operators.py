@@ -46,6 +46,70 @@ def test_wcoj_empty_graph(spark):
     assert triangles_wcoj(empty).count() == 0
 
 
+def test_triangle_join_is_the_triangle_set(spark):
+    """triangle_join returns exactly the set of (a, b, c) with
+    R(a,b), S(b,c), T(c,a) — no duplicate rows whatever the inputs
+    repeat, which is the set semantics execute_ghd relies on for a
+    triangle bag. Checked against a Python brute force on three
+    distinct relations (columns read by position, names differ) with
+    planted duplicate edges, negative ids, ids past 2**53 (adjacent
+    ones collapse as doubles), an int side joined to long sides, a
+    self-join and an empty side."""
+    import random
+
+    from sparksqlplus_spark.operators.wcoj import triangle_join, triangles_wcoj
+
+    rng = random.Random(11)
+
+    def edges(ids, n):
+        es = [(rng.choice(ids), rng.choice(ids)) for _ in range(n)]
+        return es + es[: n // 3]  # planted duplicates
+
+    def brute(r, s, t):
+        t_set = set(t)
+        return {(a, b, c) for a, b in r for b2, c in s if b2 == b and (c, a) in t_set}
+
+    def frame(rows, cols, typ="long"):
+        return spark.createDataFrame(rows, f"{cols[0]} {typ}, {cols[1]} {typ}")
+
+    def check(r, s, t, label, sides=None):
+        sides = sides or (
+            frame(r, ("r_a", "r_b")),
+            frame(s, ("s_b", "s_c")),
+            frame(t, ("t_c", "t_a")),
+        )
+        out = triangle_join(*sides)
+        assert out.columns == ["a", "b", "c"], label
+        got = [tuple(row) for row in out.collect()]
+        assert len(got) == len(set(got)), (label, "duplicate rows")
+        assert set(got) == brute(r, s, t), label
+        return got
+
+    small = list(range(1, 13))
+    negative = list(range(-7, 6))
+    huge = [2**53 + i for i in range(12)] + [2**62 + 1, 2**62 + 2]
+    for ids, label in ((small, "small"), (negative, "negative"), (huge, "huge")):
+        r, s, t = edges(ids, 60), edges(ids, 60), edges(ids, 60)
+        assert check(r, s, t, label), label  # the draw has triangles
+        assert check(r, s, [], label + "/empty T") == []
+        assert check([], s, t, label + "/empty R") == []
+
+    # mixed integer widths: an int T still matches long R and S
+    r, s, t = edges(small, 60), edges(small, 60), edges(small, 60)
+    sides = (
+        frame(r, ("r_a", "r_b")),
+        frame(s, ("s_b", "s_c")),
+        frame(t, ("t_c", "t_a"), "int"),
+    )
+    assert check(r, s, t, "int T", sides=sides)
+
+    e = edges(negative, 70)
+    df = frame(e, ("src", "dst"))
+    got = check(e, e, e, "self-join", sides=(df, df, df))
+    assert got
+    assert sorted(tuple(row) for row in triangles_wcoj(df).collect()) == sorted(got)
+
+
 def test_minhash_identical_docs_caught(spark):
     from sparksqlplus_spark.operators.dedup import minhash_dedup_pairs
 
@@ -1349,8 +1413,6 @@ def test_cycle_kernel_numpy_matches_pandas():
     from sparksqlplus_spark.operators.wcoj import (
         _cycle_in_cell,
         _cycle_in_cell_pandas,
-        _triangles_in_cell,
-        _triangles_in_cell_pandas,
     )
 
     rng = np.random.default_rng(7)
@@ -1386,17 +1448,6 @@ def test_cycle_kernel_numpy_matches_pandas():
                 a = _cycle_in_cell(pdf.copy(), k, reduce_edges)
                 b = _cycle_in_cell_pandas(pdf.copy(), k, reduce_edges)
                 assert canon(a) == canon(b), (k, shift, same, reduce_edges)
-
-    # triangle tags
-    parts = []
-    for tag in ("r", "s", "t"):
-        x = rng.integers(1, 60, 400)
-        y = rng.integers(1, 60, 400)
-        parts.append(pd.DataFrame({"rel": tag, "x": x, "y": y}))
-    tri = pd.concat(parts, ignore_index=True)
-    assert canon(_triangles_in_cell(tri.copy())) == canon(
-        _triangles_in_cell_pandas(tri.copy())
-    )
 
     # id range too wide to pack -> fallback must engage and agree
     wide = mk(3, 200, 50)

@@ -72,8 +72,12 @@ BOUNDS = {
     # stats-gated pre-hypercube semi-reduce sweep's key exchanges.
     # Measured 6 at pin time (sf0.001).
     "graph_c5_pentagon_ghd": 6,
-    # r13: the WCOJ triangle kernel — ONE live exchange: the cell
-    # repartition feeding applyInPandas (same caveat as the pentagon).
+    # the triangle join: two hash joins and one DISTINCT over the
+    # output. At sf0.001 both joins broadcast, and the DISTINCT needs
+    # no exchange: the streamed side keeps the persisted graph's
+    # hash(src, dst) partitioning, which clusters every (a, b, c).
+    # Measured 0; an input without that partitioning adds the
+    # DISTINCT's one exchange.
     "graph_triangle_wcoj": 1,
     # KEYED multi-comparison [NOT] IN / OR'd-EXISTS entries: no
     # native plan (Catalyst-only, SCALING.md round 14), so each is
@@ -367,3 +371,30 @@ def test_session_compile_confs(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == 1000
+
+
+# Spark jobs one collect() of the triangle entry runs once its graph
+# cache is materialized (measured 3 at pin time, sf0.001)
+TRIANGLE_JOBS = 3
+
+
+def test_triangle_join_plans_no_python_kernel(spark):
+    """The triangle join is a pure Catalyst plan: no grouped-map pandas
+    node (FlatMapGroupsInPandas) and no more Spark jobs than pinned."""
+    eng = em._engine(spark, SF_DIR)
+    eng.catalog.get("graph").df.count()  # materialize the persisted graph
+    df = em.queries()["graph_triangle_wcoj"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    sc = spark.sparkContext
+    group = "triangle_join_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) <= TRIANGLE_JOBS, (
+        f"the triangle entry now runs {len(jobs)} Spark jobs (pinned max "
+        f"{TRIANGLE_JOBS})"
+    )
