@@ -13,7 +13,9 @@ Usage:
 
 The entries default to the bench headline set (bench.HEADLINE); name
 ``__spark_entry__`` queries after the output file to fingerprint those
-instead (say, the GHD entries the headline leaves out). Run once per
+instead (say, the GHD entries the headline leaves out). A ``_noop``
+headline twin is looked up under its base entry (``bench._base_name``):
+it plans the same DataFrame, only its timed action differs. Run once per
 tree (fresh process each — module-level engine caches), then diff the
 JSON files.
 """
@@ -83,7 +85,7 @@ def main() -> None:
     res = {}
     for name in names or bench.HEADLINE:
         try:
-            df = qs[name](spark, SF_DIR)
+            df = qs[bench._base_name(name)](spark, SF_DIR)
             plan = df._jdf.queryExecution().sparkPlan().toString()
             lines = normalize(plan)
             res[name] = {

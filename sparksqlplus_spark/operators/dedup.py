@@ -8,9 +8,10 @@ oracle (DuckDB) can reproduce results bit-for-bit:
 BIGINT and in IEEE doubles.
 
 Scale design: everything is expression-level Spark SQL (whole-stage
-codegen; no Python UDFs), shuffles only on groupBy/self-join keys;
-LSH banding is the blocking strategy — candidate pairs come from
-band-bucket equality joins, never an all-pairs product.
+codegen; no Python UDFs), shuffles only on groupBy/join keys; LSH
+banding is the blocking strategy — candidate pairs come from grouping
+documents by band bucket (one aggregate over the signatures), never an
+all-pairs product.
 """
 
 from __future__ import annotations
@@ -191,26 +192,35 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become a candidate pair.
 
-    One shuffle on (band, bucket); the self-join never materializes an
-    all-pairs product. Returns distinct (id_a, id_b) with id_a < id_b.
+    One aggregate keyed on (band, bucket) collects each bucket's sorted
+    distinct ids, so every signature is read and hashed once (a
+    self-join of the bucket frame derived it on both sides). Singleton
+    buckets drop out; each id then pairs with the ids after it in its
+    bucket (``posexplode`` + ``explode(slice(...))``), so a bucket of m
+    docs streams its m(m-1)/2 pairs without any row holding them all.
+    NULL ids and repeated rows of one id never pair (``collect_set``).
+    Returns distinct (id_a, id_b) with id_a < id_b.
     """
     buckets = sig_df.select(
         F.col(id_col),
         F.explode(F.array(*_lsh_band_cols(n_hashes, bands))).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    left = buckets.alias("a")
-    right = buckets.alias("b")
+    )
     return (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            "inner",
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        buckets.groupBy(F.col("bb.band"), F.col("bb.bucket"))
+        .agg(F.array_sort(F.collect_set(id_col)).alias("__ids"))
+        .filter(F.size("__ids") > 1)
+        .select(F.posexplode("__ids").alias("__pos", "id_a"), "__ids")
+        .select("id_a", F.explode(_lsh_pair_tail()).alias("id_b"))
         .distinct()
     )
+
+
+@expr_cache
+def _lsh_pair_tail() -> Column:
+    """The ids after position ``__pos`` in a bucket's sorted ``__ids``
+    (``slice`` is 1-based, ``posexplode`` 0-based; memoized — see
+    :func:`tokens_col` for why)."""
+    return F.slice(F.col("__ids"), F.col("__pos") + 2, F.size("__ids"))
 
 
 @expr_cache
@@ -296,6 +306,27 @@ def _scan_partition_estimate(df: DataFrame) -> int:
     return est
 
 
+def spread_partitions(df: DataFrame) -> DataFrame:
+    """``df`` round-robin repartitioned to ``defaultParallelism`` when its
+    scan is estimated to yield fewer tasks than that, else ``df`` as is.
+
+    A single small file (one parquet row group) caps an operator's
+    heavy stage at one task; a well-partitioned 100 TB input skips
+    this, since an unconditional repartition would be a gratuitous full
+    shuffle. The probe is :func:`_scan_partition_estimate` — metadata
+    the scan relation already holds — NOT
+    ``df.rdd.getNumPartitions()``, which would instantiate the RDD
+    lineage of a possibly-complex frame just to read a number (round-6
+    verdict note). A frame with no file provenance (pure in-memory or
+    cached input) repartitions: either it is tiny or it sits behind a
+    shuffle whose partitioning the repartition replaces at the same
+    width."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if _scan_partition_estimate(df) < parallelism:
+        return df.repartition(parallelism)
+    return df
+
+
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str,
@@ -308,26 +339,13 @@ def minhash_dedup_pairs(
     """Full MinHash-LSH near-dup pipeline: signatures → banding →
     candidate pairs → exact Jaccard verify. Returns verified pairs.
 
-    Shingles are computed once and persisted (the signature build, the
-    band self-join, and the verify stage all consume them — without
-    reuse each downstream stage re-derives the whole upstream)."""
-    # spread the md5-heavy shingle/signature stage across the cluster
-    # when the input arrives under-partitioned (a single small file caps
-    # parallelism at its partition count); a well-partitioned 100 TB
-    # input skips this — an unconditional repartition would be a
-    # gratuitous full shuffle of the shingle frame. The probe is
-    # inputFiles() — metadata already held by the scan relation — NOT
-    # df.rdd.getNumPartitions(), which would instantiate the RDD
-    # lineage of a possibly-complex frame just to read a number
-    # (round-6 verdict note). A frame with no file provenance (pure
-    # in-memory input) repartitions: either it is tiny or it sits
-    # behind a shuffle whose partitioning the repartition replaces at
-    # the same width. Then persist: three downstream stages reuse it
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    sh = shingle_frame(df, text_col, id_col, shingle_n)
-    if _scan_partition_estimate(df) < parallelism:
-        sh = sh.repartition(parallelism)
-    sh = sh.persist()
+    The input is spread over the cluster first (:func:`spread_partitions`)
+    so the md5-heavy shingle and signature stages use every core.
+    Shingles are computed once and persisted: the signature build (read
+    once, by the band-bucket aggregate of :func:`lsh_candidate_pairs`)
+    and both sides of the verify join consume them — without reuse each
+    downstream stage re-derives the whole upstream."""
+    sh = shingle_frame(spread_partitions(df), text_col, id_col, shingle_n).persist()
     sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_n, shingles=sh)
     cand = lsh_candidate_pairs(sig, id_col, n_hashes, bands)
     return ngram_jaccard_pairs(
@@ -567,10 +585,11 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     """Per-document SimHash fingerprint (majority vote of token-hash bits).
 
     Single groupBy pass: per bit b, count tokens with bit b set; bit is
-    1 when strictly more than half the tokens set it. Returns
+    1 when strictly more than half the tokens set it. The token-hash
+    stage runs over :func:`spread_partitions` of the input. Returns
     (id, simhash bigint, n_tokens).
     """
-    tok = df.select(
+    tok = spread_partitions(df).select(
         F.col(id_col), F.explode(tokens_col(text_col)).alias("tok")
     ).withColumn("th", h52(F.col("tok")))
     per_doc = tok.groupBy(id_col).agg(*_simhash_pack_aggs(bits))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sparksqlplus_spark.expr_memo import expr_cache
+from sparksqlplus_spark.operators.dedup import spread_partitions
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -80,10 +81,14 @@ def cosine_topk(
 
     The query side is broadcast (small by contract); candidates rank
     per query with a deterministic tie-break on neighbor id.
-    Self-matches (same id) are excluded.
+    Self-matches (same id) are excluded. The scoring stage runs over
+    :func:`~sparksqlplus_spark.operators.dedup.spread_partitions` of the
+    vectors, so a single-file table does not score on one core.
     """
     q = F.broadcast(query_df)
-    joined = emb_df.crossJoin(q).filter(F.col(id_col) != F.col(query_id_col))
+    joined = spread_partitions(emb_df).crossJoin(q).filter(
+        F.col(id_col) != F.col(query_id_col)
+    )
     scored = joined.select(
         *_scored_cols(id_col, vec_col, query_id_col, query_vec_col)
     )

@@ -127,6 +127,123 @@ def test_minhash_identical_docs_caught(spark):
     assert pairs[0]["jaccard"] == 1.0
 
 
+def test_lsh_candidate_pairs_brute_force(spark):
+    """``lsh_candidate_pairs`` against a Python pair set on a hand-built
+    signature frame (12 hashes, 4 bands of 3): a bucket shared by four
+    docs, a pair sharing two bands (reported once), an id whose row is
+    repeated (never paired with itself), a NULL id in a shared bucket
+    and in an otherwise singleton bucket (never paired), and singleton
+    buckets everywhere else. Ids mix signs and magnitudes, so a
+    non-numeric sort would misorder them."""
+    from itertools import combinations
+
+    from sparksqlplus_spark.operators.dedup import _lsh_pair_tail, lsh_candidate_pairs
+
+    n_hashes, bands, rows = 12, 4, 3
+    fresh = iter(range(1000, 10**6, 7))
+
+    def sig(**shared):
+        # band -> shared 3-value key; every other band gets fresh values
+        out = []
+        for b in range(bands):
+            key = shared.get(f"b{b}") or [next(fresh) for _ in range(rows)]
+            out += list(key)
+        return out
+
+    quad, two_a, two_b = (1, 2, 3), (4, 5, 6), (7, 8, 9)
+    dup, lone = (10, 11, 12), (13, 14, 15)
+    big = 2**40
+    docs = [
+        (100, sig(b0=quad)), (9, sig(b0=quad)), (-3, sig(b0=quad)), (big, sig(b0=quad)),
+        (None, sig(b0=quad, b3=lone)),  # NULL id in a shared and a lone bucket
+        (42, sig(b1=two_a, b2=two_b)), (41, sig(b1=two_a, b2=two_b)),
+        (7, sig(b3=dup)), (8, sig(b3=dup)),
+        (55, sig()), (56, sig()),
+    ]
+    docs.append(docs[7])  # id 7's row twice: same signature, every band shared
+    docs.append((7, sig(b2=(16, 17, 18))))  # id 7 again, alone in its band-2 bucket
+    frame = spark.createDataFrame(
+        [(i, *mh) for i, mh in docs],
+        "doc_id long, " + ", ".join(f"mh_{j} long" for j in range(n_hashes)),
+    )
+
+    want = set()
+    for b in range(bands):
+        buckets: dict = {}
+        for i, mh in docs:
+            if i is not None:
+                buckets.setdefault(tuple(mh[b * rows:(b + 1) * rows]), set()).add(i)
+        for ids in buckets.values():
+            want |= set(combinations(sorted(ids), 2))
+    assert {(-3, 9), (9, 100), (100, big), (41, 42), (7, 8)} <= want
+    assert len(want) == 8
+
+    got = lsh_candidate_pairs(frame, "doc_id", n_hashes, bands).collect()
+    got = [tuple(r) for r in got]
+    assert len(got) == len(set(got))  # distinct: (41, 42) shares two bands
+    assert set(got) == want
+    assert all(a < b for a, b in got)
+    assert _lsh_pair_tail() is _lsh_pair_tail()
+
+
+def test_text_stats_translate_counts_match_regex(spark):
+    """The alpha / digit / whitespace counts behind ``text_stats`` come
+    from ``translate`` deletions; they equal the lengths of the
+    ``regexp_replace`` class filters they replaced (and that the DuckDB
+    oracles use), including on empty and whitespace-only text, a bare
+    carriage return (not in the whitespace class), accented letters,
+    non-ASCII digits and a surrogate-pair emoji."""
+    import re
+
+    from sparksqlplus_spark.operators.text import _class_count, text_stats
+
+    texts = [
+        "", "   ", "\r", "\t", "\n", " \r\t\n ", "é", "٣", "\U0001F600",
+        "Mixed 42 text\twith é, ٣ and \U0001F600!\r\nDone. 7\n", None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    t = F.col("text")
+
+    def regex_count(cls):
+        return F.length(F.regexp_replace(t, cls, "")).cast("double")
+
+    classes = [
+        ("[^A-Za-z]", "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"),
+        ("[^0-9]", "0123456789"),
+        ("[^ \t\n]", " \t\n"),
+    ]
+    for cls, chars in classes:
+        rows = df.select(regex_count(cls), _class_count(t, chars)).collect()
+        assert [r[0] for r in rows] == [r[1] for r in rows], cls
+    mixed = df.filter(F.col("doc_id") == 9).select(
+        *[_class_count(t, chars) for _, chars in classes]
+    ).first()
+    assert tuple(mixed) == tuple(
+        float(len(re.sub(cls, "", texts[9]))) for cls, _ in classes
+    )
+
+    # the ratios divide by the length: under ANSI mode an empty text
+    # raises DIVIDE_BY_ZERO in either form, so it only takes part above
+    df = df.filter(~(F.length(t) == 0))
+    n = F.length(t).cast("double")
+    alpha, digit, space = (regex_count(cls) for cls, _ in classes)
+    ref = df.select(
+        "doc_id",
+        alpha / n, digit / n, (n - alpha - digit - space) / n, n - space,
+    )
+    got = text_stats(df, "text", "doc_id").select(
+        "doc_id", "alpha_ratio", "digit_ratio", "punct_ratio",
+        F.col("avg_word_len") * F.greatest(
+            F.col("n_words").cast("double"), F.lit(1.0)
+        ),
+    )
+
+    def key(rows):
+        return sorted(tuple("nan" if v != v else v for v in r) for r in rows)
+
+    assert key(got.collect()) == key(ref.collect())
+
+
 def test_ngram_contamination_flags_and_broadcasts(spark):
     """Decontamination: only the corpus doc sharing a 3-gram with the
     benchmark is flagged, counts are exact, and the benchmark side is
@@ -1535,7 +1652,7 @@ def test_dedup_expression_memos_identity_and_rebuild(spark):
 
     def norm(frame):
         plan = frame._jdf.queryExecution().sparkPlan().toString()
-        return re.sub(r"#\d+L?", "#x", plan)
+        return re.sub(r"plan_id=\d+", "plan_id=x", re.sub(r"#\d+L?", "#x", plan))
 
     a = simhash(df, "text", "doc_id", bits=32)
     b = simhash(df, "text", "doc_id", bits=32)

@@ -16,6 +16,8 @@ sample_stratified must plan with ZERO shuffles (their SCALING.md
 exactly one key exchange (its documented plan).
 """
 
+import re
+
 import pytest
 
 import __spark_entry__ as em
@@ -44,6 +46,8 @@ BOUNDS = {
     "tpch_q6": 1,
     "tpch_q17": 2,
     "dedup_exact": 1,
+    # the (band, bucket) aggregate and the candidate-pair DISTINCT; the
+    # input spread sits under the persisted shingle frame. Measured 2.
     "dedup_minhash_lsh": 5,
     "text_stats": 0,
     "sample_stratified": 0,
@@ -398,3 +402,47 @@ def test_triangle_join_plans_no_python_kernel(spark):
         f"the triangle entry now runs {len(jobs)} Spark jobs (pinned max "
         f"{TRIANGLE_JOBS})"
     )
+
+
+# the MinHash band-bucket generator: explode(array(struct(band, ...)))
+BAND_GENERATE = re.compile(r"Generate explode\(array\(struct\(band,")
+
+
+def test_minhash_band_buckets_built_once(spark):
+    """``lsh_candidate_pairs`` groups the signatures by band bucket in
+    one aggregate, so the plan derives the band buckets (and md5-hashes
+    every shingle) once; a self-join of the bucket frame derives them
+    on both of its sides."""
+    df = em.queries()["dedup_minhash_lsh"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert len(BAND_GENERATE.findall(plan)) == 1, plan
+
+
+def test_spread_partitions_follows_scan_estimate(spark, tmp_path):
+    """``spread_partitions`` repartitions a single small file to
+    ``defaultParallelism`` and hands the frame back unchanged when a
+    small ``spark.sql.files.maxPartitionBytes`` makes the scan estimate
+    reach that width by itself."""
+    import os
+
+    from sparksqlplus_spark.operators.dedup import spread_partitions
+
+    par = spark.sparkContext.defaultParallelism
+    assert par > 1
+    path = str(tmp_path / "one")
+    spark.range(500).coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    (part,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    spread = spread_partitions(one)
+    assert spread is not one
+    assert spread.rdd.getNumPartitions() == par
+    assert sorted(spread.collect()) == sorted(one.collect())
+
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        size = os.path.getsize(os.path.join(path, part))
+        spark.conf.set(conf, str(max(size // par, 1)))
+        assert spread_partitions(one) is one
+    finally:
+        spark.conf.set(conf, old)
