@@ -707,7 +707,7 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # (plans/frontier.py:global_neq_order2_points — the same pure
     # sweep the keyed path runs, driver-side) and the match fact is a
     # distributed per-y keyed view
-    # (cqc._apply_neq_triple_not_in_keyless). DuckDB cannot oracle
+    # (plans/not_in.py:_neq_triple_flag). DuckDB cannot oracle
     # multi-inequality correlated NOT IN (ORACLE WARNING), so the
     # oracle is the outer-PK-grouped join-form stats expansion
     # (n/nn/m). Inner-local filters keep the oracle's inequality join
@@ -757,7 +757,7 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # merge, never a single-partition window), inlined as one-row
     # broadcast crossJoins; the match fact is a per-y window staircase
     # (plans/frontier.py:keyed_skyline_view at k = 2, driven by
-    # compiler/cqc.py:_apply_sky_threshold_not_in). DuckDB CANNOT oracle the
+    # plans/not_in.py:_skyline_flag). DuckDB CANNOT oracle the
     # correlated form (two-inequality NOT IN decorrelation returns
     # empty — SURVEY ORACLE WARNING), so the oracle is the JOIN-FORM
     # stats expansion. NULL-matrix pytest:
@@ -865,7 +865,7 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # keyed correlated NOT IN set, TOP LEVEL — runs on the spark.sql
     # fallback (keyed multi-comparison: SCALING.md round-14 A/B; the
     # keyless form stays native in
-    # compiler/cqc.py:_apply_neq_order_threshold_not_in).
+    # plans/not_in.py:_neq_order_flag).
     # DuckDB CANNOT oracle the correlated form (two-inequality NOT IN
     # decorrelation returns empty — SURVEY ORACLE WARNING), so the
     # oracle is the JOIN-FORM stats expansion, like not_in_pair_or.
@@ -1044,7 +1044,7 @@ _SQL_CASES: dict[str, tuple[str, str | None]] = {
     # runs on the spark.sql fallback (keyed multi-comparison shapes:
     # Catalyst decorrelation measured faster, SCALING.md round-14
     # A/B; the keyless form stays native,
-    # api._corr_not_in_sky_threshold_or). DuckDB CANNOT oracle the correlated form
+    # plans/not_in.py:_skyline_flag). DuckDB CANNOT oracle the correlated form
     # (its decorrelation returns empty on two-inequality correlated
     # NOT IN — SURVEY ORACLE WARNING), so the oracle is the JOIN-FORM
     # stats expansion: one grouped join computes (n, nn, m) per

@@ -35,6 +35,8 @@ from sparksqlplus_spark.parser.sql import (
 )
 from sparksqlplus_spark.plans.context import Context, build_context
 from sparksqlplus_spark.plans.gyo import best_join_tree, gyo_join_tree
+from sparksqlplus_spark.plans.not_in import lit_of as _lit_of
+from sparksqlplus_spark.plans.not_in import not_in_family
 
 # SQL confs that change a compiled plan's shape or semantics (join
 # strategy, adaptive execution, runtime filters, overflow/cast rules,
@@ -287,29 +289,6 @@ def _split_top_level(text: str) -> list[str]:
     cuts = _top_level_commas(text)
     bounds = [0] + [c + 1 for c in cuts] + [len(text) + 1]
     return [text[a : b - 1].strip() for a, b in zip(bounds, bounds[1:])]
-
-
-def _lit_of(v):
-    """expressions.Lit from a collected Python scalar (the plan-time
-    stat folds' literal rebuilder — bool/int/timestamp/date/str)."""
-    import datetime
-
-    from sparksqlplus_spark.expressions import Lit
-
-    if isinstance(v, bool):
-        return Lit(v, "boolean")
-    if isinstance(v, int):
-        return Lit(v, "bigint")
-    if isinstance(v, float):
-        # round 15: float order dims join the collected-literal folds
-        # — F.lit carries NaN/-0.0/inf bit-exact either way, the kind
-        # just documents it
-        return Lit(v, "double")
-    if isinstance(v, datetime.datetime):
-        return Lit(v, "timestamp")
-    if isinstance(v, datetime.date):
-        return Lit(v, "date")
-    return Lit(v, "str")
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
@@ -1254,14 +1233,16 @@ class SparkSQLPlus:
         keyless SemiFilter uses (a constant, like _fold_scalars'
         literal fold). Queries using this lift get ANSI bag semantics
         (extension surface, same rationale as composite views —
-        _run_outer's phase-3 tail plans the flags). Round 9 added the
-        three-valued single-key NOT IN flag; round 10 added EXISTS
-        with a join body (composite-view rewrite, then this lift),
-        one non-equality correlation (_or_exists_noneq_flag), and
-        2-column row-value NOT IN (_rowvalue_not_in_or_flag). Out of
-        subset (fallback): constant-probe NOT IN, 2+ non-equality
-        conjuncts, keyless non-equality, probe-dependent NOT IN inner
-        sets, and 3+-column row-value NOT IN. Returns ephemeral view
+        _run_outer's phase-3 tail plans the flags). A single-probe
+        NOT IN (column or constant probe, uncorrelated or with a
+        correlated WHERE) becomes the three-valued flag of
+        plans/not_in.py; EXISTS may have a join body (composite-view
+        rewrite, then this lift), one keyed non-equality correlation
+        (_or_exists_noneq_flag) or keyless ones (the global folds);
+        row-value NOT IN takes 2-4 columns (_rowvalue_not_in_or_flag).
+        Out of subset (fallback): keyed multi-comparison shapes,
+        expression probes, row-value NOT IN with a correlated WHERE,
+        and 5+-column row-value NOT IN. Returns ephemeral view
         names."""
         from pyspark.sql import functions as F
 
@@ -1394,113 +1375,31 @@ class SparkSQLPlus:
                         "correlation under OR needs a bare inner column "
                         "on one side and an outer-only term on the other"
                     )
-            if ex.null_aware and ex.negated and (n_corr_keys or noneq):
-                # correlated NOT IN under OR — same round-12 split as
-                # build_context: the correlated-WHERE equality is a
-                # GROUP key, not a probe column; folding it into the
-                # row-value/single-key flag silently changed the NULL
-                # semantics (the inner set must be per-group). A
-                # single-column probe plans natively through the
-                # grouped-stats flag; wider shapes ride the fallback.
-                # Round 13: KEYLESS groups (no equality correlation,
-                # only thresholds) plan too — single thresholds fold
-                # to one GLOBAL stats row, 2-5 order comparisons to
-                # bounded global skylines (plans/frontier.py).
-                threshold = None
-                pair_threshold = None
-                if noneq:
-                    # round 12 (mirrors build_context's top-level
-                    # threshold path): ONE non-equality comparison —
-                    # order ops fold the three-valued facts to
-                    # per-group extreme tests, <> to a distinct-count
-                    # + unique-value test. Round 13: a PAIR of order
-                    # comparisons composes too — each fact becomes a
-                    # 2-D dominance probe against a global Pareto
-                    # staircase; 2-5 comparisons plan natively for
-                    # KEYLESS groups only (keyed groups route to the
-                    # spark.sql fallback below).
-                    pops = sorted(n[0] for n in noneq)
-                    if len(noneq) == 1 and noneq[0][0] in (
-                        "<", "<=", ">", ">=", "<>",
-                    ):
-                        threshold = noneq[0]
-                    elif len(noneq) == 2 and all(
-                        o in ("<", "<=", ">", ">=", "<>") for o in pops
-                    ):
-                        # round 13: any pair mix — both order ops
-                        # (2-D skyline flag views), <> + order
-                        # (argmin/runner-up triples), <> + <>
-                        # (diagonal-witness stats)
-                        pair_threshold = noneq
-                    elif len(noneq) == 3 and all(
-                        o in ("<", "<=", ">", ">=") for o in pops
-                    ):
-                        # round 13 (late): an order-comparison TRIPLE
-                        # — 3-D dominance against the global Pareto
-                        # skyline
-                        pair_threshold = noneq
-                    elif (
-                        len(noneq) == 3
-                        and pops.count("<>") in (1, 2)
-                        and all(
-                            o in ("<", "<=", ">", ">=", "<>")
-                            for o in pops
-                        )
-                    ):
-                        # round 13 (latest): ONE <> + two order
-                        # comparisons (the U/V two-staircase
-                        # statistic) or TWO <> + one order (the
-                        # prefix-diagonal-stats array); round 14:
-                        # KEYLESS groups fold the statistics globally
-                        # (_corr_not_in_neq_triple_keyless_or)
-                        pair_threshold = noneq
-                    elif len(noneq) in (4, 5) and all(
-                        o in ("<", "<=", ">", ">=") for o in pops
-                    ):
-                        # latest r13: FOUR order comparisons — 4-D
-                        # skyline flag views (keyless groups fold the
-                        # global 4-D skyline, cap-tightened). Round
-                        # 15: FIVE join — the dominance scans are
-                        # tail-width agnostic; 6+ stays out (high-D
-                        # skylines degenerate toward the whole group)
-                        pair_threshold = noneq
-                    else:
-                        raise UnsupportedSqlError(
-                            "row-value / multi-comparison NOT IN with "
-                            "a correlated WHERE under OR is not "
-                            "planned natively"
-                        )
+            if ex.null_aware and ex.negated and (
+                n_corr_keys or noneq or ex.n_probe == 1
+            ):
+                # single-probe NOT IN under OR: the three-valued flag
+                # over the inner set's facts (plans/not_in.py), per
+                # group for a correlated WHERE (folding the group key
+                # into the probe row-value would change the NULL
+                # semantics: the inner set is per-group), one global
+                # row for an uncorrelated set. Row-value probes with a
+                # correlated WHERE ride the fallback.
                 if ex.n_probe != 1 or len(keys) - n_corr_keys > 1:
                     raise UnsupportedSqlError(
                         "row-value NOT IN with a correlated WHERE "
                         "under OR is not planned natively"
                     )
-                if pair_threshold is not None and n_corr_keys:
-                    # KEYED multi-comparison NOT IN under OR has no
-                    # native plan in any mode: Catalyst's decorrelation
-                    # measured faster at both sf0.1 and 10x (SCALING.md
-                    # round-14 A/B). Keyless groups stay native
-                    # (Catalyst nested-loops them, 33x slower at 10x).
-                    # needs_distinct=False: the OR-lifted statement is
-                    # ANSI bag either way (ephemeral views force
-                    # is_full), so the verbatim fallback already matches
-                    raise RoutedToFallback(
-                        "keyed multi-comparison NOT IN under OR runs on "
-                        "the spark.sql fallback in every mode (Catalyst "
-                        "decorrelation measured faster — SCALING.md "
-                        "round-14 A/B)",
-                        needs_distinct=False,
-                    )
+                not_in_family(nq[0] for nq in noneq)
                 n_probe_keys = len(keys) - n_corr_keys
-                return self._correlated_not_in_or_flag(
+                return self._not_in_or_flag(
                     ex,
                     keys[0] if n_probe_keys == 1 else None,
                     keys[n_probe_keys:],
                     inner_only,
                     spec,
                     ephemeral,
-                    threshold=threshold,
-                    pair=pair_threshold,
+                    noneq,
                 )
             if noneq:
                 # round 10 (r9 verdict item 8): ONE non-equality
@@ -1509,16 +1408,11 @@ class SparkSQLPlus:
                 # MIN(i.c) < o.e (MAX for >/>=; <> needs min+max:
                 # some value differs iff an extreme does). The view
                 # stays one row per key, so the LEFT flag join never
-                # duplicates. Out of subset (fallback): two+ non-eq
-                # conjuncts (min/max of different columns lose the
-                # single-witness requirement), keyless non-eq, and
-                # NOT IN whose inner set depends on the probe row.
-                if ex.null_aware and ex.negated:
-                    raise UnsupportedSqlError(
-                        "NOT IN under OR with correlated WHERE is not "
-                        "in the subset (the inner set is probe-"
-                        "dependent)"
-                    )
+                # duplicates. Keyed two+ non-eq conjuncts ride the
+                # fallback (min/max of different columns lose the
+                # single-witness requirement); keyless ones fold below.
+                # (A NOT IN with non-equality correlation is planned
+                # above.)
                 if len(noneq) in (2, 3, 4, 5) and keys:
                     # KEYED multi-comparison OR'd-EXISTS has no native
                     # plan in any mode: Catalyst's own decorrelation
@@ -1655,60 +1549,14 @@ class SparkSQLPlus:
                 # uncorrelated: constant gate, folded at plan time
                 # (LIMIT-1 probe — the scan short-circuits).
                 #
-                # A constant-probe null-aware NOT IN
-                # (`P OR 5 NOT IN (SELECT x FROM t)`) lands here — its
-                # probe conjunct `5 = x` is inner-only, so keys is
-                # empty — but folding it two-valued is wrong: with a
-                # NULL in the set and no match SQL yields UNKNOWN, and
-                # `P OR UNKNOWN` must NOT keep rows where P is false
-                # (round-10 advice fix). The parser marks probe
-                # conjuncts (Exists.n_probe), so a LITERAL probe folds
-                # three-valued at plan time from the set's stats —
-                # empty TRUE, matched FALSE, has-NULL/NULL-probe
-                # UNKNOWN, else TRUE; non-literal probes raise so
-                # mode='auto' takes the spark.sql fallback. Positive
-                # IN folds identically under OR two- or three-valued
-                # (UNKNOWN→FALSE both drop), so it stays on the
-                # LIMIT-1 fold.
+                # A single-probe NOT IN is planned above; a constant
+                # row-value probe is three-valued too, so folding it
+                # two-valued here would be wrong: it rides the fallback
                 if ex.null_aware and ex.negated:
-                    from sparksqlplus_spark.expressions import const_expr
-
-                    probe = ex.conds[0] if ex.n_probe == 1 else None
-                    ok = (
-                        isinstance(probe, Cmp)
-                        and probe.op == "="
-                        and isinstance(probe.left, Col)
-                        and const_expr(probe.right)
+                    raise UnsupportedSqlError(
+                        "constant row-value NOT IN (subquery) under OR "
+                        "is three-valued; not planned natively"
                     )
-                    if not ok:
-                        raise UnsupportedSqlError(
-                            "non-constant probe NOT IN "
-                            "(subquery) under OR is three-valued; not "
-                            "planned natively"
-                        )
-                    inner = self._filtered_inner(
-                        ex, [c for c in inner_only if c is not probe]
-                    )
-                    pl = probe.right.to_spark({})
-                    ic = probe.left.name
-                    st = inner.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.count(F.col(ic)).alias("nn"),
-                        F.count(F.when(F.col(ic) == pl, 1)).alias("m"),
-                        # probe NULL-ness evaluated plan-side — the
-                        # probe may be any constant expression, not
-                        # just a bare literal (round 10)
-                        F.max(
-                            F.when(pl.isNull(), 1).otherwise(0)
-                        ).alias("pn"),
-                    ).collect()[0]
-                    if st["n"] == 0:
-                        return Lit(True, "boolean")
-                    if st["m"] > 0:
-                        return Lit(False, "boolean")
-                    if st["nn"] < st["n"] or st["pn"] == 1:
-                        return Lit(None, "null")
-                    return Lit(True, "boolean")
                 inner = self._filtered_inner(ex, inner_only)
                 val = bool(inner.limit(1).count())
                 return Lit(val != ex.negated, "boolean")
@@ -1748,61 +1596,21 @@ class SparkSQLPlus:
             )
             flag = Col(valias, view_sel[keys[0][1]])
             if ex.null_aware and ex.negated:
-                # NOT IN under OR (round 9) needs a THREE-VALUED flag —
-                # Spark's OR handles a nullable boolean natively, so
-                # UNKNOWN propagates exactly as SQL requires. The inner
-                # set is probe-independent, so its emptiness/has-NULL
-                # facts are plan-time constants (one tiny aggregate,
-                # same class as _fold_scalars):
-                #   empty set        -> TRUE for every probe
-                #   matched          -> FALSE
-                #   set has a NULL   -> every unmatched probe UNKNOWN
-                #   NULL probe       -> UNKNOWN (non-empty set)
-                #   else             -> TRUE
+                # row-value NOT IN under OR: a THREE-VALUED flag
+                # (Spark's OR propagates UNKNOWN natively) from
+                # NULL-pattern-decomposed flag joins beside the
+                # full-match join appended above (census-pruned; a
+                # NULL-free inner side, the common case, emits 2^k-2
+                # flag joins: 14 at k=4)
                 if len(keys) in (2, 3, 4):
-                    # round 10 (r9 verdict item 6): row-value NOT IN
-                    # under OR via NULL-pattern-decomposed flag joins
-                    # (the M full-match join was appended above);
-                    # round 13 extended the decomposition to k=3,
-                    # round 14 to k=4 (census-pruned; a NULL-free
-                    # inner side — the common case — emits 2^k-2
-                    # flag joins: 14 at k=4; the all-patterns worst
-                    # case stays bounded by the census at 3^k-ish
-                    # and an all-NULL inner tuple short-circuits
-                    # the whole decomposition to one branch).
                     return self._rowvalue_not_in_or_flag(
                         ex, keys, inner_only, spec, ephemeral,
                         matched_flag=flag,
                     )
-                if len(keys) != 1:
-                    raise UnsupportedSqlError(
-                        "row-value NOT IN under OR supports at most 4 "
-                        "columns (the NULL-pattern flag decomposition "
-                        "grows as 2^k branches per census pattern)"
-                    )
-                from sparksqlplus_spark.expressions import CaseWhen
-
-                inner = self._filtered_inner(ex, inner_only)
-                stats = inner.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count(F.col(keys[0][1])).alias("nn"),
-                ).collect()[0]
-                if stats["n"] == 0:
-                    # the flag view is empty too — the appended LEFT
-                    # JOIN is a no-op against an empty frame
-                    return Lit(True, "boolean")
-                matched_false = (
-                    IsNull(flag, negated=True),
-                    Lit(False, "boolean"),
-                )
-                if stats["nn"] < stats["n"]:
-                    return CaseWhen((matched_false,), Lit(None, "null"))
-                return CaseWhen(
-                    (
-                        matched_false,
-                        (IsNull(keys[0][0]), Lit(None, "null")),
-                    ),
-                    Lit(True, "boolean"),
+                raise UnsupportedSqlError(
+                    "row-value NOT IN under OR supports 2-4 column "
+                    "probes (the NULL-pattern flag decomposition grows "
+                    "as 2^k branches per census pattern)"
                 )
             return IsNull(flag, negated=not ex.negated)
 
@@ -1931,6 +1739,8 @@ class SparkSQLPlus:
         )
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
         from sparksqlplus_spark.plans.frontier import (
+            KEYLESS_FRONTIER_CAP,
+            canon_float_neq_dims,
             global_neq_order2_points,
             neq_triple_one_row_df,
         )
@@ -1939,23 +1749,13 @@ class SparkSQLPlus:
         (op2, d2e, b_col), (op3, d3e, c_col) = [
             t for t in noneq if t[0] != "<>"
         ]
-        inner = self._filtered_inner(ex, inner_only)
-        # round 15: float <>-dims embed via neq_canon on BOTH sides
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
+        # float <>-dims embed via neq_canon on BOTH sides
+        inner, [(a_col, d1e)] = canon_float_neq_dims(
+            self._filtered_inner(ex, inner_only), [(a_col, d1e)]
         )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
         u_rows, v_pts, (a_dt, u_dt, v_dt) = global_neq_order2_points(
             inner, a_col, b_col, c_col, (op2, op3),
-            self._KEYLESS_FRONTIER_CAP,
+            KEYLESS_FRONTIER_CAP,
         )
         view = neq_triple_one_row_df(
             self.spark, u_rows, v_pts, a_dt, u_dt, v_dt
@@ -2000,6 +1800,8 @@ class SparkSQLPlus:
         )
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
         from sparksqlplus_spark.plans.frontier import (
+            KEYLESS_FRONTIER_CAP,
+            canon_float_neq_dims,
             global_neq2_order_entries,
             neq2_order_one_row_df,
         )
@@ -2007,27 +1809,13 @@ class SparkSQLPlus:
         neqs = [t for t in noneq if t[0] == "<>"]
         (_, d1e, a_col), (_, d2e, b_col) = neqs
         (op3, d3e, c_col) = next(t for t in noneq if t[0] != "<>")
-        inner = self._filtered_inner(ex, inner_only)
-        # round 15: float <>-dims embed via neq_canon on BOTH sides
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
+        # float <>-dims embed via neq_canon on BOTH sides
+        inner, [(a_col, d1e), (b_col, d2e)] = canon_float_neq_dims(
+            self._filtered_inner(ex, inner_only), [(a_col, d1e), (b_col, d2e)]
         )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-        if neq_dim_is_float(inner.schema[b_col].dataType):
-            inner = inner.withColumn("__cn_neq_b", neq_canon(F.col(b_col)))
-            b_col = "__cn_neq_b"
-            d2e = neq_canon_expr(d2e)
         entries, (a_dt, b_dt, c_dt) = global_neq2_order_entries(
             inner, a_col, b_col, c_col, op3,
-            self._KEYLESS_FRONTIER_CAP,
+            KEYLESS_FRONTIER_CAP,
         )
         view = neq2_order_one_row_df(
             self.spark, entries, a_dt, b_dt, c_dt
@@ -2069,6 +1857,7 @@ class SparkSQLPlus:
         from sparksqlplus_spark.expressions import CaseWhen, Col, Lit, SkyWitness
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
         from sparksqlplus_spark.plans.frontier import (
+            KEYLESS_FRONTIER_CAP,
             global_skyline_points,
             skyline_one_row_df,
         )
@@ -2078,7 +1867,7 @@ class SparkSQLPlus:
         sky_cols = tuple(t[2] for t in noneq)
         inner = self._filtered_inner(ex, inner_only)
         pts, types = global_skyline_points(
-            inner, sky_cols, sky_ops, self._KEYLESS_FRONTIER_CAP,
+            inner, sky_cols, sky_ops, KEYLESS_FRONTIER_CAP,
         )
         view = skyline_one_row_df(self.spark, pts, types)
         self._view_counter += 1
@@ -2119,8 +1908,6 @@ class SparkSQLPlus:
         (round 15). Round 13 (late): the stat job lives in
         plans/frontier.py:keyless_neq_order_stats, shared with the
         keyless NOT IN executors."""
-        from pyspark.sql import functions as F
-
         from sparksqlplus_spark.expressions import (
             AndCond,
             CaseWhen,
@@ -2130,25 +1917,18 @@ class SparkSQLPlus:
             OrCond,
         )
         from sparksqlplus_spark.plans.frontier import (
+            canon_float_neq_dims,
             keyless_neq_order_stats,
         )
 
         _, x_out, a_col = neq
         op_b, y_out, b_col = order
-        inner = self._filtered_inner(ex, inner_only)
-        # round 15: a float <>-dim embeds via neq_canon on BOTH sides
-        # (only the ORDER dim keeps the exact gate — the argmax
-        # uniqueness check compares collected b values in Python)
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
+        # a float <>-dim embeds via neq_canon on BOTH sides (only the
+        # ORDER dim keeps the exact gate — the argmax uniqueness check
+        # compares collected b values in Python)
+        inner, [(a_col, x_out)] = canon_float_neq_dims(
+            self._filtered_inner(ex, inner_only), [(a_col, x_out)]
         )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            x_out = neq_canon_expr(x_out)
         stats = keyless_neq_order_stats(inner, a_col, b_col, op_b)
         if stats is None:
             return Lit(bool(ex.negated), "boolean")
@@ -2177,8 +1957,6 @@ class SparkSQLPlus:
         miss = Lit(bool(ex.negated), "boolean")
         return CaseWhen(((witness, hit),), miss)
 
-    _KEYLESS_FRONTIER_CAP = 65536
-
     def _keyless_neq_pair_fold(self, ex, noneq, inner_only):
         """KEYLESS ``<>``-with-``<>`` under OR'd [NOT] EXISTS (round
         13): the global fold of the diagonal-witness statistic
@@ -2201,28 +1979,17 @@ class SparkSQLPlus:
             Lit,
             OrCond,
         )
-        from sparksqlplus_spark.plans.frontier import keyless_diag_stats
-
-        (_, x_out, a_col), (_, y_out, b_col) = noneq
-        inner = self._filtered_inner(ex, inner_only)
-        # round 15: float <>-dims embed via neq_canon on BOTH sides
-        # (both dims here are equality-only <>-dims)
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import neq_canon_expr
         from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
+            canon_float_neq_dims,
+            keyless_diag_stats,
         )
 
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            x_out = neq_canon_expr(x_out)
-        if neq_dim_is_float(inner.schema[b_col].dataType):
-            inner = inner.withColumn("__cn_neq_b", neq_canon(F.col(b_col)))
-            b_col = "__cn_neq_b"
-            y_out = neq_canon_expr(y_out)
+        (_, x_out, a_col), (_, y_out, b_col) = noneq
+        # float <>-dims embed via neq_canon on BOTH sides (both dims
+        # here are equality-only <>-dims)
+        inner, [(a_col, x_out), (b_col, y_out)] = canon_float_neq_dims(
+            self._filtered_inner(ex, inner_only), [(a_col, x_out), (b_col, y_out)]
+        )
         lit_of = _lit_of
         hit = Lit(not ex.negated, "boolean")
         miss = Lit(bool(ex.negated), "boolean")
@@ -2268,40 +2035,22 @@ class SparkSQLPlus:
             )
         return CaseWhen(tuple(branches), hit)
 
-    def _correlated_not_in_or_flag(
-        self, ex, probe_pair, corr, inner_only, spec, ephemeral,
-        threshold=None, pair=None,
+    def _not_in_or_flag(
+        self, ex, probe_pair, corr, inner_only, spec, ephemeral, thrs,
     ):
-        """Correlated NOT IN under OR (round 12, r11 verdict item 7):
-        ``P OR o.x NOT IN (SELECT y FROM t WHERE t.k = o.k AND ...)``
-        — the inner SET is per-GROUP, so the three-valued flag derives
-        from per-group stats, not the probe row-value:
-
-          TRUE     iff the group is EMPTY (stats-join miss — a NULL
-                   group key matches nothing, so it misses too);
-          FALSE    iff some group row equals the probe (match join);
-          UNKNOWN  iff unmatched and (the group has a NULL y, or the
-                   probe is NULL against a non-empty group);
-          TRUE     otherwise.
-
-        Two LEFT joins: a GROUP BY stats view (one row per group — no
-        duplication) and a DISTINCT (group, y) match view with every
-        column pinned by the join condition (≤1 row). Both shuffle on
-        the group key (exchange reused); no collect, no broadcast
-        assumption. ``probe_pair`` is (outer Col, inner col) for an
-        outer-column probe, or None when the probe is the constant
-        conjunct sitting first in ``inner_only`` (parser contract)."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            const_expr,
-        )
+        """Single-probe NOT IN under OR: ``P OR x NOT IN (SELECT y FROM
+        t WHERE ...)`` becomes the three-valued flag of
+        plans/not_in.py:not_in_flag, which Spark's OR evaluates row by
+        row. Each view the flag needs registers as an ephemeral table
+        and LEFT-joins onto the query (a keyless one-row view attaches
+        unconditionally). ``corr`` holds the group equalities and
+        ``thrs`` the threshold comparisons; ``probe_pair`` is (outer
+        Col, inner column) for a column probe, or None when the probe
+        is the constant conjunct sitting first in ``inner_only``
+        (parser contract)."""
+        from sparksqlplus_spark.expressions import Cmp, Col, const_expr
         from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
+        from sparksqlplus_spark.plans.not_in import not_in_flag
 
         inner_rest = list(inner_only)
         if probe_pair is None:
@@ -2313,969 +2062,33 @@ class SparkSQLPlus:
                 and const_expr(probe_c.right)
             ):
                 raise UnsupportedSqlError(
-                    "non-constant probe NOT IN with a correlated "
-                    "WHERE under OR is not planned natively"
+                    "non-constant probe NOT IN (subquery) under OR is "
+                    "three-valued; not planned natively"
                 )
-            probe_outer, probe_icol = probe_c.right, probe_c.left.name
+            probe_pair = (probe_c.right, probe_c.left.name)
             inner_rest = inner_rest[1:]
-        else:
-            probe_outer, probe_icol = probe_pair
-        inner = self._filtered_inner(ex, inner_rest)
-        gsel: dict[str, str] = {}
-        for _, icol in corr:
-            gsel.setdefault(icol, f"__cg{len(gsel)}")
-        if threshold is not None:
-            return self._corr_not_in_threshold_or(
-                inner, gsel, corr, probe_outer, probe_icol, threshold,
-                spec, ephemeral,
-            )
-        if pair is not None:
-            # multi-comparison filters reach here KEYLESS only (the
-            # lift routes keyed groups to the spark.sql fallback)
-            n_neq = sum(1 for t in pair if t[0] == "<>")
-            if not n_neq:
-                # order-comparison pairs, triples, quads and quints —
-                # global skyline folds + a per-y match skyline
-                return self._corr_not_in_sky_threshold_or(
-                    inner, probe_outer, probe_icol, pair, spec,
-                    ephemeral,
-                )
-            if len(pair) >= 3:
-                # round 14: <>-containing triples — global stat
-                # folds + a per-y match view (see the method)
-                return self._corr_not_in_neq_triple_keyless_or(
-                    inner, probe_outer, probe_icol, pair, spec,
-                    ephemeral,
-                )
-            if n_neq == 2:
-                return self._corr_not_in_neq_pair_threshold_or(
-                    inner, probe_outer, probe_icol, pair, spec,
-                    ephemeral,
-                )
-            return self._corr_not_in_neq_order_threshold_or(
-                inner, probe_outer, probe_icol, pair, spec,
-                ephemeral,
-            )
-        stats = inner.groupBy(
-            *[F.col(icol).alias(out) for icol, out in gsel.items()]
-        ).agg(
-            F.count(F.lit(1)).alias("__cn"),
-            F.count(F.col(probe_icol)).alias("__cnn"),
-        )
-        self._view_counter += 1
-        sname = f"__corrs{self._view_counter}"
-        self.catalog.register_df(sname, stats, tuple(gsel.values()))
-        ephemeral.append(sname)
-        salias = f"{sname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=salias, table=sname),
-                conds=[
-                    Cmp("=", oc, Col(salias, gsel[icol]))
-                    for oc, icol in corr
-                ],
-                side="left",
-            )
-        )
-        match = (
-            inner.filter(F.col(probe_icol).isNotNull())
-            .select(
-                *[F.col(icol).alias(out) for icol, out in gsel.items()],
-                F.col(probe_icol).alias("__cmp"),
-            )
-            .distinct()
-        )
-        self._view_counter += 1
-        mname = f"__corrm{self._view_counter}"
-        self.catalog.register_df(
-            mname, match, (*gsel.values(), "__cmp")
-        )
-        ephemeral.append(mname)
-        malias = f"{mname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=malias, table=mname),
-                conds=[
-                    Cmp("=", oc, Col(malias, gsel[icol]))
-                    for oc, icol in corr
-                ]
-                + [Cmp("=", probe_outer, Col(malias, "__cmp"))],
-                side="left",
-            )
-        )
-        return CaseWhen(
-            (
-                (IsNull(Col(salias, "__cn")), Lit(True, "boolean")),
-                (
-                    IsNull(Col(malias, "__cmp"), negated=True),
-                    Lit(False, "boolean"),
-                ),
-                (
-                    Cmp("<", Col(salias, "__cnn"), Col(salias, "__cn")),
-                    Lit(None, "null"),
-                ),
-                (IsNull(probe_outer), Lit(None, "null")),
-            ),
-            Lit(True, "boolean"),
-        )
 
-    def _corr_not_in_threshold_or(
-        self, inner, gsel, corr, probe_outer, probe_icol, threshold,
-        spec, ephemeral,
-    ):
-        """Correlated NOT IN under OR whose inner set is ALSO filtered
-        by one order comparison against the outer row (round 12 — the
-        OR sibling of the top-level SemiFilter.corr_threshold branch):
-        ``P OR o.x NOT IN (SELECT y FROM t WHERE t.k = o.k AND
-        t.c OP o.d)``. Each three-valued fact is monotone in the
-        threshold, so the flag views carry extremes instead of counts:
-
-          set empty(o)   <=> group miss, best(c) outside OP o.d, or a
-                             NULL o.d (c OP NULL is UNKNOWN rowwise)
-          has NULL y(o)  <=> best(c | y NULL)  OP o.d
-          matched(o)     <=> best(c | y = x)   OP o.d
-
-        Flag order: empty -> TRUE; matched -> FALSE; in-threshold NULL
-        y or NULL probe -> UNKNOWN; else TRUE. Views stay one row per
-        key / per (key, y) — the LEFT joins never duplicate."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-
-        t_op, d_expr, c_col = threshold
-        neq = t_op == "<>"
-        if neq:
-            # c <> d facts: the subset qualifies iff it has >= 2
-            # DISTINCT c values (one must differ from any non-NULL d)
-            # or its unique c differs — per subset carry
-            # (count_distinct(c), min(c))
-            def aggs_of(pred, tag):
-                cval = (
-                    F.when(pred, F.col(c_col)) if pred is not None
-                    else F.col(c_col)
-                )
-                return [
-                    F.count_distinct(cval).alias(f"{tag}c"),
-                    F.min(cval).alias(f"{tag}v"),
-                ]
-
-        else:
-            best = F.min if t_op in ("<", "<=") else F.max
-
-            def aggs_of(pred, tag):
-                cval = (
-                    F.when(pred, F.col(c_col)) if pred is not None
-                    else F.col(c_col)
-                )
-                return [best(cval).alias(f"{tag}v")]
-
-        inner_t = inner.filter(F.col(c_col).isNotNull())
-        const_probe = not probe_outer.refs()
-        gcols = [F.col(icol).alias(out) for icol, out in gsel.items()]
-        aggs = [
-            *aggs_of(None, "__a"),
-            *aggs_of(F.col(probe_icol).isNull(), "__n"),
-        ]
-        if const_probe:
-            pl = probe_outer.to_spark({})
-            aggs += aggs_of(F.col(probe_icol) == pl, "__m")
-        stats = inner_t.groupBy(*gcols).agg(*aggs)
-        self._view_counter += 1
-        sname = f"__corrs{self._view_counter}"
-        self.catalog.register_df(sname, stats, tuple(gsel.values()))
-        ephemeral.append(sname)
-        salias = f"{sname}_i"
-        spec.outer_joins.append(
-            OuterJoin(
-                item=FromItem(alias=salias, table=sname),
-                conds=[
-                    Cmp("=", oc, Col(salias, gsel[icol]))
-                    for oc, icol in corr
-                ],
-                side="left",
-                # keyless groups (round 13): the stats view is ONE
-                # global row — attach unconditionally
-                allow_uncorrelated=not corr,
-            )
-        )
-        if const_probe:
-            m_alias = salias
-        else:
-            match = (
-                inner_t.filter(F.col(probe_icol).isNotNull())
-                .groupBy(
-                    *[F.col(icol).alias(out) for icol, out in gsel.items()],
-                    F.col(probe_icol).alias("__cmp"),
-                )
-                .agg(*aggs_of(None, "__m"))
-            )
+        def attach(view, pairs):
             self._view_counter += 1
-            mname = f"__corrm{self._view_counter}"
+            name = f"__nin{self._view_counter}"
             self.catalog.register_df(
-                mname, match, (*gsel.values(), "__cmp")
+                name, view, tuple(dict.fromkeys(c for _, c in pairs))
             )
-            ephemeral.append(mname)
-            malias = f"{mname}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=malias, table=mname),
-                    conds=[
-                        Cmp("=", oc, Col(malias, gsel[icol]))
-                        for oc, icol in corr
-                    ]
-                    + [Cmp("=", probe_outer, Col(malias, "__cmp"))],
-                    side="left",
-                )
-            )
-            m_alias = malias
-
-        from sparksqlplus_spark.expressions import AndCond
-
-        if neq:
-            def fact(alias, tag):
-                # subset qualifies vs a non-NULL d (earlier branches
-                # handle NULL d); join-miss columns yield UNKNOWN,
-                # which CaseWhen skips
-                return OrCond(
-                    (
-                        Cmp(
-                            ">=",
-                            Col(alias, f"{tag}c"),
-                            Lit(2, "int"),
-                        ),
-                        Cmp("<>", Col(alias, f"{tag}v"), d_expr),
-                    )
-                )
-
-            empty = OrCond(
-                (
-                    IsNull(d_expr),
-                    Cmp("=", Col(salias, "__ac"), Lit(0, "int")),
-                    AndCond(
-                        (
-                            Cmp("=", Col(salias, "__ac"), Lit(1, "int")),
-                            Cmp("=", Col(salias, "__av"), d_expr),
-                        )
-                    ),
-                )
-            )
-            group_probe = Col(salias, "__ac")
-        else:
-            complement = {
-                "<": ">=", "<=": ">", ">": "<=", ">=": "<",
-            }[t_op]
-
-            def fact(alias, tag):
-                return Cmp(t_op, Col(alias, f"{tag}v"), d_expr)
-
-            empty = OrCond(
-                (
-                    Cmp(complement, Col(salias, "__av"), d_expr),
-                    IsNull(d_expr),
-                )
-            )
-            group_probe = Col(salias, "__av")
-        return CaseWhen(
-            (
-                (IsNull(group_probe), Lit(True, "boolean")),
-                (empty, Lit(True, "boolean")),
-                (fact(m_alias, "__m"), Lit(False, "boolean")),
-                (fact(salias, "__n"), Lit(None, "null")),
-                (IsNull(probe_outer), Lit(None, "null")),
-            ),
-            Lit(True, "boolean"),
-        )
-
-    def _corr_not_in_neq_triple_keyless_or(
-        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
-    ):
-        """KEYLESS <>-containing triple-filtered correlated NOT IN
-        under OR (round 14 — completes the keyless triple closure;
-        the OR sibling of cqc._apply_neq_triple_not_in_keyless):
-        ``P OR o.x NOT IN (SELECT y FROM t WHERE t.a <> o.d1 AND
-        t.b OP2 o.d2 AND t.c OP3 o.d3)`` or the 2-<> mix. The set and
-        NULL-y facts fold at plan time via the capped global stat
-        helpers into ONE-ROW views joined unconditionally; the match
-        fact is a per-y keyed view (one row per y, the LEFT join on
-        probe = y never duplicates). Flag order: set empty (witness
-        false, incl. NULL thresholds) -> TRUE; matched -> FALSE;
-        in-threshold NULL y or NULL probe -> UNKNOWN; else TRUE.
-        Integral order dims only (the folds raise, riding
-        mode='auto'). Coverage: brute-force NULL-matrix pytests (the
-        SURVEY ORACLE WARNING bars DuckDB here)."""
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            Neq2OrderWitness,
-            NeqTripleWitness,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            global_neq2_order_entries,
-            global_neq_order2_points,
-            keyed_neq2_order_view,
-            keyed_neq_order2_view,
-            neq2_order_one_row_df,
-            neq_triple_one_row_df,
-        )
-
-        n_neq = sum(1 for t in pair if t[0] == "<>")
-        neqs = [t for t in pair if t[0] == "<>"]
-        orders = [t for t in pair if t[0] != "<>"]
-        cap = self._KEYLESS_FRONTIER_CAP
-
-        def one_row_join(view):
-            self._view_counter += 1
-            vname = f"__corrq{self._view_counter}"
-            self.catalog.register_df(vname, view, ())
-            ephemeral.append(vname)
-            valias = f"{vname}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=valias, table=vname),
-                    conds=[],
-                    side="left",
-                    allow_uncorrelated=True,
-                )
-            )
-            return valias
-
-        from pyspark.sql import functions as _F
-
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if n_neq == 1:
-            (_, d1e, a_col), = neqs
-            (op2, d2e, b_col), (op3, d3e, c_col) = orders
-            # round 15: float <>-dims embed via neq_canon (both sides)
-            if neq_dim_is_float(inner.schema[a_col].dataType):
-                inner = inner.withColumn(
-                    "__cn_neq_a", neq_canon(_F.col(a_col))
-                )
-                a_col = "__cn_neq_a"
-                d1e = neq_canon_expr(d1e)
-
-            def fold_view(src):
-                u_rows, v_pts, (a_dt, u_dt, v_dt) = (
-                    global_neq_order2_points(
-                        src, a_col, b_col, c_col, (op2, op3), cap
-                    )
-                )
-                return neq_triple_one_row_df(
-                    self.spark, u_rows, v_pts, a_dt, u_dt, v_dt
-                )
-
-            def witness(alias, negated=False):
-                return NeqTripleWitness(
-                    Col(alias, "__upts"),
-                    Col(alias, "__vpts"),
-                    d1e, op2, d2e, op3, d3e,
-                    negated=negated,
-                )
-
-        else:
-            (_, d1e, a_col), (_, d2e, b_col) = neqs
-            (op3, d3e, c_col), = orders
-            # round 15: float <>-dims embed via neq_canon (both sides)
-            if neq_dim_is_float(inner.schema[a_col].dataType):
-                inner = inner.withColumn(
-                    "__cn_neq_a", neq_canon(_F.col(a_col))
-                )
-                a_col = "__cn_neq_a"
-                d1e = neq_canon_expr(d1e)
-            if neq_dim_is_float(inner.schema[b_col].dataType):
-                inner = inner.withColumn(
-                    "__cn_neq_b", neq_canon(_F.col(b_col))
-                )
-                b_col = "__cn_neq_b"
-                d2e = neq_canon_expr(d2e)
-
-            def fold_view(src):
-                entries, (a_dt, b_dt, c_dt) = global_neq2_order_entries(
-                    src, a_col, b_col, c_col, op3, cap
-                )
-                return neq2_order_one_row_df(
-                    self.spark, entries, a_dt, b_dt, c_dt
-                )
-
-            def witness(alias, negated=False):
-                return Neq2OrderWitness(
-                    Col(alias, "__npts"), d1e, d2e, op3, d3e,
-                    negated=negated,
-                )
-
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import const_expr
-
-        s_alias = one_row_join(fold_view(inner))
-        n_alias = one_row_join(
-            fold_view(inner.filter(F.col(probe_icol).isNull()))
-        )
-        if const_expr(probe_outer):
-            # constant probe: the match fact is GLOBAL too — fold the
-            # y = const slice into a one-row view (an uncorrelated
-            # const = col LEFT join would be rejected by _run_outer)
-            pl = probe_outer.to_spark({})
-            malias = one_row_join(
-                fold_view(inner.filter(F.col(probe_icol) == pl))
-            )
-        else:
-            # column probe: per-y keyed statistic, one row per y
-            msrc = inner.filter(F.col(probe_icol).isNotNull())
-            if n_neq == 1:
-                mview = keyed_neq_order2_view(
-                    msrc, [(probe_icol, "__f0")], a_col, b_col, c_col,
-                    (op2, op3), "__upts", "__vpts",
-                )
-            else:
-                mview = keyed_neq2_order_view(
-                    msrc, [(probe_icol, "__f0")], a_col, b_col, c_col,
-                    op3, "__npts",
-                )
-            self._view_counter += 1
-            mname = f"__corrq{self._view_counter}"
-            self.catalog.register_df(mname, mview, ("__f0",))
-            ephemeral.append(mname)
-            malias = f"{mname}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=malias, table=mname),
-                    conds=[Cmp("=", probe_outer, Col(malias, "__f0"))],
-                    side="left",
-                )
-            )
-        return CaseWhen(
-            (
-                (witness(s_alias, negated=True), Lit(True, "boolean")),
-                (witness(malias), Lit(False, "boolean")),
-                (
-                    OrCond((witness(n_alias), IsNull(probe_outer))),
-                    Lit(None, "null"),
-                ),
-            ),
-            Lit(True, "boolean"),
-        )
-
-    def _corr_not_in_sky_threshold_or(
-        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
-    ):
-        """KEYLESS correlated NOT IN under OR whose inner set is
-        filtered by TWO to FIVE order comparisons (the OR sibling of
-        compiler/cqc.py:_apply_sky_threshold_not_in): ``P OR o.x NOT
-        IN (SELECT y FROM t WHERE t.c0 OP0 o.d0 AND ... AND t.c{k-1}
-        OP o.d{k-1})``. Each three-valued fact is a k-D dominance
-        probe against a Pareto SKYLINE (the 2-D staircase at k = 2),
-        probed JVM-side by expressions.SkyWitness:
-
-          set empty(o)  <=> NO point of the whole-set skyline within
-                            the thresholds, or a NULL threshold (c OP
-                            NULL is UNKNOWN rowwise)
-          has NULL y(o) <=> a point of the NULL-y skyline within
-          matched(o)    <=> a point of the (y = x)-skyline within
-
-        The set and NULL-y skylines fold GLOBALLY (bounded plan-time
-        merge, one-row views attached unconditionally); the match
-        fact is a per-y keyed skyline (plans/frontier.py:
-        keyed_skyline_view, one row per y) for a column probe, or a
-        third global fold for a constant probe — the LEFT joins never
-        duplicate. Flag order: NULL-threshold/no-point-within -> TRUE
-        (set empty); match-view witness -> FALSE; NULL-y-view witness
-        or NULL probe -> UNKNOWN; else TRUE. DuckDB cannot oracle the
-        shape (SURVEY ORACLE WARNING), so coverage is the brute-force
-        NULL-matrix pytest."""
-        import functools as _ft
-
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-            SkyWitness,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            global_skyline_points,
-            keyed_skyline_view,
-            skyline_one_row_df,
-        )
-
-        t_ops = tuple(t[0] for t in pair)
-        t_outs = tuple(t[1] for t in pair)
-        t_cols = tuple(t[2] for t in pair)
-        inner_t = inner.filter(
-            _ft.reduce(
-                lambda a, b: a & b,
-                [F.col(c).isNotNull() for c in t_cols],
-            )
-        )
-
-        def attach(view, conds, part=()):
-            self._view_counter += 1
-            name = f"__corrk{self._view_counter}"
-            self.catalog.register_df(name, view, tuple(part))
             ephemeral.append(name)
             alias = f"{name}_i"
             spec.outer_joins.append(
                 OuterJoin(
                     item=FromItem(alias=alias, table=name),
-                    conds=conds(alias),
+                    conds=[Cmp("=", o, Col(alias, c)) for o, c in pairs],
                     side="left",
-                    allow_uncorrelated=not part,
+                    allow_uncorrelated=not pairs,
                 )
             )
             return alias
 
-        def global_view(src):
-            pts, types = global_skyline_points(
-                src, t_cols, t_ops, self._KEYLESS_FRONTIER_CAP,
-            )
-            return attach(
-                skyline_one_row_df(self.spark, pts, types),
-                lambda alias: [],
-            )
-
-        a_alias = global_view(inner_t)
-        n_alias = global_view(inner_t.filter(F.col(probe_icol).isNull()))
-        if not probe_outer.refs():
-            # constant probe: fold y = probe into a third global view
-            pl = probe_outer.to_spark({})
-            m_alias = global_view(inner_t.filter(F.col(probe_icol) == pl))
-        else:
-            m_alias = attach(
-                keyed_skyline_view(
-                    inner_t.filter(F.col(probe_icol).isNotNull()),
-                    [(probe_icol, "__cmp")], t_cols, t_ops, "__pts",
-                ),
-                lambda alias: [Cmp("=", probe_outer, Col(alias, "__cmp"))],
-                part=("__cmp",),
-            )
-
-        def wit(alias, negated=False):
-            return SkyWitness(
-                Col(alias, "__pts"),
-                t_ops,
-                t_outs,
-                negated=negated,
-            )
-
-        return CaseWhen(
-            (
-                # empty / all-NULL-c inner: set empty
-                (IsNull(Col(a_alias, "__pts")), Lit(True, "boolean")),
-                # NULL threshold: c OP NULL is UNKNOWN for every row
-                (
-                    OrCond(tuple(IsNull(o) for o in t_outs)),
-                    Lit(True, "boolean"),
-                ),
-                # no skyline point within: set empty (array and outers
-                # non-NULL here, so the negated witness is two-valued)
-                (wit(a_alias, negated=True), Lit(True, "boolean")),
-                (wit(m_alias), Lit(False, "boolean")),
-                (wit(n_alias), Lit(None, "null")),
-                (IsNull(probe_outer), Lit(None, "null")),
-            ),
-            Lit(True, "boolean"),
-        )
-
-    def _corr_not_in_neq_order_threshold_or(
-        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
-    ):
-        """KEYLESS correlated NOT IN under OR whose inner set is
-        filtered by a ``<>`` PAIRED with an order comparison (round 13
-        — the OR sibling of
-        compiler/cqc.py:_apply_neq_order_threshold_not_in): ``P OR o.x
-        NOT IN (SELECT y FROM t WHERE t.a <> o.d1 AND t.b OP o.d2)``.
-        Each three-valued fact folds the argmin/runner-up TRIPLE (b1 /
-        sentinel-NULLed a1 / b2 — the _keyless_neq_order_fold
-        statistic per fact population): the set and NULL-y triples at
-        plan time (frontier.keyless_neq_order_stats) into literal
-        predicates, the match fact as a per-y triple view (column
-        probe — one row per y, pinned by the join condition, so the
-        LEFT join never duplicates) or a third fold (constant probe):
-
-          NULL d1 / NULL d2          -> TRUE (set empty)
-          within(match)              -> FALSE
-          within(NULL-y)             -> UNKNOWN
-          NULL probe AND within(all) -> UNKNOWN
-          else                       -> TRUE (unmatched or empty)"""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import (
-            keyless_neq_order_stats,
-        )
-
-        (_, d1e, a_col) = next(t for t in pair if t[0] == "<>")
-        (op_b, d2e, b_col) = next(t for t in pair if t[0] != "<>")
-        # round 15: a float <>-dim embeds via neq_canon on BOTH sides
-        # (the fold compares collected a values in Python)
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-        best = F.max if op_b in (">", ">=") else F.min
-        inner_t = inner.filter(
-            F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
-        )
-
-        def per_y_triple_view(src):
-            pre = (
-                src.select(
-                    F.col(probe_icol).alias("__cmp"),
-                    F.col(a_col).alias("__a"),
-                    F.col(b_col).alias("__b"),
-                )
-                .groupBy("__cmp", "__a")
-                .agg(best("__b").alias("__ab"))
-            )
-            order_col = (
-                F.col("__ab").desc() if op_b in (">", ">=")
-                else F.col("__ab").asc()
-            )
-            w = Window.partitionBy("__cmp").orderBy(
-                order_col, F.col("__a")
-            )
-            top2 = pre.withColumn(
-                "__rn", F.row_number().over(w)
-            ).filter(F.col("__rn") <= 2)
-            view = top2.groupBy("__cmp").agg(
-                F.max(F.when(F.col("__rn") == 1, F.col("__ab"))).alias(
-                    "__b1"
-                ),
-                F.max(F.when(F.col("__rn") == 1, F.col("__a"))).alias(
-                    "__a1r"
-                ),
-                F.max(F.when(F.col("__rn") == 2, F.col("__ab"))).alias(
-                    "__b2"
-                ),
-            )
-            view = view.select(
-                "__cmp",
-                "__b1",
-                "__b2",
-                F.when(F.col("__b2") == F.col("__b1"), F.lit(None))
-                .otherwise(F.col("__a1r"))
-                .alias("__a1"),
-            )
-            self._view_counter += 1
-            name = f"__corrq{self._view_counter}"
-            self.catalog.register_df(name, view, ("__cmp",))
-            ephemeral.append(name)
-            alias = f"{name}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=alias, table=name),
-                    conds=[Cmp("=", probe_outer, Col(alias, "__cmp"))],
-                    side="left",
-                )
-            )
-            return alias
-
-        def fold_wit(stats):
-            if stats is None:
-                return Lit(False, "boolean")
-            b1, a1, multi, b2 = stats
-            first = AndCond(
-                (
-                    Cmp(op_b, _lit_of(b1), d2e),
-                    IsNull(d1e, negated=True)
-                    if multi
-                    else Cmp("<>", _lit_of(a1), d1e),
-                )
-            )
-            terms = [first]
-            if not multi and b2 is not None:
-                terms.append(
-                    AndCond(
-                        (
-                            Cmp("=", _lit_of(a1), d1e),
-                            Cmp(op_b, _lit_of(b2), d2e),
-                        )
-                    )
-                )
-            return terms[0] if len(terms) == 1 else OrCond(tuple(terms))
-
-        stats_a = keyless_neq_order_stats(inner_t, a_col, b_col, op_b)
-        if stats_a is None:
-            # empty population: the set is empty for every outer row
-            # -> NOT IN is TRUE
-            return Lit(True, "boolean")
-        wit_a = fold_wit(stats_a)
-        wit_n = fold_wit(
-            keyless_neq_order_stats(
-                inner_t.filter(F.col(probe_icol).isNull()),
-                a_col, b_col, op_b,
-            )
-        )
-        if not probe_outer.refs():
-            pl = probe_outer.to_spark({})
-            wit_m = fold_wit(
-                keyless_neq_order_stats(
-                    inner_t.filter(F.col(probe_icol) == pl),
-                    a_col, b_col, op_b,
-                )
-            )
-        else:
-            m_alias = per_y_triple_view(
-                inner_t.filter(F.col(probe_icol).isNotNull())
-            )
-            b1 = Col(m_alias, "__b1")
-            b2 = Col(m_alias, "__b2")
-            a1 = Col(m_alias, "__a1")
-            wit_m = OrCond(
-                (
-                    AndCond(
-                        (
-                            IsNull(b1, negated=True),
-                            Cmp(op_b, b1, d2e),
-                            OrCond((IsNull(a1), Cmp("<>", a1, d1e))),
-                        )
-                    ),
-                    AndCond(
-                        (
-                            IsNull(b2, negated=True),
-                            Cmp("=", a1, d1e),
-                            Cmp(op_b, b2, d2e),
-                        )
-                    ),
-                )
-            )
-        return CaseWhen(
-            (
-                (
-                    OrCond((IsNull(d1e), IsNull(d2e))),
-                    Lit(True, "boolean"),
-                ),
-                (wit_m, Lit(False, "boolean")),
-                (wit_n, Lit(None, "null")),
-                (
-                    AndCond((IsNull(probe_outer), wit_a)),
-                    Lit(None, "null"),
-                ),
-            ),
-            Lit(True, "boolean"),
-        )
-
-    def _corr_not_in_neq_pair_threshold_or(
-        self, inner, probe_outer, probe_icol, pair, spec, ephemeral,
-    ):
-        """KEYLESS correlated NOT IN under OR whose inner set is
-        filtered by TWO ``<>`` comparisons (round 13 — the OR sibling
-        of compiler/cqc.py:_apply_neq_pair_threshold_not_in): each
-        three-valued fact asks the diagonal-witness question over its
-        population (the _keyless_neq_pair_fold statistic). The set and
-        NULL-y statistics fold at plan time (frontier.keyless_diag_stats,
-        1-3 scalar jobs each) into literal predicates; the match fact
-        is a per-y _diagonal_stats_view (column probe — da/db/ua/ub +
-        the chosen diagonal pair's coordinates + its two cross-point
-        witness bits, one row per y) or a third fold (constant probe).
-        A view-miss leaves the match test UNKNOWN, which every CaseWhen
-        branch skips — exactly the miss semantics the fact needs."""
-        from pyspark.sql import functions as F
-
-        from sparksqlplus_spark.compiler.cqc import _diagonal_stats_view
-        from sparksqlplus_spark.expressions import (
-            AndCond,
-            CaseWhen,
-            Cmp,
-            Col,
-            IsNull,
-            Lit,
-            OrCond,
-        )
-        from sparksqlplus_spark.parser.sql import FromItem, OuterJoin
-        from sparksqlplus_spark.plans.frontier import keyless_diag_stats
-
-        (_, d1e, a_col), (_, d2e, b_col) = pair
-        # round 15: float <>-dims embed via neq_canon on BOTH sides
-        # (keyless_diag_stats branches on collected values in Python)
-        from sparksqlplus_spark.expressions import neq_canon_expr
-        from sparksqlplus_spark.plans.frontier import (
-            neq_canon,
-            neq_dim_is_float,
-        )
-
-        if neq_dim_is_float(inner.schema[a_col].dataType):
-            inner = inner.withColumn("__cn_neq_a", neq_canon(F.col(a_col)))
-            a_col = "__cn_neq_a"
-            d1e = neq_canon_expr(d1e)
-        if neq_dim_is_float(inner.schema[b_col].dataType):
-            inner = inner.withColumn("__cn_neq_b", neq_canon(F.col(b_col)))
-            b_col = "__cn_neq_b"
-            d2e = neq_canon_expr(d2e)
-        inner_t = inner.filter(
-            F.col(a_col).isNotNull() & F.col(b_col).isNotNull()
-        )
-
-        def fold_wit(stats):
-            if stats is None:
-                return Lit(False, "boolean")
-            if stats[0] == "single":
-                _, da, db, ua, ub = stats
-                conds = []
-                if da == 1:
-                    conds.append(Cmp("<>", _lit_of(ua), d1e))
-                if db == 1:
-                    conds.append(Cmp("<>", _lit_of(ub), d2e))
-                # the NULL-threshold guard branch precedes every use,
-                # so an unconstrained side needs nothing
-                if not conds:
-                    return Lit(True, "boolean")
-                return conds[0] if len(conds) == 1 else AndCond(tuple(conds))
-            _, pa, pb, qa, qb, w1, w2 = stats
-            terms = []
-            if w1 == 0:
-                terms.append(
-                    OrCond(
-                        (
-                            Cmp("<>", d1e, _lit_of(pa)),
-                            Cmp("<>", d2e, _lit_of(qb)),
-                        )
-                    )
-                )
-            if w2 == 0:
-                terms.append(
-                    OrCond(
-                        (
-                            Cmp("<>", d1e, _lit_of(qa)),
-                            Cmp("<>", d2e, _lit_of(pb)),
-                        )
-                    )
-                )
-            if not terms:
-                return Lit(True, "boolean")
-            return terms[0] if len(terms) == 1 else AndCond(tuple(terms))
-
-        stats_a = keyless_diag_stats(inner_t, a_col, b_col)
-        if stats_a is None:
-            # empty population: set empty for every outer row
-            return Lit(True, "boolean")
-        wit_a = fold_wit(stats_a)
-        wit_n = fold_wit(
-            keyless_diag_stats(
-                inner_t.filter(F.col(probe_icol).isNull()), a_col, b_col,
-            )
-        )
-        if not probe_outer.refs():
-            pl = probe_outer.to_spark({})
-            wit_m = fold_wit(
-                keyless_diag_stats(
-                    inner_t.filter(F.col(probe_icol) == pl), a_col, b_col,
-                )
-            )
-        else:
-            view = _diagonal_stats_view(
-                inner_t.filter(F.col(probe_icol).isNotNull()),
-                [(probe_icol, "__cmp")],
-                a_col,
-                b_col,
-            )
-            self._view_counter += 1
-            name = f"__corrd{self._view_counter}"
-            self.catalog.register_df(name, view, ("__cmp",))
-            ephemeral.append(name)
-            m_alias = f"{name}_i"
-            spec.outer_joins.append(
-                OuterJoin(
-                    item=FromItem(alias=m_alias, table=name),
-                    conds=[Cmp("=", probe_outer, Col(m_alias, "__cmp"))],
-                    side="left",
-                )
-            )
-
-            def vc(name):
-                return Col(m_alias, name)
-
-            one = Lit(1, "int")
-            two = Lit(2, "int")
-            single_a = AndCond(
-                (
-                    Cmp("=", vc("da"), one),
-                    Cmp("<>", vc("ua"), d1e),
-                    OrCond(
-                        (Cmp(">=", vc("db"), two), Cmp("<>", vc("ub"), d2e))
-                    ),
-                )
-            )
-            single_b = AndCond(
-                (
-                    Cmp(">=", vc("da"), two),
-                    Cmp("=", vc("db"), one),
-                    Cmp("<>", vc("ub"), d2e),
-                )
-            )
-            diag = AndCond(
-                (
-                    Cmp(">=", vc("da"), two),
-                    Cmp(">=", vc("db"), two),
-                    OrCond(
-                        (
-                            Cmp("<>", d1e, vc("pa")),
-                            Cmp("<>", d2e, vc("qb")),
-                            Cmp("=", vc("w1"), one),
-                        )
-                    ),
-                    OrCond(
-                        (
-                            Cmp("<>", d1e, vc("qa")),
-                            Cmp("<>", d2e, vc("pb")),
-                            Cmp("=", vc("w2"), one),
-                        )
-                    ),
-                )
-            )
-            wit_m = OrCond((single_a, single_b, diag))
-        return CaseWhen(
-            (
-                (
-                    OrCond((IsNull(d1e), IsNull(d2e))),
-                    Lit(True, "boolean"),
-                ),
-                (wit_m, Lit(False, "boolean")),
-                (wit_n, Lit(None, "null")),
-                (
-                    AndCond((IsNull(probe_outer), wit_a)),
-                    Lit(None, "null"),
-                ),
-            ),
-            Lit(True, "boolean"),
+        return not_in_flag(
+            self._filtered_inner(ex, inner_rest), probe_pair, corr, thrs,
+            attach,
         )
 
     def _rowvalue_not_in_or_flag(

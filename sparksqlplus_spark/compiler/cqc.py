@@ -35,14 +35,14 @@ from __future__ import annotations
 import functools
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparksqlplus_spark.catalog import Catalog
 from sparksqlplus_spark.expr_memo import col as _col
 from sparksqlplus_spark.expr_memo import col_as
 from sparksqlplus_spark.expressions import AggCall, Col, Cond, Expr, Star
-from sparksqlplus_spark.parser.sql import RoutedToFallback, UnsupportedSqlError
+from sparksqlplus_spark.parser.sql import UnsupportedSqlError
 from sparksqlplus_spark.plans.context import Comparison, Context, Relation
 from sparksqlplus_spark.plans.gyo import JoinTree, choose_root, connex_subtree, gyo_join_tree
 
@@ -88,604 +88,59 @@ def agg_signature(rel: Relation) -> tuple | None:
     )
 
 
-_CMPF = {
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
-}
+class _OuterRefs(dict):
+    """Column map for a semi filter's flag Expr: a ``("@o", v)`` ref is
+    the outer frame's column ``v``; view refs are added as attached."""
+
+    def __missing__(self, key):
+        if key[0] != "@o":
+            raise KeyError(key)
+        return key[1]
 
 
-def _diagonal_stats_view(src, part_pairs, a_col, b_col):
-    """Per-part DIAGONAL-WITNESS statistic for "∃ row: a <> d1 AND
-    b <> d2" probes (round 13 — the api._keyless_neq_pair_fold
-    statistic, shared with the NOT IN threshold executor): columns
-    (part..., da, db, ua, ub, pa, pb, qa, qb, w1, w2) — distinct
-    counts + unique values for the single-a/-b folds, the chosen
-    diagonal pair's coordinates, and its two cross-point witness bits.
-    Rows with NULL a/b must be pre-filtered by the caller. Three
-    grouped passes, each one part-key exchange with the joins reusing
-    it; ONE row per part."""
-    names = [n for _, n in part_pairs]
-    rows = src.select(
-        *[_col(c).alias(n) for c, n in part_pairs],
-        _col(a_col).alias("__a"),
-        _col(b_col).alias("__b"),
-    )
-    g1 = rows.groupBy(*names).agg(
-        F.count_distinct("__a").alias("da"),
-        F.count_distinct("__b").alias("db"),
-        F.min("__a").alias("ua"),
-        F.min("__b").alias("ub"),
-        F.min(F.struct(_col("__a").alias("a"), _col("__b").alias("b"))).alias(
-            "r1"
-        ),
-    )
-    j2 = rows.join(g1.select(*names, "r1"), names)
-    g2 = j2.groupBy(*names).agg(
-        F.min(
-            F.when(
-                _col("__a") != _col("r1.a"),
-                F.struct(_col("__a").alias("a"), _col("__b").alias("b")),
-            )
-        ).alias("s"),
-        F.min(
-            F.when(
-                _col("__b") != _col("r1.b"),
-                F.struct(_col("__a").alias("a"), _col("__b").alias("b")),
-            )
-        ).alias("t"),
-    )
-    v2 = g1.join(g2, names)
-    diag_s = _col("s").isNotNull() & (_col("s.b") != _col("r1.b"))
-    diag_t = _col("t").isNotNull() & (_col("t.a") != _col("r1.a"))
-    p = F.when(diag_s | diag_t, _col("r1")).otherwise(_col("t"))
-    q = F.when(diag_s, _col("s")).otherwise(
-        F.when(diag_t, _col("t")).otherwise(_col("s"))
-    )
-    v2 = v2.select(
-        *names, "da", "db", "ua", "ub",
-        p["a"].alias("pa"), p["b"].alias("pb"),
-        q["a"].alias("qa"), q["b"].alias("qb"),
-    )
-    j3 = rows.join(v2.select(*names, "pa", "pb", "qa", "qb"), names)
-    g3 = j3.groupBy(*names).agg(
-        F.max(
-            F.when(
-                (_col("__a") != _col("pa"))
-                & (_col("__b") != _col("qb")),
-                1,
-            ).otherwise(0)
-        ).alias("w1"),
-        F.max(
-            F.when(
-                (_col("__a") != _col("qa"))
-                & (_col("__b") != _col("pb")),
-                1,
-            ).otherwise(0)
-        ).alias("w2"),
-    )
-    return v2.join(g3, names)
+def _apply_not_in_flag(df, inner, sf, prefix: str):
+    """Correlated or constant-probe NOT IN in a WHERE conjunct: keep the
+    rows whose three-valued flag (plans/not_in.py:not_in_flag) IS TRUE.
+    Each view the flag needs joins onto ``df`` — LEFT on its pinned
+    keys, or a broadcast crossJoin for a keyless one-row view — under
+    prefixed column names, which the filter drops again."""
+    from sparksqlplus_spark.plans.not_in import not_in_flag
 
-
-def _apply_neq_pair_threshold_not_in(df, inner, sf, prefix: str):
-    """KEYLESS correlated NOT IN whose inner set is filtered by TWO
-    ``<>`` comparisons against the outer row (round 13): ``o.x NOT IN
-    (SELECT y FROM t WHERE t.a <> o.d1 AND t.b <> o.d2)``. Each
-    three-valued fact asks the diagonal-witness question over its
-    population:
-
-      within(d1, d2) = d1/d2 non-NULL AND (
-        da = 1: ua <> d1 AND (db >= 2 OR ub <> d2)
-        db = 1 (da >= 2): ub <> d2
-        else: (d1 <> pa OR d2 <> qb OR w1 = 1)
-          AND (d1 <> qa OR d2 <> pb OR w2 = 1))
-
-    The set and NULL-y statistics fold at plan time (1-3 scalar jobs
-    each, frontier.keyless_diag_stats) into literal predicates; the
-    match fact stays a per-y _diagonal_stats_view (column probe — one
-    row per y, the LEFT join never duplicates) or folds too (constant
-    probe). Keyed groups never reach here (_apply_semi_filter routes
-    them to the spark.sql fallback)."""
-    from sparksqlplus_spark.plans.frontier import (
-        canon_float_neq_dims,
-        keyless_diag_stats,
-    )
-
-    thrs = sf.corr_threshold
-    (_, d1e, a_col), (_, d2e, b_col) = thrs
-    d1 = d1e.to_spark({r: r[1] for r in d1e.refs()})
-    d2 = d2e.to_spark({r: r[1] for r in d2e.refs()})
-    # round 15: float <>-dims embed via neq_canon (inner AND probe) —
-    # keyless_diag_stats selects its branch on collected values in
-    # Python, so the class bookkeeping must match Spark =/<>
-    inner, [(a_col, d1), (b_col, d2)] = canon_float_neq_dims(
-        inner, [(a_col, d1), (b_col, d2)], prefix
-    )
-    inner_t = inner.filter(
-        _col(a_col).isNotNull() & _col(b_col).isNotNull()
-    )
-    stat_cols = ["da", "db", "ua", "ub", "pa", "pb", "qa", "qb", "w1", "w2"]
-
-    def within(tagp):
-        def c(name):
-            return _col(f"{tagp}{name}")
-
-        # da=1: witness needs ua <> d1 plus SOME b <> d2 (db >= 2
-        # guarantees one; db = 1 needs the unique b to differ).
-        # db=1 (da >= 2 there): some a always differs from a non-NULL
-        # d1, so only the unique b must differ.
-        single_a = (c("ua") != d1) & ((c("db") >= 2) | (c("ub") != d2))
-        single_b = c("ub") != d2
-        diag = (
-            ((d1 != c("pa")) | (d2 != c("qb")) | (c("w1") == 1))
-            & ((d1 != c("qa")) | (d2 != c("pb")) | (c("w2") == 1))
-        )
-        return (
-            d1.isNotNull()
-            & d2.isNotNull()
-            & F.coalesce(
-                F.when(c("da") == 1, single_a)
-                .when(c("db") == 1, single_b)
-                .otherwise(diag),
-                F.lit(False),
-            )
-        )
-
-    def fold_within(stats):
-        if stats is None:
-            return F.lit(False)
-        if stats[0] == "single":
-            _, da, db, ua, ub = stats
-            ca = (
-                F.coalesce(F.lit(ua) != d1, F.lit(False))
-                if da == 1
-                else d1.isNotNull()
-            )
-            cb = (
-                F.coalesce(F.lit(ub) != d2, F.lit(False))
-                if db == 1
-                else d2.isNotNull()
-            )
-            return ca & cb
-        _, pa, pb, qa, qb, w1, w2 = stats
-        bad1 = (
-            (d1 == F.lit(pa)) & (d2 == F.lit(qb))
-            if w1 == 0
-            else F.lit(False)
-        )
-        bad2 = (
-            (d1 == F.lit(qa)) & (d2 == F.lit(pb))
-            if w2 == 0
-            else F.lit(False)
-        )
-        return (
-            d1.isNotNull()
-            & d2.isNotNull()
-            & ~F.coalesce(bad1 | bad2, F.lit(False))
-        )
-
-    w_a = fold_within(keyless_diag_stats(inner_t, a_col, b_col))
+    colmap = _OuterRefs()
+    aliases: list[str] = []
     helper: list[str] = []
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        w_n = fold_within(
-            keyless_diag_stats(
-                inner_t.filter(_col(ic).isNull()), a_col, b_col
-            )
-        )
-        w_m = fold_within(
-            keyless_diag_stats(
-                inner_t.filter(_col(ic) == pl), a_col, b_col
-            )
-        )
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = _col(ov_p).isNotNull()
-        w_n = fold_within(
-            keyless_diag_stats(
-                inner_t.filter(_col(ic).isNull()), a_col, b_col
-            )
-        )
-        mp = f"{prefix}_mp"
-        tagp = f"{prefix}_M"
-        view = _diagonal_stats_view(
-            inner_t.filter(_col(ic).isNotNull()),
-            [(ic, mp)],
-            a_col,
-            b_col,
-        ).select(
-            mp, *[_col(c).alias(f"{tagp}{c}") for c in stat_cols]
-        )
-        df = df.join(view, _col(ov_p) == _col(mp), "left")
-        w_m = within(tagp)
-        helper += [f"{tagp}{c}" for c in stat_cols] + [mp]
-    keep = ~w_a | (~w_m & ~w_n & probe_ok)
-    return df.filter(keep).drop(*helper)
 
-
-def _apply_neq_order_threshold_not_in(df, inner, sf, prefix: str):
-    """KEYLESS correlated NOT IN whose inner set is filtered by a
-    ``<>`` PAIRED with an order comparison against the outer row
-    (round 13): ``o.x NOT IN (SELECT y FROM t WHERE t.a <> o.d1 AND
-    t.b OP o.d2)``. Each three-valued fact (set nonempty / has NULL y /
-    probe matched) asks "∃ row in the fact population with a <> d1 AND
-    b OP d2", decided by a THREE-stat summary: b1 = best b, a1 = its
-    arg a (NULL sentinel when 2+ distinct a attain b1), b2 = best b
-    among a <> a1:
-
-      within(d1, d2) = d1 NOT NULL AND (
-          (b1 OP d2 AND (a1 sentinel-NULL OR a1 <> d1))
-          OR (a1 = d1 AND b2 OP d2))
-
-    NULL b1/b2 (view miss / no runner-up) and NULL d2 coalesce the
-    comparisons to FALSE. The set/NULL-y triples fold at plan time
-    (frontier.keyless_neq_order_stats — one TakeOrderedAndProject job
-    each, the metadata-collect class) into literal predicates; the
-    match fact stays distributed as a per-y triple view (column probe:
-    one (y, a) pre-reduction + one top-2 window sharing the y key, one
-    row per y) or a third plan-time fold (constant probe). Keyed
-    groups never reach here (_apply_semi_filter routes them to the
-    spark.sql fallback)."""
-    from sparksqlplus_spark.plans.frontier import (
-        canon_float_neq_dims,
-        keyless_neq_order_stats,
-    )
-
-    thrs = sf.corr_threshold
-    (_, d1e, a_col) = next(t for t in thrs if t[0] == "<>")
-    (op_b, d2e, b_col) = next(t for t in thrs if t[0] != "<>")
-    d1 = d1e.to_spark({r: r[1] for r in d1e.refs()})
-    d2 = d2e.to_spark({r: r[1] for r in d2e.refs()})
-    # round 15: a float <>-dim embeds via neq_canon (inner AND probe)
-    # — keyless_neq_order_stats compares collected a values in Python
-    inner, [(a_col, d1)] = canon_float_neq_dims(
-        inner, [(a_col, d1)], prefix
-    )
-    best = F.max if op_b in (">", ">=") else F.min
-    cmpb = _CMPF[op_b]
-    inner_t = inner.filter(
-        _col(a_col).isNotNull() & _col(b_col).isNotNull()
-    )
-
-    def triple_view(src, part_pairs, tagp):
-        names = [n for _, n in part_pairs]
-        pre = (
-            src.select(
-                *[_col(c).alias(n) for c, n in part_pairs],
-                _col(a_col).alias("__a"),
-                _col(b_col).alias("__b"),
-            )
-            .groupBy(*names, "__a")
-            .agg(best("__b").alias("__ab"))
-        )
-        order_col = (
-            _col("__ab").desc() if op_b in (">", ">=")
-            else _col("__ab").asc()
-        )
-        w = Window.partitionBy(*names).orderBy(order_col, _col("__a"))
-        top2 = pre.withColumn("__rn", F.row_number().over(w)).filter(
-            _col("__rn") <= 2
-        )
-        view = top2.groupBy(*names).agg(
-            F.max(F.when(_col("__rn") == 1, _col("__ab"))).alias(
-                f"{tagp}b1"
-            ),
-            F.max(F.when(_col("__rn") == 1, _col("__a"))).alias(
-                f"{tagp}a1r"
-            ),
-            F.max(F.when(_col("__rn") == 2, _col("__ab"))).alias(
-                f"{tagp}b2"
-            ),
-        )
-        return view.select(
-            *names,
-            f"{tagp}b1",
-            f"{tagp}b2",
-            F.when(
-                _col(f"{tagp}b2") == _col(f"{tagp}b1"), F.lit(None)
-            )
-            .otherwise(_col(f"{tagp}a1r"))
-            .alias(f"{tagp}a1"),
-        )
-
-    def within(tagp):
-        b1, b2 = _col(f"{tagp}b1"), _col(f"{tagp}b2")
-        a1 = _col(f"{tagp}a1")
-        first = F.coalesce(cmpb(b1, d2), F.lit(False)) & (
-            a1.isNull() | F.coalesce(a1 != d1, F.lit(False))
-        )
-        second = F.coalesce((a1 == d1) & cmpb(b2, d2), F.lit(False))
-        return d1.isNotNull() & (first | second)
-
-    def fold_within(stats):
-        if stats is None:
-            return F.lit(False)
-        b1, a1, multi, b2 = stats
-        first = F.coalesce(cmpb(F.lit(b1), d2), F.lit(False)) & (
-            F.lit(True)
-            if multi
-            else F.coalesce(F.lit(a1) != d1, F.lit(False))
-        )
-        second = (
-            F.lit(False)
-            if multi or b2 is None
-            else F.coalesce(
-                (F.lit(a1) == d1) & cmpb(F.lit(b2), d2),
-                F.lit(False),
-            )
-        )
-        return d1.isNotNull() & (first | second)
-
-    w_a = fold_within(
-        keyless_neq_order_stats(inner_t, a_col, b_col, op_b)
-    )
-    helper = []
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        w_n = fold_within(
-            keyless_neq_order_stats(
-                inner_t.filter(_col(ic).isNull()), a_col, b_col, op_b,
-            )
-        )
-        w_m = fold_within(
-            keyless_neq_order_stats(
-                inner_t.filter(_col(ic) == pl), a_col, b_col, op_b
-            )
-        )
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = _col(ov_p).isNotNull()
-        w_n = fold_within(
-            keyless_neq_order_stats(
-                inner_t.filter(_col(ic).isNull()), a_col, b_col, op_b,
-            )
-        )
-        mp = f"{prefix}_mp"
-        view = triple_view(
-            inner_t.filter(_col(ic).isNotNull()),
-            [(ic, mp)],
-            f"{prefix}_M",
-        )
-        df = df.join(view, _col(ov_p) == _col(mp), "left")
-        w_m = within(f"{prefix}_M")
-        helper += [
-            f"{prefix}_Mb1", f"{prefix}_Mb2", f"{prefix}_Ma1", mp,
-        ]
-    keep = ~w_a | (~w_m & ~w_n & probe_ok)
-    return df.filter(keep).drop(*helper)
-
-
-def _apply_sky_threshold_not_in(df, inner, sf, prefix: str):
-    """KEYLESS correlated NOT IN whose inner set is filtered by TWO
-    to FIVE order comparisons against the outer row: ``o.x NOT IN
-    (SELECT y FROM t WHERE t.c0 OP0 o.d0 AND ... AND t.c{k-1} OP
-    o.d{k-1})``. Each three-valued fact is a k-D DOMINANCE query
-    against a Pareto SKYLINE (the 2-D staircase at k = 2): the set and
-    NULL-y facts fold as GLOBAL skylines (frontier.global_skyline_points
-    — capped driver merge, one-row broadcast crossJoins; never a
-    single-partition window); the match fact is a per-y keyed skyline
-    (plans/frontier.py:keyed_skyline_view — pre-reduction + per-y
-    window staircase or applyInArrow sweep + y-keyed collect, one row
-    per y, so the LEFT join never duplicates) for a column probe, or a
-    third global fold for a constant probe. A NULL d_i makes F.exists
-    non-TRUE -> coalesce FALSE -> the set folds empty (c OP NULL is
-    UNKNOWN for every row). Non-default string collations and
-    over-cap skylines raise RoutedToFallback inside the folds and
-    ride mode='auto'. Keyed groups never reach here (_apply_semi_filter
-    routes them to the spark.sql fallback)."""
-    from sparksqlplus_spark.plans.frontier import (
-        global_skyline_points,
-        keyed_skyline_view,
-        skyline_one_row_df,
-    )
-
-    ops = tuple(t[0] for t in sf.corr_threshold)
-    dims = tuple(t[2] for t in sf.corr_threshold)
-    thrs = [
-        t[1].to_spark({r: r[1] for r in t[1].refs()})
-        for t in sf.corr_threshold
-    ]
-    cmps = [_CMPF[op] for op in ops]
-
-    def fold(src, out):
-        # bounded plan-time fold, inlined as a one-row frame (the 4-D
-        # merge cap is tightened inside the fold)
-        pts, types = global_skyline_points(src, dims, ops, 65536)
-        one = skyline_one_row_df(df.sparkSession, pts, types)
-        return F.broadcast(one.withColumnRenamed("__pts", out))
-
-    def within(arr):
-        return F.coalesce(
-            F.exists(
-                _col(arr),
-                lambda e: functools.reduce(
-                    lambda x, y: x & y,
-                    [
-                        cmp(e[f"u{i}"], thr)
-                        for i, (cmp, thr) in enumerate(zip(cmps, thrs))
-                    ],
-                ),
-            ),
-            F.lit(False),
-        )
-
-    helper: list[str] = [f"{prefix}_pa", f"{prefix}_pn", f"{prefix}_pm"]
-    df = df.crossJoin(fold(inner, f"{prefix}_pa"))
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        df = df.crossJoin(
-            fold(inner.filter(_col(ic).isNull()), f"{prefix}_pn")
-        )
-        df = df.crossJoin(
-            fold(inner.filter(_col(ic) == pl), f"{prefix}_pm")
-        )
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = _col(ov_p).isNotNull()
-        df = df.crossJoin(
-            fold(inner.filter(_col(ic).isNull()), f"{prefix}_pn")
-        )
-        mp = f"{prefix}_mp"
-        v_match = keyed_skyline_view(
-            inner.filter(_col(ic).isNotNull()),
-            [(ic, mp)],
-            dims,
-            ops,
-            f"{prefix}_pm",
-        )
-        df = df.join(v_match, _col(ov_p) == _col(mp), "left")
-        helper.append(mp)
-    keep = ~within(f"{prefix}_pa") | (
-        ~within(f"{prefix}_pm") & ~within(f"{prefix}_pn") & probe_ok
-    )
-    return df.filter(keep).drop(*helper)
-
-
-def _apply_neq_triple_not_in_keyless(df, inner, sf, prefix: str):
-    """KEYLESS <>-containing triple-filtered correlated NOT IN (round
-    14): ``o.x NOT IN (SELECT y FROM t WHERE t.a <> o.d1 AND t.b OP2
-    o.d2 AND t.c OP3 o.d3)`` or the 2-<> + 1-order mix — no equality
-    correlation, so the set and NULL-y fact populations are GLOBAL:
-    each folds at plan time via the capped keyless stat helpers
-    (plans/frontier.py:global_neq_order2_points /
-    global_neq2_order_entries — an (a, b) -> best-c pre-reduction
-    with map-side combine, a capped take, and the SAME pure sweeps
-    the keyed applyInPandas path runs, driver-side), inlined as
-    one-row broadcast crossJoins probed by the unchanged witness
-    columns. The match fact stays DISTRIBUTED: a per-y keyed view
-    (keyed_neq_order2_view / keyed_neq2_order_view partitioned by y —
-    one row per y, the LEFT join on o.x = y never duplicates); a
-    constant probe folds the ``y = const`` slice globally instead.
-    Integral order dims only (the folds raise otherwise, riding the
-    mode='auto' fallback — which the round-14 A/B showed is a
-    nested-loop for Catalyst on keyless correlation, hence closing
-    this cell natively)."""
-    from sparksqlplus_spark.plans.frontier import (
-        global_neq2_order_entries,
-        global_neq_order2_points,
-        keyed_neq2_order_view,
-        keyed_neq_order2_view,
-        neq2_order_one_row_df,
-        neq2_order_witness_col,
-        neq_triple_one_row_df,
-        neq_triple_witness_col,
-    )
-
-    cap = 65536  # mirrors api.Engine._KEYLESS_FRONTIER_CAP
-    spark = df.sparkSession
-    n_neq = sum(1 for t in sf.corr_threshold if t[0] == "<>")
-    neqs = [t for t in sf.corr_threshold if t[0] == "<>"]
-    orders = [t for t in sf.corr_threshold if t[0] != "<>"]
-
-    def thr(e):
-        return e.to_spark({r: r[1] for r in e.refs()})
-
-    helper: list[str] = []
-    from sparksqlplus_spark.plans.frontier import canon_float_neq_dims
-
-    if n_neq == 1:
-        (_, e1, a_col), = neqs
-        (op2, e2, b_col), (op3, e3, c_col) = orders
-        d1, d2, d3 = thr(e1), thr(e2), thr(e3)
-        # round 15: float <>-dims embed via neq_canon (inner + probe)
-        inner, [(a_col, d1)] = canon_float_neq_dims(
-            inner, [(a_col, d1)], prefix
-        )
-
-        def fold(src, tag):
-            u_rows, v_pts, (a_dt, u_dt, v_dt) = (
-                global_neq_order2_points(
-                    src, a_col, b_col, c_col, (op2, op3), cap
-                )
-            )
-            one = neq_triple_one_row_df(
-                spark, u_rows, v_pts, a_dt, u_dt, v_dt
-            )
-            return (
-                one.withColumnRenamed("__upts", f"{tag}_u")
-                .withColumnRenamed("__vpts", f"{tag}_v")
-            )
-
-        def W(tag):
-            return F.coalesce(
-                neq_triple_witness_col(
-                    _col(f"{tag}_u"), _col(f"{tag}_v"),
-                    d1, d2, d3, op2, op3,
-                ),
-                F.lit(False),
-            )
-
-    else:
-        (_, e1, a_col), (_, e2, b_col) = neqs
-        (op3, e3, c_col), = orders
-        d1, d2, d3 = thr(e1), thr(e2), thr(e3)
-        # round 15: float <>-dims embed via neq_canon (inner + probe)
-        inner, [(a_col, d1), (b_col, d2)] = canon_float_neq_dims(
-            inner, [(a_col, d1), (b_col, d2)], prefix
-        )
-
-        def fold(src, tag):
-            entries, (a_dt, b_dt, c_dt) = global_neq2_order_entries(
-                src, a_col, b_col, c_col, op3, cap
-            )
-            one = neq2_order_one_row_df(spark, entries, a_dt, b_dt, c_dt)
-            return one.withColumnRenamed("__npts", f"{tag}_n")
-
-        def W(tag):
-            return F.coalesce(
-                neq2_order_witness_col(
-                    _col(f"{tag}_n"), d1, d2, d3, op3
-                ),
-                F.lit(False),
-            )
-
-    ta, tn, tm = f"{prefix}_sa", f"{prefix}_sn", f"{prefix}_sm"
-    df = df.crossJoin(F.broadcast(fold(inner, ta)))
-    if sf.const_probe is not None:
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        probe_ok = pl.isNotNull()
-        df = df.crossJoin(
-            F.broadcast(fold(inner.filter(_col(ic).isNull()), tn))
-        )
-        df = df.crossJoin(
-            F.broadcast(fold(inner.filter(_col(ic) == pl), tm))
-        )
-    else:
-        (ov_p, ic), = sf.keys  # single-column probe (validated)
-        probe_ok = _col(ov_p).isNotNull()
-        df = df.crossJoin(
-            F.broadcast(fold(inner.filter(_col(ic).isNull()), tn))
-        )
-        # match view: the per-y keyed statistic — partitioned by y,
-        # distributed; one row per y so the LEFT join never duplicates
-        mp = f"{prefix}_mp"
-        msrc = inner.filter(_col(ic).isNotNull())
-        if n_neq == 1:
-            mview = keyed_neq_order2_view(
-                msrc, [(ic, mp)], a_col, b_col, c_col, (op2, op3),
-                f"{tm}_u", f"{tm}_v",
-            )
+    def attach(view, pairs):
+        nonlocal df
+        alias = f"{prefix}_v{len(aliases)}"
+        aliases.append(alias)
+        names = {c: f"{alias}_{c}" for c in view.columns}
+        colmap.update({(alias, c): n for c, n in names.items()})
+        helper.extend(names.values())
+        view = view.select(*[col_as(c, n) for c, n in names.items()])
+        if not pairs:
+            df = df.crossJoin(F.broadcast(view))
         else:
-            mview = keyed_neq2_order_view(
-                msrc, [(ic, mp)], a_col, b_col, c_col, op3, f"{tm}_n",
+            on = functools.reduce(
+                lambda x, y: x & y,
+                [o.to_spark(colmap) == _col(names[c]) for o, c in pairs],
             )
-        df = df.join(mview, _col(ov_p) == _col(mp), "left")
-        helper.append(mp)
-    keep = ~W(ta) | (~W(tm) & ~W(tn) & probe_ok)
-    drop = helper + [
-        c
-        for c in df.columns
-        if c.startswith((f"{ta}_", f"{tn}_", f"{tm}_"))
-    ]
-    return df.filter(keep).drop(*drop)
+            df = df.join(view, on, "left")
+        return alias
+
+    if sf.const_probe is not None:
+        probe = sf.const_probe
+    else:
+        (ov_p, ic), = sf.keys  # single-column probe (validated)
+        probe = (Col("@o", ov_p), ic)
+    flag = not_in_flag(
+        inner,
+        probe,
+        [(Col("@o", ov), ic) for ov, ic in sf.corr_keys],
+        sf.corr_threshold or (),
+        attach,
+    )
+    return df.filter(flag.to_spark(colmap)).drop(*helper)
 
 
 def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
@@ -700,10 +155,10 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
         # probe-DEPENDENT probe EXPRESSION (round 13): `o.a + 1 NOT IN
         # (SELECT y ...)` — materialize the outer-only expression as a
         # temp column and re-enter with it as the single probe key;
-        # every downstream branch (plain null-aware anti, corr_keys
-        # stats views, corr_threshold extremes, pair staircases) then
-        # runs unchanged, inheriting the three-valued gate (the temp
-        # column is NULL exactly when the probe expression is UNKNOWN).
+        # every downstream branch (plain null-aware anti, the NOT IN
+        # flag) then runs unchanged, inheriting the three-valued gate
+        # (the temp column is NULL exactly when the probe expression
+        # is UNKNOWN).
         # Pure projection — no extra job, no shuffle.
         import dataclasses
 
@@ -725,309 +180,13 @@ def _apply_semi_filter(spark, catalog, df, sf, prefix: str):
     imap = {("", c): c for c in inner.columns}
     for cond in sf.inner_filters:
         inner = inner.filter(cond.to_spark(imap))
-    if sf.corr_threshold is not None:
-        # CORRELATED NOT IN with an ORDER-comparison correlation
-        # (round 12): o.x NOT IN (SELECT y FROM t WHERE [t.k = o.k
-        # AND] t.c OP o.d) — the group's membership depends on the
-        # outer row through the threshold, but each three-valued fact
-        # is monotone in it, so ONE extreme per fact decides:
-        #   set nonempty(o)  <=> best(c)            OP o.d
-        #   has NULL y(o)    <=> best(c | y NULL)   OP o.d
-        #   probe matched(o) <=> best(c | y = x)    OP o.d
-        # (best = MIN for </<=, MAX for >/>=; rows with NULL c can
-        # never satisfy c OP d and are filtered). Keep a row iff its
-        # set is empty (group miss, or best outside the threshold, or
-        # a NULL d — c OP NULL is UNKNOWN for every row), else iff
-        # unmatched AND no in-threshold NULL y AND the probe is
-        # non-NULL. Same view shapes as the plain corr_keys branch
-        # (one row per group; match DISTINCT per (group, y) with every
-        # column pinned) — no join duplicates; with no group keys the
-        # stats view is ONE global row, broadcast.
-        if len(sf.corr_threshold) >= 2 and sf.corr_keys:
-            # KEYED multi-comparison NOT IN has no native plan: Catalyst's
-            # own decorrelation measured 1.8-4.7x faster at sf0.1 AND 10x
-            # (SCALING.md round-14 A/B). RoutedToFallback, not a plain
-            # UnsupportedSqlError: the statement is in the dialect, so
-            # api._plan_spec_inner fills needs_distinct from the built
-            # Context and the fallback keeps the non-full => DISTINCT
-            # contract (SURVEY C23). Keyless shapes stay native below —
-            # Catalyst nested-loops them.
-            raise RoutedToFallback(
-                "keyed multi-comparison correlated NOT IN runs on the "
-                "spark.sql fallback in every mode (Catalyst "
-                "decorrelation measured faster — SCALING.md round-14 A/B)"
-            )
-        if len(sf.corr_threshold) >= 2:
-            n_neq = sum(1 for t in sf.corr_threshold if t[0] == "<>")
-            if not n_neq:
-                # all-order pairs, triples, quads and quints
-                # (build_context admits k up to 5): each fact is a k-D
-                # dominance query against the global Pareto skyline
-                return _apply_sky_threshold_not_in(df, inner, sf, prefix)
-            if len(sf.corr_threshold) >= 3:
-                # round 14: KEYLESS <>-containing triples — global
-                # stat folds + a per-y match view (see the executor)
-                return _apply_neq_triple_not_in_keyless(
-                    df, inner, sf, prefix
-                )
-            if n_neq == 2:
-                # round 13: a <>-with-<> pair — each fact asks the
-                # diagonal-witness question over its population
-                return _apply_neq_pair_threshold_not_in(
-                    df, inner, sf, prefix
-                )
-            # round 13: <> paired with an order comparison — each
-            # fact folds to the argmin/runner-up triple
-            return _apply_neq_order_threshold_not_in(
-                df, inner, sf, prefix
-            )
-        (t_op, t_outer, t_col), = sf.corr_threshold
-        # the outer threshold is an outer-only EXPRESSION whose
-        # ("@o", variable) refs resolve against the outer frame
-        thr = t_outer.to_spark({r: r[1] for r in t_outer.refs()})
-        neq = t_op == "<>"
-        if neq:
-            # c <> d: the subset contains a qualifying row iff it has
-            # >= 2 DISTINCT c values (one must differ from any d) or
-            # its unique c differs; a NULL d qualifies nothing
-            def aggs_of(pred, tag):
-                cval = (
-                    F.when(pred, _col(t_col)) if pred is not None
-                    else _col(t_col)
-                )
-                return [
-                    F.count_distinct(cval).alias(f"{tag}c"),
-                    F.min(cval).alias(f"{tag}v"),
-                ]
-
-            def within(tag):
-                return F.coalesce(
-                    thr.isNotNull()
-                    & (
-                        (_col(f"{tag}c") >= 2)
-                        | (_col(f"{tag}v") != thr)
-                    ),
-                    F.lit(False),
-                )
-
-            def miss(tag):
-                return _col(f"{tag}c").isNull() | ~within(tag)
-
-            def cols_of(tag):
-                return [f"{tag}c", f"{tag}v"]
-        else:
-            cmpfn = {
-                "<": lambda a, b: a < b,
-                "<=": lambda a, b: a <= b,
-                ">": lambda a, b: a > b,
-                ">=": lambda a, b: a >= b,
-            }[t_op]
-            best = F.min if t_op in ("<", "<=") else F.max
-
-            def aggs_of(pred, tag):
-                cval = (
-                    F.when(pred, _col(t_col)) if pred is not None
-                    else _col(t_col)
-                )
-                return [best(cval).alias(f"{tag}v")]
-
-            def within(tag):
-                return F.coalesce(
-                    cmpfn(_col(f"{tag}v"), thr), F.lit(False)
-                )
-
-            def miss(tag):
-                return _col(f"{tag}v").isNull() | ~within(tag)
-
-            def cols_of(tag):
-                return [f"{tag}v"]
-
-        corr = sf.corr_keys
-        gref = [
-            _col(ic).alias(f"{prefix}_g{i}")
-            for i, (_, ic) in enumerate(corr)
-        ]
-        gcols = [f"{prefix}_g{i}" for i in range(len(corr))]
-        inner_t = inner.filter(_col(t_col).isNotNull())
-        ta, tn, tm = f"{prefix}_a", f"{prefix}_nl", f"{prefix}_mt"
-        helper = cols_of(ta) + cols_of(tn) + gcols
-        if sf.const_probe is not None:
-            probe_lit, ic = sf.const_probe
-            pl = probe_lit.to_spark({})
-            stats = inner_t.groupBy(*gref).agg(
-                *aggs_of(None, ta),
-                *aggs_of(_col(ic).isNull(), tn),
-                *aggs_of(_col(ic) == pl, tm),
-            )
-            out = (
-                df.join(
-                    stats,
-                    functools.reduce(
-                        lambda a, b: a & b,
-                        [
-                            _col(ov) == _col(g)
-                            for (ov, _), g in zip(corr, gcols)
-                        ],
-                    ),
-                    "left",
-                )
-                if gcols
-                else df.join(F.broadcast(stats), how="cross")
-            )
-            probe_ok = pl.isNotNull()
-            helper += cols_of(tm)
-        else:
-            (ov_p, ic), = sf.keys  # single-column probe (validated)
-            stats = inner_t.groupBy(*gref).agg(
-                *aggs_of(None, ta),
-                *aggs_of(_col(ic).isNull(), tn),
-            )
-            out = (
-                df.join(
-                    stats,
-                    functools.reduce(
-                        lambda a, b: a & b,
-                        [
-                            _col(ov) == _col(g)
-                            for (ov, _), g in zip(corr, gcols)
-                        ],
-                    ),
-                    "left",
-                )
-                if gcols
-                else df.join(F.broadcast(stats), how="cross")
-            )
-            mcols = [f"{prefix}_m{i}" for i in range(len(corr))]
-            match = (
-                inner_t.filter(_col(ic).isNotNull())
-                .groupBy(
-                    *[
-                        _col(icg).alias(m)
-                        for (_, icg), m in zip(corr, mcols)
-                    ],
-                    _col(ic).alias(f"{prefix}_mp"),
-                )
-                .agg(*aggs_of(None, tm))
-            )
-            mon = functools.reduce(
-                lambda a, b: a & b,
-                [
-                    _col(ov) == _col(m)
-                    for (ov, _), m in zip(corr, mcols)
-                ]
-                + [_col(ov_p) == _col(f"{prefix}_mp")],
-            )
-            out = out.join(match, mon, "left")
-            probe_ok = _col(ov_p).isNotNull()
-            helper += cols_of(tm) + [f"{prefix}_mp", *mcols]
-        set_empty = miss(ta)
-        no_null = miss(tn)
-        no_match = miss(tm)
-        keep = set_empty | (no_match & no_null & probe_ok)
-        return out.filter(keep).drop(*helper)
-    if sf.corr_keys:
-        # CORRELATED NOT IN (round 12): o.x NOT IN (SELECT y FROM t
-        # WHERE t.k = o.k AND ...) — the inner SET is per-GROUP, so
-        # the NULL facts are per-group aggregates, NOT the row-value
-        # reading (which silently changes the semantics — see
-        # plans/context.py). Keep a row iff
-        #   its group is EMPTY (left-join miss; a NULL group key can
-        #     match nothing, so it misses too — correct), or
-        #   no group row matches the probe AND the group has no NULL
-        #     y AND the probe itself is non-NULL.
-        # Plan: one groupBy(corr) shuffle for (n, nn[, m]) stats +
-        # one LEFT join per side — stats is one row per group and the
-        # match view is DISTINCT on (group, y) with every column
-        # pinned by the join condition, so neither join duplicates.
-        # Both joins shuffle on the group key (the exchange is
-        # reused); no collect, no broadcast assumption — scale-safe.
-        corr = sf.corr_keys
-        gref = [
-            _col(ic).alias(f"{prefix}_g{i}")
-            for i, (_, ic) in enumerate(corr)
-        ]
-        gcols = [f"{prefix}_g{i}" for i in range(len(corr))]
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [_col(ov) == _col(g) for (ov, _), g in zip(corr, gcols)],
-        )
-        helper = [f"{prefix}_n", f"{prefix}_nn", *gcols]
-        if sf.const_probe is not None:
-            probe_lit, ic = sf.const_probe
-            pl = probe_lit.to_spark({})
-            stats = inner.groupBy(*gref).agg(
-                F.count(F.lit(1)).alias(f"{prefix}_n"),
-                F.count(_col(ic)).alias(f"{prefix}_nn"),
-                F.count(F.when(_col(ic) == pl, 1)).alias(f"{prefix}_m"),
-            )
-            out = df.join(stats, on, "left")
-            no_match = _col(f"{prefix}_m").isNull() | (
-                _col(f"{prefix}_m") == 0
-            )
-            probe_ok = pl.isNotNull()
-            helper.append(f"{prefix}_m")
-        else:
-            (ov_p, ic), = sf.keys  # single-column probe (validated)
-            stats = inner.groupBy(*gref).agg(
-                F.count(F.lit(1)).alias(f"{prefix}_n"),
-                F.count(_col(ic)).alias(f"{prefix}_nn"),
-            )
-            out = df.join(stats, on, "left")
-            mcols = [f"{prefix}_m{i}" for i in range(len(corr))]
-            match = (
-                inner.select(
-                    *[
-                        _col(icg).alias(m)
-                        for (_, icg), m in zip(corr, mcols)
-                    ],
-                    _col(ic).alias(f"{prefix}_mp"),
-                )
-                .filter(_col(ic).isNotNull())
-                .distinct()
-            )
-            mon = functools.reduce(
-                lambda a, b: a & b,
-                [
-                    _col(ov) == _col(m)
-                    for (ov, _), m in zip(corr, mcols)
-                ],
-            ) & (_col(ov_p) == _col(f"{prefix}_mp"))
-            out = out.join(match, mon, "left")
-            no_match = _col(f"{prefix}_mp").isNull()
-            probe_ok = _col(ov_p).isNotNull()
-            helper += [f"{prefix}_mp", *mcols]
-        keep = _col(f"{prefix}_n").isNull() | (
-            no_match
-            & (_col(f"{prefix}_n") == _col(f"{prefix}_nn"))
-            & probe_ok
-        )
-        return out.filter(keep).drop(*helper)
-    if sf.const_probe is not None:
-        # CONSTANT-probe NOT IN (round 10): `5 NOT IN (SELECT x ...)`
-        # — no correlation keys, but full three-valued semantics:
-        #   empty set               -> keep every row
-        #   probe matched           -> drop every row
-        #   set has NULL / probe    -> UNKNOWN -> drop every row
-        #     NULL (non-empty set)
-        #   else                    -> keep every row
-        # One broadcast one-row stats aggregate decides the gate —
-        # same zero-collect shape as the single-key null-aware path.
-        probe_lit, ic = sf.const_probe
-        pl = probe_lit.to_spark({})
-        stats = inner.agg(
-            F.count(F.lit(1)).alias(f"{prefix}_n"),
-            F.count(_col(ic)).alias(f"{prefix}_nn"),
-            F.count(F.when(_col(ic) == pl, 1)).alias(f"{prefix}_m"),
-        )
-        out = df.join(F.broadcast(stats), how="cross")
-        keep = (_col(f"{prefix}_n") == 0) | (
-            (_col(f"{prefix}_m") == 0)
-            & (_col(f"{prefix}_n") == _col(f"{prefix}_nn"))
-            & pl.isNotNull()
-        )
-        return out.filter(keep).drop(
-            f"{prefix}_n", f"{prefix}_nn", f"{prefix}_m"
-        )
+    if sf.corr_keys or sf.corr_threshold or sf.const_probe is not None:
+        # correlated NOT IN (group equalities and/or threshold
+        # comparisons against the outer row) and constant-probe NOT IN:
+        # the inner set varies per outer row (or the probe is not a
+        # column), so the three-valued facts come from per-group or
+        # global views, shared with NOT IN under OR
+        return _apply_not_in_flag(df, inner, sf, prefix)
     if not sf.keys and not sf.extra:
         # uncorrelated [NOT] EXISTS: a constant gate. LIMIT 1 bounds
         # the probe (EXISTS only needs >= 1 row, so the scan

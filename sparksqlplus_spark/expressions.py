@@ -496,15 +496,11 @@ class SkyWitness(Cond):
     exactly when some raw inner row satisfies every comparison
     (plans/frontier.py). Ops are order comparisons only; a NULL outer
     operand or NULL array never yields TRUE — callers wrap in
-    CaseWhen so UNKNOWN folds to the miss value. The negated form
-    ("set empty" = NO skyline point within) is for the OR'd NOT IN
-    flag: callers must have branched on a NULL array / NULL outers
-    first, so the F.exists is two-valued and ~ is exact."""
+    CaseWhen so UNKNOWN folds to the miss value."""
 
     arr: Expr  # array<struct<u0..u{k-1}>> column on the flag view
     ops: tuple  # k of < <= > >=
     outers: tuple  # k outer-only Exprs
-    negated: bool = False
 
     _OPS = {
         "<": lambda a, b: a < b,
@@ -525,7 +521,7 @@ class SkyWitness(Cond):
         a = self.arr.to_spark(colmap)
         os_ = [o.to_spark(colmap) for o in self.outers]
         cs = [self._OPS[op] for op in self.ops]
-        e = F.exists(
+        return F.exists(
             a,
             lambda e: functools.reduce(
                 lambda x, y: x & y,
@@ -535,14 +531,12 @@ class SkyWitness(Cond):
                 ],
             ),
         )
-        return ~e if self.negated else e
 
     def key(self):
-        n = "not " if self.negated else ""
         parts = " ".join(
             f"{op} {o.key()}" for op, o in zip(self.ops, self.outers)
         )
-        return f"({n}skywitness {self.arr.key()} {parts})"
+        return f"(skywitness {self.arr.key()} {parts})"
 
 
 @dataclass(frozen=True)
@@ -564,7 +558,6 @@ class NeqTripleWitness(Cond):
     d2: Expr
     op3: str
     d3: Expr
-    negated: bool = False
 
     def refs(self):
         out = set(self.u_arr.refs()) | set(self.v_arr.refs())
@@ -577,7 +570,7 @@ class NeqTripleWitness(Cond):
             neq_triple_witness_col,
         )
 
-        w = neq_triple_witness_col(
+        return neq_triple_witness_col(
             self.u_arr.to_spark(colmap),
             self.v_arr.to_spark(colmap),
             self.d1.to_spark(colmap),
@@ -586,12 +579,10 @@ class NeqTripleWitness(Cond):
             self.op2,
             self.op3,
         )
-        return ~w if self.negated else w
 
     def key(self):
-        n = "not " if self.negated else ""
         return (
-            f"({n}neqtriple {self.u_arr.key()} {self.v_arr.key()} "
+            f"(neqtriple {self.u_arr.key()} {self.v_arr.key()} "
             f"<> {self.d1.key()} {self.op2} {self.d2.key()} "
             f"{self.op3} {self.d3.key()})"
         )
@@ -612,7 +603,6 @@ class Neq2OrderWitness(Cond):
     d2: Expr
     op3: str
     d3: Expr
-    negated: bool = False
 
     def refs(self):
         out = set(self.arr.refs())
@@ -625,19 +615,17 @@ class Neq2OrderWitness(Cond):
             neq2_order_witness_col,
         )
 
-        w = neq2_order_witness_col(
+        return neq2_order_witness_col(
             self.arr.to_spark(colmap),
             self.d1.to_spark(colmap),
             self.d2.to_spark(colmap),
             self.d3.to_spark(colmap),
             self.op3,
         )
-        return ~w if self.negated else w
 
     def key(self):
-        n = "not " if self.negated else ""
         return (
-            f"({n}neq2order {self.arr.key()} <> {self.d1.key()} "
+            f"(neq2order {self.arr.key()} <> {self.d1.key()} "
             f"<> {self.d2.key()} {self.op3} {self.d3.key()})"
         )
 
@@ -848,7 +836,6 @@ def map_expr(node, fn):
             map_expr(node.arr, fn),
             node.ops,
             tuple(map_expr(o, fn) for o in node.outers),
-            node.negated,
         )
     if isinstance(node, NeqTripleWitness):
         return NeqTripleWitness(
@@ -859,7 +846,6 @@ def map_expr(node, fn):
             map_expr(node.d2, fn),
             node.op3,
             map_expr(node.d3, fn),
-            node.negated,
         )
     if isinstance(node, Neq2OrderWitness):
         return Neq2OrderWitness(
@@ -868,7 +854,6 @@ def map_expr(node, fn):
             map_expr(node.d2, fn),
             node.op3,
             map_expr(node.d3, fn),
-            node.negated,
         )
     raise TypeError(f"unknown node {type(node)}")
 
@@ -956,7 +941,6 @@ def rewrite_refs(node, mapping: dict[tuple[str, str], tuple[str, str]]):
             rewrite_refs(node.arr, mapping),
             node.ops,
             tuple(rewrite_refs(o, mapping) for o in node.outers),
-            node.negated,
         )
     if isinstance(node, NeqTripleWitness):
         return NeqTripleWitness(
@@ -967,7 +951,6 @@ def rewrite_refs(node, mapping: dict[tuple[str, str], tuple[str, str]]):
             rewrite_refs(node.d2, mapping),
             node.op3,
             rewrite_refs(node.d3, mapping),
-            node.negated,
         )
     if isinstance(node, Neq2OrderWitness):
         return Neq2OrderWitness(
@@ -976,6 +959,5 @@ def rewrite_refs(node, mapping: dict[tuple[str, str], tuple[str, str]]):
             rewrite_refs(node.d2, mapping),
             node.op3,
             rewrite_refs(node.d3, mapping),
-            node.negated,
         )
     raise TypeError(f"unknown node {type(node)}")

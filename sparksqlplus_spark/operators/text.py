@@ -62,9 +62,10 @@ def _text_stats_cols(text_col: str, id_col: str) -> tuple[Column, ...]:
         n_chars.alias("n_chars"),
         token_count(t).cast("long").alias("n_tokens"),
         ws_tokens.cast("long").alias("n_words"),
-        (alpha / n_chars).alias("alpha_ratio"),
-        (digit / n_chars).alias("digit_ratio"),
-        (punct / n_chars).alias("punct_ratio"),
+        # an empty text has no ratios: NULL, where ANSI division raises
+        F.try_divide(alpha, n_chars).alias("alpha_ratio"),
+        F.try_divide(digit, n_chars).alias("digit_ratio"),
+        F.try_divide(punct, n_chars).alias("punct_ratio"),
         ((n_chars - space) / F.greatest(ws_tokens, F.lit(1.0))).alias("avg_word_len"),
     )
 

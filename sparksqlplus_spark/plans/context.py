@@ -26,6 +26,7 @@ from sparksqlplus_spark.expressions import (
     rewrite_refs,
 )
 from sparksqlplus_spark.parser.sql import FromItem, QuerySpec, UnsupportedSqlError
+from sparksqlplus_spark.plans.not_in import not_in_family
 
 
 class DisjointSet:
@@ -153,20 +154,13 @@ class SemiFilter:
     # probe row-value (which silently changes NULL semantics).
     # Same (outer variable, inner column) convention as keys.
     corr_keys: tuple[tuple[str, str], ...] = ()
-    # CORRELATED NOT IN whose inner set is ALSO filtered by one order
-    # comparison against the outer row (round 12): `o.x NOT IN (SELECT
-    # y FROM t WHERE [t.k = o.k AND] t.c < o.d)`. The three per-group
-    # facts the three-valued gate needs (set empty? has NULL y? probe
-    # matched?) each reduce to a threshold test against a per-group
-    # MIN/MAX of c (the executor's corr-threshold branch). A TUPLE of
-    # one or two triples (op, outer-only Expr with ("@o", variable)
-    # refs, inner column), op oriented <inner c> op <outer d>. One
-    # triple: op in < <= > >= <> (order ops test a MIN/MAX per fact;
-    # <> a distinct-count + unique-value pair). Two triples (keyed
-    # groups only): both order ops — each fact becomes a 2-D dominance
-    # test against a per-group Pareto staircase; round 13: one <> +
-    # one order op — each fact folds to the argmin/runner-up triple
-    # (b1 / sentinel-NULLed a1 / b2). None otherwise.
+    # NOT IN whose inner set is ALSO filtered by threshold comparisons
+    # against the outer row: `o.x NOT IN (SELECT y FROM t WHERE [t.k =
+    # o.k AND] t.c < o.d ...)`. A TUPLE of triples (op, outer-only Expr
+    # with ("@o", variable) refs, inner column), op oriented <inner c>
+    # op <outer d>, in a shape plans/not_in.py:not_in_family admits;
+    # the three per-group facts (set empty? has NULL y? probe matched?)
+    # come from that family's flag. None otherwise.
     corr_threshold: tuple | None = None
     # Probe-DEPENDENT probe EXPRESSION (round 13): `o.a + 1 NOT IN
     # (SELECT y ...)` — the probe side is an outer-only EXPRESSION
@@ -175,9 +169,9 @@ class SemiFilter:
     # ("@o", variable) refs, inner column name). The executor
     # materializes the expression as a temp outer column and re-enters
     # the single-key machinery — every downstream branch (plain
-    # null-aware anti, corr_keys stats views, corr_threshold extremes,
-    # pair staircases) is reused unchanged, so the three-valued gate
-    # (a NULL probe expression is UNKNOWN) is inherited, not redone.
+    # null-aware anti, the NOT IN flag) is reused unchanged, so the
+    # three-valued gate (a NULL probe expression is UNKNOWN) is
+    # inherited, not redone.
     # None for every other shape.
     expr_probe: tuple | None = None
 
@@ -549,6 +543,18 @@ def build_context(spec: QuerySpec, catalog: Catalog) -> Context:
                 return (CMP_FLIP[rw.op], rw.left, rw.right.name)
             return None
 
+        def _not_in_thresholds(rws):
+            """The threshold triples of a NOT IN's non-equality
+            correlations, in a shape plans/not_in.py plans natively."""
+            thrs = [_threshold_of(rw) for rw in rws]
+            if any(t is None for t in thrs):
+                raise UnsupportedSqlError(
+                    "NOT IN thresholds need a bare inner column against "
+                    "an outer-only expression"
+                )
+            not_in_family(t[0] for t in thrs)
+            return thrs
+
         for idx, rw, sides in corr_conds:
             pair = (
                 _col_sides(rw)
@@ -639,69 +645,18 @@ def build_context(spec: QuerySpec, catalog: Catalog) -> Context:
             # test_not_in_correlated_where's data). Split the keys by
             # probe provenance; the executor plans per-group stats.
             # Supported: a single-column probe (outer Col or constant)
-            # and at most ONE order-comparison correlation (round 12:
-            # `AND t.c < o.d` filters the group per outer row — the
-            # three-valued facts become threshold tests against
-            # per-group extremes, SemiFilter.corr_threshold) — wider
-            # shapes raise and ride the spark.sql fallback.
+            # and the threshold comparisons (`AND t.c < o.d` filters
+            # the group per outer row) plans/not_in.py:not_in_family
+            # admits; keyed multi-comparison shapes route to the
+            # spark.sql fallback when the plan is built. Wider shapes
+            # raise and ride the fallback.
             if ex.n_probe != 1 or len(keys) - n_corr_keys > 1:
                 raise UnsupportedSqlError(
                     "row-value NOT IN with a correlated WHERE is not "
                     "planned natively"
                 )
             if extra_raw:
-                thrs = [_threshold_of(rw) for rw in extra_raw]
-                pair_ops = sorted(t[0] for t in thrs if t is not None)
-                ok = (len(thrs) == 1 and thrs[0] is not None) or (
-                    # a PAIR of order comparisons (round 12): the
-                    # facts become 2-D dominance tests — per-group
-                    # Pareto staircases in the executor. Round 13: a
-                    # <> PAIRED with an order comparison — each fact
-                    # folds to the argmin/runner-up triple (the
-                    # _keyless_neq_order_fold statistic, per fact
-                    # population); <> + <> via diagonal-witness
-                    # stats — any pair mix plans.
-                    len(thrs) == 2
-                    and all(t is not None for t in thrs)
-                    and all(
-                        o in ("<", "<=", ">", ">=", "<>")
-                        for o in pair_ops
-                    )
-                ) or (
-                    # round 13 (late): a TRIPLE of order comparisons —
-                    # each fact becomes a 3-D dominance test against a
-                    # per-subset Pareto SKYLINE (keyed groups are
-                    # guaranteed in this branch). Latest r13: ONE <> +
-                    # two order comparisons rides the U/V
-                    # two-staircase statistic; TWO <> + one order the
-                    # prefix-diagonal-stats array. 3-<> triples and 4+
-                    # comparisons stay on the fallback.
-                    len(thrs) == 3
-                    and all(t is not None for t in thrs)
-                    and all(
-                        t[0] in ("<", "<=", ">", ">=", "<>")
-                        for t in thrs
-                    )
-                    and sum(1 for t in thrs if t[0] == "<>") <= 2
-                ) or (
-                    # latest r13: FOUR order comparisons — the 4-D
-                    # skyline (numpy dominance-scan sweep). Round 15:
-                    # FIVE join (the sweeps are tail-width agnostic).
-                    # <>-containing quads and 6+ stay on the fallback
-                    # (high-D skylines degenerate toward the whole
-                    # group — no effective reduction).
-                    len(thrs) in (4, 5)
-                    and all(t is not None for t in thrs)
-                    and all(
-                        t[0] in ("<", "<=", ">", ">=") for t in thrs
-                    )
-                )
-                if not ok:
-                    raise UnsupportedSqlError(
-                        "correlated NOT IN supports one non-equality "
-                        "correlation or a pair of order comparisons"
-                    )
-                corr_threshold_raw = thrs
+                corr_threshold_raw = _not_in_thresholds(extra_raw)
                 extra_raw = []
             corr_keys = [k for k, p in zip(keys, key_is_probe) if not p]
             keys = [k for k, p in zip(keys, key_is_probe) if p]
@@ -837,57 +792,21 @@ def build_context(spec: QuerySpec, catalog: Catalog) -> Context:
                 "EXISTS must correlate with exactly one outer relation"
             )
         if ex.null_aware and ex.negated and extra_raw:
-            # NOT IN whose only extra correlation is one ORDER
-            # comparison (round 12): `o.x NOT IN (SELECT y FROM t
-            # WHERE t.c < o.d)` — the inner set is per-outer-row via
-            # the threshold, so the three-valued facts fold to
-            # threshold tests against GLOBAL extremes (the
-            # corr_keys=() case of the executor's threshold branch).
-            thrs = [_threshold_of(rw) for rw in extra_raw]
-            ok = (len(thrs) == 1 and thrs[0] is not None) or (
-                # round 13: a keyless PAIR plans too — order+order
-                # folds the global 2-D skyline like the triples below
-                # (plans/frontier.py; never a single-partition
-                # window); <>-containing mixes (late r13) fold their
-                # set/NULL-y facts at plan time through the keyless
-                # triple/diagonal stat helpers, with per-y match
-                # views staying distributed.
-                len(thrs) == 2
-                and all(t is not None for t in thrs)
-            ) or (
-                # round 13 (late): keyless all-order TRIPLES and
-                # (latest) QUADS fold GLOBAL skylines the same way
-                # (frontier.global_skyline_points; the 4-D merge cap
-                # is tightened to bound driver work)
-                len(thrs) in (3, 4, 5)  # round 15: k=5 joins
-                and all(t is not None and t[0] != "<>" for t in thrs)
-            ) or (
-                # round 14: keyless <>-CONTAINING triples (one or two
-                # <>) — the set/NULL-y facts fold via the global U/V /
-                # prefix-diagonal stat helpers, the match fact via a
-                # per-y keyed view
-                # (cqc._apply_neq_triple_not_in_keyless); 3-<>
-                # triples stay out (no constant-size statistic)
-                len(thrs) == 3
-                and all(
-                    t is not None
-                    and t[0] in ("<", "<=", ">", ">=", "<>")
-                    for t in thrs
-                )
-                and 1 <= sum(1 for t in thrs if t[0] == "<>") <= 2
-            )
+            # KEYLESS threshold-filtered NOT IN: `o.x NOT IN (SELECT y
+            # FROM t WHERE t.c < o.d ...)` — the inner set is
+            # per-outer-row via the thresholds, so the three-valued
+            # facts fold against GLOBAL statistics (plans/not_in.py)
             n_probe_slots = (
                 len(keys)
                 + (1 if expr_probe_raw is not None else 0)
                 + (1 if corr_const_probe is not None else 0)
             )
-            if not ok or n_probe_slots != 1:
+            if n_probe_slots != 1:
                 raise UnsupportedSqlError(
-                    "NOT IN (subquery) supports one non-equality "
-                    "extra correlation or a keyless pair of order "
-                    "comparisons"
+                    "NOT IN (subquery) with thresholds needs a single "
+                    "probe"
                 )
-            corr_threshold_raw = thrs
+            corr_threshold_raw = _not_in_thresholds(extra_raw)
             extra_raw = []
         out_alias = next(iter(outer_aliases))
         rid = alias_rid[out_alias]

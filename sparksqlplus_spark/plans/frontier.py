@@ -64,6 +64,11 @@ from sparksqlplus_spark.parser.sql import (
     UnsupportedSqlError,
 )
 
+# The merge cap of every keyless fold's plan-time collect: a real skyline or
+# statistic is tiny unless the data is a deliberate anti-chain, and a
+# fold above the cap raises into the spark.sql fallback.
+KEYLESS_FRONTIER_CAP = 65536
+
 _NEQ_ORDER_DTYPE_MSG = (
     "the order dims of <>-containing views support integral/date/"
     "timestamp/float/double columns only (got {dt})"
@@ -1128,25 +1133,28 @@ def neq_canon(col):
     return (col.cast("double") + F.lit(0.0)).cast("string")
 
 
-def canon_float_neq_dims(inner, dims, prefix):
-    """Caller-side float <>-dim canonicalization (round 15): for each
-    ``(inner_col_name, probe_col)`` pair whose INNER dtype is
-    float/double, append a neq_canon helper column to ``inner`` and
-    embed the probe identically, so the class bookkeeping downstream
+def canon_float_neq_dims(inner, dims):
+    """Float <>-dim canonicalization for the <>-statistic folds and
+    views: for each ``(inner column, outer Expr)`` pair whose INNER
+    dtype is float/double, append a neq_canon helper column to
+    ``inner`` and embed the outer Expr identically
+    (expressions.neq_canon_expr), so the class bookkeeping downstream
     never sees a raw float. Exact dims pass through untouched (an
     exact inner dim with a float probe is already correct — see
-    neq_dim_is_float). Returns ``(inner, [(col, probe), ...])`` with
-    the canonicalized names/expressions substituted in order."""
+    neq_dim_is_float). Returns ``(inner, [(column, Expr), ...])`` with
+    the canonicalized names and Exprs substituted in order."""
     from pyspark.sql import functions as F
 
+    from sparksqlplus_spark.expressions import neq_canon_expr
+
     out = []
-    for i, (col, probe) in enumerate(dims):
+    for i, (col, outer) in enumerate(dims):
         if neq_dim_is_float(inner.schema[col].dataType):
-            nc = f"{prefix}_cn{i}"
+            nc = f"__cn_neq{i}"
             inner = inner.withColumn(nc, neq_canon(F.col(col)))
-            out.append((nc, neq_canon(probe)))
+            out.append((nc, neq_canon_expr(outer)))
         else:
-            out.append((col, probe))
+            out.append((col, outer))
     return inner, out
 
 

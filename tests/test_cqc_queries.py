@@ -1216,7 +1216,7 @@ def test_eq_all_and_not_between(engine, oracle):
 def test_not_in_under_or_three_valued(engine, oracle):
     """NOT IN (subquery) under OR (round 9): the flag is a THREE-VALUED
     nullable boolean — matched FALSE, NULL-probe/NULL-element UNKNOWN,
-    else TRUE; empty set folds to a plan-time TRUE. Spark's OR then
+    else TRUE (an empty set included). Spark's OR then
     propagates UNKNOWN exactly as SQL requires. NULL patterns exercised
     on registered frames vs DuckDB."""
     import pandas as pd
@@ -1281,8 +1281,8 @@ def test_constant_probe_not_in_three_valued(engine, oracle):
     in the inner set and no match, SQL yields UNKNOWN (drop ALL rows)
     while the gate kept them. The parser now marks probe conjuncts
     (Exists.n_probe) so LITERAL probes plan natively three-valued: the
-    top-level form as a const-probe SemiFilter (broadcast stats gate),
-    the under-OR form as a plan-time three-valued fold. Positive IN
+    top-level form as a const-probe SemiFilter and the under-OR form
+    alike through the broadcast stats-row flag. Positive IN
     stays on the two-valued gate (WHERE-equivalent)."""
     import pandas as pd
 
@@ -2181,7 +2181,7 @@ def test_correlated_not_in_pair_keyless(engine):
     IN (SELECT y FROM t WHERE t.c1 OP1 o.d1 AND t.c2 OP2 o.d2)`` with
     no equality correlation. The set/NULL-y facts fold to global 2-D
     Pareto skylines via the bounded skyline fold
-    (compiler/cqc.py:_apply_sky_threshold_not_in); the match
+    (plans/not_in.py:_skyline_flag); the match
     fact is a per-y staircase (column probe) or a third global fold
     (constant probe). Randomized NULL-heavy brute force over all 16
     op pairs x column/constant probes; plus the fallback contract for
@@ -2496,9 +2496,9 @@ def test_correlated_not_in_keyless_under_or(engine):
     """Round 13: KEYLESS threshold-filtered NOT IN under OR —
     ``P OR o.x NOT IN (SELECT y FROM t WHERE t.c1 OP1 o.d1 [AND
     t.c2 OP2 o.d2])`` with no equality correlation. Single thresholds
-    fold to ONE global stats row (api._corr_not_in_threshold_or with
-    an unconditionally-attached one-row view); order pairs to bounded
-    global 2-D skylines (api._corr_not_in_sky_threshold_or).
+    fold to ONE global stats row (plans/not_in.py:_threshold_flag
+    with an unconditionally-attached one-row view); order pairs to
+    bounded global 2-D skylines (plans/not_in.py:_skyline_flag).
     Brute-force NULL matrix: all 4 single ops + <> and all 16
     op pairs, column and constant probes; <>-containing keyless pairs
     pin the fallback raise."""
@@ -2804,9 +2804,9 @@ def test_correlated_not_in_triple_threshold(engine):
     """Round 13 (late): correlated NOT IN filtered by THREE order
     comparisons — each three-valued fact is a 3-D dominance query.
     Keyed shapes are Catalyst-only (the default mode falls back);
-    keyless ones fold global skylines natively (compiler/cqc.py
-    _apply_sky_threshold_not_in top level,
-    api._corr_not_in_sky_threshold_or under OR). Brute-force NULL
+    keyless ones fold global skylines natively
+    (plans/not_in.py:_skyline_flag, at the top level and under OR
+    alike). Brute-force NULL
     matrix: 8 op triples x column/constant probes x both positions;
     expression probes compose via the temp-column re-entry; keyless
     and <>-containing triples pin the fallback raise."""
@@ -4305,7 +4305,7 @@ def test_neq2_order_sweep_brute():
 
 def test_correlated_not_in_threshold_under_or(engine):
     """Round 12: the OR composition of the threshold-correlated NOT IN
-    (api._corr_not_in_threshold_or) — extreme-carrying flag views with
+    (plans/not_in.py:_threshold_flag) — extreme-carrying flag views with
     a three-valued CaseWhen. Python brute force as the oracle; column
     AND constant probes, all four order ops, the same NULL matrix as
     the top-level test."""
@@ -5186,9 +5186,8 @@ def test_or_exists_neq_pair(engine):
 
 def test_correlated_not_in_neq_order_threshold(engine):
     """Round 13: correlated NOT IN whose inner set is filtered by a
-    <> PAIRED with an order comparison — top level
-    (compiler/cqc.py:_apply_neq_order_threshold_not_in) and under OR
-    (api._corr_not_in_neq_order_threshold_or). Each three-valued fact
+    <> PAIRED with an order comparison — top level and under OR
+    (plans/not_in.py:_neq_order_flag). Each three-valued fact
     folds to the argmin/runner-up triple (b1 / sentinel-NULLed a1 /
     b2) natively for keyless groups; keyed groups (this matrix) are
     Catalyst-only and run in the default mode.
@@ -5295,9 +5294,8 @@ def test_correlated_not_in_neq_order_threshold(engine):
 
 def test_correlated_not_in_neq_pair_threshold(engine):
     """Round 13: correlated NOT IN whose inner set is filtered by TWO
-    <> comparisons — top level
-    (compiler/cqc.py:_apply_neq_pair_threshold_not_in) and under OR
-    (api._corr_not_in_neq_pair_threshold_or). Each three-valued fact
+    <> comparisons — top level and under OR
+    (plans/not_in.py:_neq_pair_flag). Each three-valued fact
     asks the diagonal-witness question over its population
     (_diagonal_stats_view — distinct counts / unique values / the
     chosen diagonal pair's cross points + witness bits) natively for
@@ -6163,8 +6161,7 @@ def test_float_neq_dims(engine):
         assert run(q) == sorted(truth), "ni float-order 1neq1ord keyless"
 
         # keyless NOT IN under OR: <>-pair and <>+order float dims
-        # (api._corr_not_in_neq_pair_threshold_or /
-        # _corr_not_in_neq_order_threshold_or keyless folds)
+        # (plans/not_in.py:_neq_pair_flag / _neq_order_flag)
         for conds, grp_of in (
             (
                 "i.a <> p.d1 AND i.b2 <> p.d2f",
@@ -6401,3 +6398,31 @@ def test_sky_quint(engine):
     finally:
         engine.catalog.unregister("q5_inner")
         engine.catalog.unregister("q5_outer")
+
+
+def test_rowvalue_not_in_with_constant_under_or(engine):
+    """A row-value probe with a constant component under OR, ``P OR
+    (o.x, 5) NOT IN (SELECT a, b ...)``: only ``x = a`` is a key, so a
+    single-key flag would read ``5 = b`` as an inner filter and drop
+    the NULL-b rows that make the comparison UNKNOWN. The native plan
+    declines it and the statement answers as Spark does."""
+    from sparksqlplus_spark.parser.sql import UnsupportedSqlError
+
+    spark = engine.spark
+    engine.catalog.register_df(
+        "rvc_o", spark.createDataFrame([(1, 1, 0)], "id int, x int, p int"),
+        ("id",),
+    )
+    engine.catalog.register_df(
+        "rvc_t", spark.createDataFrame([(1, None)], "a int, b int"), ()
+    )
+    try:
+        q = """SELECT o.id FROM rvc_o AS o
+               WHERE o.p = 1
+                  OR (o.x, 5) NOT IN (SELECT t.a, t.b FROM rvc_t AS t)"""
+        with pytest.raises(UnsupportedSqlError):
+            engine.sql(q, mode="cqc")
+        assert engine.sql(q).collect() == engine.sql(q, mode="spark").collect() == []
+    finally:
+        engine.catalog.unregister("rvc_o")
+        engine.catalog.unregister("rvc_t")

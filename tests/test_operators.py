@@ -222,8 +222,20 @@ def test_text_stats_translate_counts_match_regex(spark):
         float(len(re.sub(cls, "", texts[9]))) for cls, _ in classes
     )
 
-    # the ratios divide by the length: under ANSI mode an empty text
-    # raises DIVIDE_BY_ZERO in either form, so it only takes part above
+    # an empty text has no character ratios: text_stats gives NULL (the
+    # non-ANSI division result) instead of failing the job, and
+    # quality_score, built on it, runs too
+    from sparksqlplus_spark.operators.text import quality_score
+
+    empty = text_stats(df.filter(F.col("doc_id") == 0), "text", "doc_id")
+    assert [tuple(r) for r in empty.select(
+        "n_chars", "alpha_ratio", "digit_ratio", "punct_ratio"
+    ).collect()] == [(0.0, None, None, None)]
+    assert len(quality_score(df, "text", "doc_id").collect()) == len(texts)
+
+    # the reference ratios below divide by the length with `/`, which
+    # raises DIVIDE_BY_ZERO under ANSI mode, so the empty text only
+    # takes part above
     df = df.filter(~(F.length(t) == 0))
     n = F.length(t).cast("double")
     alpha, digit, space = (regex_count(cls) for cls, _ in classes)

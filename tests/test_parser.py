@@ -2334,9 +2334,8 @@ def test_not_in_correlated_where(engine, spark):
     )
     try:
         # single-column probes (outer Col or constant) now plan
-        # NATIVELY through the per-group stats paths (top level:
-        # SemiFilter.corr_keys in compiler/cqc.py; under OR:
-        # api._correlated_not_in_or_flag)
+        # NATIVELY through the per-group stats flag
+        # (plans/not_in.py:_keys_flag, at the top level and under OR)
         corr_cases = [
             # top-level correlated NOT IN
             """SELECT o.id FROM o_corr AS o WHERE o.x NOT IN
@@ -2787,8 +2786,8 @@ def test_not_in_over_cte_null_matrix(engine):
 
 def test_expr_rebuild_preserves_all_fields():
     """map_expr/rewrite_refs reconstruct nodes POSITIONALLY — round 12
-    shipped a silent correctness bug when they dropped a witness
-    node's ``negated`` flag (the set-empty branch became set-NONEMPTY).
+    shipped a silent correctness bug when they dropped a node's flag
+    field (a set-empty branch became set-NONEMPTY).
     Identity-rebuild nodes with every non-default flag set and assert
     full dataclass equality, so a future field added to a node without
     updating both rebuilds fails here instead of in production."""
@@ -2810,7 +2809,6 @@ def test_expr_rebuild_preserves_all_fields():
             Col("a", "pts"),
             ("<", ">", "<="),
             (Col("o", "x"), Col("o", "y"), Col("o", "z")),
-            negated=True,
         ),
         NeqTripleWitness(
             Col("a", "upts"),
@@ -2820,7 +2818,6 @@ def test_expr_rebuild_preserves_all_fields():
             Col("o", "y"),
             ">=",
             Col("o", "z"),
-            negated=True,
         ),
         Neq2OrderWitness(
             Col("a", "npts"),
@@ -2828,7 +2825,6 @@ def test_expr_rebuild_preserves_all_fields():
             Col("o", "y"),
             "<=",
             Col("o", "z"),
-            negated=True,
         ),
         Exists(
             "t",

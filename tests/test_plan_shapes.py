@@ -446,3 +446,71 @@ def test_spread_partitions_follows_scan_estimate(spark, tmp_path):
         assert spread_partitions(one) is one
     finally:
         spark.conf.set(conf, old)
+
+
+NOT_IN_SELECT = "SELECT s.s_suppkey, s.s_nationkey FROM supplier AS s WHERE "
+NOT_IN_SUB = "SELECT l.l_linenumber FROM lineitem AS l WHERE "
+
+# Keyless threshold-filtered NOT IN families with no __spark_entry__ query (and
+# so no BOUNDS row): SQL -> max live exchanges at sf0.001, planned
+# natively. The set and NULL-y facts fold at plan time, so the live
+# exchanges are the per-y match view's plus the non-full DISTINCT.
+NOT_IN_FAMILY_BOUNDS = {
+    # <> + order: the per-y argmin/runner-up triple view ((y, a)
+    # pre-reduction + top-2 window + y-keyed aggregate). Measured 3.
+    "neq_order_keyless": (
+        NOT_IN_SELECT + "s.s_nationkey NOT IN (" + NOT_IN_SUB
+        + "l.l_suppkey <> s.s_suppkey AND l.l_partkey < s.s_suppkey * 20)",
+        3,
+    ),
+    # <> + <>: the per-y diagonal-witness view (three grouped passes
+    # and their joins). Measured 8.
+    "neq_pair_keyless": (
+        NOT_IN_SELECT + "s.s_nationkey NOT IN (" + NOT_IN_SUB
+        + "l.l_suppkey <> s.s_suppkey AND l.l_partkey <> s.s_suppkey * 20)",
+        8,
+    ),
+    # a 2-D skyline under OR: the per-y staircase view (bag semantics,
+    # no DISTINCT). Measured 2.
+    "skyline_keyless_or": (
+        NOT_IN_SELECT + "s.s_acctbal < 0.0 OR s.s_nationkey NOT IN ("
+        + NOT_IN_SUB
+        + "l.l_partkey < s.s_suppkey * 20 AND l.l_suppkey > s.s_suppkey - 5)",
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(NOT_IN_FAMILY_BOUNDS))
+def test_not_in_family_shuffle_bound(engine, name):
+    sql, bound = NOT_IN_FAMILY_BOUNDS[name]
+    n = shuffle_count(engine.sql(sql, mode="cqc"))
+    assert n <= bound, f"{name} now plans {n} shuffle exchanges (max {bound})"
+
+
+@pytest.mark.parametrize(
+    "probe", ["s.s_nationkey", "3"], ids=["column_probe", "constant_probe"]
+)
+def test_uncorrelated_not_in_under_or_runs_no_spark_job(spark, probe):
+    """``P OR x NOT IN (SELECT y FROM t)`` compiles without a Spark job:
+    the set's emptiness and NULL facts are one broadcast stats row of
+    the plan, not a plan-time collect (nor is a constant probe's match
+    count)."""
+    from sparksqlplus_spark.api import SparkSQLPlus
+
+    eng = SparkSQLPlus(spark)
+    eng.register_testdata(SF_DIR)
+    sql = (
+        NOT_IN_SELECT + f"s.s_acctbal < 0.0 OR {probe} NOT IN ("
+        + NOT_IN_SUB + "l.l_quantity > 45.0)"
+    )
+    sc = spark.sparkContext
+    group = f"uncorrelated_not_in_under_or_{probe}"
+    sc.setJobGroup(group, group)
+    try:
+        df = eng.sql(sql, mode="cqc")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(jobs) == []
+    assert df.count() >= 0
